@@ -12,16 +12,17 @@ The 100 TB architecture (how real tokenizer training scales):
   text). The collect is capped the same way the IVF training collect
   is (similarity.py): you cannot accidentally pull a corpus onto the
   driver.
-* Tokenization broadcasts the merge list. Two engines:
+* Tokenization broadcasts the merge list. The merge count picks one
+  of two kernels:
 
-  - ``engine='expr'`` — the merge fold compiles to ``k`` literal
-    ``replace`` calls on a delimiter-encoded word, entirely
-    whole-stage-codegen JVM (and reproducible verbatim in DuckDB —
-    this is the oracle kernel AND a legitimate production path for
-    moderate ``k``).
-  - ``engine='pandas'`` — Arrow-batched UDF with an explicit
-    per-worker word cache, for large merge tables where compiling
-    thousands of replaces into the plan stops being sensible.
+  - up to ``MAX_EXPR_MERGES`` merges — the merge fold compiles to
+    ``k`` literal ``replace`` calls on a delimiter-encoded word,
+    entirely whole-stage-codegen JVM (and reproducible verbatim in
+    DuckDB — this is the oracle kernel AND the production path for
+    moderate ``k``);
+  - beyond it — Arrow-batched UDF with an explicit per-batch word
+    cache, for large merge tables where compiling thousands of
+    replaces into the plan stops being sensible.
 
 The delimiter trick that makes ``expr`` exact: a word is encoded
 ``||h||e||l||l||o||`` (every token wrapped in ``||``). One merge
@@ -66,9 +67,9 @@ __all__ = [
     "bpe_tokenize",
 ]
 
-#: expr-engine guard: each merge is one more nested replace in the
+#: expr-fold guard: each merge is one more nested replace in the
 #: projection; past this, whole-stage codegen's 64 KB method limit and
-#: plan-compile time make the pandas engine the right tool.
+#: plan-compile time make the word-cache UDF the right tool.
 MAX_EXPR_MERGES = 128
 
 #: training-collect cap, same rationale as the IVF training cap
@@ -105,8 +106,8 @@ def _merge_word(
     word: tuple[str, ...], a: str, b: str
 ) -> tuple[str, ...]:
     """One leftmost-greedy non-overlapping merge pass — THE merge
-    semantics, shared by training (vocab update) and the pandas apply
-    engine so the two can never diverge."""
+    semantics, shared by training (vocab update) and the word-cache
+    apply kernel so the two can never diverge."""
     out: list[str] = []
     j = 0
     while j < len(word):
@@ -213,8 +214,8 @@ def bpe_apply_expr(word: Column, merges: list[tuple[str, str]]) -> Column:
     with ``replace()``."""
     if len(merges) > MAX_EXPR_MERGES:
         raise ValueError(
-            f"expr engine caps at {MAX_EXPR_MERGES} merges "
-            f"(got {len(merges)}); use engine='pandas'"
+            f"expr fold caps at {MAX_EXPR_MERGES} merges "
+            f"(got {len(merges)}); bpe_tokenize takes larger tables"
         )
     s = encode_word_expr(word)
     for a, b in merges:
@@ -248,12 +249,57 @@ def _apply_word_py(
     return list(toks)
 
 
+def _per_word_expr(
+    words: DataFrame, merges: list[tuple[str, str]], id_col: str
+) -> DataFrame:
+    """``(id, n_chars, n_tokens)`` per word via the codegen expr fold."""
+    enc = bpe_apply_expr(F.col("word"), merges)
+    return words.select(
+        F.col(id_col),
+        F.length("word").alias("n_chars"),
+        token_count_expr(enc).alias("n_tokens"),
+    )
+
+
+def _per_word_cached(
+    words: DataFrame, merges: list[tuple[str, str]], id_col: str
+) -> DataFrame:
+    """``(id, n_chars, n_tokens)`` per word via an Arrow-batched UDF
+    with a per-batch word cache (duplicate words — the common case by
+    Zipf — tokenize once per batch)."""
+    import pandas as pd
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            cache: dict[str, int] = {}
+
+            def n_tok(w: str) -> int:
+                n = cache.get(w)
+                if n is None:
+                    n = len(_apply_word_py(w, merges))
+                    cache[w] = n
+                return n
+
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "n_chars": pdf["word"].str.len().astype("int32"),
+                    "n_tokens": pdf["word"].map(n_tok).astype("int32"),
+                }
+            )
+
+    fields = words.schema[id_col].dataType.simpleString()
+    return words.mapInPandas(
+        run,
+        schema=f"{id_col} {fields}, n_chars int, n_tokens int",
+    )
+
+
 def bpe_tokenize(
     df: DataFrame,
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "expr",
 ) -> DataFrame:
     """Per-document BPE tokenization stats: ``(id, n_words, n_chars,
     n_tokens)`` — ``n_tokens`` is the post-merge count, the number a
@@ -261,10 +307,9 @@ def bpe_tokenize(
 
     Plan shape: explode normalized words (no shuffle — stays in the
     scan stage), apply the merge fold per word, re-aggregate by id
-    (one shuffle, map-side combined). ``engine='expr'`` keeps the fold
-    in codegen; ``engine='pandas'`` moves it to an Arrow-batched UDF
-    with a per-batch word cache (duplicate words — the common case by
-    Zipf — tokenize once per batch).
+    (one shuffle, map-side combined). Up to ``MAX_EXPR_MERGES`` merges
+    the fold stays in codegen; larger tables move it to an
+    Arrow-batched UDF with a per-batch word cache.
     """
     words = df.select(
         F.col(id_col),
@@ -272,42 +317,8 @@ def bpe_tokenize(
             F.split(_norm_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
         ).alias("word"),
     ).filter(F.col("word") != "")
-    if engine == "expr":
-        enc = bpe_apply_expr(F.col("word"), merges)
-        per_word = words.select(
-            F.col(id_col),
-            F.length("word").alias("n_chars"),
-            token_count_expr(enc).alias("n_tokens"),
-        )
-    elif engine == "pandas":
-        import pandas as pd
-
-        def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            for pdf in batches:
-                cache: dict[str, int] = {}
-
-                def n_tok(w: str) -> int:
-                    n = cache.get(w)
-                    if n is None:
-                        n = len(_apply_word_py(w, merges))
-                        cache[w] = n
-                    return n
-
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "n_chars": pdf["word"].str.len().astype("int32"),
-                        "n_tokens": pdf["word"].map(n_tok).astype("int32"),
-                    }
-                )
-
-        fields = words.schema[id_col].dataType.simpleString()
-        per_word = words.mapInPandas(
-            run,
-            schema=f"{id_col} {fields}, n_chars int, n_tokens int",
-        )
-    else:
-        raise ValueError(f"unknown engine {engine!r}")
+    kernel = _per_word_expr if len(merges) <= MAX_EXPR_MERGES else _per_word_cached
+    per_word = kernel(words, merges, id_col)
     return per_word.groupBy(id_col).agg(
         F.count("*").alias("n_words"),
         F.sum("n_chars").cast("long").alias("n_chars"),

@@ -146,35 +146,6 @@ def _kgram_arrow(txt, ks, *, distinct: bool = False, whole_fallback: bool = Fals
     return _grams(txt)
 
 
-def _kgram_explode_rows(df, keep, norm, k: int):
-    """Fully-codegen exploded k-gram rows — the third gram engine:
-    ``arrays_zip`` over k slices of the token array (the
-    bigram_lm_perplexity shape generalized to k), one struct per gram,
-    ``concat_ws`` in a post-explode whole-stage-codegen projection. No
-    Python transfer, no interpreted HOF — stays JVM-side end to end.
-
-    *keep* maps output column name → source Column carried through
-    both projections. Returns ``keep... , __g`` rows; a doc shorter
-    than *k* tokens yields an empty zip and vanishes at the explode
-    (the `_kgram_fold` contract). No NULL ever reaches ``concat_ws``
-    (all k slices have the same length m, so ``arrays_zip`` never
-    pads), which matters: ``concat_ws`` silently drops NULLs and would
-    otherwise fabricate short grams.
-    """
-    keep_cols = [c.alias(n) for n, c in keep.items()]
-    names = list(keep)
-    tk = F.split(norm, " ")
-    if k == 1:
-        return df.select(*keep_cols, F.explode(tk).alias("__g"))
-    m = F.greatest(F.size(tk) - F.lit(k - 1), F.lit(0))
-    zipped = F.arrays_zip(
-        *[F.slice(tk, i + 1, m).alias(f"w{i}") for i in range(k)]
-    )
-    ex = df.select(*keep_cols, F.explode(zipped).alias("__p"))
-    gram = F.concat_ws(" ", *[F.col("__p")[f"w{i}"] for i in range(k)])
-    return ex.select(*names, gram.alias("__g"))
-
-
 def dedup_exact(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1187,7 +1158,6 @@ def source_overlap(
     source_col: str = "source",
     text_col: str = "text",
     k: int = 3,
-    gram_engine: str = "zipwith",
 ) -> DataFrame:
     """Pairwise n-gram overlap between corpus sources — the provenance
     analytics a mixture designer runs before weighting sources: two
@@ -1218,25 +1188,12 @@ def source_overlap(
     if k < 1:
         raise ValueError("source_overlap: k must be >= 1")
     norm = _norm_text(F.coalesce(F.col(text_col), F.lit("")))
-    if gram_engine == "arrow":
-        gram_rows = docs.filter(F.length(norm) > 0).select(
-            F.col(source_col).alias("__src"),
-            F.explode(_kgram_arrow(norm, (k,))).alias("__g"),
-        )
-    elif gram_engine == "explode":
-        gram_rows = _kgram_explode_rows(
-            docs.filter(F.length(norm) > 0),
-            {"__src": F.col(source_col)},
-            norm,
-            k,
-        )
-    else:
-        tokenized = docs.filter(F.length(norm) > 0).select(
-            F.col(source_col).alias("__src"), F.split(norm, " ").alias("__tk")
-        )
-        gram_rows = tokenized.select(
-            "__src", F.explode(_kgram_fold(F.col("__tk"), k)).alias("__g")
-        )
+    tokenized = docs.filter(F.length(norm) > 0).select(
+        F.col(source_col).alias("__src"), F.split(norm, " ").alias("__tk")
+    )
+    gram_rows = tokenized.select(
+        "__src", F.explode(_kgram_fold(F.col("__tk"), k)).alias("__g")
+    )
     pairs = gram_rows.distinct()
     totals = pairs.groupBy("__src").agg(
         F.count("*").cast("long").alias("__total")

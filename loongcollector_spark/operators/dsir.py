@@ -34,7 +34,6 @@ def _gram_rows(
     target_pred: Column,
     id_col: str,
     text_col: str,
-    gram_engine: str = "zipwith",
 ) -> DataFrame:
     """``(id_col, __is_target, __g)`` rows: unigrams + bigrams of the
     normalized text, exploded.
@@ -49,39 +48,12 @@ def _gram_rows(
     only its lambda variables; the bucket hash is applied AFTER the
     explode in a whole-stage-codegen projection.
     """
-    from .dedup import _kgram_arrow
-
     norm = _norm_text(F.coalesce(F.col(text_col), F.lit("")))
     base = docs.filter(F.length(norm) > 0)
     # NULL predicate (e.g. lang == 'en' on a NULL lang) means "not
     # in the target corpus" — coalesce to false so such docs stay
     # in the raw pool instead of silently vanishing from both
     is_target = F.coalesce(target_pred, F.lit(False)).alias("__is_target")
-    if gram_engine == "arrow":
-        return base.select(
-            F.col(id_col),
-            is_target,
-            F.explode(_kgram_arrow(norm, (1, 2))).alias("__g"),
-        )
-    if gram_engine == "explode":
-        # fully-codegen single-pass (1,2)-grams: zip each token with
-        # its successor (arrays_zip pads the tail with NULL — tokens
-        # themselves are never NULL post-split, so NULL uniquely marks
-        # the last position), then a 1- or 2-element gram array per
-        # position exploded in codegen. Two explodes, zero Python,
-        # zero interpreted HOF, one corpus scan.
-        tk = F.split(norm, " ")
-        zipped = F.arrays_zip(
-            tk.alias("w0"), F.slice(tk, 2, F.size(tk)).alias("w1")
-        )
-        ex = base.select(
-            F.col(id_col), is_target, F.explode(zipped).alias("__p")
-        )
-        w0, w1 = F.col("__p")["w0"], F.col("__p")["w1"]
-        grams = F.when(w1.isNull(), F.array(w0)).otherwise(
-            F.array(w0, F.concat(w0, F.lit(" "), w1))
-        )
-        return ex.select(id_col, "__is_target", F.explode(grams).alias("__g"))
     tokenized = base.select(
         F.col(id_col), is_target, F.split(norm, " ").alias("__tk")
     )
@@ -107,7 +79,6 @@ def dsir_weights(
     text_col: str = "text",
     n_buckets: int = 4096,
     hash_mode: str = "xxhash64",
-    gram_engine: str = "zipwith",
 ) -> DataFrame:
     """Per-document DSIR importance log-weights.
 
@@ -122,7 +93,7 @@ def dsir_weights(
     target-like. Documents with zero grams carry no evidence and are
     excluded (their weight would be an uninformative 0).
     """
-    g = _gram_rows(docs, target_pred, id_col, text_col, gram_engine)
+    g = _gram_rows(docs, target_pred, id_col, text_col)
     per_bucket = (
         g.select(
             id_col,

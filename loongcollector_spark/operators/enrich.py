@@ -161,23 +161,21 @@ def desensitize(
     *,
     method: str = "const",
     replace_string: str = "********",
-    engine: str = "native",
 ) -> DataFrame:
     """Mask secrets located by *regex* (processor_desensitize.go:29-40):
     const replacement (JVM regexp_replace, replaces EVERY match) or
     md5-of-match replacement.
 
-    ``method='md5'`` default engine is JVM-side: ``split`` on the
-    pattern yields the unmatched segments, ``regexp_extract_all``
-    yields every match, and the result interleaves segment +
-    md5(match) (len(segments) == len(matches)+1 always). The array
+    ``method='md5'`` runs JVM-side: ``split`` on the pattern yields
+    the unmatched segments, ``regexp_extract_all`` yields every
+    match, and the result interleaves segment + md5(match) (len(segments) == len(matches)+1 always). The array
     lambdas are interpreted, but per-row match counts are small and
     there is no Arrow hop / Python worker — this replaced the
-    package's one per-row-Python path (VERDICT r1/r2 note).
-    ``engine='pandas'`` keeps the ``re.sub``-callback twin (Python
-    regex dialect, used by the agreement test)."""
+    package's one per-row-Python path (VERDICT r1/r2 note). Patterns
+    that can match the empty string go to the ``re.sub``-callback
+    twin :func:`_desensitize_md5_resub` instead."""
     col = F.col(source_key)
-    if method == "md5" and engine == "native":
+    if method == "md5":
         import re as _re
 
         # the interleave below relies on len(split segments) ==
@@ -196,10 +194,7 @@ def desensitize(
         except _re.error:
             zero_width = False
         if zero_width:
-            return desensitize(
-                df, source_key, regex, method="md5",
-                replace_string=replace_string, engine="pandas",
-            )
+            return _desensitize_md5_resub(df, source_key, regex)
         segs = F.split(col, regex, -1)
         # NB: regexp_extract_all's str pattern arg resolves as a COLUMN
         # name (unlike regexp_extract) — must pass lit
@@ -224,29 +219,34 @@ def desensitize(
             col.isNotNull() & ok, F.concat(body, F.element_at(segs, -1))
         )
         return df.withColumn(source_key, masked)
-    if method == "md5":
-        import hashlib
-        import re as _re
-
-        import pandas as pd  # noqa: F401
-        from pyspark.sql import types as T
-
-        pat = _re.compile(regex)
-
-        # no type hints: pandas is imported locally, so postponed
-        # annotations wouldn't resolve inside pandas_udf's hint parser
-        @F.pandas_udf(T.StringType())
-        def mask(s):
-            return s.map(
-                lambda v: pat.sub(
-                    lambda m: hashlib.md5(m.group(0).encode()).hexdigest(), v
-                )
-                if v is not None
-                else None
-            )
-
-        return df.withColumn(source_key, mask(col))
     return df.withColumn(source_key, F.regexp_replace(col, regex, replace_string))
+
+
+def _desensitize_md5_resub(df: DataFrame, source_key: str, regex: str) -> DataFrame:
+    """``re.sub``-callback twin of ``desensitize(method='md5')`` in the
+    Python regex dialect; handles the zero-width-capable patterns the
+    JVM interleave cannot."""
+    import hashlib
+    import re as _re
+
+    import pandas as pd  # noqa: F401
+    from pyspark.sql import types as T
+
+    pat = _re.compile(regex)
+
+    # no type hints: pandas is imported locally, so postponed
+    # annotations wouldn't resolve inside pandas_udf's hint parser
+    @F.pandas_udf(T.StringType())
+    def mask(s):
+        return s.map(
+            lambda v: pat.sub(
+                lambda m: hashlib.md5(m.group(0).encode()).hexdigest(), v
+            )
+            if v is not None
+            else None
+        )
+
+    return df.withColumn(source_key, mask(F.col(source_key)))
 
 
 def md5_field(df: DataFrame, source_key: str, md5_key: str) -> DataFrame:

@@ -99,18 +99,16 @@ def parse_regex(
     keep_source: bool = True,
     keep_source_if_parse_error: bool = True,
     discard_unmatched: bool = False,
-    engine: str = "native",
     types: dict[str, str] | None = None,
 ) -> DataFrame:
     """Extract capture groups of *regex* into columns *keys*.
 
-    ``engine='native'`` → per-group ``F.regexp_extract`` (JVM, codegen;
-    Catalyst subsumes the reference's whole-line ``(.*)`` fast path,
-    ProcessorParseRegexNative.cpp:142-146, via constant-folding — we
-    still special-case it to skip regex entirely).
-    ``engine='pandas'`` → one Arrow-batched pass with a driver-compiled
-    pattern (the reference's single-match-then-emit loop,
-    regex.go:105-129).
+    One JVM pass in whole-stage codegen: ``regexp_replace`` rewrites a
+    matched line into a delimiter-joined group list and ``split``
+    breaks it apart, with one ``rlike`` as the match test (the
+    reference's single-match-then-emit loop, regex.go:105-129). The
+    whole-line ``(.*)`` pattern skips regex entirely, as the reference's
+    fast path does (ProcessorParseRegexNative.cpp:142-146).
 
     ``full_match`` anchors the pattern (Go regexp full-find vs match
     semantics); unmatched rows get NULL keys and follow the unmatch
@@ -147,66 +145,28 @@ def parse_regex(
         # match so the rewrite below yields only the groups
         anchored = f"(?s)^.*?(?:{regex}).*$"
         search = regex
-    if engine == "native":
-        # Single-pass JVM extraction: one regexp_replace rewrites the
-        # matched line into a \x01-joined group list, one split breaks
-        # it apart — 2 regex evaluations per row instead of 1 rlike +
-        # N regexp_extract (the naive per-key plan). At 100 TB this is
-        # the difference between reading the hot column N+1 times and
-        # twice per row, all inside whole-stage codegen.
-        delim = "\x01"
-        template = delim.join(f"${i}" for i in range(1, len(keys) + 1))
-        parts = F.split(F.regexp_replace(F.col(source_key), anchored, template), delim)
-        # size check guards against captured values containing the
-        # delimiter byte: misalignment becomes a parse FAILURE, never
-        # silently shifted fields
-        matched = F.col(source_key).rlike(search) & (F.size(parts) == len(keys))
-        out = df.withColumn("__p", parts).withColumn("__m", matched)
-        for i, k in enumerate(keys):
-            out = out.withColumn(
-                k, F.when(F.col("__m"), F.col("__p").getItem(i))
-            )
-        out = _apply_unmatch_policy(
-            out, F.col("__m"), source_key, keep_source, discard_unmatched,
-            keep_source_if_parse_error,
-        ).drop("__m", "__p")
-    else:
-        pat = re.compile(f"^(?:{regex})$" if full_match else regex)
-        nkeys = len(keys)
-        schema = T.StructType(
-            [T.StructField(k, T.StringType()) for k in keys]
-            + [T.StructField("__m", T.BooleanType())]
+    # Single-pass JVM extraction: one regexp_replace rewrites the
+    # matched line into a \x01-joined group list, one split breaks
+    # it apart — 2 regex evaluations per row instead of 1 rlike +
+    # N regexp_extract (the naive per-key plan). At 100 TB this is
+    # the difference between reading the hot column N+1 times and
+    # twice per row, all inside whole-stage codegen.
+    delim = "\x01"
+    template = delim.join(f"${i}" for i in range(1, len(keys) + 1))
+    parts = F.split(F.regexp_replace(F.col(source_key), anchored, template), delim)
+    # size check guards against captured values containing the
+    # delimiter byte: misalignment becomes a parse FAILURE, never
+    # silently shifted fields
+    matched = F.col(source_key).rlike(search) & (F.size(parts) == len(keys))
+    out = df.withColumn("__p", parts).withColumn("__m", matched)
+    for i, k in enumerate(keys):
+        out = out.withColumn(
+            k, F.when(F.col("__m"), F.col("__p").getItem(i))
         )
-
-        @F.pandas_udf(schema)
-        def extract(s: pd.Series) -> pd.DataFrame:
-            # vectorized: the compiled pattern runs in pandas' C loop
-            # (Series.str.extract), one pass per Arrow batch — no
-            # per-row Python (input_hint mandate)
-            g = s.str.extract(pat, expand=True).iloc[:, :nkeys]
-            g.columns = list(keys)[: g.shape[1]]
-            for k in keys[g.shape[1]:]:
-                g[k] = None
-            # str.extract NaNs both no-match rows and matched-but-empty
-            # optional groups; str.contains (search semantics, matching
-            # str.extract's) disambiguates — also a C loop
-            g["__m"] = s.str.contains(pat, regex=True).fillna(False).astype(bool)
-            g = g.where(pd.notna(g), None)
-            for k in keys:
-                g.loc[~g["__m"], k] = None
-            return g[[*keys, "__m"]]
-
-        out = df.withColumn("__p", extract(F.col(source_key)))
-        for k in keys:
-            out = out.withColumn(k, F.col("__p")[k])
-        out = _apply_unmatch_policy(
-            out.withColumn("__m", F.col("__p.__m")),
-            F.col("__m"),
-            source_key,
-            keep_source,
-            discard_unmatched,
-            keep_source_if_parse_error,
-        ).drop("__p", "__m")
+    out = _apply_unmatch_policy(
+        out, F.col("__m"), source_key, keep_source, discard_unmatched,
+        keep_source_if_parse_error,
+    ).drop("__m", "__p")
     if types:
         for k, t in types.items():
             ct = cast_for_hint(t)

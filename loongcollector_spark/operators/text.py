@@ -317,7 +317,6 @@ def benchmark_contamination(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 13,
-    gram_engine: str = "arrow",
 ) -> DataFrame:
     """Benchmark decontamination scan (the GPT-3 / PaLM technique,
     public papers: Brown et al. 2020 Appendix C, Chowdhery et al. 2022
@@ -336,8 +335,9 @@ def benchmark_contamination(
     per ROW, not across the id.
 
     Scale design: per-document distinct n-grams are built ROW-LOCAL
-    (``array_distinct`` over the shared :func:`..dedup._kgram_fold`
-    zip_with builder; docs shorter than *n* tokens contribute one
+    (the Arrow-batched :func:`..dedup._kgram_arrow` builder on the
+    corpus side, the :func:`..dedup._kgram_fold` zip_with builder on
+    the benchmark side; docs shorter than *n* tokens contribute one
     whole-text gram — the _shingle_rows fallback), so the corpus
     never shuffles by gram value and never sorts: the exploded grams
     flow straight into a BROADCAST left join against the
@@ -351,39 +351,33 @@ def benchmark_contamination(
     """
     from .dedup import _kgram_arrow, _kgram_fold, _norm_text
 
-    def per_doc_grams(df, engine):
-        norm = _norm_text(F.coalesce(F.col(text_col), F.lit("")))
-        if engine == "arrow":
-            grams = _kgram_arrow(norm, (n,), distinct=True, whole_fallback=True)
-            return df.select(F.col(id_col), F.explode(grams).alias("shingle"))
-        tk = F.split(norm, " ")
-        d = df.select(F.col(id_col), tk.alias("__tk"))
-        grams = F.when(
-            F.size(F.col("__tk")) < n,
-            F.array(F.array_join(F.col("__tk"), " ")),
-        ).otherwise(F.array_distinct(_kgram_fold(F.col("__tk"), n)))
-        return d.select(F.col(id_col), F.explode(grams).alias("shingle"))
-
-    # the EVAL side always uses the pure-Catalyst builder: it is
+    norm = _norm_text(F.coalesce(F.col(text_col), F.lit("")))
+    tk = F.split(norm, " ")
+    # the EVAL side uses the pure-Catalyst builder: it is
     # broadcast-small by definition so the interpreted fold costs
     # nothing, and python-eval nodes reset output partitioning — the
     # arrow builder here would insert a shingle-valued exchange before
     # the distinct that the codegen path provably avoids (plan-pinned:
     # test_benchmark_contamination_broadcasts_bench)
+    bench_tk = bench.select(tk.alias("__tk"))
+    bench_shingles = F.when(
+        F.size(F.col("__tk")) < n,
+        F.array(F.array_join(F.col("__tk"), " ")),
+    ).otherwise(F.array_distinct(_kgram_fold(F.col("__tk"), n)))
     # the empty gram ('' — a NULL/blank benchmark row's whole-text
     # fallback) never enters the hit set: content-free documents must
     # not flag as contaminated just because the benchmark also
     # contains a blank row
     bench_grams = (
-        per_doc_grams(bench, "zipwith")
+        bench_tk.select(F.explode(bench_shingles).alias("shingle"))
         .filter(F.col("shingle") != "")
-        .select("shingle")
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    flagged = per_doc_grams(docs, gram_engine).join(
-        F.broadcast(bench_grams), "shingle", "left"
-    )
+    doc_shingles = _kgram_arrow(norm, (n,), distinct=True, whole_fallback=True)
+    flagged = docs.select(
+        F.col(id_col), F.explode(doc_shingles).alias("shingle")
+    ).join(F.broadcast(bench_grams), "shingle", "left")
     return flagged.groupBy(id_col).agg(
         F.count("*").alias("n_grams"),
         F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("n_hit"),
@@ -592,7 +586,6 @@ def ngram_novelty(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    gram_engine: str = "arrow",
 ) -> DataFrame:
     """Per-document n-gram novelty: the fraction of a document's
     distinct word *k*-grams whose corpus-wide FIRST occurrence (minimum
@@ -612,30 +605,18 @@ def ngram_novelty(
 
     Returns ``(id_col, n_grams, n_novel, novelty)``.
     """
-    from .dedup import _kgram_arrow, _kgram_fold, _norm_text
+    from .dedup import _kgram_arrow, _norm_text
 
     if k <= 0:
         raise ValueError("ngram_novelty: k must be positive")
     norm = _norm_text(F.coalesce(F.col(text_col), F.lit("")))
-    if gram_engine == "arrow":
-        # distinct applies Python-side so the Arrow transfer already
-        # carries the deduplicated array; <k-token docs yield [] and
-        # vanish at the explode (the zipwith branch's size filter)
-        g = docs.select(
-            id_col,
-            F.explode(_kgram_arrow(norm, (k,), distinct=True)).alias("__g"),
-        )
-    else:
-        toks = F.split(norm, " ")
-        # k-grams via the shared folded-zip_with helper (HOF discipline:
-        # lambdas touch only lambda variables — the dsir._gram_rows
-        # lesson)
-        grams = _kgram_fold(F.col("__tk"), k)
-        g = (
-            docs.select(id_col, toks.alias("__tk"))
-            .filter(F.size("__tk") >= k)
-            .select(id_col, F.explode(F.array_distinct(grams)).alias("__g"))
-        )
+    # distinct applies Python-side so the Arrow transfer already
+    # carries the deduplicated array; <k-token docs yield [] and
+    # vanish at the explode
+    g = docs.select(
+        id_col,
+        F.explode(_kgram_arrow(norm, (k,), distinct=True)).alias("__g"),
+    )
     per_doc = g.groupBy(id_col).agg(F.count("*").alias("n_grams"))
     firsts = (
         g.groupBy("__g")

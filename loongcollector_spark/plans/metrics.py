@@ -6,18 +6,15 @@ core/collection_pipeline/route/Router.cpp:38-46, runner counters
 core/runner/ProcessorRunner.cpp:94-103): each pipeline stage records
 rows-in/rows-out; the collected records append to a metrics table.
 
-Spark design: counts come from cheap ``df.count()`` checkpoints when
-``eager=True`` (exact, extra jobs) or from Spark accumulators embedded
-in a pass-through ``mapInPandas`` stage when ``eager=False`` (no extra
-job; counts materialize when the main action runs). Batch jobs default
-to eager counting at the stage boundaries that already materialize
-(writes), so the overhead is one count per stage on an
-already-computed plan.
+Spark design: the counts are never taken by extra ``count()`` jobs,
+which would re-execute the pipeline. ``Pipeline.run_and_write`` wraps
+its input and routed output in ``Observation``s, so both counts are
+computed during the one fan-out write job and land here through
+``MetricsCollector.add``.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,16 +38,6 @@ class StageMetrics:
 class MetricsCollector:
     job_id: str
     records: list[StageMetrics] = field(default_factory=list)
-
-    def measure(self, stage: str, df_in: DataFrame, df_out: DataFrame) -> DataFrame:
-        """Record in/out counts for a stage (eager)."""
-        t0 = time.monotonic()
-        n_in = df_in.count()
-        n_out = df_out.count()
-        self.records.append(
-            StageMetrics(stage, n_in, n_out, round(time.monotonic() - t0, 3))
-        )
-        return df_out
 
     def add(self, stage: str, rows_in: int, rows_out: int, wall_sec: float) -> None:
         self.records.append(StageMetrics(stage, rows_in, rows_out, wall_sec))

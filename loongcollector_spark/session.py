@@ -17,7 +17,9 @@ from pyspark.sql import SparkSession
 # SQL confs the operators REQUIRE and that are settable on a live
 # session (spark-submit entry points apply these to whatever session
 # the cluster handed them): UTC pins every timestamp-rendering oracle
-# invariant; LAST_WIN is needed by map-building parsers (apsara).
+# invariant; LAST_WIN is needed by map-building parsers (apsara:
+# trailing k:v pairs may repeat; the reference keeps duplicates, we
+# keep the last).
 RUNTIME_SQL_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
@@ -64,19 +66,13 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # duplicate map keys keep the last value (apsara trailing k:v
-        # pairs may repeat; reference keeps duplicates, we keep last)
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     )
+    for k, v in RUNTIME_SQL_CONFS.items():
+        builder = builder.config(k, v)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -207,12 +207,15 @@ def stateful_rate_limit(
             for t in pdf[ts_col]:
                 # naive-timestamp-safe epoch seconds (Timestamp
                 # .timestamp() would interpret naive values in the
-                # worker's LOCAL timezone)
-                now = (
-                    (t - epoch).total_seconds()
-                    if t.tzinfo is None
-                    else t.timestamp()
-                )
+                # worker's LOCAL timezone); a NULL ts counts as epoch
+                # 0 — as NaN it would poison `last` and the bucket
+                # would never refill
+                if pd.isna(t):
+                    now = 0.0
+                elif t.tzinfo is None:
+                    now = (t - epoch).total_seconds()
+                else:
+                    now = t.timestamp()
                 if last is not None and now > last:
                     tokens = min(float(burst), tokens + (now - last) * rate_per_sec)
                 last = now if last is None or now > last else last

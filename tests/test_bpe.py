@@ -1,4 +1,4 @@
-"""BPE tokenizer: training golden, kernel agreement, engine parity."""
+"""BPE tokenizer: training golden, kernel agreement, kernel dispatch."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,19 +61,39 @@ def test_expr_kernel_agrees_with_python(spark):
         assert r.toks == " ".join(py), r.word
 
 
+MERGES = [("e", "r"), ("i", "n"), ("s", "t"), ("a", "t"), ("t", "h")]
+
+
 def test_tokenize_engines_agree(spark, sf_dir):
-    """expr (codegen fold) and pandas (cached UDF) produce identical
-    per-document stats on the real documents table."""
+    """The expr kernel (codegen fold) and the cached-UDF kernel produce
+    identical per-word stats on the real documents table."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    merges = [("e", "r"), ("i", "n"), ("s", "t"), ("a", "t"), ("t", "h")]
-    a = bpe.bpe_tokenize(docs, merges, engine="expr")
-    b = bpe.bpe_tokenize(docs, merges, engine="pandas")
-    rows_a = {r.doc_id: (r.n_words, r.n_chars, r.n_tokens) for r in a.collect()}
-    rows_b = {r.doc_id: (r.n_words, r.n_chars, r.n_tokens) for r in b.collect()}
-    assert rows_a == rows_b
-    assert len(rows_a) > 0
+    words = docs.select(
+        "doc_id", F.explode(F.split(bpe._norm_text(F.col("text")), " ")).alias("word")
+    ).filter(F.col("word") != "")
+    a, b = (
+        sorted(tuple(r) for r in kernel(words, MERGES, "doc_id").collect())
+        for kernel in (bpe._per_word_expr, bpe._per_word_cached)
+    )
+    assert a == b
+    assert len(a) > 0
+    # merges only ever shrink token counts, never below one per word
+    assert all(1 <= n_tokens <= n_chars for _, n_chars, n_tokens in a)
+
+
+def test_tokenize_past_expr_cap_uses_cached_kernel(spark, sf_dir):
+    """More than MAX_EXPR_MERGES merges tokenizes instead of raising;
+    merges that never fire leave the stats of the effective ones."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    inert = [(f"#{i}", "#") for i in range(bpe.MAX_EXPR_MERGES + 1 - len(MERGES))]
+    big = bpe.bpe_tokenize(docs, MERGES + inert)
+    assert "MapInPandas" in big._jdf.queryExecution().executedPlan().toString()
+    small = bpe.bpe_tokenize(docs, MERGES)
+    rows = [sorted(tuple(r) for r in df.collect()) for df in (big, small)]
+    assert rows[0] == rows[1]
+    assert len(rows[0]) > 0
     # merges only ever shrink token counts, never below n_words
-    for n_words, n_chars, n_tokens in rows_a.values():
+    for _, n_words, n_chars, n_tokens in rows[0]:
         assert n_words <= n_tokens <= n_chars
 
 
@@ -91,7 +111,7 @@ def test_train_bpe_end_to_end(spark, sf_dir):
 
 
 def test_expr_merge_cap():
-    with pytest.raises(ValueError, match="expr engine caps"):
+    with pytest.raises(ValueError, match="expr fold caps"):
         bpe.bpe_apply_expr(
             F.lit("x"), [(f"a{i}", "b") for i in range(bpe.MAX_EXPR_MERGES + 1)]
         )

@@ -447,8 +447,7 @@ def test_benchmark_contamination_semantics(spark):
 def test_benchmark_contamination_empty_docs_never_flag(spark):
     """A NULL/blank document and a NULL/blank benchmark row share the
     degenerate '' whole-text gram; content-free docs must NOT flag as
-    contaminated (the empty gram never enters the hit set). Both gram
-    engines agree."""
+    contaminated (the empty gram never enters the hit set)."""
     bench = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, None), (3, "   ")],
         ["doc_id", "text"],
@@ -457,17 +456,14 @@ def test_benchmark_contamination_empty_docs_never_flag(spark):
         [(10, None), (11, ""), (12, "  "), (13, "alpha beta gamma zz")],
         ["doc_id", "text"],
     )
-    for eng in ("arrow", "zipwith"):
-        out = {
-            r["doc_id"]: r
-            for r in text.benchmark_contamination(
-                docs, bench, n=3, gram_engine=eng
-            ).collect()
-        }
-        assert len(out) == 4, eng  # one row per doc, empties included
-        for d in (10, 11, 12):
-            assert out[d]["contaminated"] == 0 and out[d]["n_hit"] == 0, eng
-        assert out[13]["contaminated"] == 1, eng
+    out = {
+        r["doc_id"]: r
+        for r in text.benchmark_contamination(docs, bench, n=3).collect()
+    }
+    assert len(out) == 4  # one row per doc, empties included
+    for d in (10, 11, 12):
+        assert out[d]["contaminated"] == 0 and out[d]["n_hit"] == 0
+    assert out[13]["contaminated"] == 1
 
 
 def test_benchmark_contamination_broadcasts_bench(spark, docs):

@@ -107,15 +107,6 @@ def test_shard_repartition_hash_partitioning(spark, raw):
     assert "hashpartitioning(xxhash64" in plan and "Exchange" in plan
 
 
-def test_pandas_parse_is_arrow_batched(spark, raw):
-    df = raw.selectExpr("props as text")
-    out = parse.parse_regex(
-        df, "text", r'\{"k": (\d+)\}', ["k"], engine="pandas"
-    )
-    plan = plan_of(out)
-    assert "ArrowEvalPython" in plan
-
-
 def test_route_simple_config_has_no_explode(spark, sf_dir):
     """Without copy sinks the router is a pure when-chain projection —
     no Generate/explode node, no per-row array allocation."""
@@ -136,15 +127,18 @@ def test_route_simple_config_has_no_explode(spark, sf_dir):
 
 
 def test_desensitize_md5_native_stays_jvm_side(spark, raw):
-    """The default md5-desensitize engine must contain NO Python eval
-    node (it replaced the package's one per-row-Python path); the
-    pandas twin keeps its ArrowEvalPython."""
-    from loongcollector_spark.operators.enrich import desensitize
+    """md5-desensitize must contain NO Python eval node (it replaced
+    the package's one per-row-Python path); the re.sub twin keeps its
+    ArrowEvalPython."""
+    from loongcollector_spark.operators.enrich import (
+        _desensitize_md5_resub,
+        desensitize,
+    )
 
     nat = desensitize(raw, "props", r"\d+", method="md5")
     plan = nat._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
-    twin = desensitize(raw, "props", r"\d+", method="md5", engine="pandas")
+    twin = _desensitize_md5_resub(raw, "props", r"\d+")
     plan2 = twin._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan2
 

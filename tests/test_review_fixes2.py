@@ -2,6 +2,8 @@
 semantics, anchoring edge cases, delimiter safety, condition/dictmap
 preserve-on-miss, grok alias collisions)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,22 +20,25 @@ def mid(spark):
     )
 
 
-@pytest.mark.parametrize("engine", ["native", "pandas"])
-def test_full_match_false_extracts_group_only(spark, mid, engine):
-    out = parse_regex(
-        mid, "text", r"X=(\d)", ["v"], full_match=False, engine=engine
-    )
+def test_full_match_false_extracts_group_only(spark, mid):
+    out = parse_regex(mid, "text", r"X=(\d)", ["v"], full_match=False)
     rows = {r.text: r.v for r in out.collect()}
     assert rows["pre X=1 post"] == "1"
     assert rows["no match here"] is None
 
 
-def test_engines_agree_unanchored(spark, mid):
-    a = parse_regex(mid, "text", r"X=(\d)", ["v"], full_match=False, engine="native")
-    b = parse_regex(mid, "text", r"X=(\d)", ["v"], full_match=False, engine="pandas")
-    assert sorted(map(tuple, a.select("text", "v").collect())) == sorted(
-        map(tuple, b.select("text", "v").collect())
-    )
+def test_engines_agree_unanchored(spark):
+    """Unanchored parse_regex (Java regex, JVM) extracts what Python's
+    re.search does: first match wins, across newlines, NULL on miss."""
+    pat = r"X=(\d)"
+    texts = [
+        "pre X=1 post", "no match here", "X=2 X=3", "a\nX=4\nb", "X=5", "",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], ["text"])
+    out = parse_regex(df, "text", pat, ["v"], full_match=False)
+    got = {r.text: r.v for r in out.collect()}
+    want = {t: (m.group(1) if (m := re.search(pat, t)) else None) for t in texts}
+    assert got == want
 
 
 def test_escaped_dollar_pattern(spark):

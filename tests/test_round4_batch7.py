@@ -164,28 +164,9 @@ def test_round4_batch7_plan_pins(spark):
         assert shape(trajectory_outcome(tx)) == (1, 0, 0)
         assert shape(turn_gaps(tx)) == (1, 0, 0)
         assert shape(fertility_report(docs)) == (1, 0, 0)
-        # the pure-Catalyst engines (zipwith = the default, end-to-end
-        # winner per SCALE.md round-5) keep the no-Python guarantee
-        for eng in ("zipwith", "explode"):
-            h, s, b = shape(source_overlap(docs, gram_engine=eng))
-            assert h == 4 and s == 0 and b == 2, eng
-        assert shape(source_overlap(docs)) == (4, 0, 2)  # default shape
-        # the arrow engine trades one ArrowEvalPython gram build for
-        # the interpreted fold (SCALE.md round-5 experiment) but the
-        # exchange shape is unchanged: everything shuffled is still
-        # gram/source-reduced
-        pa = (
-            source_overlap(docs, gram_engine="arrow")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "ArrowEvalPython" in pa and "BatchEvalPython" not in pa
-        assert (
-            pa.count("Exchange hashpartitioning"),
-            pa.count("Exchange SinglePartition"),
-            pa.count("BroadcastExchange"),
-        ) == (4, 0, 2)
+        # the zipwith gram build (end-to-end winner per SCALE.md
+        # round-5) keeps the no-Python guarantee
+        assert shape(source_overlap(docs)) == (4, 0, 2)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 

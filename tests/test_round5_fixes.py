@@ -5,7 +5,6 @@ alert's out-of-order regression counter."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.dedup import prefix_groups
@@ -240,7 +239,7 @@ def test_persist_scope_releases_on_exit(spark):
     assert n_cached() == base
 
 
-# ------------------------------------------------- Arrow gram engine parity
+# ------------------------------------------------- Arrow gram kernel parity
 
 
 _GRAM_TEXTS = [
@@ -379,78 +378,3 @@ def test_monotone_block_id_contract(spark):
     ordered = [next(iter(by_v[v])) for v in sorted(by_v)]
     assert ordered == sorted(ordered)  # monotone
     assert len(set(ordered)) > 1  # actually parallel
-
-
-@pytest.mark.parametrize(
-    "op",
-    ["source_overlap", "contamination", "dsir", "novelty"],
-)
-def test_gram_consumers_engine_parity(spark, sf_dir, op):
-    """Each gram-consuming operator returns identical rows under
-    gram_engine='arrow' and 'zipwith' on real testdata."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(250)
-
-    def rows(engine):
-        if op == "source_overlap":
-            from loongcollector_spark.operators.dedup import source_overlap
-
-            out = source_overlap(docs, k=3, gram_engine=engine)
-        elif op == "contamination":
-            from loongcollector_spark.operators.text import (
-                benchmark_contamination,
-            )
-
-            bench = docs.filter(F.col("doc_id") % 10 == 3)
-            out = benchmark_contamination(docs, bench, n=4, gram_engine=engine)
-        elif op == "dsir":
-            from loongcollector_spark.operators.dsir import dsir_weights
-
-            out = dsir_weights(
-                docs, F.col("lang") == "en", gram_engine=engine
-            )
-        else:
-            from loongcollector_spark.operators.text import ngram_novelty
-
-            out = ngram_novelty(docs, k=3, gram_engine=engine)
-        # identical gram multisets guarantee identical integer columns;
-        # float aggregates (dsir's log_weight) accumulate in a different
-        # order per engine, so equality holds only to float-sum noise —
-        # round to 8 decimals (observed divergence ~1e-13 relative)
-        return sorted(
-            tuple(round(v, 8) if isinstance(v, float) else v for v in r)
-            for r in out.collect()
-        )
-
-    want = rows("zipwith")
-    assert rows("arrow") == want
-    if op in ("source_overlap", "dsir"):
-        assert rows("explode") == want
-
-
-def test_kgram_explode_rows_matches_zipwith_kernel(spark):
-    """The codegen arrays_zip engine emits the same (id, gram) multiset
-    as split + _kgram_fold for every k, and its plan stays Python-free
-    (no ArrowEvalPython / BatchEvalPython node)."""
-    from loongcollector_spark.operators.dedup import (
-        _kgram_explode_rows,
-        _kgram_fold,
-        _norm_text,
-    )
-
-    df = _gram_df(spark)
-    norm = _norm_text(F.coalesce(F.col("text"), F.lit("")))
-    tk = F.split(norm, " ")
-    for k in (1, 2, 3, 13):
-        got_df = _kgram_explode_rows(df, {"doc_id": F.col("doc_id")}, norm, k)
-        plan = got_df._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in plan, f"k={k} plan left the JVM"
-        got = sorted(map(tuple, got_df.collect()))
-        want = sorted(
-            map(
-                tuple,
-                df.select(
-                    "doc_id", F.explode(_kgram_fold(tk, k)).alias("__g")
-                ).collect(),
-            )
-        )
-        assert got == want, f"explode k={k}"

@@ -2,6 +2,8 @@
 streaming; streaming results must equal the batch run (the reference's
 single processor interface shared by both planes)."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,6 +125,41 @@ def test_stateful_rate_limit_token_bucket(spark, tmp_path):
     assert all(g == 10 for g in gaps[1:])
 
 
+def test_stateful_rate_limit_null_ts_first_event_refills(spark, tmp_path):
+    """A key whose first event has a NULL ts must still refill: the
+    NULL counts as epoch 0, so later events see elapsed time."""
+    from datetime import datetime, timedelta
+
+    from loongcollector_spark.streaming.stream import stateful_rate_limit
+
+    base = datetime(2024, 1, 1)
+    rows = [("k", 0, None)] + [
+        ("k", i, base + timedelta(seconds=2 * i)) for i in range(1, 6)
+    ]
+    src = str(tmp_path / "rl_null_in")
+    spark.createDataFrame(
+        rows, "key string, i long, ts timestamp"
+    ).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("key string, i long, ts timestamp").parquet(src)
+    limited = stateful_rate_limit(stream, ["key"], rate_per_sec=1.0, burst=1)
+    q = (
+        limited.writeStream.format("memory")
+        .queryName("rl_null_out")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "rl_null_ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    kept = sorted(r.i for r in spark.sql("select * from rl_null_out").collect())
+    # burst 1 spends on the NULL-ts event; each event 2 s later finds
+    # a refilled token
+    assert kept == [0, 1, 2, 3, 4, 5]
+
+
 def test_stateful_conv_counter(spark, tx_path, tmp_path):
     stream = read_transcript_stream(spark, tx_path)
     counted = stateful_conv_counter(stream)
@@ -134,7 +171,17 @@ def test_stateful_conv_counter(spark, tx_path, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # a processing-time timeout makes Spark run a no-data batch after
+    # every batch, so this availableNow query never terminates and
+    # processAllAvailable never returns. availableNow runs every data
+    # batch first; the first batch with no input marks the drain.
+    try:
+        deadline = time.monotonic() + 120
+        while (q.lastProgress or {}).get("numInputRows", -1) != 0:
+            assert time.monotonic() < deadline, "stream did not drain"
+            q.awaitTermination(0.2)  # raises if the query failed
+    finally:
+        q.stop()
     rows = spark.sql(
         "select conv_id, max(n_turns) as n from conv_counts group by conv_id"
     ).collect()
