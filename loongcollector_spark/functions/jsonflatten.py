@@ -22,21 +22,25 @@ never per-row from the driver.
 from __future__ import annotations
 
 import json
+import math
 from typing import Any
 
 
 def _scalar_to_str(v: Any) -> str:
+    # byte-identical to json.dumps for every scalar json.loads yields,
+    # without its per-call encoder set-up: json.dumps writes ints with
+    # int.__repr__ and finite floats with float.__repr__ (2.0 stays
+    # "2.0", keeping round-trips faithful — the Go impl prints via
+    # jsoniter, which keeps the source lexeme); NaN and ±Infinity keep
+    # json.dumps' spelling
     if v is None:
         return "null"
     if isinstance(v, bool):
         return "true" if v else "false"
-    if isinstance(v, float) and v.is_integer():
-        # keep 2.0 as "2.0"? the Go impl prints via jsoniter which keeps
-        # the source lexeme; json.dumps(2.0) == "2.0" — use dumps for
-        # floats so round-tripping stays faithful.
-        return json.dumps(v)
-    if isinstance(v, (int, float)):
-        return json.dumps(v)
+    if isinstance(v, int):
+        return int.__repr__(v)
+    if isinstance(v, float):
+        return float.__repr__(v) if math.isfinite(v) else json.dumps(v)
     return str(v)
 
 

@@ -412,4 +412,5 @@ def decode_udf(which: str):
     def _decode(s):
         return s.map(fn)
 
-    return _decode
+    # evaluate-once rule: see the operators/parse.py module docstring
+    return _decode.asNondeterministic()

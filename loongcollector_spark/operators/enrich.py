@@ -246,7 +246,8 @@ def _desensitize_md5_resub(df: DataFrame, source_key: str, regex: str) -> DataFr
             else None
         )
 
-    return df.withColumn(source_key, mask(F.col(source_key)))
+    # evaluate-once rule: see the operators/parse.py module docstring
+    return df.withColumn(source_key, mask.asNondeterministic()(F.col(source_key)))
 
 
 def md5_field(df: DataFrame, source_key: str, md5_key: str) -> DataFrame:

@@ -22,6 +22,23 @@ compile-once-run-many, regex.go:57) — never per-row Python.
 Unmatch policy flags mirror CommonParserOptions.h:27-40:
 ``keep_source`` (copy raw alongside parsed), ``keep_source_if_parse_error``,
 ``discard_unmatched`` (drop the event on parse failure).
+
+Evaluate-once rule: every Python parse UDF a processor emits is marked
+``.asNondeterministic()``. Catalyst otherwise treats a pandas UDF as
+deterministic and, when a filter on the parsed output follows (a
+``filter_regex`` on a parsed key, or ``discard_unmatched``'s own
+filter), pushes the filter beneath the projection by substituting the
+UDF call into the predicate — the plan then holds two
+``ArrowEvalPython`` nodes and every task runs two Python workers that
+parse each row twice. The sites: ``parse_json``, ``parse_grok``,
+``enrich._desensitize_md5_resub`` and ``otlp_wire.decode_udf``
+(protobuf OTLP in ``operators/otel.py``, whose explodes already keep
+span filters above the decode; marked so the rule does not rest on
+that). The trade-off: a filter that
+follows the parse no longer moves beneath it even when it reads only
+source columns, so such a filter runs after the Python parse rather
+than before it. Filter on source columns before parsing
+(``q_parse_json`` and ``q_grok`` in ``queries.py`` do).
 """
 
 from __future__ import annotations
@@ -242,6 +259,8 @@ def parse_grok(
         out["__m"] = matched
         return out[[*all_keys, "__m"]]
 
+    # evaluate-once rule: see the module docstring
+    grok_extract = grok_extract.asNondeterministic()
     out = df.withColumn("__p", grok_extract(F.col(source_key)))
     for k in all_keys:
         out = out.withColumn(k, F.col("__p")[k])
@@ -297,6 +316,8 @@ def parse_json(
             )
         )
 
+    # evaluate-once rule: see the module docstring
+    flatten = flatten.asNondeterministic()
     out = df.withColumn(dest_key, flatten(F.col(source_key)))
     matched = F.col(dest_key).isNotNull()
     out = _apply_unmatch_policy(

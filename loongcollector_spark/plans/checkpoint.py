@@ -36,6 +36,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["CheckpointedRun", "unit_of", "run_with_checkpoint", "UNIT_COL"]
 
@@ -74,11 +75,14 @@ class CheckpointedRun:
     def _meta_path(self) -> str:
         return os.path.join(self.dir, f"{self.job_id}__meta.json")
 
-    def ensure_meta(self, n_units: int, conv_col: str) -> None:
-        """Record the unit topology on first run; refuse a resume whose
-        topology differs — re-bucketing conversations across a
-        different ``n_units`` (or key column) would silently duplicate
-        or drop rows against already-committed units."""
+    def ensure_meta(self, n_units: int, conv_col: str, layout: str) -> None:
+        """Record the unit topology and output layout on first run;
+        refuse a resume whose topology differs — re-bucketing
+        conversations across a different ``n_units`` (or key column)
+        would silently duplicate or drop rows against already-committed
+        units — or whose layout differs (see :func:`_output_layout`).
+        Meta records written before the layout field existed carry
+        none; :func:`_check_layout` inspects their directories instead."""
         p = self._meta_path()
         if os.path.exists(p):
             with open(p) as fh:
@@ -90,11 +94,17 @@ class CheckpointedRun:
                     f"conv_col={meta['conv_col']!r}, resume requested "
                     f"n_units={n_units} conv_col={conv_col!r}"
                 )
+            if meta.get("layout", layout) != layout:
+                raise ValueError(
+                    f"checkpoint layout mismatch for job {self.job_id!r}: "
+                    f"committed units use {meta['layout']!r}, the transform "
+                    f"now writes {layout!r}"
+                )
             return
         tmp = p + ".tmp"
         with open(tmp, "w") as fh:
             json.dump({"job_id": self.job_id, "n_units": n_units,
-                       "conv_col": conv_col}, fh)
+                       "conv_col": conv_col, "layout": layout}, fh)
         os.replace(tmp, p)
 
     def _records(self):
@@ -143,6 +153,36 @@ class CheckpointedRun:
         )
 
 
+def _output_layout(columns: list[str]) -> str:
+    """Partition layout of a transform's output: routed outputs (a
+    ``sink`` column) nest ``sink=<name>`` under each unit directory,
+    others write part files directly into it."""
+    return f"{UNIT_COL}/sink" if "sink" in columns else UNIT_COL
+
+
+def _check_layout(out_dir: str, units, layout: str, job_id: str) -> None:
+    """Refuse to mix partition depths in one *out_dir*: a committed
+    unit directory holding part files directly while the transform
+    routes to ``sink``, or holding ``sink=`` directories while it does
+    not. The read-back could not list such a table (checkpoints written
+    before routed outputs nested ``sink`` have the flat layout)."""
+    routed = layout != UNIT_COL
+    for u in units:
+        d = os.path.join(out_dir, f"{UNIT_COL}={u}")
+        if not os.path.isdir(d):
+            continue  # a committed unit with no rows writes no directory
+        for name in os.listdir(d):
+            if name.startswith(("_", ".")):
+                continue  # _SUCCESS, .crc and other bookkeeping files
+            nested = name.startswith("sink=")
+            if nested != routed:
+                found = "sink directories" if nested else "part files"
+                raise ValueError(
+                    f"checkpoint layout mismatch for job {job_id!r}: "
+                    f"{d} holds {found}, the transform writes {layout!r}"
+                )
+
+
 def run_with_checkpoint(
     spark: SparkSession,
     df: DataFrame,
@@ -174,14 +214,29 @@ def run_with_checkpoint(
     uncommitted units are attempted, committed, then the crash raises.
     """
     ck = CheckpointedRun(spark, lineage_dir, job_id)
-    ck.ensure_meta(n_units, conv_col)
     done = ck.committed_units()
     todo = [u for u in range(n_units) if u not in done]
     attempt = todo if fail_after_units is None else todo[: fail_after_units]
+    if attempt and UNIT_COL in df.columns:
+        raise ValueError(f"input already has a {UNIT_COL!r} column")
+    # the output schema decides the layout and the read-back schema;
+    # with nothing to attempt it comes plan-only from a zero-row slice
+    out = transform(
+        df.filter(unit_of(F.col(conv_col), n_units).isin(attempt))
+        if attempt
+        else df.limit(0)
+    )
+    if conv_col not in out.columns:
+        raise ValueError(
+            f"transform output lost {conv_col!r}; checkpointed "
+            "transforms must retain the unit key column"
+        )
+    layout = _output_layout(out.columns)
+    part_cols = layout.split("/")
+    ck.ensure_meta(n_units, conv_col, layout)
+    _check_layout(out_dir, done, layout, job_id)
 
     if attempt:
-        if UNIT_COL in df.columns:
-            raise ValueError(f"input already has a {UNIT_COL!r} column")
         # clear crash leftovers for attempted units up front: dynamic
         # overwrite only replaces partitions the new write produces, so
         # a unit whose rerun output is EMPTY would otherwise keep stale
@@ -193,15 +248,6 @@ def run_with_checkpoint(
             leftover = os.path.join(out_dir, f"{UNIT_COL}={u}")
             if os.path.exists(leftover):
                 shutil.rmtree(leftover)
-        part = df.filter(
-            unit_of(F.col(conv_col), n_units).isin(attempt)
-        )
-        out = transform(part)
-        if conv_col not in out.columns:
-            raise ValueError(
-                f"transform output lost {conv_col!r}; checkpointed "
-                "transforms must retain the unit key column"
-            )
         tagged = out.withColumn(UNIT_COL, unit_of(F.col(conv_col), n_units))
         obs = Observation()
         counted = tagged.observe(
@@ -217,7 +263,6 @@ def run_with_checkpoint(
         # lineage-mode table keeps sink partition PRUNING for
         # read_sink consumers (unit-dir cleanup above removes nested
         # sink dirs with the unit, so retry semantics are unchanged)
-        part_cols = [UNIT_COL] + (["sink"] if "sink" in out.columns else [])
         (
             counted.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -230,24 +275,28 @@ def run_with_checkpoint(
         if fail_after_units is not None and len(attempt) >= fail_after_units:
             raise RuntimeError(f"injected failure after {len(attempt)} units")
 
+    # read back with the schema the write used: the data columns, then
+    # the partition columns in directory order. Inferring it instead
+    # would run a footer-reading job per call and type partition values
+    # by their look (a sink named "007" would come back as int 7)
+    typed = {f.name: f.dataType for f in out.schema} | {UNIT_COL: T.IntegerType()}
+    names = [c for c in out.columns if c not in part_cols] + part_cols
+    read_schema = T.StructType([T.StructField(c, typed[c]) for c in names])
     try:
-        result = spark.read.parquet(out_dir)
+        result = spark.read.schema(read_schema).parquet(out_dir)
     except Exception:
-        # an all-empty write leaves no schema-bearing parquet files
-        # (dynamic partition overwrite writes nothing for empty
-        # partitions); the committed lineage is still correct — return
-        # an empty frame with the transform's schema. This also covers
-        # RESUMING a fully-committed all-empty job (attempt == [], so
-        # derive the schema plan-only from a zero-row slice) — but if
-        # unit directories exist on disk, the failure is real
+        # with the schema given, an all-empty table reads back as an
+        # empty frame; what is left to fail is an out_dir that was
+        # never created, for which the committed lineage is still
+        # correct — return an empty frame with the transform's schema.
+        # But if unit directories exist on disk, the failure is real
         # corruption, not emptiness: re-raise.
         has_units = os.path.isdir(out_dir) and any(
             name.startswith(f"{UNIT_COL}=") for name in os.listdir(out_dir)
         )
         if has_units:
             raise
-        schema = out.schema if attempt else transform(df.limit(0)).schema
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], out.schema)
     # the __lc_unit=<id> directory layout surfaces as a partition
     # column; drop it so checkpointed and direct runs share one schema
-    return result.drop(UNIT_COL) if UNIT_COL in result.columns else result
+    return result.drop(UNIT_COL)

@@ -134,3 +134,79 @@ def test_midwrite_kill_leftovers_overwritten(spark, tmp_path):
     )
     b = sorted(tuple(r[c] for c in cols) for r in final.collect())
     assert a == b and len(b) == 40
+
+
+def test_numeric_looking_sink_reads_back_as_string(spark, tmp_path):
+    """The read-back uses the write's schema: a sink named "007" stays
+    the string "007" (schema inference typed it as int 7)."""
+    out = run_with_checkpoint(
+        spark,
+        _mk_df(spark, n=20),
+        lambda d: d.withColumn("sink", F.lit("007")),
+        out_dir=str(tmp_path / "out"),
+        lineage_dir=str(tmp_path / "lin"),
+        job_id="sink007",
+        n_units=2,
+    )
+    assert dict(out.dtypes)["sink"] == "string"
+    assert {r.sink for r in out.collect()} == {"007"}
+    assert out.count() == 20
+
+
+def _legacy_checkpoint(tmp_path, job_id, unit_entry):
+    """A committed unit 0 written by hand the way an earlier layout
+    left it: a meta record without the layout field, and *unit_entry*
+    (a part file or a sink= directory) directly under __lc_unit=0."""
+    import json
+    import os
+
+    lin, out = tmp_path / "lin", tmp_path / "out"
+    os.makedirs(lin)
+    with open(lin / f"{job_id}__meta.json", "w") as fh:
+        json.dump({"job_id": job_id, "n_units": 2, "conv_col": "conv_id"}, fh)
+    with open(lin / f"{job_id}_0.json", "w") as fh:
+        json.dump({"job_id": job_id, "unit_id": 0, "status": "committed",
+                   "rows_out": 1}, fh)
+    entry = out / "__lc_unit=0" / unit_entry
+    if unit_entry.startswith("sink="):
+        os.makedirs(entry)
+        entry = entry / "part-00000.parquet"
+    else:
+        os.makedirs(entry.parent)
+    entry.write_bytes(b"")
+    return dict(out_dir=str(out), lineage_dir=str(lin), job_id=job_id, n_units=2)
+
+
+@pytest.mark.parametrize(
+    "unit_entry,transform",
+    [
+        # flat unit directory, transform now routes to sink
+        ("part-00000.parquet", lambda d: d.withColumn("sink", F.lit("s"))),
+        # nested sink directory, transform no longer routes
+        ("sink=s", lambda d: d),
+    ],
+    ids=["flat_then_routed", "routed_then_flat"],
+)
+def test_resume_refuses_mixed_partition_depths(spark, tmp_path, unit_entry, transform):
+    kw = _legacy_checkpoint(tmp_path, "legacy", unit_entry)
+    with pytest.raises(ValueError, match="layout mismatch for job 'legacy'"):
+        run_with_checkpoint(spark, _mk_df(spark), transform, **kw)
+
+
+def test_layout_recorded_and_checked_on_resume(spark, tmp_path):
+    import json
+
+    df = _mk_df(spark)
+    kw = dict(
+        out_dir=str(tmp_path / "o"),
+        lineage_dir=str(tmp_path / "lin"),
+        job_id="lay",
+        n_units=2,
+    )
+    run_with_checkpoint(spark, df, lambda d: d, **kw)
+    with open(tmp_path / "lin" / "lay__meta.json") as fh:
+        assert json.load(fh)["layout"] == "__lc_unit"
+    with pytest.raises(ValueError, match="layout mismatch for job 'lay'"):
+        run_with_checkpoint(
+            spark, df, lambda d: d.withColumn("sink", F.lit("s")), **kw
+        )

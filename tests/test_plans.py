@@ -12,7 +12,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from loongcollector_spark.operators import aggregate as agg, enrich, parse, route as rt
+from loongcollector_spark.operators import aggregate as agg, enrich, otel, parse, route as rt
+from loongcollector_spark.operators import filter as flt
 from loongcollector_spark.queries import (
     NGINX_KEYS,
     NGINX_REGEX,
@@ -268,3 +269,101 @@ def test_round4_batch34_plan_pins(spark):
         assert shape(tool_transitions(tx)) == (3, 0)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _otel_pb(spark):
+    """Two spans ("db", "http") wire-encoded as one TracesData row."""
+    from loongcollector_spark.functions import protowire as w
+
+    def span(name, span_id):
+        body = (
+            w.write_len_delimited(1, bytes(16))
+            + w.write_len_delimited(2, span_id)
+            + w.write_string_field(5, name)
+        )
+        return w.write_len_delimited(2, body)  # ScopeSpans.spans = 2
+
+    spans = span("db", b"\x01" * 8) + span("http", b"\x02" * 8)
+    payload = w.write_len_delimited(1, w.write_len_delimited(2, spans))
+    return spark.createDataFrame([(1, bytearray(payload))], "rid int, payload binary")
+
+
+_JSON_ROWS = [('{"level":"ERROR","m":"a"}',), ('{"level":"INFO","m":"b"}',), ("nope",)]
+_GROK = ["n=%{NONNEGINT:n:int} w=%{WORD:w}"]
+_GROK_ROWS = [("n=1 w=ab",), ("n=2 w=cd",), ("zz",)]
+
+_PARSE_ONCE_CASES = {
+    # (input rows or a function making the input, plan under test, rows out)
+    "json_then_filter_regex": (
+        _JSON_ROWS,
+        lambda df: flt.filter_regex(
+            parse.parse_json(df, "text", keys=["level"]), include={"level": "^ERROR$"}
+        ),
+        1,
+    ),
+    "json_discard_unmatched": (
+        _JSON_ROWS,
+        lambda df: parse.parse_json(df, "text", discard_unmatched=True),
+        2,
+    ),
+    "grok_then_filter": (
+        _GROK_ROWS,
+        lambda df: parse.parse_grok(df, "text", _GROK).filter(F.col("w") == "ab"),
+        1,
+    ),
+    "grok_discard_unmatched": (
+        _GROK_ROWS,
+        lambda df: parse.parse_grok(df, "text", _GROK, discard_unmatched=True),
+        2,
+    ),
+    "md5_zero_width_then_filter": (
+        _GROK_ROWS,
+        lambda df: enrich.desensitize(df, "text", r"\d*", method="md5").filter(
+            F.length("text") > 40
+        ),
+        3,
+    ),
+    "otel_protobuf_then_filter": (
+        _otel_pb,
+        lambda df: otel.parse_otel_trace(df, "payload", format="protobuf").filter(
+            F.col("name") == "db"
+        ),
+        1,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_PARSE_ONCE_CASES))
+def test_python_parse_evaluates_once(spark, case):
+    """A filter on a Python parse's output must not clone the UDF into
+    the pushed-down predicate: one ArrowEvalPython per parse, so each
+    task runs one Python runner (evaluate-once rule, operators/parse.py
+    module docstring)."""
+    rows, build, n = _PARSE_ONCE_CASES[case]
+    df = rows(spark) if callable(rows) else spark.createDataFrame(rows, ["text"])
+    out = build(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert out.count() == n
+
+
+def test_source_filter_after_parse_json_keeps_rows(spark):
+    """The evaluate-once trade-off: a filter on the source column after
+    parse_json stays above the parse instead of moving beneath it, and
+    selects the same rows as filtering first."""
+    df = spark.createDataFrame(_JSON_ROWS, ["text"])
+    after = parse.parse_json(df, "text", keys=["level"]).filter(
+        F.col("text").contains("ERROR")
+    )
+    before = parse.parse_json(
+        df.filter(F.col("text").contains("ERROR")), "text", keys=["level"]
+    )
+    plan = after._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+
+    def rows(d):
+        return sorted((r.text, r.level, sorted(r.parsed.items())) for r in d.collect())
+
+    assert rows(after) == rows(before) == [
+        ('{"level":"ERROR","m":"a"}', "ERROR", [("level", "ERROR"), ("m", "a")])
+    ]

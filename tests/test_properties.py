@@ -108,6 +108,32 @@ def test_parse_and_flatten_roundtrip_via_dumps(obj):
     assert flatten_json(obj, expand_array=True) == flat
 
 
+json_number_edges = st.one_of(
+    st.none(),
+    st.booleans(),
+    st.integers(min_value=2**63, max_value=2**200),
+    st.integers(max_value=-(2**63)),
+    st.floats(allow_nan=True, allow_infinity=True),
+    st.sampled_from([-0.0, 0.0, 1e300, -1e300, 5e-324, 2.0, 1e16, 0.1]),
+)
+
+
+@given(json_number_edges)
+@settings(max_examples=300)
+def test_flatten_scalars_match_json_dumps(v):
+    """Leaf scalars stringify byte-identically to json.dumps, the
+    reference the flattener's fast path replaced — through the JSON
+    text too (json.dumps writes NaN/±Infinity as the literals
+    json.loads reads back)."""
+    assert flatten_json({"k": v}) == {"k": json.dumps(v)}
+    assert parse_and_flatten(json.dumps({"k": v})) == {"k": json.dumps(v)}
+
+
+def test_flatten_json_nonfinite_literals():
+    flat = parse_and_flatten('{"a": NaN, "b": Infinity, "c": -Infinity, "d": -0.0}')
+    assert flat == {"a": "NaN", "b": "Infinity", "c": "-Infinity", "d": "-0.0"}
+
+
 def test_parse_and_flatten_rejects_non_objects():
     assert parse_and_flatten("[1,2]") is None
     assert parse_and_flatten("42") is None
