@@ -1,803 +1,131 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract).
+"""Per-query timer over the query registry.
 
-Runs headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line. Additionally evidences the north rule's two-cluster-size
-scaling criterion in-sandbox: the identical parse→enrich→route→aggregate
-job over the identical deterministic generated input at N and 4N
-EXECUTORS (Spark ``local-cluster`` — real separate executor JVMs, the
-literal shape the rule names), reporting turns/sec at both and
-efficiency ``E = thr_4N / (4 · thr_N)``.
+Times every ``QUERIES`` entry exactly as registered — the one
+definition the DuckDB oracle gate also checks — at
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data) on
+``local[$SPARK_GRAFT_CPUS]`` (default: the cores this process may run
+on). Each result is fully materialised with
+:func:`~loongcollector_spark.sources.sinks.write_blackhole` (Spark's
+``noop`` write): ``.count()`` lets Catalyst prune projected columns
+and under-measures by 1.1-3.0× at sf0.1.
 
-Executor sizing (measured rationale, SCALE.md): per-executor shape is
-held constant (2 cores, 2 GiB) and only the COUNT changes, 1 → 4.
-Levels are pinned to disjoint-overhead CPU sets sized task-slots + 2
-(the +2 absorbs driver/worker threads equally at both levels). The
-host caps total sustained parallel capacity well below 32× one core
-(measured: a pure-CPU spin scales 8→32 workers at 0.6-1.0 depending
-on co-tenant load; a memcpy loop at 0.34-0.47 — the box's shared
-memory bus saturates near 8 busy cores), so the 4N level is sized to
-stay inside the host's linear-capacity region; on a real multi-node
-cluster each executor brings its own memory controllers, which is
-precisely what executor-count scaling evidences. The single-JVM
-local[8]→local[32] ratio is ALSO measured and reported as context
-(``scaling_single_jvm``) together with the host calibration numbers.
+Every query reports a cold time (Spark cache cleared after a warm-up,
+so a full recompute) and a warm time (repeated at once with the cache
+intact), so deltas separate code changes from cache-protocol
+artifacts. The full detail goes to ``bench_queries.json``; stdout
+gets one compact JSON line, capped at 1800 characters.
 
-Both levels are measured interleaved, best-of over a FIXED number of
-sets (``SPARK_GRAFT_BENCH_SCALING_SETS``, default 4, budget-capped) —
-the stopping rule no longer conditions on reaching the pass gate
-(ADVICE r2): every per-set efficiency is reported alongside the
-best-of headline, so the gate is evaluated on data whose collection
-did not depend on it. Co-tenant noise on this shared host clips
-individual windows by 30-50%; best-of approaches the job's quiet-host
-scaling from below.
+Other measurements have their own harness: the pipeline benchmark of
+record is ``perfbench/run.py`` (BENCHMARK.json), and N-vs-4N executor
+scaling is ``jobs/submit_scaling.py``.
 
-Headline queries report BOTH cold (cache cleared between warm-up and
-measurement — full recompute) and warm (immediately repeated, Spark
-cache intact) timings, so round-over-round deltas separate code
-changes from cache-protocol artifacts (VERDICT r2 item 7).
+Run::
 
-Scaling run is skipped when SPARK_GRAFT_BENCH_SCALING=0.
+    SPARK_GRAFT_SF_DIR=<scale-factor dir> python bench.py
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# 24M turns: ~12 s at the 4N-executor level (fixed per-run overhead
-# <5%), ~34 s at the N level — long enough to amortize, short enough
-# to sample many windows of this noisy shared host.
-BENCH_TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", "24000000"))
-DO_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
-# wall-clock budget for the scaling section (set loop stops once
-# exceeded) and the fixed number of measurement sets
-SCALING_BUDGET_SEC = int(os.environ.get("SPARK_GRAFT_BENCH_SCALING_BUDGET", "1100"))
-SCALING_SETS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALING_SETS", "4"))
-CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "bench_queries.json"
+)
 
-HEADLINE = [
-    "parse_nginx",
-    "parse_json",
-    "grok",
-    "route_counts",
-    "enrich_dictmap",
-    "conv_stats",
-    "stable_order",
-    "enrich_pipeline_fanout",
-    "sessionize",
-    "dedup_exact",
-    "token_stats",
-    "curation_pipeline",
-    "minhash_dedup",
-    "simhash",
-    "ann_topk",
-    # round-3 additions (named so r2↔r3 per-query comparisons stay
-    # apples-to-apples on the shared prefix)
-    "enrich_chain",
-    "geoip",
-    "dedup_components",
-    "stratified_sample",
-    # round-3 late additions
-    "segment_dedup",
-    "repetition_signals",
-    "pii_scan",
-    "latency_percentiles",
-    "contamination",
-    "lm_perplexity",
-    "mixture_report",
-    "asof_join",
-    "semantic_dedup",
-    "ann_lsh",
-    "curation_v2",
-    # round-3 continuation additions
-    "bm25",
-    "bpe_pairs",
-    "bpe_tokenize",
-    "event_funnel",
-    "hll_distinct",
-    "uniform_sample",
-    "profile_table",
-    "log_templates",
-    "trailing_zscore",
-    "rolling_count",
-    "pack_sequences",
-    "pq_ann",
-    "exact_substring_dedup",
-    "quality_classifier",
-    "cms_counts",
-    "stratified_topn",
-    "corpus_delta",
-    "bigram_perplexity",
-    "conversation_examples",
-    "url_hygiene",
-    "vocab_report",
-    "oov_rate",
-    "conversation_latency",
-    "interval_join",
-    # round-4 additions: the wire-format round-trips
-    "sls_wire_roundtrip",
-    "otlp_wire_spans",
-    # round-4 session-2: curation additions
-    "chunk_docs",
-    "dsir_weights",
-    "temperature_mixture",
-    "ngram_novelty",
-    "gopher_rules",
-    "edit_distance",
-    "split_assign",
-    "score_sample",
-    "clean_lines",
-    "dedup_lines",
-    "tfidf_terms",
-    # round-4 session-3 additions
-    "role_conformance",
-    "truncate_context",
-    "pmi_pairs",
-    "token_drift",
-    "tool_transitions",
-    "self_repetition",
-    "split_leakage",
-    "render_chat",
-    # round-4 session-4 additions
-    "preference_pairs",
-    "json_validity",
-    "truncation_artifacts",
-    "fim_split",
-    # round-4 session-5 additions
-    "agent_loops",
-    "tool_errors",
-    "refusal_scan",
-    "context_growth",
-    "best_of_n",
-    "zipf_fit",
-    "prefix_groups",
-    "trajectory_outcome",
-    "turn_gaps",
-    "source_overlap",
-    "fertility_report",
-    "sft_gate",
-    "conv_split",
-    "conv_contamination",
-    "conv_windows",
-    "rm_pairs",
-    # round-5 additions
-    "sft_export",
-    "spl_endtoend",
-    "spl_extend_funcs",
-    "spl_multi_dataset",
-    "spl_stats",
-    "conv_neardup",
-    "prom_wire_roundtrip",
-    "loki_push_roundtrip",
-    "es_bulk_roundtrip",
-    "winnowing_dedup",
-    # round-5 session-3 additions
-    "kmeans_embeddings",
-    "cluster_sample",
-    "template_drift",
-    "cohort_retention",
-    "code_detection",
-    "reading_level",
-    "charset_stats",
-    "speech_acts",
-    "pair_overlap",
-    "cluster_mixture",
-    # round-5 session-4 additions
-    "dialogue_balance",
-    "echo_rate",
-    "tool_entropy",
-    "luhn_scan",
-    "length_bias",
-    "embedding_outliers",
-]
+from loongcollector_spark.cache import release_persisted  # noqa: E402
+from loongcollector_spark.queries import QUERIES  # noqa: E402
+from loongcollector_spark.sources.sinks import write_blackhole  # noqa: E402
 
 
-def _bench_queries():
-    """Headline callables: the QUERIES registry, with the fuzzy-dedup
-    entries swapped to their PRODUCTION hash kernels (the registry
-    versions run the md5 oracle kernel so DuckDB can value-match them;
-    the bench measures the xxhash64 path users actually run)."""
-    from loongcollector_spark.queries import QUERIES
-    from loongcollector_spark.operators.dedup import minhash_dedup_pairs, simhash
-
-    def bench_minhash(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return minhash_dedup_pairs(docs, threshold=0.5, hash_mode="xxhash64")
-
-    def bench_simhash(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return simhash(docs, hash_mode="xxhash64").select("doc_id", "simhash")
-
-    def bench_components(spark, sf_dir):
-        from loongcollector_spark.operators.dedup import dedup_components
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return dedup_components(docs, threshold=0.5, hash_mode="xxhash64")
-
-    def bench_curation_v2(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from loongcollector_spark.operators.dedup import dedup_components
-        from loongcollector_spark.operators.text import (
-            stratified_sample,
-            token_stats,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        comp = dedup_components(docs, threshold=0.5, hash_mode="xxhash64")
-        kept = docs.join(
-            comp.filter(F.col("is_canonical")).select("doc_id"), "doc_id", "left_semi"
-        )
-        gated = token_stats(kept).filter(F.col("n_ws_tokens") >= 5)
-        sampled = stratified_sample(
-            gated, "lang", {}, default_fraction=0.6, salt="cv2", hash_mode="xxhash64"
-        )
-        return sampled.groupBy("lang").agg(
-            F.count("*").alias("n_docs"), F.sum("n_ws_tokens").alias("total_tokens")
-        )
-
-    def bench_semantic_dedup(spark, sf_dir):
-        from loongcollector_spark.operators.similarity import semantic_dedup
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        return semantic_dedup(emb, threshold=0.85).select("vec_id", "cluster")
-
-    def bench_ann_lsh(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from loongcollector_spark.operators.similarity import lsh_ann_topk
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        return lsh_ann_topk(emb, q, k=3)
-
-    def bench_hll(spark, sf_dir):
-        from loongcollector_spark.operators.sketch import hll_distinct
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return hll_distinct(ev, "event_id", p=12, hash_mode="xxhash64")
-
-    def bench_uniform_sample(spark, sf_dir):
-        from loongcollector_spark.operators.sketch import uniform_sample
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return uniform_sample(docs, 1000, hash_mode="xxhash64")
-
-    def bench_profile(spark, sf_dir):
-        from loongcollector_spark.operators.profile import profile_table
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return profile_table(ev, distinct_mode="approx")
-
-    def bench_cms(spark, sf_dir):
-        from loongcollector_spark.operators.sketch import cms_build
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return cms_build(ev, "event_type", width=1024, depth=4, hash_mode="xxhash64")
-
-    def bench_stratified_topn(spark, sf_dir):
-        from loongcollector_spark.operators.sketch import stratified_topn_sample
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return stratified_topn_sample(docs, "lang", 20, hash_mode="xxhash64")
-
-    def bench_corpus_delta(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from loongcollector_spark.operators.delta import delta_summary
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        new = docs.filter(F.col("doc_id") % 7 != 0)
-        return delta_summary(docs, new, hash_mode="xxhash64")
-
-    def bench_exact_substring(spark, sf_dir):
-        from loongcollector_spark.operators.dedup import remove_duplicate_spans
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return remove_duplicate_spans(docs, k=15, hash_mode="xxhash64")
-
-    def bench_pq_ann(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from loongcollector_spark.operators.similarity import pq_ann_topk
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        return pq_ann_topk(emb, q, k=3, m=8, ksub=16, refine=8)
-
-    return {
-        **QUERIES,
-        "minhash_dedup": bench_minhash,
-        "simhash": bench_simhash,
-        "dedup_components": bench_components,
-        # production kernels for the oracle-kernel registry entries
-        "curation_v2": bench_curation_v2,
-        "semantic_dedup": bench_semantic_dedup,
-        "ann_lsh": bench_ann_lsh,
-        "hll_distinct": bench_hll,
-        "uniform_sample": bench_uniform_sample,
-        "profile_table": bench_profile,
-        "pq_ann": bench_pq_ann,
-        "exact_substring_dedup": bench_exact_substring,
-        "cms_counts": bench_cms,
-        "stratified_topn": bench_stratified_topn,
-        "corpus_delta": bench_corpus_delta,
-    }
+def _drop_caches(spark) -> None:
+    release_persisted()  # tracked persist handles (cache.py)
+    spark.catalog.clearCache()
 
 
-def _pipeline(spark, src_path: str):
-    """The measured job: scan → regex parse → broadcast enrich → route →
-    per-sink count. Mirrors the reference's benchmark scenario
-    (regex parse + filter → sink, test/benchmark/.../case.feature:9-12)."""
-    from pyspark.sql import functions as F
+def time_query(spark, name: str, sf_dir: str) -> tuple[float, float]:
+    """Cold and warm seconds for the registry query *name*.
 
-    from loongcollector_spark.operators import enrich, parse, route as rt
-    from loongcollector_spark.queries import (
-        DEFAULT_SINK,
-        NGINX_KEYS,
-        NGINX_REGEX,
-        ROLE_DIM,
-        ROUTER_RULES,
-    )
-
-    df = spark.read.parquet(src_path)
-    parsed = parse.parse_regex(df, "text", NGINX_REGEX, NGINX_KEYS)
-    dim = spark.createDataFrame(ROLE_DIM, ["role", "role_class", "priority"])
-    enriched = enrich.dict_map(
-        parsed, dim, "role", "role_class", handle_missing=True, missing="Unknown"
-    )
-    cfg = rt.RouterConfig(
-        source_key="role", rules=ROUTER_RULES, default_sink=DEFAULT_SINK
-    )
-    routed = rt.route(enriched, cfg)
-    return routed.groupBy("sink", "role_class").agg(
-        F.count("*").alias("cnt"), F.count("status").alias("n_nginx")
-    )
-
-
-def _ensure_bench_input(n_turns: int) -> str:
-    """Generate (once) the deterministic bench transcript table."""
-    path = os.path.join(CACHE_DIR, f"transcripts_{n_turns}.parquet")
-    marker = os.path.join(path, "_SUCCESS")
-    if os.path.exists(marker):
-        return path
-    from loongcollector_spark.session import get_spark
-    from loongcollector_spark.sources.transcripts import generate_transcripts
-
-    spark = get_spark("bench-gen", cores=CPUS)
-    generate_transcripts(spark, n_turns, partitions=max(CPUS * 4, 32)).write.mode(
-        "overwrite"
-    ).parquet(path)
-    spark.stop()
-    return path
-
-
-def _throughput_child(cores: int, src_path: str, n_turns: int, rounds: int) -> None:
-    """Child-process body: measure and print turns/sec (single JVM).
-
-    The DataFrame is REBUILT every round: re-collecting one Dataset
-    object reuses its RDD, and Spark then SKIPS already-computed
-    shuffle map stages — the "re-run" would measure only the final
-    reduce (observed as a ~200× fake speedup). A fresh plan per round
-    re-executes scan, parse, broadcast and shuffle for real; the
-    ~0.1 s of Catalyst analysis it adds is part of honest per-job
-    overhead.
+    Each run builds a fresh DataFrame (re-running one Dataset lets
+    Spark skip its computed shuffle stages). The cache is cleared
+    between the warm-up and the cold run, so a ``persist()`` from the
+    warm-up cannot serve it.
     """
-    from loongcollector_spark.session import get_spark
-
-    spark = get_spark(f"bench-{cores}", cores=cores)
-    # two warm-ups: JVM JIT/codegen, file listing, page cache
-    _pipeline(spark, src_path).collect()
-    _pipeline(spark, src_path).collect()
-    times = []
-    for _ in range(rounds):
-        t0 = time.monotonic()
-        _pipeline(spark, src_path).collect()
-        times.append(time.monotonic() - t0)
-    spark.stop()
-    # best-of-n: robust to external CPU interference spikes (we measure
-    # the pipeline's achievable rate, not the sandbox's noise)
-    print(f"TURNS_PER_SEC {n_turns / min(times)}")
+    query = QUERIES[name]
+    write_blackhole(query(spark, sf_dir))  # warm-up: codegen, file listing
+    _drop_caches(spark)
+    t0 = time.monotonic()
+    write_blackhole(query(spark, sf_dir))
+    cold = time.monotonic() - t0
+    t0 = time.monotonic()
+    write_blackhole(query(spark, sf_dir))
+    warm = time.monotonic() - t0
+    _drop_caches(spark)
+    return round(cold, 3), round(warm, 3)
 
 
-def _throughput_child_lc(
-    n_exec: int, cores_per: int, src_path: str, n_turns: int, rounds: int, warm: int
-) -> None:
-    """Child-process body: the same job on a ``local-cluster`` of
-    *n_exec* separate executor JVMs × *cores_per* cores each.
-
-    Scan-split granularity is pinned fine (4 MiB target, 1 MiB open
-    cost) so both cluster sizes run the scan stage fully occupied —
-    with the 128 MiB production default this small input yields ~10
-    tasks and the larger cluster sits half idle (task starvation would
-    masquerade as poor scaling)."""
-    from pyspark.sql import SparkSession
-
-    from loongcollector_spark.benchproto import SCALING_CONFS, spark_home
-
-    os.environ["SPARK_HOME"] = spark_home()
-    slots = n_exec * cores_per
-    builder = (
-        SparkSession.builder.master(f"local-cluster[{n_exec},{cores_per},2048]")
-        .appName(f"bench-lc-{n_exec}x{cores_per}")
-        .config("spark.sql.shuffle.partitions", str(slots))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    )
-    for k, v in SCALING_CONFS.items():  # shared protocol constants
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for _ in range(warm):
-        _pipeline(spark, src_path).collect()
-    times = []
-    for _ in range(rounds):
-        t0 = time.monotonic()
-        _pipeline(spark, src_path).collect()
-        times.append(time.monotonic() - t0)
-    spark.stop()
-    print(f"TURNS_PER_SEC {n_turns / min(times)}")
-
-
-def _spin(_: int) -> int:
-    """Pure-CPU work unit for host-capacity calibration."""
-    x = 0
-    t_end = time.monotonic() + 3
-    c = 0
-    while time.monotonic() < t_end:
-        for i in range(100000):
-            x += i * i
-        c += 1
-    return c
-
-
-def _host_spin_capacity() -> float:
-    """Host parallel-capacity calibration: how well a pure-CPU spin
-    scales 8 → 32 workers RIGHT NOW. 1.0 = quiet host; 0.6 windows are
-    routinely observed (co-tenant steal). Reported alongside E so the
-    sandbox's share of any shortfall is visible."""
-    import multiprocessing as mp
-
-    caps = {}
-    for w in (8, 32):
-        with mp.Pool(w) as p:
-            caps[w] = sum(p.map(_spin, range(w))) / 3
-    return caps[32] / (4 * caps[8])
-
-
-def _run_pinned(cmd: list[str], pin: str, timeout: int = 1200) -> float:
-    """Run a throughput child pinned to the CPU range *pin*; parse its
-    TURNS_PER_SEC line."""
-    if shutil.which("taskset"):
-        cmd = ["taskset", "-c", pin] + cmd
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=timeout)
-    for line in out.stdout.splitlines():
-        if line.startswith("TURNS_PER_SEC "):
-            return float(line.split()[1])
-    raise RuntimeError(
-        f"throughput child failed ({cmd[:6]}...):\n{out.stdout}\n{out.stderr[-2000:]}"
-    )
-
-
-def _run_throughput(cores: int, src_path: str, n_turns: int, rounds: int = 3) -> float:
-    """Single-JVM ``local[cores]`` measurement (context metric), pinned
-    to exactly *cores* CPUs so the JVM's GC/IO threads can't borrow
-    extra physical cores and inflate the low level."""
-    cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--throughput",
-        str(cores),
-        src_path,
-        str(n_turns),
-        str(rounds),
-    ]
-    return _run_pinned(cmd, f"0-{cores - 1}")
-
-
-def _run_throughput_lc(
-    n_exec: int,
-    cores_per: int,
-    src_path: str,
-    n_turns: int,
-    rounds: int,
-    warm: int,
-) -> float:
-    """N-executor ``local-cluster`` measurement: the whole process tree
-    (driver + worker + executor JVMs) is pinned to task-slots + 2 CPUs
-    — the +2 grants the SAME absolute driver/worker headroom at both
-    cluster sizes, so the ratio compares executor capacity, not
-    driver contention."""
-    slots = n_exec * cores_per
-    cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--throughput-lc",
-        str(n_exec),
-        str(cores_per),
-        src_path,
-        str(n_turns),
-        str(rounds),
-        str(warm),
-    ]
-    return _run_pinned(cmd, f"0-{slots + 1}")
+def time_queries(spark, sf_dir: str) -> dict[str, tuple[float, float]]:
+    """:func:`time_query` over every registered query, in registry order."""
+    times = {}
+    for name in QUERIES:
+        times[name] = time_query(spark, name, sf_dir)
+        cold, warm = times[name]
+        print(f"# {name}: cold {cold:.3f}s warm {warm:.3f}s", file=sys.stderr)
+    return times
 
 
 def main() -> None:
     from loongcollector_spark.session import get_spark
 
     t_all0 = time.monotonic()
-
-    # scaling first (cleanest CPU state): N vs 4N EXECUTORS
-    # (local-cluster, module docstring has the full protocol
-    # rationale), interleaved N/4N/N/4N so drifting co-tenant load
-    # hits both cluster sizes alike, best-of per level over a FIXED
-    # number of sets — the set count never depends on the measured E
-    # (unbiased stopping rule), only on the wall-clock budget.
-    scaling = None
-    scaling_sj = None
-    spin_caps: list[float] = []
-    set_effs: list[float] = []
-    if DO_SCALING:
-        t_scale0 = time.monotonic()
-        src = _ensure_bench_input(BENCH_TURNS)
-        n_low, n_high, cores_per = 1, 4, 2
-        lows: list[float] = []
-        highs: list[float] = []
-
-        def one_set() -> None:
-            spin_caps.append(round(_host_spin_capacity(), 3))
-            lows.append(
-                _run_throughput_lc(n_low, cores_per, src, BENCH_TURNS, rounds=2, warm=1)
-            )
-            highs.append(
-                _run_throughput_lc(n_high, cores_per, src, BENCH_TURNS, rounds=3, warm=2)
-            )
-            set_effs.append(
-                round(highs[-1] / ((n_high / n_low) * lows[-1]), 3)
-            )
-
-        try:
-            for _ in range(SCALING_SETS):
-                one_set()
-                if (time.monotonic() - t_scale0) > SCALING_BUDGET_SEC:
-                    break
-            eff = max(highs) / ((n_high / n_low) * max(lows))
-            scaling = (n_low, n_high, n_low * cores_per, n_high * cores_per,
-                       cores_per, max(lows), max(highs), eff)
-        except RuntimeError as exc:
-            # environment can't run local-cluster (e.g. launcher
-            # scripts unavailable): fall back to the single-JVM
-            # two-parallelism protocol so the criterion still gets
-            # evidenced rather than the whole bench failing
-            print(f"# local-cluster scaling failed ({exc}); "
-                  "falling back to single-JVM levels", file=sys.stderr)
-            lows.clear()
-            highs.clear()
-            set_effs.clear()
-            low_c = max(CPUS // 4, 1)
-
-            def one_set_sj() -> None:
-                spin_caps.append(round(_host_spin_capacity(), 3))
-                lows.append(_run_throughput(low_c, src, BENCH_TURNS, rounds=2))
-                highs.append(_run_throughput(CPUS, src, BENCH_TURNS, rounds=3))
-                set_effs.append(
-                    round(highs[-1] / ((CPUS / low_c) * lows[-1]), 3)
-                )
-
-            for _ in range(SCALING_SETS):
-                one_set_sj()
-                if (time.monotonic() - t_scale0) > SCALING_BUDGET_SEC:
-                    break
-            eff = max(highs) / ((CPUS / low_c) * max(lows))
-            scaling = (1, 1, low_c, CPUS, None, max(lows), max(highs), eff)
-
-        # context metric: the same job single-JVM at CPUS/4 vs CPUS
-        # local threads — bounded above by the host's shared-memory
-        # ceiling (see docstring), reported for transparency
-        try:
-            sj_low = _run_throughput(max(CPUS // 4, 1), src, BENCH_TURNS, rounds=2)
-            sj_high = _run_throughput(CPUS, src, BENCH_TURNS, rounds=2)
-            scaling_sj = (
-                max(CPUS // 4, 1),
-                CPUS,
-                sj_low,
-                sj_high,
-                sj_high / ((CPUS / max(CPUS // 4, 1)) * sj_low),
-            )
-        except RuntimeError:
-            scaling_sj = None
-        spin_caps.append(round(_host_spin_capacity(), 3))
-
-    from loongcollector_spark.cache import release_persisted
-
     spark = get_spark("bench", cores=CPUS)
-    bench_queries = _bench_queries()
-    q_secs: dict[str, float] = {}
-    q_secs_warm: dict[str, float] = {}
-    for name in HEADLINE:
-        # fresh DataFrame per measurement (re-counting one Dataset
-        # would let Spark skip its computed shuffle stages), and the
-        # Spark cache cleared between warm-up and the COLD run so that
-        # number is a full recompute — the minhash signature persist()
-        # from the warm-up would otherwise serve it (and log an
-        # "already cached" warning on its re-persist). The WARM run
-        # repeats immediately with the cache intact: the code-change
-        # signal, free of cache-protocol artifacts.
-        bench_queries[name](spark, SF_DIR).count()  # warm-up: codegen, listing
-        release_persisted()  # drop tracked persist handles (cache.py)
-        spark.catalog.clearCache()
-        t0 = time.monotonic()
-        df = bench_queries[name](spark, SF_DIR)
-        n = df.count()
-        q_secs[name] = round(time.monotonic() - t0, 3)
-        t0 = time.monotonic()
-        bench_queries[name](spark, SF_DIR).count()
-        q_secs_warm[name] = round(time.monotonic() - t0, 3)
-        release_persisted()
-        spark.catalog.clearCache()
-        print(
-            f"# {name}: cold {q_secs[name]:.3f}s warm {q_secs_warm[name]:.3f}s "
-            f"rows={n}",
-            file=sys.stderr,
-        )
+    times = time_queries(spark, SF_DIR)
     spark.stop()
 
+    cold = {name: c for name, (c, _) in times.items()}
+    warm = {name: w for name, (_, w) in times.items()}
     result = {
-        "metric": "headline queries total wall time (cold)",
-        "value": round(sum(q_secs.values()), 3),
+        "metric": "registry queries total wall time (cold, noop write)",
+        "value": round(sum(cold.values()), 3),
         "unit": "sec",
-        "queries": q_secs,
-        "queries_warm": q_secs_warm,
-        "total_warm_sec": round(sum(q_secs_warm.values()), 3),
+        "queries": cold,
+        "queries_warm": warm,
+        "total_warm_sec": round(sum(warm.values()), 3),
         "sf": SF_DIR,
+        "cores": CPUS,
+        "total_bench_sec": round(time.monotonic() - t_all0, 1),
     }
-
-    if scaling is not None:
-        n_low, n_high, c_low, c_high, cores_per, thr_low, thr_high, eff = scaling
-        result["scaling"] = {
-            "protocol": (
-                "local-cluster executors, fixed 2-core/2GiB shape"
-                if cores_per is not None
-                else "single-JVM local[N] fallback"
-            ),
-            "n_turns": BENCH_TURNS,
-            "executors_low": n_low,
-            "executors_high": n_high,
-            "cores_per_executor": cores_per,
-            "cores_low": c_low,
-            "cores_high": c_high,
-            "turns_per_sec_low": round(thr_low, 1),
-            "turns_per_sec_high": round(thr_high, 1),
-            "efficiency": round(eff, 3),
-            # per-set efficiencies (one per fixed measurement set —
-            # the full distribution behind the best-of headline)
-            "per_set_efficiency": set_effs,
-            "n_sets": len(set_effs),
-            # host calibration: pure-CPU spin scaling 8->32 workers
-            # measured before each set (1.0 = quiet host)
-            "host_spin_capacity": spin_caps,
-        }
-        print(
-            f"# scaling: {thr_low:.0f} t/s @{c_low} cores, "
-            f"{thr_high:.0f} t/s @{c_high} cores, E={eff:.3f} "
-            f"(per-set {set_effs}, host spin caps {spin_caps})",
-            file=sys.stderr,
-        )
-    if scaling_sj is not None:
-        sl, sh, tl, th, se = scaling_sj
-        result["scaling_single_jvm"] = {
-            "cores_low": sl,
-            "cores_high": sh,
-            "turns_per_sec_low": round(tl, 1),
-            "turns_per_sec_high": round(th, 1),
-            "efficiency": round(se, 3),
-            "note": (
-                "context only: one JVM local[N] threads share one "
-                "heap/GC and this host's memory bus saturates near 8 "
-                "busy cores (memcpy 8->32 scales 0.34-0.47)"
-            ),
-        }
-        print(
-            f"# scaling-single-jvm (context): {tl:.0f} t/s @{sl}, "
-            f"{th:.0f} t/s @{sh}, E={se:.3f}",
-            file=sys.stderr,
-        )
-
-    result["total_bench_sec"] = round(time.monotonic() - t_all0, 1)
-
-    # The driver captures only the LAST ~2000 chars of stdout: round 3's
-    # single JSON line carried 53 inline cold+warm per-query timings,
-    # overflowed that window, and came back "parsed": null (VERDICT r3
-    # item 2). Park the full per-query detail in bench_queries.json and
-    # print a compact final line — totals, scaling efficiency, per-set
-    # distribution, and only the top-10 slowest queries — hard-capped
-    # well under the capture window.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_queries.json")
-    if "scaling" not in result and os.path.exists(detail_path):
-        # headline-only run (SPARK_GRAFT_BENCH_SCALING=0): don't erase
-        # the last full run's scaling evidence from the detail artifact
-        # — carry it forward, explicitly marked as not re-measured
-        try:
-            with open(detail_path) as fh:
-                prev = json.load(fh)
-            for k in ("scaling", "scaling_single_jvm"):
-                if k in prev:
-                    result[k] = prev[k]
-                    result[f"{k}_carried_from_previous_run"] = True
-        except (OSError, ValueError):
-            pass
-    with open(detail_path, "w") as fh:
+    with open(DETAIL_PATH, "w") as fh:
         json.dump(result, fh, indent=1)
 
+    # a driver capturing the tail of stdout sees only ~2000 characters:
+    # full detail stays in bench_queries.json, the line carries totals
+    # and the ten slowest queries
     compact = {
         "metric": result["metric"],
         "value": result["value"],
         "unit": "sec",
-        "n_queries": len(q_secs),
-        "queries": dict(
-            sorted(q_secs.items(), key=lambda kv: -kv[1])[:10]
-        ),
+        "n_queries": len(cold),
+        "queries": dict(sorted(cold.items(), key=lambda kv: -kv[1])[:10]),
         "total_warm_sec": result["total_warm_sec"],
         "sf": SF_DIR,
-        "detail": "bench_queries.json",
+        "cores": CPUS,
+        "detail": os.path.basename(DETAIL_PATH),
         "total_bench_sec": result["total_bench_sec"],
     }
-    if scaling is not None:
-        s = result["scaling"]
-        compact["scaling"] = {
-            k: s[k]
-            for k in (
-                "cores_low",
-                "cores_high",
-                "turns_per_sec_low",
-                "turns_per_sec_high",
-                "efficiency",
-                "per_set_efficiency",
-                "host_spin_capacity",
-            )
-        }
-    if scaling_sj is not None:
-        compact["scaling_single_jvm_efficiency"] = result[
-            "scaling_single_jvm"
-        ]["efficiency"]
     line = json.dumps(compact)
-    if len(line) > 1800:  # belt-and-braces: never outgrow the capture
-        compact.pop("queries", None)
+    if len(line) > 1800:  # never outgrow the capture window
+        compact.pop("queries")
         line = json.dumps(compact)
     print(line)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 2 and sys.argv[1] == "--throughput":
-        _throughput_child(
-            int(sys.argv[2]), sys.argv[3], int(sys.argv[4]), int(sys.argv[5])
-        )
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--throughput-lc":
-        _throughput_child_lc(
-            int(sys.argv[2]),
-            int(sys.argv[3]),
-            sys.argv[4],
-            int(sys.argv[5]),
-            int(sys.argv[6]),
-            int(sys.argv[7]),
-        )
-    else:
-        main()
+    main()

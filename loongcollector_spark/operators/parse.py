@@ -370,18 +370,24 @@ def parse_delimiter(
 
     Short rows assign the available parts to the leading keys and
     leave the rest NULL (split_string.go:80-88 assigns partial).
-    Quoted mode delegates to ``from_csv`` (processor_csv semantics).
+    Quoted mode delegates to ``from_csv`` (processor_csv semantics)
+    and matches the unquoted path on rows without quotes: extra
+    fields are dropped, an empty field is ``''``, a row with fewer
+    fields than keys is unmatched. A quote that never closes makes
+    the row unmatched, as does ``\\x01`` inside a keyed field.
     """
     if quote:
-        # corrupt-record column: PERMISSIVE from_csv alone returns a
-        # struct of NULLs for malformed rows (unbalanced quote, short
-        # row), so struct-isNotNull never detected a failure; the
-        # corrupt column is non-NULL exactly when the row failed to
-        # yield all keys — same unmatched rule as the unquoted path's
-        # size >= n check (partial fields stay assigned either way)
+        # from_csv reads an empty field and a missing one both as NULL
+        # and flags extra fields as corrupt, so its own verdict cannot
+        # follow the unquoted rule. An appended \x01 end field tells
+        # them apart: it lands in a key exactly when the row is short,
+        # or is swallowed into one by a quote that never closes. Keys
+        # before it are present (NULL there means empty), keys from it
+        # on are missing.
+        end = "\x01"
         schema = ", ".join(f"`{k}` string" for k in keys) + ", `__corrupt` string"
         parsed = F.from_csv(
-            F.col(source_key),
+            F.concat(F.col(source_key), F.lit(separator + end)),
             F.lit(schema),
             {
                 "sep": separator,
@@ -390,13 +396,25 @@ def parse_delimiter(
                 "columnNameOfCorruptRecord": "__corrupt",
             },
         )
-        out = df.withColumn("__p", parsed)
-        for k in keys:
-            out = out.withColumn(k, F.col("__p")[k])
-        matched = F.col("__p").isNotNull() & F.col("__p")["__corrupt"].isNull()
+        # __e: 1-based index of the key holding the end field, 0 if none
+        out = df.withColumn("__p", parsed).withColumn(
+            "__e",
+            F.array_position(
+                F.array(*[F.col("__p")[k].contains(end) for k in keys]), True
+            ),
+        )
+        present = F.col("__p").isNotNull() & (F.col("__e") == 0)
+        for i, k in enumerate(keys):
+            out = out.withColumn(
+                k,
+                F.when(
+                    present | (F.col("__e") > i + 1),
+                    F.coalesce(F.col("__p")[k], F.lit("")),
+                ),
+            )
         return _apply_unmatch_policy(
-            out, matched, source_key, keep_source, discard_unmatched
-        ).drop("__p")
+            out, present, source_key, keep_source, discard_unmatched
+        ).drop("__p", "__e")
     n = len(keys)
     n_extra = max_expand if (preserve_others and expand_others) else 0
     # SplitN semantics: keep the tail unsplit past the last column we

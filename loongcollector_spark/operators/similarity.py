@@ -417,7 +417,7 @@ def semantic_dedup(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_clusters: int = 16,
+    n_clusters: int,
     seed: int = 42,
     max_train_rows: int = 100_000,
 ) -> DataFrame:
@@ -431,10 +431,12 @@ def semantic_dedup(
     Scale shape: the quantizer trains on a bounded sample (same
     machinery as :func:`ivf_ann_topk`); assignment is one JVM pass;
     the pair search is a per-cluster self-join — candidate volume is
-    sum of squared cluster sizes, so size ``n_clusters ~ corpus/10k``
-    to bound it, never all-pairs. Cross-cluster near-dups are missed
-    by construction (the SemDeDup trade-off); embedding_near_dups is
-    the recall-oriented alternative.
+    sum of squared cluster sizes, never all-pairs. ``n_clusters`` is
+    required because no default is safe at every corpus size: sizing
+    it is the caller's job, ``n_clusters ~ corpus/10k`` keeps the
+    clusters near 10k vectors. Cross-cluster near-dups are missed by
+    construction (the SemDeDup trade-off); embedding_near_dups is the
+    recall-oriented alternative.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector

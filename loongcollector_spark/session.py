@@ -2,9 +2,8 @@
 
 Local-mode testing uses ``local[N]``; the same configs are what we'd
 submit on a real cluster via ``spark-submit --py-files`` (AQE on,
-Arrow on, UTC, shuffle partitions sized to cores). The two-parallelism
-bench (BASELINE.md protocol) constructs sessions at local[8] and
-local[32] through this factory.
+Arrow on, UTC, shuffle partitions sized to cores). ``bench.py`` and
+``perfbench`` build their sessions through this factory.
 """
 
 from __future__ import annotations

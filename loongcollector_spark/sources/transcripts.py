@@ -20,9 +20,9 @@ Two constructions:
 2. :func:`generate_transcripts` — an at-scale generator from
    ``spark.range`` (fully distributed, no driver-side data loops,
    seeded constants, never ``now()``), with Zipf-ish hot conversations
-   to exercise the skew/salting path. Used by bench.py; conceptually
-   scales to the 10^12-turn table the production job would read from
-   Iceberg.
+   to exercise the skew/salting path. Used by perfbench and
+   jobs/submit_scaling.py; conceptually scales to the 10^12-turn table
+   the production job would read from Iceberg.
 
 ``text`` mixes three parseable dialects chosen by ``mod(event_id,3)``:
 nginx-combined access log (the reference's benchmark payload,

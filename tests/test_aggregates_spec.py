@@ -39,7 +39,7 @@ def test_aggregates_section(spark, sf_dir):
 
 @pytest.mark.skipif(
     not os.path.exists(os.path.join(BENCH_INPUT, "_SUCCESS")),
-    reason="24M bench input not generated (run bench.py once)",
+    reason="24M bench input not generated (run jobs/submit_scaling.py once)",
 )
 def test_at_scale_analytic_oracle(spark):
     """Full pipeline counts on the 24M-turn generated table must match

@@ -354,6 +354,13 @@ def test_semantic_dedup_drops_planted_duplicates(spark, emb):
     assert set(emb.columns) <= set(out.columns)
 
 
+def test_semantic_dedup_requires_cluster_count(emb):
+    # candidate pairs grow as the sum of squared cluster sizes: the
+    # operator refuses to guess a count that only fits one corpus size
+    with pytest.raises(TypeError, match="n_clusters"):
+        similarity.semantic_dedup(emb, threshold=0.999)
+
+
 def test_connected_components_chained_clusters(spark):
     """a~b and b~c must land in ONE component (the pairwise-winner
     trap this operator exists to fix); separate clusters and

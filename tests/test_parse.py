@@ -157,6 +157,23 @@ def test_delimiter_and_kv(spark):
     assert row.kv == {"k1": "v1", "k2": "v2"}
 
 
+@pytest.mark.parametrize(
+    "policy", [{"keep_source": False}, {"discard_unmatched": True}]
+)
+def test_delimiter_quoted_agrees_with_unquoted(spark, policy):
+    """Without quote characters in the data, quoted mode parses every
+    row the way the unquoted path does: extra fields dropped, an empty
+    field is '', a short or empty row unmatched."""
+    lines = ["a,b", "a,b,c", "a,b,c,d", "a", "a,", "", None]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(lines)], "i int, line string")
+
+    def rows(quote):
+        out = parse_delimiter(df, "line", ",", ["k1", "k2"], quote=quote, **policy)
+        return sorted(tuple(r) for r in out.collect())
+
+    assert rows('"') == rows(None)
+
+
 def test_split_log_string(spark):
     df = spark.createDataFrame([("l1\nl2\nl3", "c1")], ["text", "conv_id"])
     out = split_log_string(df, "text")
