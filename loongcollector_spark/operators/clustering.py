@@ -12,25 +12,23 @@ counterpart this module adds on the Spark side.
 
 Determinism & oracle parity: everything that feeds a comparison is
 quantized — centroid coordinates and distances round to 6 dp at every
-step, so the DuckDB twin (group-sum order differs in last-ulp) lands on
-identical values, and argmin ties break on the lowest centroid id via
-struct ordering. Initial centroids are the vectors of the *k* smallest
-ids (a pure function of the data, never rand()).
+step, so the DuckDB twin (which unrolls the Lloyd iterations in SQL and
+sums in a different order, differing in the last ulp) lands on
+identical values, and argmin ties break on the lowest centroid id.
+Initial centroids are the vectors of the *k* smallest ids (a pure
+function of the data, never rand()).
 
 Scale design:
-* Centroids are tiny (k × dim doubles) — they live as PLAN LITERALS
-  broadcast inside the assignment expression; the corpus never
-  shuffles to be assigned.
+* Centroids are tiny (k × dim doubles) — they ride in the task closure;
+  the corpus never shuffles to be assigned.
+* Assignment is Arrow-batched ``mapInPandas``: one (batch × k) NumPy
+  distance matrix per batch, no per-element SQL lambdas.
 * The per-iteration centroid update is ``posexplode → groupBy
   (cluster, pos) avg`` — map-side partial aggregation means the
   shuffle carries ``k × dim × partitions`` partial rows, never the
   vectors; the driver collects exactly ``k × dim`` averaged cells per
   round (the bounded-collect discipline, same as similarity.py's
   capped sites).
-* Assignment has two engines: ``sql`` (zip_with/aggregate fold —
-  deterministic sequential sum, the DuckDB twin) and ``numpy``
-  (Arrow-batched ``mapInPandas``, one BLAS matmul per batch) for the
-  100 TB path; parity is pinned in tests at 6 dp.
 * ``cluster_balanced_sample`` is a per-cluster top-m — Spark compiles
   the row_number filter to WindowGroupLimit (local partial top-m
   before the shuffle), so the sample never materializes a full sort.
@@ -40,7 +38,7 @@ from __future__ import annotations
 
 from typing import Iterator, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -54,40 +52,18 @@ __all__ = [
 _DEC = 6  # quantization decimals for centroid coords and distances
 
 
-def _dist_col(vec: Column, centroid: Sequence[float]) -> Column:
-    """round(Σ (v_i - c_i)², 6) as a deterministic sequential fold."""
-    cent = F.array(*[F.lit(float(c)) for c in centroid])
-    diff2 = F.zip_with(vec, cent, lambda a, b: (a - b) * (a - b))
-    return F.round(
-        F.aggregate(diff2, F.lit(0.0), lambda acc, x: acc + x), _DEC
-    )
-
-
-def _assign_struct(vec: Column, centroids: list[list[float]]) -> Column:
-    """min(struct(dist, j)) over all centroids — argmin with the
-    lowest-id tie-break, one expression, no shuffle."""
-    pairs = F.array(
-        *[
-            F.struct(
-                _dist_col(vec, c).alias("d"),
-                F.lit(j).cast("bigint").alias("j"),
-            )
-            for j, c in enumerate(centroids)
-        ]
-    )
-    return F.array_min(pairs)
-
-
 def _assign_numpy(
     df: DataFrame,
     vec_col: str,
     centroids: list[list[float]],
     out_cols: list[str],
 ) -> DataFrame:
-    """Arrow-batched assignment: one (batch × k) distance matrix per
-    Arrow batch, float64 end-to-end, quantized like the sql engine.
-    *out_cols* may include *vec_col* itself (the fit loop re-explodes
-    the vector after assignment)."""
+    """Nearest-centroid assignment, Arrow-batched: one (batch × k)
+    distance matrix per Arrow batch, float64 end-to-end, distances
+    rounded to 6 dp before the argmin (``argmin`` returns the FIRST
+    minimum, so ties go to the lowest centroid id).  Adds ``cluster``
+    and ``dist``; *out_cols* may include *vec_col* itself (the fit loop
+    re-explodes the vector after assignment)."""
     import numpy as np
 
     keep = [c for c in out_cols if c not in ("cluster", "dist")]
@@ -109,7 +85,7 @@ def _assign_numpy(
             X = np.stack(  # noqa: N806
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            # ||x-c||² per pair; same quantization as the fold engine
+            # ||x-c||² per pair, quantized like every compared value
             d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             d2 = np.round(d2, _DEC)
             cl = d2.argmin(axis=1)  # argmin returns FIRST min = lowest j
@@ -128,7 +104,6 @@ def kmeans_fit(
     id_col: str = "vec_id",
     k: int = 8,
     iters: int = 2,
-    engine: str = "sql",
 ) -> list[list[float]]:
     """Lloyd k-means fit; returns the final centroids (k × dim floats,
     6-dp quantized). Init = vectors of the *k* smallest *id_col*
@@ -154,19 +129,9 @@ def kmeans_fit(
         raise ValueError(f"kmeans_fit: need >= {k} rows, got {len(init)}")
     cents = [list(r["__v"]) for r in init]
     for _ in range(iters):
-        if engine == "numpy":
-            exploded = _assign_numpy(
-                dfd, "__v", cents, ["__v", "cluster", "dist"]
-            ).select("cluster", F.posexplode("__v").alias("pos", "val"))
-        else:
-            # NB: a generator (posexplode) in the same select as the
-            # struct getField makes the analyzer drop the struct's
-            # field names (col1/col2) — resolve the struct in its own
-            # projection first.
-            m = _assign_struct(F.col("__v"), cents)
-            exploded = dfd.select(
-                m.getField("j").alias("cluster"), "__v"
-            ).select("cluster", F.posexplode("__v").alias("pos", "val"))
+        exploded = _assign_numpy(
+            dfd, "__v", cents, ["__v", "cluster", "dist"]
+        ).select("cluster", F.posexplode("__v").alias("pos", "val"))
         cells = (
             exploded.groupBy("cluster", "pos")
             .agg(F.round(F.avg("val"), _DEC).alias("cval"))
@@ -187,22 +152,14 @@ def kmeans_assign(
     centroids: list[list[float]],
     *,
     vec_col: str = "embedding",
-    engine: str = "sql",
 ) -> DataFrame:
-    """Assign every row to its nearest centroid: adds ``cluster``
-    (bigint, lowest-id tie-break) and ``dist`` (6-dp squared L2).
-    ``engine='sql'`` is the zip_with fold (oracle twin);
-    ``engine='numpy'`` is the Arrow/BLAS batch path."""
-    if engine == "numpy":
-        out_cols = [c for c in df.columns if c != vec_col] + ["cluster", "dist"]
-        return _assign_numpy(df, vec_col, centroids, out_cols)
-    vec = F.col(vec_col).cast("array<double>")
-    m = _assign_struct(vec, centroids)
-    return df.select(
-        *[c for c in df.columns if c != vec_col],
-        m.getField("j").alias("cluster"),
-        m.getField("d").alias("dist"),
-    )
+    """Assign every row to its nearest centroid: replaces *vec_col*
+    with ``cluster`` (bigint, lowest-id tie-break) and ``dist`` (6-dp
+    squared L2). Vectors must be non-NULL and *centroids*-dimensional.
+    The centroids ride in the task closure; the corpus never
+    shuffles."""
+    out_cols = [c for c in df.columns if c != vec_col] + ["cluster", "dist"]
+    return _assign_numpy(df, vec_col, centroids, out_cols)
 
 
 def kmeans_clusters(

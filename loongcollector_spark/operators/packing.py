@@ -71,7 +71,8 @@ def monotone_block_id(
     24M-row campaign (trailing_zscore block≠window on every run once
     the upstream plan held a broadcast join; 31/32 blocks had different
     row counts between the two consumers of one DataFrame);
-    regression-pinned in tests/test_round5_fixes.py.
+    regression-pinned through :func:`_global_offsets` in
+    tests/test_packing.py.
 
     Mechanics: ONE bounded driver-side sampling job (hash-systematic
     1-in-211 sample capped at *sample_cap*; small inputs collect whole

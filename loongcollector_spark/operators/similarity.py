@@ -6,8 +6,7 @@ Training-data-pipeline addition (not in the reference — SURVEY.md
 
 The ladder, cheapest-exact to biggest-scale:
 * brute-force cosine top-k — the correctness baseline (NumPy batch
-  kernel per Arrow batch + tiny global re-rank; an interpreted-HOF SQL
-  twin kept as the semantic reference).
+  kernel per Arrow batch + tiny global re-rank).
 * LSH-bucketed ANN — candidates = same hyperplane bucket in ≥1 table;
   the bucket join shuffles candidates, never the cross product.
 * IVF — k-means inverted lists, each query probes n_probe cells.
@@ -100,92 +99,74 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "numpy",
 ) -> DataFrame:
-    """Exact top-k neighbors per query by cosine.
+    """Exact top-k neighbors per query by cosine, excluding the query's
+    own id; returns ``(query_id_col, neighbor_id, rank, cos_sim)``.
 
-    ``impl='numpy'`` (default, the scale path): the small query matrix
-    is shipped to every partition inside a ``mapInPandas`` closure;
-    each Arrow batch scores ``batch × queries`` with one BLAS matmul
-    and emits only its local top-k per query, then a tiny global
-    window re-ranks (global top-k ⊆ union of per-batch top-ks).
-    Arrow moves ~k·n_queries rows per batch, never the cross product.
-
-    ``impl='sql'``: pure-DataFrame variant (broadcast join + HOF
-    cosine) — exact same results, but the interpreted array lambdas
-    make it ~10-50× slower on wide corpora; kept as the semantic
-    reference.
-
-    Ties broken by neighbor id for determinism.
+    The query side is collected under a hard cap and shipped to every
+    partition inside a ``mapInPandas`` closure; each Arrow batch scores
+    ``batch × queries`` with one BLAS matmul and emits only its local
+    top-k per query, then a tiny global window re-ranks (global top-k ⊆
+    union of per-batch top-ks). Arrow moves ~k·n_queries rows per
+    batch, never the cross product. Zero vectors score 0.0, as in
+    :func:`cosine`; ties break on the smaller neighbor id, so the
+    result does not depend on batch boundaries.
     """
-    if impl == "sql":
-        q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qv"))
-        v = vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
-        )
-        scored = v.join(
-            F.broadcast(q), F.col("neighbor_id") != F.col(query_id_col)
-        ).select(
-            query_id_col,
-            "neighbor_id",
-            cosine(F.col("__v"), F.col("__qv")).alias("cos_sim"),
-        )
-    else:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        q_rows = _collect_queries(queries, query_id_col, vec_col, "brute_force_topk")
-        if not q_rows:
-            # np.linalg.norm on a (0,) array would raise; the empty
-            # query set has a well-defined empty answer
-            return vectors.sparkSession.createDataFrame(
-                [],
-                f"{query_id_col} long, neighbor_id long, rank int, cos_sim double",
-            )
-        q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-        Q = np.array([r[1] for r in q_rows], dtype=np.float64)
-        qn = np.linalg.norm(Q, axis=1, keepdims=True)
-        Qn = Q / np.where(qn == 0, 1.0, qn)
-        kk = k + 1  # neighbor may equal the query id; filter later
+    q_rows = _collect_queries(queries, query_id_col, vec_col, "brute_force_topk")
+    if not q_rows:
+        # np.linalg.norm on a (0,) array would raise; the empty
+        # query set has a well-defined empty answer
+        return vectors.sparkSession.createDataFrame(
+            [],
+            f"{query_id_col} long, neighbor_id long, rank int, cos_sim double",
+        )
+    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    Q = np.array([r[1] for r in q_rows], dtype=np.float64)
+    qn = np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = Q / np.where(qn == 0, 1.0, qn)
+    kk = k + 1  # neighbor may equal the query id; filter later
 
-        def score(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(list(pdf[vec_col]), dtype=np.float64)
-                norms = np.linalg.norm(V, axis=1, keepdims=True)
-                # zero vectors → 0 similarity, matching cosine()'s guard
-                Vn = V / np.where(norms == 0, 1.0, norms)
-                sims = Vn @ Qn.T  # (batch, n_queries)
-                ids = pdf[id_col].to_numpy()
-                take = min(kk, len(ids))
-                out = []
-                for j, qid in enumerate(q_ids):
-                    s = sims[:, j]
-                    # canonical per-batch top-k: argpartition by sim
-                    # alone keeps an ARBITRARY take of boundary ties,
-                    # so a tied smallest-id neighbor could be dropped
-                    # before the global window ever ranks it (result
-                    # then depends on batch boundaries). lexsort by
-                    # (-sim, id) — primary key last — makes the local
-                    # selection the canonical prefix, and the merge of
-                    # canonical prefixes is the canonical global top-k.
-                    part = np.lexsort((ids, -s))[:take]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                query_id_col: qid,
-                                "neighbor_id": ids[part],
-                                "cos_sim": s[part],
-                            }
-                        )
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.array(list(pdf[vec_col]), dtype=np.float64)
+            norms = np.linalg.norm(V, axis=1, keepdims=True)
+            # zero vectors → 0 similarity, matching cosine()'s guard
+            Vn = V / np.where(norms == 0, 1.0, norms)
+            sims = Vn @ Qn.T  # (batch, n_queries)
+            ids = pdf[id_col].to_numpy()
+            take = min(kk, len(ids))
+            out = []
+            for j, qid in enumerate(q_ids):
+                s = sims[:, j]
+                # canonical per-batch top-k: argpartition by sim
+                # alone keeps an ARBITRARY take of boundary ties,
+                # so a tied smallest-id neighbor could be dropped
+                # before the global window ever ranks it (result
+                # then depends on batch boundaries). lexsort by
+                # (-sim, id) — primary key last — makes the local
+                # selection the canonical prefix, and the merge of
+                # canonical prefixes is the canonical global top-k.
+                part = np.lexsort((ids, -s))[:take]
+                out.append(
+                    pd.DataFrame(
+                        {
+                            query_id_col: qid,
+                            "neighbor_id": ids[part],
+                            "cos_sim": s[part],
+                        }
                     )
-                yield pd.concat(out, ignore_index=True)
+                )
+            yield pd.concat(out, ignore_index=True)
 
-        scored = vectors.select(id_col, vec_col).mapInPandas(
-            score,
-            schema=f"{query_id_col} long, neighbor_id long, cos_sim double",
-        ).filter(F.col("neighbor_id") != F.col(query_id_col))
+    scored = vectors.select(id_col, vec_col).mapInPandas(
+        score,
+        schema=f"{query_id_col} long, neighbor_id long, cos_sim double",
+    ).filter(F.col("neighbor_id") != F.col(query_id_col))
     w = W.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

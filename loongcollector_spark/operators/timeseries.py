@@ -7,41 +7,21 @@ them are time-series ones — "is this metric suddenly abnormal?" and
 "how many events did this key produce in the last hour?".  Both
 operators are pure window expressions (whole-stage codegen, ONE shuffle
 on the partition key) and both are value-checkable against DuckDB's
-window engine.
+window engine: the registry oracles are the same window SQL.
 
 Scale notes: each operator shuffles once on its key column; within a
 partition the window frames are computed in a single ordered pass.
 Skewed keys (one service producing most events) are the usual hazard —
 both operators keep the per-row state to a handful of doubles, so a hot
 key costs a big sort, not a blow-up; pre-salting is not applicable
-(frames need full per-key order).
+(frames need full per-key order).  Parallelism is bounded by
+key cardinality: a handful of event types means a handful of tasks
+however large the input.
 
-For LOW-CARDINALITY keys at extreme volume the window engine's
-parallelism is bounded by key cardinality (a handful of event types =
-a handful of tasks however large the input). Both operators therefore
-take ``engine="block"`` (VERDICT r4 item 2):
-
-* ``trailing_zscore``: the ROWS-frame stats decompose into exact
-  per-key distributed prefix sums (packing.py's block pattern —
-  range-partition, per-block running sum, broadcast cum of the tiny
-  block-totals table) plus ONE uniform self-join on (key, row_number)
-  that fetches the prefix L rows back. No per-key serial pass
-  anywhere; every exchange is keyed by (block, key) or (key, rn),
-  both uniform under a single hot key. Values are centered on the
-  per-key mean before squaring so the variance subtraction is
-  numerically stable.
-* ``rolling_count``: the RANGE frame only ever reaches one window
-  width back, so events bucket by ``floor(ts / window_seconds)`` and
-  each event contributes to its own bucket and the next; the window
-  then partitions by (key, bucket) — parallelism grows with the time
-  span instead of the key count. (A hot INSTANT — one key emitting a
-  whole window's volume in one bucket — still serializes that bucket;
-  that is inherent to needing those rows together, not a plan
-  artifact.)
-
-Both engines are value-parity-tested against the window engine; the
-DuckDB oracles keep verifying the window engine (the twin the oracle
-SQL mirrors).
+Decomposing a key into blocks (per-key prefix sums) would lift that
+bound, but prefix-sum statistics round differently from the sliding
+frame and miss the 6-dp oracle in the last digit (SCALE.md, round-5
+block engines).
 """
 
 from __future__ import annotations
@@ -50,101 +30,6 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 __all__ = ["trailing_zscore", "rolling_count"]
-
-
-def _per_key_prefix(
-    df: DataFrame,
-    key_col: str,
-    order_cols: list[str],
-    sum_cols: list[str],
-    blocks: int,
-    sample_from: DataFrame | None = None,
-) -> DataFrame:
-    """Exact per-key prefix sums without a per-key serial pass.
-
-    Adds ``_rn`` (count of strictly-prior same-key rows in *order_cols*
-    order — the 0-based per-key row number) and ``_pfx_<c>`` (sum of
-    column *c* over those prior rows) for each *c* in *sum_cols*.
-
-    Shape (packing._global_offsets generalized to per-key): blocks cut
-    on the FIRST order column by :func:`packing.monotone_block_id` —
-    deterministic literal cut points, so every subtree that evaluates
-    the block id agrees by construction (the physical-partition-id
-    version this replaced corrupted offsets whenever the two consumers
-    below re-executed the range exchange: Spark's range sampler is
-    seeded by RDD id — see monotone_block_id's docstring and the
-    regression pin in tests/test_round5_fixes.py). Ties on the first
-    order column share a block, so block id is monotone within each
-    key; per-(block, key) running sums — a hot key splits across ALL
-    blocks, so no task sees more than ~1/blocks of it; the
-    (block × key) totals table (tiny: blocks · n_keys rows) cum-sums
-    per key and broadcasts back. Exactness does not depend on block
-    sizes or boundaries — only balance does.
-    """
-    from .packing import monotone_block_id
-
-    # cut points depend only on the first order column, so sample the
-    # cheapest frame that carries it (the raw input, not a frame that
-    # would re-execute upstream joins/aggregates just to be sampled)
-    ranged = df.withColumn(
-        "_blk",
-        monotone_block_id(
-            sample_from if sample_from is not None else df,
-            order_cols[0],
-            blocks,
-        ),
-    )
-    local = (
-        W.partitionBy("_blk", key_col)
-        .orderBy(*[F.col(c).asc() for c in order_cols])
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    out = ranged.withColumn("_loc_n", F.count(F.lit(1)).over(local))
-    for c in sum_cols:
-        out = out.withColumn(
-            f"_loc_{c}", F.coalesce(F.sum(c).over(local), F.lit(0.0))
-        )
-    # totals from the windowed frame (not the raw blocked frame) so the
-    # heavy (_blk, key) exchange is shared with the window when the
-    # optimizer reuses it — correctness no longer depends on that reuse
-    totals = out.groupBy("_blk", key_col).agg(
-        F.count(F.lit(1)).alias("_tn"),
-        *[F.sum(c).alias(f"_t_{c}") for c in sum_cols],
-    )
-    wk = (
-        W.partitionBy(key_col)
-        .orderBy("_blk")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    cum = totals.select(
-        "_blk",
-        key_col,
-        F.coalesce(F.sum("_tn").over(wk), F.lit(0)).alias("_cum_n"),
-        *[
-            F.coalesce(F.sum(f"_t_{c}").over(wk), F.lit(0.0)).alias(f"_cum_{c}")
-            for c in sum_cols
-        ],
-    )
-    # null-safe key equality: a NULL key is a real group in every
-    # window engine partition above, and the plain USING join would
-    # silently drop those rows (the window twin keeps them)
-    cum = cum.withColumnRenamed("_blk", "_cblk").withColumnRenamed(
-        key_col, "_ckey"
-    )
-    out = out.join(
-        F.broadcast(cum),
-        (F.col("_blk") == F.col("_cblk"))
-        & F.col(key_col).eqNullSafe(F.col("_ckey")),
-    ).drop("_cblk", "_ckey")
-    out = out.withColumn("_rn", (F.col("_cum_n") + F.col("_loc_n")).cast("long"))
-    for c in sum_cols:
-        out = out.withColumn(f"_pfx_{c}", F.col(f"_cum_{c}") + F.col(f"_loc_{c}"))
-    drop = (
-        ["_blk", "_loc_n", "_cum_n"]
-        + [f"_loc_{c}" for c in sum_cols]
-        + [f"_cum_{c}" for c in sum_cols]
-    )
-    return out.drop(*drop)
 
 
 def trailing_zscore(
@@ -156,8 +41,6 @@ def trailing_zscore(
     order_tiebreak: str = "event_id",
     lookback_rows: int = 100,
     min_history: int = 20,
-    engine: str = "window",
-    blocks: int = 0,
 ) -> DataFrame:
     """Per-key trailing z-score of *value_col*: each row is scored
     against the mean/stddev of the previous *lookback_rows* rows of the
@@ -169,35 +52,11 @@ def trailing_zscore(
     is short or the trailing std is 0).  The ROWS frame ordered by
     ``(ts, tiebreak)`` makes the result deterministic under ties.
 
-    Scale shape: ``engine="window"`` (default, the oracle twin)
-    evaluates the sliding frame incrementally (O(rows), not
-    O(rows × frame)) and window sorts spill, but PARALLELISM is
-    bounded by ``key_col`` cardinality — a handful of event types
-    means a handful of tasks however large the input.
-    ``engine="block"`` removes that bound: exact per-key prefix sums
-    over block-decomposed running sums (:func:`_per_key_prefix`) plus
-    one uniform (key, rn)-keyed self-join that fetches the prefix
-    *lookback_rows* back; every exchange key includes the block id or
-    the row number, so ONE key at any volume still spreads over all
-    tasks. ``blocks=0`` uses the session's shuffle partition count.
-    Requires (ts, tiebreak) unique per key (same determinism contract
-    as the window engine). Identical NULL semantics; values equal up
-    to float rounding (parity-tested; the oracle keeps checking the
-    window engine).
+    The sliding frame is evaluated incrementally (O(rows), not
+    O(rows × frame)) and window sorts spill.  NULL values are skipped
+    by the frame statistics (the history count is ``count(value)``);
+    NULL keys form their own partition.
     """
-    if engine == "block":
-        return _trailing_zscore_block(
-            df,
-            key_col=key_col,
-            ts_col=ts_col,
-            value_col=value_col,
-            order_tiebreak=order_tiebreak,
-            lookback_rows=lookback_rows,
-            min_history=min_history,
-            blocks=blocks,
-        )
-    if engine != "window":
-        raise ValueError(f"trailing_zscore: unknown engine {engine!r}")
     w = (
         W.partitionBy(key_col)
         .orderBy(F.col(ts_col).asc(), F.col(order_tiebreak).asc())
@@ -217,111 +76,12 @@ def trailing_zscore(
     )
 
 
-def _trailing_zscore_block(
-    df: DataFrame,
-    *,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    order_tiebreak: str,
-    lookback_rows: int,
-    min_history: int,
-    blocks: int,
-) -> DataFrame:
-    """Block-decomposed trailing z-score (VERDICT r4 item 2).
-
-    sum/var over the trailing ROWS frame from exact prefix sums:
-    ``frame_sum(i) = P(i) - P(i - L)`` with P the per-key prefix of
-    the CENTERED value (centering on the per-key mean keeps the
-    ``Q - S²/n`` variance subtraction stable — raw second moments of
-    large values would cancel catastrophically). P(i - L) arrives by
-    joining each row (key, rn) against the projection (key, rn + L) —
-    row numbers are dense and uniform, so the join key never skews,
-    whatever the key distribution.
-    """
-    if blocks <= 0:
-        blocks = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    L = lookback_rows
-    kmean = df.groupBy(key_col).agg(F.avg(value_col).alias("_kmean"))
-    # key cardinality is the LOW side by assumption -> broadcast;
-    # null-safe equality so NULL-key rows survive (the window twin
-    # scores them as their own partition). A key whose values are all
-    # NULL gets _kmean NULL, and every downstream stat stays NULL —
-    # same as the window engine.
-    km = kmean.withColumnRenamed(key_col, "_kk")
-    d = df.join(
-        F.broadcast(km), F.col(key_col).eqNullSafe(F.col("_kk"))
-    ).drop("_kk")
-    cv = (F.col(value_col) - F.col("_kmean")).cast("double")
-    # _cn: non-NULL-value indicator — the window twin's cnt is
-    # count(value_col) over the frame (NULLs excluded), NOT the frame
-    # row count; prefix-summing the indicator reproduces it exactly
-    d = (
-        d.withColumn("_cv", cv)
-        .withColumn("_cv2", cv * cv)
-        .withColumn(
-            "_cn",
-            F.when(F.col(value_col).isNotNull(), 1.0).otherwise(0.0),
-        )
-    )
-    p = _per_key_prefix(
-        d,
-        key_col,
-        [ts_col, order_tiebreak],
-        ["_cv", "_cv2", "_cn"],
-        blocks,
-        sample_from=df,
-    )
-    probe = p.select(
-        F.col(key_col).alias("_pk"),
-        (F.col("_rn") + F.lit(L)).alias("_prn"),
-        F.col("_pfx__cv").alias("_lag_s"),
-        F.col("_pfx__cv2").alias("_lag_q"),
-        F.col("_pfx__cn").alias("_lag_c"),
-    )
-    # probe is the FULL dataset by construction — never broadcastable,
-    # whatever small-scale file stats suggest; pin the shuffle join so
-    # the (key, rn) exchange (uniform under any key skew) is the plan
-    j = p.join(
-        probe.hint("shuffle_merge"),
-        p[key_col].eqNullSafe(probe["_pk"]) & (p["_rn"] == probe["_prn"]),
-        "left",
-    ).drop("_pk", "_prn")
-    cnt = (
-        F.col("_pfx__cn") - F.coalesce(F.col("_lag_c"), F.lit(0.0))
-    ).cast("long")
-    s = F.col("_pfx__cv") - F.coalesce(F.col("_lag_s"), F.lit(0.0))
-    q = F.col("_pfx__cv2") - F.coalesce(F.col("_lag_q"), F.lit(0.0))
-    # divisions gated behind cnt >= 2 (ANSI mode: x/0 throws, and
-    # stddev_samp needs >= 2 points anyway, matching the window twin)
-    cnt_ok = cnt >= F.greatest(F.lit(min_history), F.lit(2))
-    var = F.when(cnt_ok, (q - s * s / cnt) / (cnt - F.lit(1)))
-    std = F.sqrt(F.greatest(var, F.lit(0.0)))  # NULL var -> 0 -> gated off
-    mean = F.when(cnt_ok, F.col("_kmean") + s / cnt)
-    ok = cnt_ok & (std > 0)
-    return (
-        j.withColumn("trail_mean", F.when(ok, mean))
-        .withColumn("trail_std", F.when(ok, std))
-        .withColumn(
-            "zscore", F.when(ok, (F.col(value_col) - mean) / std)
-        )
-        .drop(
-            "_kmean", "_cv", "_cv2", "_cn", "_rn",
-            "_pfx__cv", "_pfx__cv2", "_pfx__cn",
-            "_lag_s", "_lag_q", "_lag_c",
-        )
-    )
-
-
 def rolling_count(
     df: DataFrame,
     *,
     key_col: str = "user_id",
     ts_col: str = "ts",
     window_seconds: int = 3600,
-    engine: str = "window",
 ) -> DataFrame:
     """Trailing time-window event count per key: for every event, how
     many events the same key produced in the last *window_seconds*
@@ -333,50 +93,9 @@ def rolling_count(
     see the same count (true RANGE semantics, matching DuckDB/ANSI).
     Adds ``rolling_n``.
 
-    ``engine="block"`` (VERDICT r4 item 2): a [-W, 0] RANGE frame can
-    only reach into the current and previous W-second bucket, so each
-    event is emitted into its own bucket and copied into the next,
-    and the window partitions by (key, bucket) — parallelism scales
-    with the time span instead of key cardinality, and the result is
-    EXACTLY equal to the window engine (integer counts, no float
-    drift). Cost: the input is scanned into 2× rows pre-shuffle. One
-    key emitting a whole window's volume into a single bucket still
-    serializes that bucket — those rows must meet somewhere.
+    NULL timestamps form one peer group per key.
     """
     secs = F.col(ts_col).cast("timestamp").cast("long")
-    if engine == "block":
-        W_SEC = int(window_seconds)
-        b = F.floor(secs / F.lit(W_SEC)).cast("long")
-        cur = df.withColumn("_secs", secs).withColumn("_grp", b).withColumn(
-            "_orig", F.lit(True)
-        )
-        # NULL-ts rows get NO next-bucket copy: b + 1 is NULL for
-        # them, so the copy would land back in the same (key, NULL)
-        # group as the original and every NULL-ts peer would count
-        # double vs the window twin (whose NULL peer group holds each
-        # row once)
-        nxt = (
-            df.withColumn("_secs", secs)
-            .filter(secs.isNotNull())
-            .withColumn("_grp", b + F.lit(1))
-            .withColumn("_orig", F.lit(False))
-        )
-        both = cur.unionByName(nxt)
-        wb = (
-            W.partitionBy(key_col, "_grp")
-            .orderBy(F.col("_secs").asc())
-            .rangeBetween(-W_SEC, 0)
-        )
-        # within group (key, b): originals of bucket b plus copies of
-        # bucket b-1 — every event with ts in [t-W, t] is present
-        # exactly once, so the RANGE count is the true rolling count
-        return (
-            both.withColumn("rolling_n", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_orig"))
-            .drop("_secs", "_grp", "_orig")
-        )
-    if engine != "window":
-        raise ValueError(f"rolling_count: unknown engine {engine!r}")
     w = (
         W.partitionBy(key_col)
         .orderBy(secs.asc())

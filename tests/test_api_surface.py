@@ -1,0 +1,48 @@
+"""One engine per operator: no public operator takes an option that
+picks between implementations. A second engine needs its own A/B
+measurement and the loser's deletion, not a keyword."""
+
+import importlib
+import inspect
+import pkgutil
+
+import pytest
+
+import loongcollector_spark.operators as operators
+
+_MODULES = [
+    f"loongcollector_spark.operators.{m.name}"
+    for m in pkgutil.iter_modules(operators.__path__)
+] + ["loongcollector_spark.streaming.stream", "loongcollector_spark.spl"]
+
+_ENGINE_PARAMS = {"engine", "impl", "gram_engine"}
+
+
+def _public_functions(module_name):
+    mod = importlib.import_module(module_name)
+    for name, obj in vars(mod).items():
+        # modules without __all__ re-export imports: keep only the
+        # functions this module defines
+        if (
+            not name.startswith("_")
+            and inspect.isfunction(obj)
+            and obj.__module__ == module_name
+        ):
+            yield name, obj
+
+
+@pytest.mark.parametrize("module_name", _MODULES)
+def test_no_engine_selector_parameters(module_name):
+    funcs = dict(_public_functions(module_name))
+    assert funcs, f"{module_name} defines no public function"
+    forks = {
+        name: sorted(_ENGINE_PARAMS & set(inspect.signature(fn).parameters))
+        for name, fn in funcs.items()
+    }
+    assert {n: p for n, p in forks.items() if p} == {}
+
+
+def test_trailing_zscore_takes_no_block_count():
+    from loongcollector_spark.operators.timeseries import trailing_zscore
+
+    assert "blocks" not in inspect.signature(trailing_zscore).parameters

@@ -1,9 +1,17 @@
-"""Unit tests for LM sequence packing (operators/packing.py)."""
+"""Unit tests for LM sequence packing (operators/packing.py) and its
+block-decomposed prefix sum."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from loongcollector_spark.operators.packing import EOS_TOKEN, pack_sequences
+from pyspark.sql import Window as W
+
+from loongcollector_spark.operators.packing import (
+    EOS_TOKEN,
+    _global_offsets,
+    monotone_block_id,
+    pack_sequences,
+)
 
 
 def _mk(spark, rows):
@@ -97,3 +105,62 @@ def test_pack_plan_shape(spark, sf_dir_med):
     )
     assert plan.count("Exchange SinglePartition") == 1
     assert "hashpartitioning(seq_id" in plan
+
+
+# --------------------------------------------- deterministic block ids
+
+
+def test_block_ids_consistent_across_plan_subtrees(spark):
+    """Regression: the spark_partition_id()-over-repartitionByRange
+    block scheme corrupted prefix sums whenever the blocked frame fed
+    two plan subtrees (Spark's range sampler is seeded by RDD id, so
+    each execution of the exchange drew different boundaries). The
+    offsets here read the block id twice — the per-block window and
+    the per-block totals — over a broadcast join, the shape of the
+    original repro; they must equal a single-window prefix sum exactly,
+    run after run."""
+    e = F.col("id")
+    base = spark.range(0, 50_000, 1, 16).select(
+        e.alias("doc_id"), ((e * 37) % 1000).alias("n")
+    )
+    bump = spark.range(0, 1000).select(
+        F.col("id").alias("n"), (F.col("id") % 3).alias("bump")
+    )
+    df = base.join(F.broadcast(bump), "n").select(
+        "doc_id", (F.col("n") + F.col("bump")).alias("n")
+    )
+    want = df.select(
+        "doc_id",
+        F.coalesce(
+            F.sum("n").over(
+                W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
+            ),
+            F.lit(0),
+        ).alias("g_start"),
+    )
+    for trial in (1, 2):  # the old bug was also nondeterministic
+        got = _global_offsets(df, "n", "doc_id", 16).select("doc_id", "g_start")
+        assert got.count() == 50_000, f"trial {trial}"
+        assert got.exceptAll(want).count() == 0, f"trial {trial}"
+
+
+def test_monotone_block_id_contract(spark):
+    """monotone_block_id: non-decreasing in the order column, ties
+    share a block, NULLs land in block 0, and >1 block is actually
+    produced on a spread-out column."""
+    df = spark.range(0, 10_000, 1, 8).select(
+        (F.col("id") % 500).alias("v")  # heavy ties
+    ).unionByName(
+        spark.range(0, 1).select(F.lit(None).cast("long").alias("v"))
+    )
+    out = df.withColumn("b", monotone_block_id(df, "v", 8)).collect()
+    by_v = {}
+    for r in out:
+        if r["v"] is None:
+            assert r["b"] == 0
+            continue
+        by_v.setdefault(r["v"], set()).add(r["b"])
+    assert all(len(s) == 1 for s in by_v.values())  # ties share a block
+    ordered = [next(iter(by_v[v])) for v in sorted(by_v)]
+    assert ordered == sorted(ordered)  # monotone
+    assert len(set(ordered)) > 1  # actually parallel

@@ -13,6 +13,8 @@ from loongcollector_spark.operators.enrich import (
 from loongcollector_spark.pipeline import Pipeline
 from loongcollector_spark.plans.checkpoint import run_with_checkpoint
 
+from similarity_reference import sql_brute_force_topk
+
 
 def test_checkpoint_jobid_prefix_no_contamination(spark, tmp_path):
     df = spark.createDataFrame(
@@ -40,11 +42,14 @@ def test_zero_vector_never_tops_ranking(spark):
     ]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     q = spark.createDataFrame([(1, [1.0, 0.0, 0.0])], ["query_id", "embedding"])
-    for impl in ("numpy", "sql"):
-        top = similarity.brute_force_topk(emb, q, k=2, impl=impl).collect()
+    for name, topk in (
+        ("numpy", similarity.brute_force_topk),
+        ("sql reference", sql_brute_force_topk),
+    ):
+        top = topk(emb, q, k=2).collect()
         ranked = sorted(top, key=lambda r: r.rank)
-        assert ranked[0].neighbor_id == 2, impl
-        assert ranked[1].neighbor_id == 3 and ranked[1].cos_sim == 0.0, impl
+        assert ranked[0].neighbor_id == 2, name
+        assert ranked[1].neighbor_id == 3 and ranked[1].cos_sim == 0.0, name
 
 
 def test_lsh_dim_inferred_from_data(spark):

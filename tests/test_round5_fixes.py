@@ -314,67 +314,3 @@ def test_kgram_arrow_matches_zipwith_kernel(spark):
     assert sorted(map(tuple, got_ub.collect())) == sorted(
         map(tuple, want_ub.collect())
     )
-
-
-# --------------------------------------------- deterministic block ids
-
-
-def test_block_ids_consistent_across_plan_subtrees(spark):
-    """Regression: the spark_partition_id()-over-repartitionByRange
-    block scheme corrupted prefix sums whenever the blocked frame fed
-    two plan subtrees (Spark's range sampler is seeded by RDD id, so
-    each execution of the exchange drew different boundaries — found
-    by the round-5 24M-row campaign: trailing_zscore block≠window on
-    every run). This is the minimal reliable repro: one key, a
-    broadcast join upstream, 50k rows — the block engine must equal
-    the window engine exactly, run after run."""
-    from loongcollector_spark.operators.timeseries import trailing_zscore
-
-    e = F.col("id")
-    df = spark.range(0, 50_000, 1, 16).select(
-        e.alias("event_id"),
-        F.lit("k").alias("event_type"),
-        (e % 864000).alias("ts"),
-        ((e * 37) % 1000).cast("double").alias("value"),
-    )
-
-    def stats(eng):
-        return tuple(
-            trailing_zscore(
-                df, lookback_rows=100, min_history=20, engine=eng
-            )
-            .agg(
-                F.count("zscore"),
-                F.round(F.sum("zscore"), 4),
-                F.round(F.sum("trail_mean"), 2),
-            )
-            .collect()[0]
-        )
-
-    want = stats("window")
-    for trial in (1, 2):  # the old bug was also nondeterministic
-        assert stats("block") == want, f"trial {trial}"
-
-
-def test_monotone_block_id_contract(spark):
-    """monotone_block_id: non-decreasing in the order column, ties
-    share a block, NULLs land in block 0, and >1 block is actually
-    produced on a spread-out column."""
-    from loongcollector_spark.operators.packing import monotone_block_id
-
-    df = spark.range(0, 10_000, 1, 8).select(
-        (F.col("id") % 500).alias("v")  # heavy ties
-    ).unionByName(
-        spark.range(0, 1).select(F.lit(None).cast("long").alias("v"))
-    )
-    out = df.withColumn("b", monotone_block_id(df, "v", 8)).collect()
-    by_v = {}
-    for r in out:
-        if r["v"] is None:
-            assert r["b"] == 0
-            continue
-        by_v.setdefault(r["v"], set()).add(r["b"])
-    assert all(len(s) == 1 for s in by_v.values())  # ties share a block
-    ordered = [next(iter(by_v[v])) for v in sorted(by_v)]
-    assert ordered == sorted(ordered)  # monotone
-    assert len(set(ordered)) > 1  # actually parallel

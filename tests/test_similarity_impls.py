@@ -1,10 +1,13 @@
-"""The NumPy batch kernel and the SQL reference implementation of
-brute-force top-k must agree exactly (same neighbors, same ranks)."""
+"""The NumPy batch kernel of brute-force top-k must agree exactly with
+the test-local SQL reference (same neighbors, same ranks), and the ANN
+ladder is recall-checked against it."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators import similarity
+
+from similarity_reference import sql_brute_force_topk
 
 
 @pytest.fixture(scope="module")
@@ -14,8 +17,8 @@ def emb(spark, sf_dir):
 
 def test_numpy_and_sql_impls_agree(spark, emb):
     queries = emb.limit(4).select(F.col("vec_id").alias("query_id"), "embedding")
-    a = similarity.brute_force_topk(emb, queries, k=5, impl="numpy")
-    b = similarity.brute_force_topk(emb, queries, k=5, impl="sql")
+    a = similarity.brute_force_topk(emb, queries, k=5)
+    b = sql_brute_force_topk(emb, queries, k=5)
     ra = sorted((r.query_id, r.rank, r.neighbor_id) for r in a.collect())
     rb = sorted((r.query_id, r.rank, r.neighbor_id) for r in b.collect())
     assert ra == rb
@@ -42,8 +45,8 @@ def test_numpy_impl_many_partitions(spark, emb):
     # the corpus is split across many small partitions
     queries = emb.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
     spread = emb.repartition(16)
-    a = similarity.brute_force_topk(spread, queries, k=7, impl="numpy")
-    b = similarity.brute_force_topk(emb, queries, k=7, impl="sql")
+    a = similarity.brute_force_topk(spread, queries, k=7)
+    b = sql_brute_force_topk(emb, queries, k=7)
     assert sorted(map(tuple, a.select("query_id", "rank", "neighbor_id").collect())) == \
         sorted(map(tuple, b.select("query_id", "rank", "neighbor_id").collect()))
 

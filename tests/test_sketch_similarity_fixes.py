@@ -20,6 +20,8 @@ def test_brute_force_topk_ties_canonical_across_partitions(spark):
     independent of Arrow batch/partition boundaries."""
     from loongcollector_spark.operators.similarity import brute_force_topk
 
+    from similarity_reference import sql_brute_force_topk
+
     vecs = spark.createDataFrame(
         [(i, [1.0, 0.0]) for i in range(40)],
         "vec_id long, embedding array<double>",
@@ -29,8 +31,8 @@ def test_brute_force_topk_ties_canonical_across_partitions(spark):
     )
     out = brute_force_topk(vecs, qs, k=5).orderBy("rank").collect()
     assert [r.neighbor_id for r in out] == [0, 1, 2, 3, 4]
-    # and agrees with the pure-SQL reference implementation
-    sql = brute_force_topk(vecs, qs, k=5, impl="sql").orderBy("rank").collect()
+    # and agrees with the test-local pure-SQL reference
+    sql = sql_brute_force_topk(vecs, qs, k=5).orderBy("rank").collect()
     assert [r.neighbor_id for r in sql] == [0, 1, 2, 3, 4]
 
 
@@ -85,6 +87,41 @@ def test_sampler_null_ids_deterministic_and_mode_consistent(spark):
         for s in ("s1", "s2", "s3", "s4", "s5", "s6")
     }
     assert len(sampled) > 1  # selection varies with salt even with a NULL id
+
+
+@pytest.mark.parametrize("name", ["split_assign", "score_sample"])
+def test_sampler_oracles_hash_null_ids_as_empty(spark, sf_dir, tmp_path, name):
+    """The registry oracles follow the samplers' NULL contract: a NULL
+    doc_id hashes as '' (sketch._sample_key), so DuckDB's md5 of it
+    must coalesce too — a bare md5(NULL) put the row in 'val' and
+    dropped it from the score sample."""
+    import duckdb
+
+    from loongcollector_spark.queries import ORACLES, QUERIES
+
+    src = f"{sf_dir}/documents.parquet"
+    con = duckdb.connect()
+    # 20 fixture rows + one NULL-id row with n_chars = 6 (score 6/7)
+    con.execute(
+        f"""COPY (
+              (SELECT * FROM '{src}' ORDER BY doc_id LIMIT 20)
+              UNION ALL
+              (SELECT NULL::BIGINT, text, lang, source, 6::BIGINT
+               FROM '{src}' ORDER BY doc_id LIMIT 1)
+            ) TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)"""
+    )
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    res = con.execute(ORACLES[name])
+    cols = [d[0] for d in res.description]
+    want = sorted(res.fetchall(), key=repr)
+    got = sorted(
+        map(tuple, QUERIES[name](spark, str(tmp_path)).select(cols).collect()),
+        key=repr,
+    )
+    assert any(r[0] is None for r in got)  # the NULL-id row is sampled
+    assert got == want
 
 
 def test_score_sample_split_assign_defaults_decorrelated(spark):

@@ -3,6 +3,7 @@
 import re
 from datetime import datetime, timedelta
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -113,29 +114,13 @@ def test_timeseries_plans_single_exchange_no_python(spark, sf_dir):
     assert "Window" not in tplan
 
 
-# ----------------------------------------------------- block engines (r5)
-
-
-def test_rolling_count_block_engine_exact_parity(spark, sf_dir):
-    """The bucket-decomposed engine is EXACTLY the window engine
-    (integer counts), including tied timestamps and bucket edges."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = {
-        r["event_id"]: r["rolling_n"]
-        for r in rolling_count(ev, window_seconds=3600).collect()
-    }
-    b = {
-        r["event_id"]: r["rolling_n"]
-        for r in rolling_count(ev, window_seconds=3600, engine="block").collect()
-    }
-    assert a == b and len(a) > 0
+# ------------------------------------------- edges and NULL inputs
 
 
 def test_rolling_count_block_engine_bucket_edges(spark):
-    """Hand case across a bucket boundary: W=60, events at 0/59/61/121.
-    61 sees 59+61 (59 is in the previous bucket -> via the copy; 0 is
-    outside [1, 61]); 121 sees 61+121 (61 is exactly W before ->
-    inclusive, and it crosses the bucket edge via the copy)."""
+    """Hand case across minute edges: W=60, events at 0/59/61/121.
+    61 sees 59+61 (0 is outside [1, 61]); 121 sees 61+121 (61 is
+    exactly W before -> inclusive)."""
     base = datetime(2024, 1, 1)
     rows = [
         (1, base, 7),
@@ -146,76 +131,77 @@ def test_rolling_count_block_engine_bucket_edges(spark):
     df = spark.createDataFrame(rows, "event_id: long, ts: timestamp, user_id: long")
     out = {
         r["event_id"]: r["rolling_n"]
-        for r in rolling_count(df, window_seconds=60, engine="block").collect()
-    }
-    assert out == {1: 1, 2: 2, 3: 2, 4: 2}
-    # and the window engine agrees on the same input
-    w = {
-        r["event_id"]: r["rolling_n"]
         for r in rolling_count(df, window_seconds=60).collect()
     }
-    assert w == out
-
-
-def test_trailing_zscore_block_engine_parity(spark, sf_dir):
-    """Block (prefix-sum + shifted self-join) engine matches the window
-    engine: identical NULL pattern, values equal to float tolerance."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cols = ["event_id", "trail_mean", "trail_std", "zscore"]
-    a = {r["event_id"]: r for r in trailing_zscore(ev).select(cols).collect()}
-    b = {
-        r["event_id"]: r
-        for r in trailing_zscore(ev, engine="block").select(cols).collect()
-    }
-    assert set(a) == set(b) and len(a) > 0
-    for k in a:
-        for c in ("trail_mean", "trail_std", "zscore"):
-            va, vb = a[k][c], b[k][c]
-            assert (va is None) == (vb is None), (k, c, va, vb)
-            if va is not None:
-                assert vb == pytest.approx(va, rel=1e-9, abs=1e-9), (k, c)
+    assert out == {1: 1, 2: 2, 3: 2, 4: 2}
 
 
 def test_block_engines_null_parity_with_window(spark):
-    """NULL keys, NULL values, and NULL timestamps follow the window
-    twin exactly: NULL keys are a real partition (not dropped by the
-    joins), cnt counts non-NULL VALUES (not frame rows), and NULL-ts
-    rows count their peer group once (no double-count via the
-    next-bucket copy)."""
+    """NULL keys, NULL values and NULL timestamps: both operators equal
+    DuckDB's window SQL over the same rows. NULL keys are a real
+    partition, the z-score history counts non-NULL VALUES (not frame
+    rows), and NULL-ts rows are one peer group (Spark sorts NULLs
+    first ascending, so the DuckDB twin says NULLS FIRST)."""
     base = datetime(2024, 1, 1)
     rows = []
     eid = 0
     # key "a": first 10 values NULL, then 20 real — with
-    # min_history=15 the window cnt=count(value) gate must stay shut
-    # until 15 NON-NULL predecessors exist
+    # min_history=15 the cnt=count(value) gate must stay shut until 15
+    # NON-NULL predecessors exist
     for i in range(30):
         rows.append(
             ("a", base + timedelta(seconds=i), None if i < 10 else float(i), eid)
         )
         eid += 1
-    # NULL key: 12 scored rows of its own
-    for i in range(12):
+    # NULL key: 24 scored rows of its own
+    for i in range(24):
         rows.append((None, base + timedelta(seconds=i), float(i * i % 7), eid))
         eid += 1
-    df = spark.createDataFrame(
-        rows, "event_type string, ts timestamp, value double, event_id long"
+    # NULL timestamps inside key "a" (ordered first, by event_id)
+    for i in range(3):
+        rows.append(("a", None, float(100 + i), eid))
+        eid += 1
+    schema = "event_type string, ts timestamp, value double, event_id long"
+    df = spark.createDataFrame(rows, schema)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE ev (event_type VARCHAR, ts TIMESTAMP, value DOUBLE,"
+        " event_id BIGINT)"
     )
+    con.executemany("INSERT INTO ev VALUES (?, ?, ?, ?)", rows)
+
     cols = ["trail_mean", "trail_std", "zscore"]
-    kw = dict(lookback_rows=8, min_history=15)
-    a = {
-        r["event_id"]: r
-        for r in trailing_zscore(df, **kw).select("event_id", *cols).collect()
-    }
-    b = {
-        r["event_id"]: r
-        for r in trailing_zscore(df, engine="block", **kw)
+    got = {
+        r["event_id"]: tuple(r[c] for c in cols)
+        for r in trailing_zscore(df, lookback_rows=8, min_history=6)
         .select("event_id", *cols)
         .collect()
     }
-    assert set(a) == set(b) and len(a) == 42  # NULL-key rows present
-    for k in a:
-        for c in cols:
-            va, vb = a[k][c], b[k][c]
+    want = {
+        r[0]: r[1:]
+        for r in con.execute("""
+            WITH w AS (
+              SELECT event_id, value,
+                     avg(value) OVER f AS m,
+                     stddev_samp(value) OVER f AS s,
+                     count(value) OVER f AS c
+              FROM ev
+              WINDOW f AS (PARTITION BY event_type
+                           ORDER BY ts ASC NULLS FIRST, event_id
+                           ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING)
+            )
+            SELECT event_id,
+                   CASE WHEN c >= 6 AND s > 0 THEN m END,
+                   CASE WHEN c >= 6 AND s > 0 THEN s END,
+                   CASE WHEN c >= 6 AND s > 0 THEN (value - m) / s END
+            FROM w
+        """).fetchall()
+    }
+    assert set(got) == set(want) and len(got) == len(rows)
+    scored = [k for k, v in want.items() if v[2] is not None]
+    assert any(k >= 30 for k in scored)  # NULL-key rows are scored
+    for k in want:
+        for c, va, vb in zip(cols, want[k], got[k]):
             assert (va is None) == (vb is None), (k, c, va, vb)
             if va is not None:
                 assert vb == pytest.approx(va, rel=1e-9, abs=1e-9), (k, c)
@@ -232,48 +218,22 @@ def test_block_engines_null_parity_with_window(spark):
     df2 = spark.createDataFrame(
         rows2, "event_id: long, ts: timestamp, user_id: long"
     )
-    w = {
+    con.execute("CREATE TABLE rc (event_id BIGINT, ts TIMESTAMP, user_id BIGINT)")
+    con.executemany("INSERT INTO rc VALUES (?, ?, ?)", rows2)
+    got2 = {
         r["event_id"]: r["rolling_n"]
         for r in rolling_count(df2, window_seconds=60).collect()
     }
-    blk = {
-        r["event_id"]: r["rolling_n"]
-        for r in rolling_count(df2, window_seconds=60, engine="block").collect()
-    }
-    assert blk == w and len(blk) == 6
-
-
-def test_block_engine_plans_decompose_the_key(spark, sf_dir):
-    """Plan pins (VERDICT r4 item 2): the block engines never exchange
-    on the bare key — every data exchange carries the block/bucket/row
-    dimension, so ONE hot key spreads across tasks."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-
-    rplan = plan_of(rolling_count(ev, engine="block"))
-    assert re.search(r"hashpartitioning\(user_id#\d+L?, _grp#\d+", rplan)
-    # the only bare-key exchange shape the window engine would have
-    assert not re.search(r"hashpartitioning\(user_id#\d+L?, \d+\)", rplan)
-
-    zplan = plan_of(trailing_zscore(ev, engine="block"))
-    # block id is literal-cut codegen: no physical-partition-id (and so
-    # no cross-subtree inconsistency) and no range exchange anywhere
-    assert "SPARK_PARTITION_ID" not in zplan
-    assert "rangepartitioning" not in zplan
-    assert re.search(r"hashpartitioning\(_blk#\d+", zplan)  # per-block window
-    # uniform self-join key: the null-safe key equality compiles to
-    # coalesce(key, ...) in the exchange, so allow nested parens
-    # before the _rn/_prn column
-    assert re.search(r"hashpartitioning\([^\n]*_rn#\d+", zplan) or re.search(
-        r"hashpartitioning\([^\n]*_prn#\d+", zplan
-    )  # uniform self-join key
-    # bare-key exchanges allowed ONLY for the tiny kmean/totals aggs —
-    # the data-plane window never partitions by event_type alone
-    assert "Window" in zplan
-
-
-def test_engine_validation(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    with pytest.raises(ValueError):
-        trailing_zscore(ev, engine="nope").collect()
-    with pytest.raises(ValueError):
-        rolling_count(ev, engine="nope").collect()
+    want2 = dict(
+        con.execute("""
+            SELECT event_id,
+                   count(*) OVER (PARTITION BY user_id
+                                  ORDER BY (epoch_us(ts) // 1000000)
+                                           ASC NULLS FIRST
+                                  RANGE BETWEEN 60 PRECEDING
+                                        AND CURRENT ROW)
+            FROM rc
+        """).fetchall()
+    )
+    assert got2 == want2 and len(got2) == 6
+    assert got2[3] == got2[4] == 2  # the NULL-ts peer group, counted once
