@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions import sqltext
+
 __all__ = [
     "group_count",
     "per_conversation_stats",
@@ -49,8 +51,13 @@ def stable_order(
     column via a window over (conv_id, turn_idx) — the engine-side
     guarantee behind the reference's logNo order oracle
     (test/engine/verify/log_order.go:58-77)."""
-    w = W.partitionBy(conv_col).orderBy(order_col)
-    return df.withColumn("seq", F.row_number().over(w) - 1)
+    # one F.expr: the Window/Column-method build costs ~45 py4j
+    # round-trips (operators/parse.py's build rule)
+    over = (
+        f"PARTITION BY {sqltext.col_ref(conv_col)} "
+        f"ORDER BY {sqltext.col_ref(order_col)}"
+    )
+    return df.withColumn("seq", F.expr(f"row_number() OVER ({over}) - 1"))
 
 
 def group_count(df: DataFrame, keys: list[str]) -> DataFrame:

@@ -22,8 +22,10 @@ are broadcast hash joins (no shuffle of the fact table).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import sqltext
 
 __all__ = [
     "add_fields",
@@ -50,11 +52,9 @@ def add_fields(
     df: DataFrame, fields: dict[str, str], ignore_if_exist: bool = False
 ) -> DataFrame:
     """Append constant KV fields (processor_add_fields.go:56-86)."""
-    for k, v in fields.items():
-        if ignore_if_exist and k in df.columns:
-            continue
-        df = df.withColumn(k, F.lit(v))
-    return df
+    skip = set(df.columns) if ignore_if_exist else set()
+    cols = {k: F.lit(v) for k, v in fields.items() if k not in skip}
+    return df.withColumns(cols) if cols else df
 
 
 def add_tags(
@@ -67,9 +67,8 @@ def add_tags(
     resolved at submit time on the driver, with per-key renaming.
     Constant columns cost nothing at scale (codegen literals)."""
     rename_map = rename_map or {}
-    for k, v in tags.items():
-        df = df.withColumn(rename_map.get(k, k), F.lit(v))
-    return df
+    cols = {rename_map.get(k, k): F.lit(v) for k, v in tags.items()}
+    return df.withColumns(cols) if cols else df
 
 
 def dict_map(
@@ -99,22 +98,25 @@ def dict_map(
     """
     dim_key = dim_key or source_key
     dim_value = dim_value or dest_key
-    sel = dim.select(
-        F.col(dim_key).alias("__dk"), F.col(dim_value).alias("__dv")
-    ).dropDuplicates(["__dk"])
+    # the lookup's own columns; prefixed so neither collides with (and
+    # is dropped along with) a column of the fact table
+    dk, dv = "__lc_dk", "__lc_dv"
+    sel = dim.selectExpr(
+        f"{sqltext.col_ref(dim_key)} AS {dk}",
+        f"{sqltext.col_ref(dim_value)} AS {dv}",
+    ).dropDuplicates([dk])
     if max_dict_size:
         # deterministic truncation: which entries survive the cap must
         # not depend on partitioning/plan choice (the reference
         # truncates in stable config-file order; a DataFrame dim has
         # no config order, so key order is the stable analog)
-        w = W.orderBy("__dk")
         sel = (
-            sel.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= max_dict_size)
-            .drop("__rn")
+            sel.withColumn("__lc_rn", F.expr(f"row_number() OVER (ORDER BY {dk})"))
+            .filter(f"__lc_rn <= {int(max_dict_size)}")
+            .drop("__lc_rn")
         )
-    joined = df.join(F.broadcast(sel), df[source_key] == sel["__dk"], "left")
-    mapped = F.col("__dv")
+    joined = df.join(F.broadcast(sel), df[source_key] == sel[dk], "left")
+    mapped = F.expr(dv)
     if handle_missing:
         mapped = F.coalesce(mapped, F.lit(missing))
     if dest_key in df.columns:
@@ -126,7 +128,7 @@ def dict_map(
             # event unchanged (processor_dict_map.go:175-186), it does
             # not null out the existing value
             mapped = F.coalesce(mapped, F.col(dest_key))
-    return joined.withColumn(dest_key, mapped).drop("__dk", "__dv")
+    return joined.withColumn(dest_key, mapped).drop(dk, dv)
 
 
 def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:

@@ -16,7 +16,9 @@ Catalyst does it automatically once the predicate is declarative.
 
 from __future__ import annotations
 
+import operator
 import re
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -39,12 +41,12 @@ def filter_regex(
 ) -> DataFrame:
     """Keep row iff every Include (key,regex) matches and no Exclude
     does (processor_filter_regex.go:113). NULL fields fail Include."""
-    cond = F.lit(True)
-    for k, pat in (include or {}).items():
-        cond = cond & F.col(k).rlike(pat)
-    for k, pat in (exclude or {}).items():
-        cond = cond & ~F.coalesce(F.col(k).rlike(pat), F.lit(False))
-    return df.filter(cond)
+    conds = [F.rlike(df[k], F.lit(pat)) for k, pat in (include or {}).items()]
+    conds += [
+        ~F.coalesce(F.rlike(df[k], F.lit(pat)), F.lit(False))
+        for k, pat in (exclude or {}).items()
+    ]
+    return df.filter(reduce(operator.and_, conds)) if conds else df
 
 
 def filter_key_regex(

@@ -82,8 +82,9 @@ def geoip_enrich(
         (F.col("__ipl") >= F.col("__gs")) & (F.col("__ipl") <= F.col("__ge")),
         "left",
     )
-    for f in fields:
-        joined = joined.withColumn(f"{source_key}_{f}_", F.col(f"__g_{f}"))
+    joined = joined.withColumns(
+        {f"{source_key}_{f}_": F.col(f"__g_{f}") for f in fields}
+    )
     return joined.drop("__ipl", "__gs", "__ge", *[f"__g_{f}" for f in fields])
 
 
@@ -98,7 +99,7 @@ def cloud_meta_tags(
     the mock platform's semantics; key renaming per its Metadata
     name mapping)."""
     rename = rename or {}
-    for k in CLOUD_META_KEYS:
-        if k in metadata:
-            df = df.withColumn(rename.get(k, k), F.lit(metadata[k]))
-    return df
+    cols = {
+        rename.get(k, k): F.lit(metadata[k]) for k in CLOUD_META_KEYS if k in metadata
+    }
+    return df.withColumns(cols) if cols else df

@@ -39,6 +39,27 @@ follows the parse no longer moves beneath it even when it reads only
 source columns, so such a filter runs after the Python parse rather
 than before it. Filter on source columns before parsing
 (``q_parse_json`` and ``q_grok`` in ``queries.py`` do).
+
+Build rule: a processor adds or replaces its columns with ONE
+``withColumns`` (plus at most one ``drop`` of its temporaries and the
+source), never a ``withColumn`` per key. Plan building is bound by
+py4j round-trips and JVM analysis, not by Spark's work: each
+``withColumn`` re-analyses the whole growing plan, and with PySpark
+4.1's call-site capture a ``Column`` method costs ~11 round-trips
+(``getItem`` 21, ``F.col`` 13) where ``F.expr``, ``F.lit`` and
+``F.when`` cost 3. So each shared ``Column`` (the source, the parts
+array) is built once, and per-key expressions over the processor's own
+temporaries are ``F.expr`` text (``functions/sqltext.py``). The
+optimized plan is the one the ``withColumn`` chain gave
+(``tests/test_plans.py`` pins the spine's). Every parsed column is
+computed from the processor's input (only the keep-source policy sees
+a key that names the source, as the chain did); a key that names an
+input column replaces it in place, and a repeated key keeps its first
+position and its last value, as the chain did. Keys that differ only
+in letter case are one column to the chain and a
+``COLUMN_ALREADY_EXISTS`` error to ``withColumns``. Temporary columns
+carry the ``__lc_`` prefix (as ``plans/checkpoint.UNIT_COL`` does), so
+no user key or input column is silently dropped with them.
 """
 
 from __future__ import annotations
@@ -51,6 +72,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import sqltext
 from ..functions.grok import cast_for_hint, compile_grok
 from ..functions.jsonflatten import parse_and_flatten
 
@@ -71,39 +93,63 @@ __all__ = [
 ]
 
 
+# temporaries of the parse processors (see the build rule above)
+_P = "__lc_p"  # parts array / parsed struct
+_M = "__lc_m"  # match flag
+_E = "__lc_e"  # parse_delimiter: index of the key holding the end field
+_CORRUPT = "__lc_corrupt"  # parse_delimiter: from_csv's corrupt-record field
+
+
 def _apply_unmatch_policy(
     df: DataFrame,
+    parsed: dict[str, Column],
     matched: Column,
     source_key: str,
     keep_source: bool,
     discard_unmatched: bool,
     keep_source_if_parse_error: bool = True,
-    rename_source_on_error: str | None = None,
+    *,
+    casts: dict[str, str] | None = None,
+    temps: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Common keep/discard-source handling after a parse stage
-    (CommonParserOptions.h:27-40 flag semantics):
+    """Add the *parsed* columns and apply the keep/discard-source policy
+    (CommonParserOptions.h:27-40 flag semantics) in one ``withColumns``
+    and at most one ``drop`` of *temps* and the source:
 
     * ``keep_source=True``           — raw column kept on every row.
     * ``keep_source=False`` +
       ``keep_source_if_parse_error`` — raw survives ONLY on rows the
-      parse failed (NULL on parsed rows; optionally under a renamed
-      key), so successful rows don't carry the payload downstream.
+      parse failed (NULL on parsed rows), so successful rows don't
+      carry the payload downstream.
     * ``keep_source=False`` without the error flag, or with
       ``discard_unmatched`` — raw column dropped entirely.
+
+    *casts* (column → Spark type, type hints) apply last, to the parsed
+    column of that name or else to the input column. *matched* may
+    read *temps*, which *df* must already hold.
     """
     if discard_unmatched:
         # ProcessorParseRegexNative.cpp discards the event when parse
         # fails and KeepingSourceWhenParseFail is off.
         df = df.filter(matched)
+    cols = dict(parsed)
+    drop = list(temps)
     if not keep_source:
         if discard_unmatched or not keep_source_if_parse_error:
-            df = df.drop(source_key)
+            drop.append(source_key)
         else:
-            dest = rename_source_on_error or source_key
-            df = df.withColumn(dest, F.when(~matched, F.col(source_key)))
-            if dest != source_key:
-                df = df.drop(source_key)
-    return df
+            # the source as the parsed columns leave it (a key may name it)
+            src = cols[source_key] if source_key in cols else F.col(source_key)
+            cols[source_key] = F.when(~matched, src)
+    for k, t in (casts or {}).items():
+        cols[k] = (cols[k] if k in cols else F.col(k)).cast(t)
+    out = df.withColumns(cols) if cols else df
+    return out.drop(*drop) if drop else out
+
+
+def _casts(types: dict[str, str]) -> dict[str, str]:
+    """Spark cast types of the type hints that cast (``cast_for_hint``)."""
+    return {k: ct for k, t in types.items() if (ct := cast_for_hint(t))}
 
 
 def parse_regex(
@@ -131,24 +177,16 @@ def parse_regex(
     semantics); unmatched rows get NULL keys and follow the unmatch
     policy flags.
     """
+    src = df[source_key]
+    casts = _casts(types or {})
     # whole-line fast path (reference: Regex == '(.*)') — must honor
     # the same policy flags and type casts as the regex paths: a NULL
     # source is the one "unmatched" case here
     if regex in ("(.*)", "^(.*)$") and len(keys) == 1:
-        out = df.withColumn(keys[0], F.col(source_key))
-        out = _apply_unmatch_policy(
-            out,
-            F.col(source_key).isNotNull(),
-            source_key,
-            keep_source,
-            discard_unmatched,
-            keep_source_if_parse_error,
+        return _apply_unmatch_policy(
+            df, {keys[0]: src}, src.isNotNull(), source_key, keep_source,
+            discard_unmatched, keep_source_if_parse_error, casts=casts,
         )
-        if types and keys[0] in types:
-            ct = cast_for_hint(types[keys[0]])
-            if ct:
-                out = out.withColumn(keys[0], F.col(keys[0]).cast(ct))
-        return out
 
     # Wrapping in a non-capturing group keeps group numbering and is
     # safe for patterns already carrying ^/$ (including escaped \$ —
@@ -170,26 +208,19 @@ def parse_regex(
     # twice per row, all inside whole-stage codegen.
     delim = "\x01"
     template = delim.join(f"${i}" for i in range(1, len(keys) + 1))
-    parts = F.split(F.regexp_replace(F.col(source_key), anchored, template), delim)
+    parts = F.split(F.regexp_replace(src, anchored, template), delim)
     # size check guards against captured values containing the
     # delimiter byte: misalignment becomes a parse FAILURE, never
     # silently shifted fields
-    matched = F.col(source_key).rlike(search) & (F.size(parts) == len(keys))
-    out = df.withColumn("__p", parts).withColumn("__m", matched)
-    for i, k in enumerate(keys):
-        out = out.withColumn(
-            k, F.when(F.col("__m"), F.col("__p").getItem(i))
-        )
-    out = _apply_unmatch_policy(
-        out, F.col("__m"), source_key, keep_source, discard_unmatched,
-        keep_source_if_parse_error,
-    ).drop("__m", "__p")
-    if types:
-        for k, t in types.items():
-            ct = cast_for_hint(t)
-            if ct:
-                out = out.withColumn(k, F.col(k).cast(ct))
-    return out
+    matched = F.rlike(src, F.lit(search)) & (F.size(parts) == len(keys))
+    out = df.withColumns({_P: parts, _M: matched})
+    keyed = {
+        k: F.expr(f"CASE WHEN {_M} THEN {_P}[{i}] END") for i, k in enumerate(keys)
+    }
+    return _apply_unmatch_policy(
+        out, keyed, F.expr(_M), source_key, keep_source, discard_unmatched,
+        keep_source_if_parse_error, casts=casts, temps=(_P, _M),
+    )
 
 
 def parse_grok(
@@ -221,7 +252,7 @@ def parse_grok(
     pats = [p for p, _ in compiled]
     schema = T.StructType(
         [T.StructField(k, T.StringType()) for k in all_keys]
-        + [T.StructField("__m", T.BooleanType())]
+        + [T.StructField(_M, T.BooleanType())]
     )
     nil = {k: None for k in all_keys}
 
@@ -256,28 +287,23 @@ def parse_grok(
                 if col in all_keys:
                     out.loc[g.index, col] = g[col]
             matched.loc[g.index] = True
-        out["__m"] = matched
-        return out[[*all_keys, "__m"]]
+        out[_M] = matched
+        return out[[*all_keys, _M]]
 
     # evaluate-once rule: see the module docstring
     grok_extract = grok_extract.asNondeterministic()
-    out = df.withColumn("__p", grok_extract(F.col(source_key)))
-    for k in all_keys:
-        out = out.withColumn(k, F.col("__p")[k])
-    out = _apply_unmatch_policy(
-        out.withColumn("__m", F.col("__p.__m")),
-        F.col("__m"),
+    out = df.withColumn(_P, grok_extract(F.col(source_key)))
+    return _apply_unmatch_policy(
+        out,
+        {k: F.expr(f"{_P}.{sqltext.quote(k)}") for k in all_keys},
+        F.expr(f"{_P}.{_M}"),
         source_key,
         keep_source,
         discard_unmatched,
         keep_source_if_parse_error,
-    ).drop("__p", "__m")
-    if apply_type_hints:
-        for k, t in hints.items():
-            ct = cast_for_hint(t)
-            if ct:
-                out = out.withColumn(k, F.col(k).cast(ct))
-    return out
+        casts=_casts(hints) if apply_type_hints else None,
+        temps=(_P,),
+    )
 
 
 def parse_json(
@@ -319,13 +345,12 @@ def parse_json(
     # evaluate-once rule: see the module docstring
     flatten = flatten.asNondeterministic()
     out = df.withColumn(dest_key, flatten(F.col(source_key)))
-    matched = F.col(dest_key).isNotNull()
+    parsed = F.expr(sqltext.quote(dest_key))
     out = _apply_unmatch_policy(
-        out, matched, source_key, keep_source, discard_unmatched
+        out, {}, parsed.isNotNull(), source_key, keep_source, discard_unmatched
     )
     if keys:
-        for k in keys:
-            out = out.withColumn(k, F.col(dest_key).getItem(k))
+        out = out.withColumns({k: parsed[k] for k in keys})
     return out
 
 
@@ -385,7 +410,8 @@ def parse_delimiter(
         # before it are present (NULL there means empty), keys from it
         # on are missing.
         end = "\x01"
-        schema = ", ".join(f"`{k}` string" for k in keys) + ", `__corrupt` string"
+        fields = [f"{sqltext.quote(k)} string" for k in keys]
+        schema = ", ".join([*fields, f"{_CORRUPT} string"])
         parsed = F.from_csv(
             F.concat(F.col(source_key), F.lit(separator + end)),
             F.lit(schema),
@@ -393,50 +419,55 @@ def parse_delimiter(
                 "sep": separator,
                 "quote": quote,
                 "mode": "PERMISSIVE",
-                "columnNameOfCorruptRecord": "__corrupt",
+                "columnNameOfCorruptRecord": _CORRUPT,
             },
         )
-        # __e: 1-based index of the key holding the end field, 0 if none
-        out = df.withColumn("__p", parsed).withColumn(
-            "__e",
-            F.array_position(
-                F.array(*[F.col("__p")[k].contains(end) for k in keys]), True
-            ),
+        # _E: 1-based index of the key holding the end field, 0 if none
+        holds_end = ", ".join(
+            f"contains({_P}.{sqltext.quote(k)}, '{end}')" for k in keys
         )
-        present = F.col("__p").isNotNull() & (F.col("__e") == 0)
-        for i, k in enumerate(keys):
-            out = out.withColumn(
-                k,
-                F.when(
-                    present | (F.col("__e") > i + 1),
-                    F.coalesce(F.col("__p")[k], F.lit("")),
-                ),
-            )
+        out = df.withColumn(_P, parsed).withColumn(
+            _E, F.expr(f"array_position(array({holds_end}), true)")
+        )
+        present = f"({_P} IS NOT NULL AND {_E} = 0)"
         return _apply_unmatch_policy(
-            out, present, source_key, keep_source, discard_unmatched
-        ).drop("__p", "__e")
+            out,
+            {
+                k: F.expr(
+                    f"CASE WHEN {present} OR {_E} > {i + 1} "
+                    f"THEN coalesce({_P}.{sqltext.quote(k)}, '') END"
+                )
+                for i, k in enumerate(keys)
+            },
+            F.expr(present),
+            source_key,
+            keep_source,
+            discard_unmatched,
+            temps=(_P, _E),
+        )
     n = len(keys)
     n_extra = max_expand if (preserve_others and expand_others) else 0
     # SplitN semantics: keep the tail unsplit past the last column we
     # can land it in (limit = keys + expands, +1 for the remainder)
     limit = n + n_extra + (0 if n_extra else 1)
-    parts = F.split(F.col(source_key), re.escape(separator), limit)
-    out = df.withColumn("__p", parts)
-    matched = F.size(F.col("__p")) >= n
-    # F.get (not getItem): out-of-range reads are NULL, not an ANSI
+    out = df.withColumn(_P, F.split(F.col(source_key), re.escape(separator), limit))
+    # get (not [i]): out-of-range reads are NULL, not an ANSI
     # ArrayIndexOutOfBounds error, giving the partial-assign semantics
-    for i, k in enumerate(keys):
-        out = out.withColumn(k, F.get(F.col("__p"), i))
+    cols = {k: f"get({_P}, {i})" for i, k in enumerate(keys)}
     if preserve_others and not expand_others:
-        out = out.withColumn("_split_preserve_", F.get(F.col("__p"), n))
+        cols["_split_preserve_"] = f"get({_P}, {n})"
     elif preserve_others and expand_others:
         for j in range(n_extra):
-            out = out.withColumn(
-                f"{expand_key_prefix}{j + 1}", F.get(F.col("__p"), n + j)
-            )
+            cols[f"{expand_key_prefix}{j + 1}"] = f"get({_P}, {n + j})"
     return _apply_unmatch_policy(
-        out, matched, source_key, keep_source, discard_unmatched
-    ).drop("__p")
+        out,
+        {k: F.expr(e) for k, e in cols.items()},
+        F.expr(f"size({_P}) >= {n}"),
+        source_key,
+        keep_source,
+        discard_unmatched,
+        temps=(_P,),
+    )
 
 
 def parse_keyvalue(
@@ -457,8 +488,8 @@ def parse_keyvalue(
         ),
     )
     if keys:
-        for k in keys:
-            out = out.withColumn(k, F.col(dest_key).getItem(k))
+        kv = F.expr(sqltext.quote(dest_key))
+        out = out.withColumns({k: kv[k] for k in keys})
     return out
 
 
@@ -566,8 +597,9 @@ def parse_anchor(
     ``{"start": s, "stop": e, "field": name}`` extract the text
     between the first occurrence of ``s`` and the next ``e`` (empty
     start ⇒ line begin; empty stop ⇒ line end). JVM regex, one
-    extraction per anchor."""
-    out = df
+    extraction per anchor, all in one projection."""
+    src = F.col(source_key)
+    fields = {}
     for a in anchors:
         start = re.escape(a.get("start", ""))
         stop = re.escape(a.get("stop", ""))
@@ -581,10 +613,8 @@ def parse_anchor(
             # both anchors empty: whole line (a lazy ^(.*?) with no
             # stop would always match zero characters)
             pat = "^(.*)$"
-        out = out.withColumn(
-            a["field"], F.regexp_extract(F.col(source_key), pat, 1)
-        )
-    return out
+        fields[a["field"]] = F.regexp_extract(src, pat, 1)
+    return df.withColumns(fields) if fields else df
 
 
 def split_log_regex(
@@ -702,19 +732,16 @@ def parse_apsara(
             ),
         )
     )
-    out = (
-        df.withColumn("__m", matched)
-        .withColumn(
-            "apsara_time", F.when(F.col("__m"), strip(F.element_at(parts, 1)))
-        )
-        .withColumn("level", F.when(F.col("__m"), strip(F.element_at(parts, 2))))
-        .withColumn("thread", F.when(F.col("__m"), strip(F.element_at(parts, 3))))
-        .withColumn("location", F.when(F.col("__m"), strip(F.element_at(parts, 4))))
-        .withColumn("fields", F.when(F.col("__m"), fields))
-    )
+    m = F.expr(_M)
+    cols = {
+        name: F.when(m, strip(F.element_at(parts, i)))
+        for i, name in enumerate(["apsara_time", "level", "thread", "location"], 1)
+    }
+    cols["fields"] = F.when(m, fields)
     return _apply_unmatch_policy(
-        out, F.col("__m"), source_key, keep_source, discard_unmatched
-    ).drop("__m")
+        df.withColumn(_M, matched), cols, m, source_key, keep_source,
+        discard_unmatched, temps=(_M,),
+    )
 
 
 # epoch pseudo-format → seconds divisor (shared by parse_timestamp's

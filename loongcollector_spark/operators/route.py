@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import sqltext
+
 __all__ = [
     "RouterRule",
     "RouterConfig",
@@ -78,20 +80,22 @@ def route(df: DataFrame, cfg: RouterConfig, sink_col: str = "sink") -> DataFrame
     allocation per row in the generated code.
     """
     chain: Column | None = None
-    src = F.col(cfg.source_key)
+    src = df[cfg.source_key]
     for r in cfg.rules:
-        cond = src.rlike(_anchor(r.regex))
-        chain = F.when(cond, F.lit(r.sink)) if chain is None else chain.when(
-            cond, F.lit(r.sink)
-        )
+        # F.rlike and plain-value when branches: a Column method costs
+        # ~11 py4j round-trips (operators/parse.py's build rule)
+        cond = F.rlike(src, F.lit(_anchor(r.regex)))
+        chain = F.when(cond, r.sink) if chain is None else chain.when(cond, r.sink)
     if chain is None:
         chain = F.lit(cfg.default_sink)
     elif cfg.default_sink is not None and not cfg.drop_dismatch:
-        chain = chain.otherwise(F.lit(cfg.default_sink))
+        chain = chain.otherwise(cfg.default_sink)
     if not cfg.unconditional_sinks and not cfg.tag_copy_sinks:
         out = df.withColumn(sink_col, chain)
         # null chain = dismatch under drop_dismatch (no otherwise)
-        return out.filter(F.col(sink_col).isNotNull()) if cfg.drop_dismatch else out
+        if cfg.drop_dismatch:
+            return out.filter(f"{sqltext.quote(sink_col)} IS NOT NULL")
+        return out
     empty = F.array().cast("array<string>")
     arr = F.array(chain)
     for s in cfg.unconditional_sinks:

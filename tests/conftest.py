@@ -1,7 +1,10 @@
+import contextlib
 import os
 import sys
+import threading
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,3 +28,26 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_dir_med():
     return SF_DIR_MED
+
+
+@contextlib.contextmanager
+def py4j_round_trips():
+    """Count the Python→JVM round-trips the calling thread makes inside
+    the block: its ``ClientServerConnection.send_command`` calls. Yields
+    a one-item list whose entry grows as calls are made. Commands from
+    other threads (py4j frees JVM objects from its own thread) are not
+    counted, so the count does not depend on when they run."""
+    n = [0]
+    me = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            n[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield n
+    finally:
+        ClientServerConnection.send_command = send

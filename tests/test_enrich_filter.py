@@ -49,6 +49,19 @@ def test_dict_map_modes(spark, df):
     assert m3[1] == "human"
 
 
+def test_dict_map_keeps_columns_named_like_its_lookup_columns(spark, df):
+    """The lookup side's key/value columns carry the __lc_ prefix, so fact
+    columns named __dk/__dv survive the lookup."""
+    facts = df.select("id", "role", F.lit("k").alias("__dk"), F.lit("v").alias("__dv"))
+    dim = spark.createDataFrame(
+        [("user", "human"), ("assistant", "model")], ["role", "role_class"]
+    )
+    out = enrich.dict_map(facts, dim, "role", "role_class", max_dict_size=5)
+    assert out.columns == ["id", "role", "__dk", "__dv", "role_class"]
+    got = {r.id: (r["__dk"], r["__dv"], r.role_class) for r in out.collect()}
+    assert got == {1: ("k", "v", "human"), 2: ("k", "v", "model"), 3: ("k", "v", None)}
+
+
 def test_rename_and_pick_drop(spark, df):
     out = enrich.rename(df, {"val": "value", "msg": "message"})
     assert "value" in out.columns and "msg" not in out.columns

@@ -294,3 +294,104 @@ def test_parse_gotime_roundtrip(spark):
     assert out2.o == "2024-01-01"
     out3 = parse_gotime(df2, "t", "seconds", "o", "milliseconds").first()
     assert out3.o == "1704067200000"
+
+
+# -- temporary columns never collide with user keys or input columns --------
+# The parse processors' own columns carry the __lc_ prefix, so a key or an
+# input column named __p, __m, __e or __corrupt is neither dropped nor broken.
+
+_KV2 = r"a=(\d) b=(\d)"
+
+
+@pytest.mark.parametrize(
+    "keys, want",
+    [
+        (["x", "__p"], [("a=1 b=2", "1", "2"), ("zz", None, None)]),
+        (["__m", "y"], [("a=1 b=2", "1", "2"), ("zz", None, None)]),
+    ],
+)
+def test_regex_keys_named_like_old_temporaries(spark, keys, want):
+    df = spark.createDataFrame([("a=1 b=2",), ("zz",)], ["text"])
+    out = parse_regex(df, "text", _KV2, keys)
+    assert out.columns == ["text", *keys]
+    assert sorted(map(tuple, out.collect()), key=str) == sorted(want, key=str)
+
+
+def test_parse_keeps_input_columns_named_like_old_temporaries(spark):
+    df = spark.createDataFrame(
+        [("a=1 b=2", "p", True)], ["text", "__p", "__m"]
+    )
+    for out in (
+        parse_regex(df, "text", _KV2, ["x", "y"]),
+        parse_grok(df, "text", [r"a=%{INT:x} b=%{INT:y}"], apply_type_hints=False),
+        parse_delimiter(df.withColumn("text", F.lit("1,2")), "text", ",", ["x", "y"]),
+    ):
+        assert out.columns == ["text", "__p", "__m", "x", "y"]
+        assert out.first()["__p"] == "p" and out.first()["__m"] is True
+
+
+def test_grok_aliases_named_like_old_temporaries(spark):
+    df = spark.createDataFrame([("a=1 b=2",), ("zz",)], ["text"])
+    out = parse_grok(df, "text", [r"a=%{INT:__p} b=%{INT:__m}"], apply_type_hints=False)
+    assert out.columns == ["text", "__p", "__m"]
+    assert sorted(map(tuple, out.collect()), key=str) == sorted(
+        [("a=1 b=2", "1", "2"), ("zz", None, None)], key=str
+    )
+
+
+@pytest.mark.parametrize("quote", [None, '"'])
+def test_delimiter_keys_named_like_old_temporaries(spark, quote):
+    df = spark.createDataFrame([("1,2,3",), ("4",)], ["text"])
+    keys = ["__p", "__e", "__corrupt"]
+    out = parse_delimiter(df, "text", ",", keys, quote=quote)
+    assert out.columns == ["text", *keys]
+    got = {r.text: tuple(r[k] for k in keys) for r in out.collect()}
+    assert got["1,2,3"] == ("1", "2", "3")
+    # short row: both paths assign the fields it has
+    assert got["4"] == ("4", None, None)
+
+
+# -- output schema of the one-projection build ------------------------------
+# A key naming an input column replaces it in place; a repeated key keeps
+# its first position and its last value: what the withColumn-per-key chain
+# gave.
+
+
+def test_parse_key_replaces_input_column_and_repeated_key_last_wins(spark):
+    df = spark.createDataFrame([("a=1 b=2 c=3", "t")], ["text", "tool"])
+    out = parse_regex(df, "text", r"a=(\d) b=(\d) c=(\d)", ["x", "tool", "x"])
+    assert out.columns == ["text", "tool", "x"]
+    assert tuple(out.first()) == ("a=1 b=2 c=3", "2", "3")
+
+    d = parse_delimiter(
+        df.withColumn("text", F.lit("1,2,3")), "text", ",", ["x", "tool", "x"]
+    )
+    assert d.columns == ["text", "tool", "x"]
+    assert tuple(d.first()) == ("1,2,3", "2", "3")
+
+    j = parse_json(
+        df.withColumn("text", F.lit('{"x":"1","tool":"2"}')),
+        "text",
+        keys=["x", "tool", "x"],
+    )
+    assert j.columns == ["text", "tool", "parsed", "x"]
+    assert (j.first().tool, j.first().x) == ("2", "1")
+
+    kv = parse_keyvalue(
+        df.withColumn("text", F.lit("x=1 tool=2")), "text", keys=["tool", "x"]
+    )
+    assert kv.columns == ["text", "tool", "kv", "x"]
+    assert (kv.first().tool, kv.first().x) == ("2", "1")
+
+
+def test_regex_types_and_policy_in_one_projection(spark):
+    """Type casts and the keep-source-on-error policy fold into the keys'
+    projection: the same columns, types and values as applying them one
+    after another."""
+    df = spark.createDataFrame([("a=1 b=2",), ("zz",)], ["text"])
+    out = parse_regex(
+        df, "text", _KV2, ["x", "y"], keep_source=False, types={"x": "int"}
+    )
+    assert out.dtypes == [("text", "string"), ("x", "bigint"), ("y", "string")]
+    got = sorted(map(tuple, out.collect()), key=str)
+    assert got == sorted([(None, 1, "2"), ("zz", None, None)], key=str)

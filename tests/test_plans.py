@@ -10,10 +10,12 @@ These tests pin the properties that make the pipeline scale:
 import re
 
 import pytest
+from conftest import py4j_round_trips
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators import aggregate as agg, enrich, otel, parse, route as rt
 from loongcollector_spark.operators import filter as flt
+from loongcollector_spark.pipeline import Pipeline
 from loongcollector_spark.queries import (
     NGINX_KEYS,
     NGINX_REGEX,
@@ -367,3 +369,101 @@ def test_source_filter_after_parse_json_keeps_rows(spark):
     assert rows(after) == rows(before) == [
         ('{"level":"ERROR","m":"a"}', "ERROR", [("level", "ERROR"), ("m", "a")])
     ]
+
+
+# -- plan build: py4j round-trips and the plan it builds ----------------------
+# The two perfbench workload shapes, built here from the package alone:
+# the nginx parse_regex -> dict_map -> router spine, and parse_json(keys) ->
+# filter_regex -> stable_order -> router.
+
+_ROUTER = {
+    "source_key": "role",
+    "rules": [{"regex": r.regex, "sink": r.sink} for r in ROUTER_RULES],
+    "default_sink": DEFAULT_SINK,
+}
+_JSON_KEYS = ["level", "msg", "ctx_k", "logNo"]
+_SPECS = {
+    "spine": {
+        "processors": [
+            {"type": "parse_regex", "source_key": "text",
+             "regex": NGINX_REGEX, "keys": NGINX_KEYS},
+            {"type": "dict_map", "dim": "role_dim", "source_key": "role",
+             "dest_key": "role_class", "handle_missing": True,
+             "missing": "Unknown"},
+        ],
+        "router": _ROUTER,
+    },
+    "json": {
+        "processors": [
+            {"type": "parse_json", "source_key": "text",
+             "expand_array": True, "keys": _JSON_KEYS},
+            {"type": "filter_regex", "include": {"level": "^(ERROR|WARN)$"}},
+            {"type": "stable_order"},
+        ],
+        "router": _ROUTER,
+    },
+}
+_SPINE_ROWS = [
+    ("c1", 0, "user",
+     '1.2.3.4 - - [01/Jan/2024:00:00:00 +0000] "GET /a HTTP/1.1" 200 5 "-" '
+     '"ag" logNo=0'),
+    ("c1", 1, "assistant",
+     '{"level":"ERROR","msg":"m","ctx":{"k":1,"arr":[2,3]},"logNo":1}'),
+    ("c2", 0, "tool", "level=WARN svc=svc-1 code=200 dur=5ms logNo=0"),
+    ("c2", 1, "alien", '{"level":"WARN","msg":"n","ctx":{"k":2,"arr":[]},"logNo":1}'),
+]
+
+
+@pytest.fixture(scope="module")
+def build(spark):
+    """Builds the plan of one of ``_SPECS`` over a small input."""
+    df = spark.createDataFrame(
+        _SPINE_ROWS, "conv_id string, turn_idx int, role string, text string"
+    )
+    dims = {"role_dim": spark.createDataFrame(ROLE_DIM, ["role", "role_class", "prio"])}
+    return lambda name: Pipeline(_SPECS[name], dims).run(df)
+
+
+@pytest.mark.parametrize("name, budget", [("spine", 410), ("json", 300)])
+def test_plan_build_round_trip_budget(build, name, budget):
+    """Building a spec's plan stays within its py4j round-trip budget:
+    each processor adds its columns with one projection and builds its
+    expressions cheaply (operators/parse.py's build rule). The
+    withColumn-per-key build took 820 (spine) and 382 (json)."""
+    with py4j_round_trips() as n:
+        build(name)
+    assert n[0] <= budget, n[0]
+
+
+def _count(pattern: str, plan: str) -> int:
+    return len(re.findall(pattern, plan, re.M))
+
+
+def test_spine_plans_unchanged(build):
+    """The one-projection build leaves the executed plan as the
+    withColumn chain built it: the spine keeps 4 Projects and 2
+    regexp_replace calls (parts + match flag), the JSON spec 3 Projects
+    around one flatten UDF in one ArrowEvalPython."""
+    spine = build("spine")
+    opt = spine._jdf.queryExecution().optimizedPlan().toString()
+    assert _count(r"^[\s:|+-]*Project \[", opt) == 4, opt
+    assert opt.count("regexp_replace(") == 2, opt
+    assert spine.dtypes == [
+        ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
+        ("text", "string"), *[(k, "string") for k in NGINX_KEYS],
+        ("role_class", "string"), ("sink", "string"),
+    ]
+    js = build("json")
+    opt = js._jdf.queryExecution().optimizedPlan().toString()
+    assert _count(r"^[\s:|+-]*Project \[", opt) == 3, opt
+    executed = js._jdf.queryExecution().executedPlan().toString()
+    assert executed.count("ArrowEvalPython") == 1, executed
+    assert _count(r"flatten\(", executed) == 1, executed
+    assert js.dtypes == [
+        ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
+        ("text", "string"), ("parsed", "map<string,string>"),
+        *[(k, "string") for k in _JSON_KEYS], ("seq", "int"), ("sink", "string"),
+    ]
+    rows = {(r.conv_id, r.turn_idx): (r.level, r.seq, r.sink) for r in js.collect()}
+    assert rows == {("c1", 1): ("ERROR", 0, "sink_assistant"),
+                    ("c2", 1): ("WARN", 0, "sink_default")}
