@@ -495,7 +495,6 @@ def self_repetition(
     role_col: str = "role",
     text_col: str = "text",
     role: str = "assistant",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Per-conversation self-repetition of one role's turns — the
     classic agent failure where the assistant re-emits an earlier
@@ -518,16 +517,11 @@ def self_repetition(
     on conv (HashPartitioning(conv, fp) does not satisfy clustering
     on conv alone, and Spark's own count-distinct rewrite plans the
     identical two-exchange shape). Text never shuffles; the
-    fingerprint is an 8-byte hash (*hash_mode* ``xxhash64``
-    production / ``md5`` engine-portable oracle kernel, the dedup.py
-    convention).
+    fingerprint is an 8-byte xxhash64, only a grouping key.
     """
-    from .dedup import _md5_long, _norm_text
+    from .dedup import _norm_text
 
-    if hash_mode not in ("xxhash64", "md5"):
-        raise ValueError(f"self_repetition: unknown hash_mode {hash_mode!r}")
-    norm = _norm_text(F.coalesce(F.col(text_col), F.lit("")))
-    fp = F.xxhash64(norm) if hash_mode == "xxhash64" else _md5_long(norm)
+    fp = F.xxhash64(_norm_text(F.coalesce(F.col(text_col), F.lit(""))))
     per_fp = (
         tx.filter(F.col(role_col) == role)
         .select(F.col(conv_col), fp.alias("__fp"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions import hashing
 from .dedup import _norm_text
 
 
@@ -154,7 +155,7 @@ def fim_split(
 
     ``hash_mode='xxhash64'`` is the production path;
     ``'md5'`` the DuckDB-reproducible oracle kernel (the shared
-    ``_hash_bucket`` contract). Character arithmetic is
+    ``hashing.bucket`` contract). Character arithmetic is
     codepoint-based and exact for the ASCII fixtures; both engines
     count codepoints, so the oracle holds on any well-formed UTF-8.
 
@@ -168,14 +169,12 @@ def fim_split(
     """
     if mode not in ("psm", "spm"):
         raise ValueError(f"fim_split: unknown mode {mode!r}")
-    from .dedup import _hash_bucket
-
     txt = F.coalesce(F.col(text_col), F.lit(""))
     L = F.length(txt)
-    b1 = _hash_bucket(
+    b1 = hashing.bucket(
         F.concat(F.col(id_col).cast("string"), F.lit("#fimp")), 1000, hash_mode
     )
-    b2 = _hash_bucket(
+    b2 = hashing.bucket(
         F.concat(F.col(id_col).cast("string"), F.lit("#fimm")), 1000, hash_mode
     )
     cut1 = (F.lit(1) + F.floor(b1 * (L - 2) / F.lit(1000))).cast("int")

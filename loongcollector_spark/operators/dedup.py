@@ -16,6 +16,13 @@ Scale design notes:
   candidate generation by band rotation.
 * n-gram Jaccard — verification metric for candidate pairs.
 * embedding cosine — see similarity.py (shared kernels).
+
+Every hash comes from the shared kernel module
+(:mod:`..functions.hashing`): the operators whose hash reaches their
+output take its ``hash_mode`` (``xxhash64`` production, ``md5`` the
+engine-portable oracle kernel); the ones that use a fingerprint only
+as an equality key (exact-substring spans, split leakage) use
+xxhash64 and take no option.
 """
 
 from __future__ import annotations
@@ -24,6 +31,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from ..functions import hashing
 
 __all__ = [
     "duplicate_spans",
@@ -49,30 +58,6 @@ __all__ = [
 
 # deterministic odd seeds for minhash permutations (fixed, public math)
 _SEED_A = 0x9E3779B97F4A7C15
-
-
-def _md5_long(col):
-    """Engine-portable 60-bit positive hash: first 15 hex chars of md5
-    as a long. Reproducible in DuckDB as
-    ``CAST(('0x' || substr(md5(x),1,15)) AS BIGINT)`` — the shared
-    kernel that lets the fuzzy-dedup oracles hash-match across
-    engines. Production paths use xxhash64 (one JVM hash vs md5 +
-    string slice + base conversion); this kernel exists so the SAME
-    pipeline is value-verifiable, not for speed."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _hash_bucket(col, modulus: int, hash_mode: str):
-    """Deterministic ``[0, modulus)`` bucket of *col* — the ONE shared
-    keep/bucket kernel (stratified_sample, temperature_mixture, DSIR).
-    ``hash_mode='md5'`` is the engine-portable oracle kernel above;
-    ``'xxhash64'`` the one-JVM-hash production path. pmod, never
-    abs-then-mod: JVM ``abs(Long.MIN_VALUE)`` stays negative, which
-    would give that row a negative bucket that passes every
-    ``bucket < thresh`` check (ADVICE r3)."""
-    if hash_mode == "md5":
-        return _md5_long(col) % modulus
-    return F.pmod(F.xxhash64(col), F.lit(modulus))
 
 
 def _norm_text(col):
@@ -339,29 +324,25 @@ def _minhash_wide(
     starting from raw text.
     """
     exploded = df.select(
-        F.col(id_col), F.explode(F.col(shingle_col)).alias("__s")
-    ).select(F.col(id_col), F.xxhash64(F.col("__s")).alias("__h"))
+        F.col(id_col), F.explode(F.col(shingle_col)).alias("shingle")
+    )
     return _min_aggs(exploded, num_perm, id_col)
 
 
-def _min_aggs(hashed: DataFrame, num_perm: int, id_col: str) -> DataFrame:
-    aggs = [
-        F.min(F.xxhash64(F.col("__h"), F.lit(p))).alias(f"__m{p}")
-        for p in range(1, num_perm + 1)
-    ]
-    return hashed.groupBy(id_col).agg(*aggs)
-
-
-def _min_aggs_md5(rows: DataFrame, num_perm: int, id_col: str) -> DataFrame:
-    """Oracle-mode signature aggregates: ``sig[p] = min over shingles
-    of md5_long(shingle || ':' || p)``. 64 independent md5s per
-    shingle — far costlier than the xxhash64 path, but every hash is
-    reproducible in DuckDB so the whole pipeline value-matches."""
-    aggs = [
-        F.min(_md5_long(F.concat(F.col("shingle"), F.lit(f":{p}")))).alias(f"__m{p}")
-        for p in range(1, num_perm + 1)
-    ]
-    return rows.groupBy(id_col).agg(*aggs)
+def _min_aggs(
+    rows: DataFrame, num_perm: int, id_col: str, hash_mode: str = "xxhash64"
+) -> DataFrame:
+    """``sig[p] = min over shingles of perm_hash(shingle, p)`` from
+    (id, shingle) rows, perm_hash from :func:`hashing.permutations`.
+    The shared string hash of the xxhash64 family is one common
+    subexpression of all ``num_perm`` aggregates, so the codegen'd
+    aggregate hashes each shingle once. The md5 family costs
+    ``num_perm`` md5s per shingle; every one is reproducible in
+    DuckDB, so the whole pipeline value-matches its oracle."""
+    perms = hashing.permutations(F.col("shingle"), num_perm, hash_mode)
+    return rows.groupBy(id_col).agg(
+        *[F.min(h).alias(f"__m{p}") for p, h in enumerate(perms, 1)]
+    )
 
 
 def _minhash_wide_from_text(
@@ -375,15 +356,10 @@ def _minhash_wide_from_text(
     """Text → shingle rows → hash → ``num_perm`` min-aggregates, every
     stage whole-stage-codegen'd, one shuffle (on *id_col*).
 
-    ``hash_mode``: 'xxhash64' (production; one JVM hash per shingle,
-    re-seeded per permutation) or 'md5' (oracle mode; md5-derived
-    permutation hashes reproducible in DuckDB — see :func:`_md5_long`).
+    ``hash_mode`` picks the permutation family (:func:`_min_aggs`).
     """
     rows = _shingle_rows(df, text_col, k, id_col)
-    if hash_mode == "md5":
-        return _min_aggs_md5(rows, num_perm, id_col)
-    hashed = rows.select(F.col(id_col), F.xxhash64(F.col("shingle")).alias("__h"))
-    return _min_aggs(hashed, num_perm, id_col)
+    return _min_aggs(rows, num_perm, id_col, hash_mode)
 
 
 def lsh_candidate_pairs(
@@ -450,11 +426,10 @@ def minhash_dedup_pairs(
     candidates → exact-Jaccard verify on candidates only (estimated
     from signature agreement). Returns (a, b, jaccard_est ≥ threshold).
 
-    ``hash_mode='md5'`` switches every hash to the DuckDB-reproducible
-    md5 kernel (:func:`_md5_long`) and the band bucket to the plain
-    concatenated signature string, so the whole pipeline — candidate
-    set AND estimates — value-matches the SQL oracle. Production use
-    keeps the default xxhash64 kernel.
+    ``hash_mode='md5'`` switches the signature hashes to the
+    DuckDB-reproducible md5 kernel (:mod:`..functions.hashing`), so
+    the whole pipeline — candidate set AND estimates — value-matches
+    the SQL oracle. Production use keeps the default xxhash64 kernel.
     """
     if bands < 1 or num_perm % bands != 0:
         # bands > num_perm would give zero-width bands: every band
@@ -478,17 +453,14 @@ def minhash_dedup_pairs(
         )
     )
     mcols = [f"__m{p}" for p in range(1, num_perm + 1)]
-    # band buckets as flat xxhash64 of each band's columns (md5/oracle
-    # mode: the concatenated values themselves — engine-portable, and
-    # bucket equality ⇔ band-signature equality either way); stack the
+    # band buckets as flat xxhash64 of each band's columns in either
+    # mode: the bucket is only a join key (equal buckets ⇔ equal band
+    # signatures, up to a 64-bit collision), never output; stack the
     # (band, bucket) pairs with a small posexplode
-    def _band_cols(b):
-        return [F.col(c) for c in mcols[b * rows_per_band : (b + 1) * rows_per_band]]
-
-    if hash_mode == "md5":
-        band_hashes = [F.concat_ws(",", *_band_cols(b)) for b in range(bands)]
-    else:
-        band_hashes = [F.xxhash64(*_band_cols(b)) for b in range(bands)]
+    band_hashes = [
+        F.xxhash64(*map(F.col, mcols[b * rows_per_band : (b + 1) * rows_per_band]))
+        for b in range(bands)
+    ]
     buckets = sigs.select(
         F.col(id_col), F.posexplode(F.array(*band_hashes)).alias("band", "bucket")
     )
@@ -557,8 +529,8 @@ def simhash(
     hamming distance on the fingerprint (:func:`hamming64`).
 
     ``hash_mode='md5'`` uses the DuckDB-reproducible 60-bit kernel
-    (:func:`_md5_long`; bits 60..63 vote 0) so the fingerprints
-    value-match the SQL oracle.
+    (:mod:`..functions.hashing`; bits 60..63 vote 0) so the
+    fingerprints value-match the SQL oracle.
     """
     # explode_outer: a NULL text column must still yield a row per doc
     # (all-NULL bit sums majority-vote to 0 → fingerprint 0, matching
@@ -570,16 +542,11 @@ def simhash(
             F.array_distinct(F.split(_norm_text(F.col(text_col)), " "))
         ).alias("__t"),
     )
-    if hash_mode == "md5":
-        h = _md5_long(F.col("__t"))
-        bit = lambda b: F.shiftright(h, b).bitwiseAND(F.lit(1))  # noqa: E731
-    else:
-        # xxhash64(NULL) yields the SEED (42), not NULL — guard so the
-        # explode_outer NULL-token row contributes NULL bit sums and
-        # NULL-text docs fingerprint to 0, not to hash(seed)'s bits
-        h = F.when(F.col("__t").isNotNull(), F.xxhash64(F.col("__t")))
-        bit = lambda b: F.getbit(h, F.lit(b))  # noqa: E731
-    aggs = [F.sum(bit(b)).alias(f"__c{b}") for b in range(bits)] + [
+    # xxhash64(NULL) yields the SEED (42), not NULL — guard so the
+    # explode_outer NULL-token row contributes NULL bit sums and
+    # NULL-text docs fingerprint to 0, not to hash(seed)'s bits
+    h = F.when(F.col("__t").isNotNull(), hashing.hash64(F.col("__t"), hash_mode))
+    aggs = [F.sum(F.getbit(h, F.lit(b))).alias(f"__c{b}") for b in range(bits)] + [
         F.count("*").alias("__n")
     ]
     wide = toks.groupBy(id_col).agg(*aggs)
@@ -831,7 +798,6 @@ def duplicate_spans(
     k: int = 50,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Exact-substring duplicate spans (the public ExactSubstr dedup of
     Lee et al. 2021, re-expressed relationally): find every k-token
@@ -855,12 +821,11 @@ def duplicate_spans(
     Interval merge is one shuffle on *id_col*: running-max-end boundary
     flags → running-sum group ids → per-group min/max.
 
-    ``hash_mode='md5'`` swaps xxhash64 for the engine-portable 60-bit
-    md5 kernel so DuckDB oracles can value-match the whole pipeline.
+    The window hash is only a grouping and join key, so its kernel
+    cannot change the spans (up to a 64-bit collision): xxhash64.
     """
     if k < 2:
         raise ValueError("k must be >= 2 tokens")
-    hasher = _md5_long if hash_mode == "md5" else F.xxhash64
     # persisted: consumed TWICE below (the dup aggregation and the
     # join-back probe) — without the cache the posexplode + lead-window
     # tokenize pass runs twice over the corpus. Lifetime: until the
@@ -870,7 +835,7 @@ def duplicate_spans(
 
     wins = persisted(
         _window_rows(docs, text_col, k, id_col)
-        .select(F.col(id_col), "pos", hasher(F.col("__win")).alias("__wh"))
+        .select(F.col(id_col), "pos", F.xxhash64(F.col("__win")).alias("__wh"))
     )
     dup = (
         wins.groupBy("__wh")
@@ -915,7 +880,6 @@ def remove_duplicate_spans(
     k: int = 50,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Apply :func:`duplicate_spans`: cut every duplicated span out of
     the (normalized) text, keeping the corpus-first occurrence intact.
@@ -937,9 +901,7 @@ def remove_duplicate_spans(
     same bounded-document contract as segment_dedup/merge_multiline).
     Measured: 2M docs / 81M tokens in 32 s on local[32].
     """
-    spans = duplicate_spans(
-        docs, k=k, id_col=id_col, text_col=text_col, hash_mode=hash_mode
-    )
+    spans = duplicate_spans(docs, k=k, id_col=id_col, text_col=text_col)
     removed_pos = spans.select(
         F.col(id_col),
         F.explode(F.sequence(F.col("span_start"), F.col("span_end") - 1)).alias(
@@ -990,7 +952,6 @@ def split_leakage(
     split_col: str = "split",
     train_split: str = "train",
     text_col: str = "text",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Cross-split contamination audit after :func:`~loongcollector_
     spark.operators.sketch.split_assign`: for every non-train split,
@@ -1003,20 +964,17 @@ def split_leakage(
     ≠ *train_split*.
 
     Scale shape: text never shuffles — docs reduce to an 8-byte
-    fingerprint (*hash_mode* ``xxhash64`` production / ``md5`` oracle
-    kernel), one groupBy on (fp, split) with map-side partial agg
-    (exact-dup clusters collapse per task), then a max-over-fp window
+    xxhash64 fingerprint (only a grouping key), one groupBy on
+    (fp, split) with map-side partial agg (exact-dup clusters collapse
+    per task), then a max-over-fp window
     marks fingerprints present in train. The window's exchange
     re-hashes the REDUCED fingerprint table (one row per (fp, split)
     ≈ distinct docs × splits-present), not the corpus; the final
     per-split rollup is a few rows.
     """
-    if hash_mode not in ("xxhash64", "md5"):
-        raise ValueError(f"split_leakage: unknown hash_mode {hash_mode!r}")
     from pyspark.sql import Window as W
 
-    norm = _norm_text(F.coalesce(F.col(text_col), F.lit("")))
-    fp = F.xxhash64(norm) if hash_mode == "xxhash64" else _md5_long(norm)
+    fp = F.xxhash64(_norm_text(F.coalesce(F.col(text_col), F.lit(""))))
     per = (
         docs.select(fp.alias("__fp"), F.col(split_col))
         .groupBy("__fp", split_col)
@@ -1084,8 +1042,9 @@ def prefix_groups(
     groupBy signature over the conversation-count-sized table. Text
     never shuffles; per-turn units travel as 8-byte hashes
     (*hash_mode*: ``xxhash64`` production, ``md5`` the engine-portable
-    oracle kernel). The signature transform's lambda touches only its
-    lambda variable (the dsir re-eval lesson) on a ≤ k array.
+    oracle kernel; ``prefix_fp`` is the signature's hash). The
+    signature transform's lambda touches only its lambda variable (the
+    dsir re-eval lesson) on a ≤ k array.
     """
     from .loganalytics import mask_log_line
 
@@ -1093,13 +1052,10 @@ def prefix_groups(
         raise ValueError("prefix_groups: k must be >= 1")
     if min_convs < 1:
         raise ValueError("prefix_groups: min_convs must be >= 1")
-    if hash_mode not in ("xxhash64", "md5"):
-        raise ValueError(f"prefix_groups: unknown hash_mode {hash_mode!r}")
-
     unit = F.coalesce(F.col(text_col), F.lit(""))
     if mask_templates:
         unit = mask_log_line(unit)
-    fp = F.xxhash64(unit) if hash_mode == "xxhash64" else _md5_long(unit)
+    fp = hashing.hash64(unit, hash_mode)
 
     if dense:
         from pyspark.sql import Window as W
@@ -1136,13 +1092,11 @@ def prefix_groups(
         ),
     )
     sigs = heads.groupBy(conv_col).agg(sig.alias("__sig"))
-    sig_fp = (
-        F.xxhash64(F.col("__sig"))
-        if hash_mode == "xxhash64"
-        else _md5_long(F.col("__sig"))
-    )
     return (
-        sigs.select(sig_fp.alias("prefix_fp"), F.col(conv_col))
+        sigs.select(
+            hashing.hash64(F.col("__sig"), hash_mode).alias("prefix_fp"),
+            F.col(conv_col),
+        )
         .groupBy("prefix_fp")
         .agg(
             F.count("*").cast("long").alias("n_convs"),
@@ -1276,8 +1230,8 @@ def winnowing_fingerprints(
     Docs with fewer than w full windows still emit fingerprints (the
     single all-grams window); docs shorter than *k* tokens contribute
     their whole normalized text as one gram (the shingles() fallback).
-    ``hash_mode='md5'`` is the engine-portable oracle kernel;
-    ``'xxhash64'`` the one-JVM-hash production path.
+    ``hash_mode`` picks the gram-hash kernel
+    (:mod:`..functions.hashing`).
 
     Returns one row per fingerprint: (id_col, fp_pos, fp_hash).
     """
@@ -1298,13 +1252,8 @@ def winnowing_fingerprints(
         F.array(F.concat_ws(" ", tk))
     )
     g = base.select(F.col(id_col), F.posexplode(grams).alias("__p0", "__gram"))
-    h = (
-        _md5_long(F.col("__gram"))
-        if hash_mode == "md5"
-        else F.xxhash64(F.col("__gram"))
-    )
     pos = (F.col("__p0") + 1).alias("__pos")
-    g = g.select(id_col, pos, h.alias("__h"))
+    g = g.select(id_col, pos, hashing.hash64(F.col("__gram"), hash_mode).alias("__h"))
     win = W.partitionBy(id_col).orderBy("__pos").rowsBetween(0, w - 1)
     part = W.partitionBy(id_col)
     sel = F.min(F.struct(F.col("__h").alias("h"), (-F.col("__pos")).alias("np")))

@@ -6,9 +6,11 @@ over a corpus that mostly didn't change, and the delta drives what to
 re-process (re-dedup, re-score, re-pack) — at 100 TB you re-run the
 pipeline over ``added + changed`` only, not the corpus.
 
-Content equality is by fingerprint (xxhash64 or the engine-portable
-md5 kernel), so the full-outer join shuffles ``(id, 8-byte hash)``
-rows, never document text. One shuffle per side, hash-joined on id.
+Content equality is by xxhash64 fingerprint, so the full-outer join
+shuffles ``(id, 8-byte hash)`` rows, never document text. One shuffle
+per side, hash-joined on id. The fingerprint is only compared, never
+output, so no other kernel could change the result (up to a 64-bit
+collision).
 """
 
 from __future__ import annotations
@@ -16,14 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .dedup import _md5_long
-
 __all__ = ["corpus_delta", "delta_summary", "token_drift"]
-
-
-def _fp(text_col, hash_mode: str):
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    return _md5_long(c) if hash_mode == "md5" else F.xxhash64(c)
 
 
 def corpus_delta(
@@ -32,7 +27,6 @@ def corpus_delta(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """One row per id present in either snapshot:
     ``(id_col, status)`` with status ∈ {'added','removed','changed',
@@ -40,8 +34,9 @@ def corpus_delta(
     became NULL reads as changed, not as a join miss). *id_col* must
     be unique within each snapshot (the full-outer join multiplies
     duplicate keys)."""
-    o = old.select(F.col(id_col), _fp(text_col, hash_mode).alias("__old_fp"))
-    n = new.select(F.col(id_col), _fp(text_col, hash_mode).alias("__new_fp"))
+    fp = F.xxhash64(F.coalesce(F.col(text_col), F.lit("")))
+    o = old.select(F.col(id_col), fp.alias("__old_fp"))
+    n = new.select(F.col(id_col), fp.alias("__new_fp"))
     j = o.join(n, id_col, "full_outer")
     status = (
         F.when(F.col("__old_fp").isNull(), "added")
@@ -58,14 +53,11 @@ def delta_summary(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Per-status counts of :func:`corpus_delta` — the four-row report
     an incremental pipeline logs per run."""
     return (
-        corpus_delta(
-            old, new, id_col=id_col, text_col=text_col, hash_mode=hash_mode
-        )
+        corpus_delta(old, new, id_col=id_col, text_col=text_col)
         .groupBy("status")
         .agg(F.count("*").alias("n_docs"))
     )

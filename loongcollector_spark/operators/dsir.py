@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _hash_bucket, _norm_text
+from ..functions import hashing
+from .dedup import _norm_text
 
 
 def _gram_rows(
@@ -98,7 +99,7 @@ def dsir_weights(
         g.select(
             id_col,
             "__is_target",
-            _hash_bucket(F.col("__g"), n_buckets, hash_mode).alias("__b"),
+            hashing.bucket(F.col("__g"), n_buckets, hash_mode).alias("__b"),
         )
         .groupBy(id_col, "__is_target", "__b")
         .agg(F.count("*").alias("__c"))

@@ -340,7 +340,6 @@ def extract_features(
     binary_col: str = "media",
     dest: str = "features",
     dim: int = 16,
-    deterministic_fake: bool | None = None,
     mode: str = "auto",
     audio_feature: str = "rms",
 ) -> DataFrame:
@@ -353,12 +352,7 @@ def extract_features(
 
     ``audio_feature``: 'rms' (per-window RMS energy) or 'spectral'
     (rFFT log band-energy spectrum) for WAV rows.
-
-    ``deterministic_fake`` is the legacy flag: True → 'fake',
-    False → 'strict'.
     """
-    if deterministic_fake is not None:
-        mode = "fake" if deterministic_fake else "strict"
     out_schema = T.StructType(
         df.schema.fields + [T.StructField(dest, T.ArrayType(T.DoubleType()))]
     )
@@ -434,7 +428,6 @@ def sample_frames(
     binary_col: str = "media",
     dest: str = "frames",
     n_frames: int = 4,
-    deterministic_fake: bool = True,
 ) -> DataFrame:
     """Frame sampling for video columns: emits an array of per-frame
     binary payloads (fake: deterministic byte slices — no video codec
@@ -444,19 +437,16 @@ def sample_frames(
         df.schema.fields + [T.StructField(dest, T.ArrayType(T.BinaryType()))]
     )
 
+    def fake_frames(b):
+        raw = bytes(b) if b is not None else b""
+        step = max(len(raw) // n_frames, 1)
+        return [
+            hashlib.sha256(raw[i * step : (i + 1) * step]).digest()
+            for i in range(n_frames)
+        ]
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not deterministic_fake:
-                raise NotImplementedError("real frame decode not available here")
-
-            def fake_frames(b):
-                raw = bytes(b) if b is not None else b""
-                step = max(len(raw) // n_frames, 1)
-                return [
-                    hashlib.sha256(raw[i * step : (i + 1) * step]).digest()
-                    for i in range(n_frames)
-                ]
-
             pdf[dest] = pdf[binary_col].map(fake_frames)
             yield pdf
 

@@ -7,9 +7,9 @@ registers that merge with ``max`` — the shuffle carries *registers*,
 not values, and partial aggregation collapses each map task to one
 register set before anything moves.  Spark ships
 ``approx_count_distinct`` (its own HLL++); this operator exists because
-the pipeline's correctness gate demands an ENGINE-PORTABLE sketch: both
-Spark and DuckDB compute bit-identical registers from the shared md5
-hash kernel (dedup.py), so the estimate itself — not just some
+the pipeline's correctness gate demands an ENGINE-PORTABLE sketch: in
+md5 mode Spark and DuckDB compute bit-identical registers from the
+shared md5 hash kernel, so the estimate itself — not just some
 tolerance band — is value-checkable cross-engine.  Flajolet et al.
 2007 (HyperLogLog) with the standard small-range linear-counting
 correction.
@@ -19,6 +19,10 @@ random rows" as *the n smallest hashes* — reproducible across reruns,
 resumes, and cluster sizes (same property as text.stratified_sample,
 which keeps a *fraction* per stratum; this keeps an exact *count*
 globally).
+
+Every operator here takes ``hash_mode``: ``xxhash64`` (the default,
+production) or ``md5`` (the engine-portable oracle kernel); the
+kernels and their choice live in :mod:`..functions.hashing`.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _md5_long
+from ..functions import hashing
 
 __all__ = [
     "hll_distinct",
@@ -62,16 +66,10 @@ def _sample_key(id_col: str, salt: str):
 
 def _order_hash(key, hash_mode: str):
     """Non-negative deterministic ordering hash of a key column for
-    the exactly-n samplers. pmod, never abs-then-mod: JVM
-    abs(Long.MIN_VALUE) stays negative, and a negative ordering key
-    would always sort first regardless of salt (ADVICE r3).
-    ``'md5'`` is the engine-portable oracle kernel shared with
-    dedup.py; ``'xxhash64'`` the one-JVM-hash production path."""
-    return (
-        _md5_long(key)
-        if hash_mode == "md5"
-        else F.pmod(F.xxhash64(key), F.lit((1 << 63) - 1))
-    )
+    the exactly-n samplers: a negative ordering key would always sort
+    first regardless of salt (ADVICE r3). md5 values are below the
+    modulus, so they are their own bucket."""
+    return hashing.bucket(key, (1 << 63) - 1, hash_mode)
 
 
 def _alpha(m: int) -> float:
@@ -89,17 +87,18 @@ def hll_distinct(
     col: str,
     *,
     p: int = 12,
-    hash_mode: str = "md5",
+    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """HyperLogLog distinct estimate of *col* — returns ONE row
     ``(n_est, n_registers_used)``.
 
-    The 60-bit md5 kernel hash splits into a low-``p``-bit bucket and a
-    ``60-p``-bit remainder; the register value is the remainder's
-    leading-zero count + 1, computed EXACTLY via the binary-string
-    length (``61 - p - length(bin(rem))``) — both engines produce the
-    same string, so no float ``log2`` edge cases.  Registers are a
-    ``groupBy(bucket).max`` — mergeable, partial-aggregated map-side;
+    The kernel's ``bits``-bit hash (64, or 60 for md5) splits into a
+    low-``p``-bit bucket and a ``bits-p``-bit remainder (an unsigned
+    shift: xxhash64 spans the signed range); the register value is the
+    remainder's leading-zero count + 1, computed EXACTLY via the
+    binary-string length (``bits + 1 - p - length(bin(rem))``) — both
+    engines produce the same string, so no float ``log2`` edge cases.
+    Registers are a ``groupBy(bucket).max`` — mergeable, partial-aggregated map-side;
     the shuffle carries ≤ 2^p rows per map task regardless of input
     size.  Standard bias correction: ``E = α·m²/Σ2^{-M_j}`` with empty
     buckets contributing ``2^0``, switched to linear counting
@@ -111,19 +110,10 @@ def hll_distinct(
     # NULLs hash to NULL → a phantom max-rho register; COUNT(DISTINCT)
     # and approx_count_distinct both ignore NULLs, so we do too
     df = df.filter(F.col(col).isNotNull())
-    if hash_mode == "md5":
-        # 60-bit positive oracle kernel: modulo bucket, signed shift
-        h = _md5_long(F.col(col).cast("string"))
-        bucket = (h % m).alias("__b")
-        rem = F.shiftright(h, p)
-        width = 60 - p
-    else:
-        # production: one JVM xxhash64 over the full signed 64-bit
-        # range — mask the bucket, unsigned-shift the remainder
-        h = F.xxhash64(F.col(col).cast("string"))
-        bucket = h.bitwiseAND(F.lit(m - 1)).alias("__b")
-        rem = F.shiftrightunsigned(h, p)
-        width = 64 - p
+    h = hashing.hash64(F.col(col).cast("string"), hash_mode)
+    bucket = h.bitwiseAND(F.lit(m - 1)).alias("__b")
+    rem = F.shiftrightunsigned(h, p)
+    width = hashing.bits(hash_mode) - p
     rho = F.when(
         rem > 0, F.lit(width + 1) - F.length(F.bin(rem))
     ).otherwise(F.lit(width + 1))
@@ -154,15 +144,15 @@ def hll_distinct(
 
 
 def hll_oracle_sql(table: str, col: str, *, p: int = 12) -> str:
-    """DuckDB twin of :func:`hll_distinct` — identical registers from
-    the same md5 kernel, same binary-string leading-zero trick, same
-    corrections."""
+    """DuckDB twin of :func:`hll_distinct` in md5 mode — identical
+    registers from the same md5 kernel, same binary-string
+    leading-zero trick, same corrections."""
     m = 1 << p
     a = _alpha(m)
+    hv = hashing.MD5_SQL.format(x=f"CAST({col} AS VARCHAR)")
     return f"""
     WITH h AS (
-      SELECT CAST(('0x' || substr(md5(CAST({col} AS VARCHAR)), 1, 15))
-                  AS BIGINT) AS hv
+      SELECT {hv} AS hv
       FROM {table} WHERE {col} IS NOT NULL
     ),
     r AS (
@@ -194,7 +184,7 @@ def uniform_sample(
     *,
     id_col: str = "doc_id",
     salt: str = "uniform",
-    hash_mode: str = "md5",
+    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Exactly-*n* uniform sample without RNG: keep the *n* rows whose
     ``hash(id || salt)`` is smallest (ties broken by id).  The same
@@ -203,9 +193,7 @@ def uniform_sample(
 
     Plan shape: ``TakeOrderedAndProject`` — each partition keeps a
     local top-*n*, the driver merges ``n`` per partition; fine for the
-    sample sizes this is for (≤ millions).  ``hash_mode='md5'`` is the
-    engine-portable oracle kernel; ``'xxhash64'`` the one-JVM-hash
-    production path.
+    sample sizes this is for (≤ millions).
     """
     if n <= 0:
         raise ValueError("uniform_sample: n must be positive")
@@ -219,13 +207,18 @@ def uniform_sample(
     )
 
 
-def _cms_bucket(col, d: int, width: int, hash_mode: str):
-    """Depth-*d* CMS bucket of *col* — seeded engine-portable kernel
-    (md5 of ``value#depth``) or production xxhash64(value, seed)."""
+def _cms_cells(col, width: int, depth: int, hash_mode: str):
+    """``(depth, bucket)`` struct per hash row of *col*: bucket ``d`` is
+    the depth-``d`` seeded hash of the value (:func:`hashing.seeded`,
+    md5 of ``value#d``) mod *width*."""
     s = F.coalesce(col.cast("string"), F.lit(""))
-    if hash_mode == "md5":
-        return _md5_long(F.concat(s, F.lit("#"), F.lit(str(d)))) % width
-    return F.pmod(F.xxhash64(s, F.lit(d)), F.lit(width))
+    return [
+        F.struct(
+            F.lit(d).alias("depth"),
+            F.pmod(h, F.lit(width)).cast("long").alias("bucket"),
+        )
+        for d, h in enumerate(hashing.seeded(s, range(depth), hash_mode, "#"))
+    ]
 
 
 def cms_build(
@@ -234,7 +227,7 @@ def cms_build(
     *,
     width: int = 1024,
     depth: int = 4,
-    hash_mode: str = "md5",
+    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Count-Min sketch of *col* (Cormode & Muthukrishnan 2005):
     ``depth`` hash rows × ``width`` buckets, returned as the sparse
@@ -250,19 +243,7 @@ def cms_build(
     """
     if width < 2 or depth < 1:
         raise ValueError("cms_build: need width >= 2 and depth >= 1")
-    cells = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(d).alias("depth"),
-                    _cms_bucket(F.col(col), d, width, hash_mode)
-                    .cast("long")
-                    .alias("bucket"),
-                )
-                for d in range(depth)
-            ]
-        )
-    )
+    cells = F.explode(F.array(*_cms_cells(F.col(col), width, depth, hash_mode)))
     return (
         df.select(cells.alias("__c"))
         .select("__c.depth", "__c.bucket")
@@ -278,7 +259,7 @@ def cms_estimate(
     *,
     width: int = 1024,
     depth: int = 4,
-    hash_mode: str = "md5",
+    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Point-query the sketch: per probe item, ``est = min over the
     depth rows of its bucket counts`` (missing cell = 0). Guarantees
@@ -288,31 +269,13 @@ def cms_estimate(
     The sketch is ≤ depth·width rows — broadcast to the probe side, so
     estimating any number of items is one broadcast join + groupBy.
     """
+    cells = F.explode(F.array(*_cms_cells(F.col("item"), width, depth, hash_mode)))
     pb = (
         probes.select(F.col(col).alias("item"))
-        .select(
-            "item",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(d).alias("__d"),
-                            _cms_bucket(F.col("item"), d, width, hash_mode)
-                            .cast("long")
-                            .alias("bucket"),
-                        )
-                        for d in range(depth)
-                    ]
-                )
-            ).alias("__c"),
-        )
-        .select("item", "__c.__d", "__c.bucket")
+        .select("item", cells.alias("__c"))
+        .select("item", "__c.depth", "__c.bucket")
     )
-    joined = pb.join(
-        F.broadcast(sketch.withColumnRenamed("depth", "__d")),
-        ["__d", "bucket"],
-        "left",
-    )
+    joined = pb.join(F.broadcast(sketch), ["depth", "bucket"], "left")
     return joined.groupBy("item").agg(
         F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias("est")
     )
@@ -325,7 +288,7 @@ def stratified_topn_sample(
     *,
     id_col: str = "doc_id",
     salt: str = "topn",
-    hash_mode: str = "md5",
+    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Exactly-*n*-per-stratum deterministic sample — the eval-set
     builder ("give me 1000 random docs per language"), RNG-free like
@@ -359,7 +322,7 @@ def split_assign(
     *,
     id_col: str = "doc_id",
     salt: str = "",
-    hash_mode: str = "md5",
+    hash_mode: str = "xxhash64",
     precision: int = 1_000_000,
     dest: str = "split",
 ) -> DataFrame:
@@ -386,9 +349,7 @@ def split_assign(
     total = sum(splits.values())
     if total > 1.0 + 1e-9:
         raise ValueError("split_assign: fractions sum to > 1")
-    from .dedup import _hash_bucket
-
-    bucket = _hash_bucket(_sample_key(id_col, salt), precision, hash_mode)
+    bucket = hashing.bucket(_sample_key(id_col, salt), precision, hash_mode)
     names = sorted(splits)
     expr = None
     cum = 0.0
@@ -412,7 +373,7 @@ def score_sample(
     id_col: str = "doc_id",
     power: float = 1.0,
     salt: str = "score",
-    hash_mode: str = "md5",
+    hash_mode: str = "xxhash64",
     precision: int = 1_000_000,
 ) -> DataFrame:
     """Quality-weighted soft sampling (the FineWeb-Edu / RefinedWeb
@@ -430,9 +391,7 @@ def score_sample(
     """
     if power <= 0:
         raise ValueError("score_sample: power must be > 0")
-    from .dedup import _hash_bucket
-
-    bucket = _hash_bucket(_sample_key(id_col, salt), precision, hash_mode)
+    bucket = hashing.bucket(_sample_key(id_col, salt), precision, hash_mode)
     s = F.coalesce(F.col(score_col).cast("double"), F.lit(0.0))
     p = F.pow(F.least(F.greatest(s, F.lit(0.0)), F.lit(1.0)), F.lit(power))
     return df.filter(bucket < p * F.lit(precision))

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..cache import persisted
+from ..functions import hashing
 
 __all__ = [
     "token_stats",
@@ -512,8 +513,6 @@ def temperature_mixture(
     sample_rate, n_kept)``. A NULL stratum is a first-class stratum
     (null-safe joins throughout), matching ``groupBy``'s NULL key.
     """
-    from .dedup import _hash_bucket
-
     # persist: totals and rates both consume per (tfidf recompute lesson)
     per = persisted(
         docs.groupBy(strata_col).agg(F.count("*").alias("n_docs"))
@@ -543,7 +542,7 @@ def temperature_mixture(
     # raw double): a 1-ulp pow/sum accumulation wobble near an integer
     # boundary must not flip keep decisions run-to-run or cross-engine
     rate_ppm = F.round(F.col("sample_rate") * F.lit(precision)).cast("long")
-    bucket = _hash_bucket(
+    bucket = hashing.bucket(
         F.concat(F.col(id_col).cast("string"), F.lit(salt)),
         precision,
         hash_mode,
@@ -799,13 +798,11 @@ def stratified_sample(
     row-for-row. Changing *salt* draws an independent sample.
 
     ``hash_mode='xxhash64'`` (production, one JVM hash) or ``'md5'``
-    (the engine-portable oracle kernel shared with dedup.py).
+    (the engine-portable oracle kernel, :mod:`..functions.hashing`).
     Pure column expressions — the filter pushes into the scan."""
     from pyspark.sql import functions as F
 
-    from .dedup import _hash_bucket
-
-    bucket = _hash_bucket(
+    bucket = hashing.bucket(
         F.concat(F.col(id_col).cast("string"), F.lit(salt)),
         precision,
         hash_mode,

@@ -67,18 +67,12 @@ def _tool_label(tool_col: str, none_label: str) -> Column:
     )
 
 
-def _state_fp(tool: Column, template: Column, hash_mode: str) -> Column:
+def _state_fp(tool: Column, template: Column) -> Column:
     """8-byte fingerprint of a trajectory step state (tool + masked
-    text template). ``xxhash64`` is the production kernel; ``md5`` is
-    the engine-portable oracle kernel (dedup.py convention)."""
-    from .dedup import _md5_long
-
-    joined = F.concat_ws("\x01", tool, template)
-    if hash_mode == "xxhash64":
-        return F.xxhash64(joined)
-    if hash_mode == "md5":
-        return _md5_long(joined)
-    raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    text template), shared with ``streaming.stream_loop_alert``. A
+    state is only compared with its neighbour, never output, so the
+    kernel cannot change a run (up to a 64-bit collision): xxhash64."""
+    return F.xxhash64(F.concat_ws("\x01", tool, template))
 
 
 def agent_loops(
@@ -90,7 +84,6 @@ def agent_loops(
     text_col: str = "text",
     loop_threshold: int = 3,
     none_label: str = "<none>",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Loop detection over agent trajectories: the longest run of
     CONSECUTIVE turns with the same (tool, text template) state per
@@ -115,13 +108,13 @@ def agent_loops(
     follow (per-run counts, per-conversation rollup) have conv in the
     key, and HashPartitioning(conv) satisfies their clustering, so
     Catalyst plans them exchange-free. States travel as 8-byte hashes
-    (*hash_mode*), never as text.
+    (:func:`_state_fp`), never as text.
     """
     from .loganalytics import mask_log_line
 
     tool = _tool_label(tool_col, none_label)
     template = mask_log_line(F.coalesce(F.col(text_col), F.lit("")))
-    state = _state_fp(tool, template, hash_mode)
+    state = _state_fp(tool, template)
 
     stepped = tx.select(
         F.col(conv_col),

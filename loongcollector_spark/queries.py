@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .functions.hashing import MD5_SQL, md5_long
 from .operators import aggregate as agg
 from .operators import enrich, filter as flt, parse, route as rt
 from .sources.transcripts import load_transcripts, transcripts_sql
@@ -1302,7 +1303,7 @@ def q_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _curation_v2_oracle_sql() -> str:
     pairs_sql = _minhash_oracle_sql()
-    thresh = _MD5L.format(x="concat(cast(doc_id AS STRING), 'cv2')")
+    thresh = MD5_SQL.format(x="concat(cast(doc_id AS STRING), 'cv2')")
     return f"""
     WITH RECURSIVE pairs AS (
       SELECT a, b FROM ({pairs_sql})
@@ -1360,7 +1361,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stratified_sample_oracle_sql() -> str:
-    hashed = _MD5L.format(x="concat(cast(doc_id AS STRING), 'r3')")
+    hashed = MD5_SQL.format(x="concat(cast(doc_id AS STRING), 'r3')")
     cases = " ".join(
         f"WHEN lang = '{v}' THEN {int(f * 1_000_000)}"
         for v, f in sorted(SAMPLE_FRACTIONS.items())
@@ -2001,10 +2002,6 @@ ORACLES["timestamp_roundtrip"] = f"""
     FROM transcripts
 """
 
-# DuckDB twin of operators.dedup._md5_long (60-bit positive hash)
-_MD5L = "CAST(('0x' || substr(md5({x}),1,15)) AS BIGINT)"
-
-
 def _mask_sql(x: str) -> str:
     """DuckDB twin of loganalytics.mask_log_line (shared by the
     log_templates / agent_loops / prefix_groups oracles)."""
@@ -2037,7 +2034,7 @@ def _minhash_oracle_sql(
     merged-conversation rendering."""
     rpb = num_perm // bands
     mins = ",\n      ".join(
-        "min({h}) AS m{p}".format(h=_MD5L.format(x=f"s || ':{p}'"), p=p)
+        "min({h}) AS m{p}".format(h=MD5_SQL.format(x=f"s || ':{p}'"), p=p)
         for p in range(1, num_perm + 1)
     )
     band_sel = "\n      UNION ALL ".join(
@@ -2097,7 +2094,7 @@ def _simhash_oracle_sql(bits: int = 60) -> str:
     fp = " + ".join(
         f"(CASE WHEN c{b} * 2 > n THEN {1 << b} ELSE 0 END)" for b in range(bits)
     )
-    h = _MD5L.format(x="t")
+    h = MD5_SQL.format(x="t")
     return f"""
     WITH toks AS (
       SELECT doc_id, unnest(list_distinct(string_split({_NORM}, ' '))) AS t
@@ -2644,7 +2641,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     parts = []
     for col in ("event_id", "user_id"):
-        est = hll_distinct(ev, col, p=10)
+        est = hll_distinct(ev, col, p=10, hash_mode="md5")
         exact = ev.agg(F.countDistinct(col).alias("n_exact"))
         parts.append(
             est.crossJoin(exact).select(
@@ -2664,7 +2661,7 @@ def q_uniform_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketch import uniform_sample
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return uniform_sample(docs, 20, salt="u1").select(
+    return uniform_sample(docs, 20, salt="u1", hash_mode="md5").select(
         "doc_id", "lang", "n_chars"
     )
 
@@ -2689,7 +2686,7 @@ ORACLES["hll_distinct"] = _hll_oracle_sql()
 ORACLES["uniform_sample"] = f"""
     SELECT doc_id, lang, n_chars
     FROM documents
-    ORDER BY {_MD5L.format(x="concat(cast(doc_id AS STRING), 'u1')")}, doc_id
+    ORDER BY {MD5_SQL.format(x="concat(cast(doc_id AS STRING), 'u1')")}, doc_id
     LIMIT 20
 """
 
@@ -3016,12 +3013,13 @@ def q_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 15-token window occurring more than once is cut from all but
     its corpus-first occurrence; per doc the surviving normalized text
     (as md5 fingerprint) plus kept/removed token counts, value-matched
-    against a full DuckDB twin (md5 hash kernel, same window→
-    first-occurrence→interval-merge→anti-join chain)."""
+    against a full DuckDB twin (same window→first-occurrence→
+    interval-merge→anti-join chain; its md5 window hash and the
+    operator's xxhash64 are both only grouping keys)."""
     from .operators.dedup import remove_duplicate_spans
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = remove_duplicate_spans(docs, k=15, hash_mode="md5")
+    out = remove_duplicate_spans(docs, k=15)
     return out.select(
         "doc_id",
         F.md5("text_dedup").alias("fp"),
@@ -3030,6 +3028,8 @@ def q_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_removed",
     )
 
+
+_WIN_HASH = MD5_SQL.format(x="array_to_string(tk[i:i+14], ' ')")
 
 ORACLES["exact_substring_dedup"] = f"""
     WITH t AS (
@@ -3045,9 +3045,7 @@ ORACLES["exact_substring_dedup"] = f"""
     w AS (
       SELECT doc_id,
              unnest([{{'pos': i - 1,
-                      'wh': CAST(('0x' || substr(md5(
-                              array_to_string(tk[i:i+14], ' ')), 1, 15))
-                            AS BIGINT)}}
+                      'wh': {_WIN_HASH}}}
                      for i in generate_series(1, len(tk) - 14)]) AS s
       FROM t WHERE len(tk) >= 15
     ),
@@ -3211,12 +3209,12 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cms_counts"] = """
+ORACLES["cms_counts"] = f"""
     WITH src AS (SELECT coalesce(CAST(event_type AS VARCHAR), '') AS x FROM events),
     ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
     cells AS (
       SELECT d,
-             CAST(('0x' || substr(md5(x || '#' || d), 1, 15)) AS BIGINT) % 256 AS b,
+             {MD5_SQL.format(x="x || '#' || d")} % 256 AS b,
              count(*) AS cnt
       FROM src, ds GROUP BY d, b
     ),
@@ -3226,7 +3224,7 @@ ORACLES["cms_counts"] = """
     ),
     pb AS (
       SELECT item, d,
-             CAST(('0x' || substr(md5(item || '#' || d), 1, 15)) AS BIGINT) % 256 AS b
+             {MD5_SQL.format(x="item || '#' || d")} % 256 AS b
       FROM probes, ds
     ),
     est AS (
@@ -3239,9 +3237,6 @@ ORACLES["cms_counts"] = """
 """
 
 QUERIES["cms_counts"] = q_cms_counts
-
-
-_MD5K = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
 
 
 def q_stratified_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3262,7 +3257,7 @@ ORACLES["stratified_topn"] = f"""
       SELECT doc_id, lang,
              row_number() OVER (
                PARTITION BY lang
-               ORDER BY {_MD5K.format(x="CAST(doc_id AS VARCHAR) || 'r3'")},
+               ORDER BY {MD5_SQL.format(x="CAST(doc_id AS VARCHAR) || 'r3'")},
                         doc_id) AS rn
       FROM documents) t
     WHERE rn <= 20
@@ -3292,20 +3287,20 @@ def q_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     added = docs.filter(F.col("doc_id") % 11 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
-    return corpus_delta(docs, new.unionAll(added), hash_mode="md5")
+    return corpus_delta(docs, new.unionAll(added))
 
 
 ORACLES["corpus_delta"] = f"""
     WITH o AS (
-      SELECT doc_id, {_MD5K.format(x="coalesce(text, '')")} AS fp
+      SELECT doc_id, {MD5_SQL.format(x="coalesce(text, '')")} AS fp
       FROM documents
     ),
     nw AS (
       SELECT doc_id,
-             {_MD5K.format(x="coalesce(CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END, '')")} AS fp
+             {MD5_SQL.format(x="coalesce(CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END, '')")} AS fp
       FROM documents WHERE doc_id % 7 <> 0
       UNION ALL
-      SELECT doc_id + 100000, {_MD5K.format(x="coalesce(text, '')")}
+      SELECT doc_id + 100000, {MD5_SQL.format(x="coalesce(text, '')")}
       FROM documents WHERE doc_id % 11 = 0
     ),
     j AS (
@@ -3711,12 +3706,11 @@ def q_sls_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~50 µs/row, and losslessness is volume-independent — full-volume
     serializer cost belongs to the flusher bench, not the oracle
     gate."""
-    from .operators.dedup import _md5_long
     from .sources.sls_pb import decode_loggroup, serialize_sls_loggroups
 
     routed = (
         _routed(spark, sf_dir)
-        .filter(_md5_long(F.col("conv_id")) % 8 == 0)
+        .filter(md5_long(F.col("conv_id")) % 8 == 0)
         .select("sink", "conv_id", "turn_idx", "role", "text", "ts")
         # the wire codec is pure-Python: spread it across all cores
         # (the narrow parse→route chain is otherwise one task here)
@@ -3782,7 +3776,7 @@ ORACLES["sls_wire_roundtrip"] = f"""
                 AS BIGINT) AS sum_time_sec,
            count(DISTINCT conv_id) AS n_convs
     FROM transcripts
-    WHERE {_MD5L.format(x="conv_id")} % 8 = 0
+    WHERE {MD5_SQL.format(x="conv_id")} % 8 = 0
     GROUP BY 1
 """
 
@@ -3806,11 +3800,10 @@ def q_otlp_wire_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel, same predicate on both engines) — see
     :func:`q_sls_wire_roundtrip` for the rationale."""
     from .functions import protowire as w
-    from .operators.dedup import _md5_long
     from .operators.otel import parse_otel_trace
 
     tx = load_transcripts(spark, sf_dir).filter(
-        _md5_long(F.col("conv_id")) % 8 == 0
+        md5_long(F.col("conv_id")) % 8 == 0
     ).repartition(  # pure-Python encode: spread across all cores
         spark.sparkContext.defaultParallelism, "conv_id"
     ).select(
@@ -3882,7 +3875,7 @@ ORACLES["otlp_wire_spans"] = f"""
            CAST(min(epoch_us(ts)) AS BIGINT) AS min_start_us,
            CAST(max(epoch_us(ts)) AS BIGINT) AS max_start_us
     FROM transcripts
-    WHERE {_MD5L.format(x="conv_id")} % 8 = 0
+    WHERE {MD5_SQL.format(x="conv_id")} % 8 = 0
     GROUP BY 1, 2
 """
 
@@ -3997,7 +3990,7 @@ ORACLES["dsir_weights"] = f"""
       FROM ne
     ),
     pb AS (
-      SELECT doc_id, is_t, {_MD5L.format(x="g")} % 512 AS bk,
+      SELECT doc_id, is_t, {MD5_SQL.format(x="g")} % 512 AS bk,
              count(*) AS c
       FROM gr GROUP BY 1, 2, 3
     ),
@@ -4037,7 +4030,7 @@ ORACLES["temperature_mixture"] = f"""
     kept AS (
       SELECT d.lang, count(*) AS n_kept
       FROM documents d JOIN rates r ON d.lang IS NOT DISTINCT FROM r.lang
-      WHERE {_MD5L.format(x="concat(CAST(d.doc_id AS VARCHAR), 't1')")}
+      WHERE {MD5_SQL.format(x="concat(CAST(d.doc_id AS VARCHAR), 't1')")}
             % 1000000 < CAST(round(r.sample_rate * 1000000) AS BIGINT)
       GROUP BY 1
     )
@@ -4201,7 +4194,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return split_assign(
-        docs, {"train": 0.8, "val": 0.1, "test": 0.1}
+        docs, {"train": 0.8, "val": 0.1, "test": 0.1}, hash_mode="md5"
     ).select("doc_id", "split")
 
 
@@ -4217,7 +4210,9 @@ def q_score_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .withColumn("score", (F.col("n_chars") % 7) / F.lit(7.0))
     )
-    return score_sample(docs, "score", power=2.0).select("doc_id", "score")
+    return score_sample(docs, "score", power=2.0, hash_mode="md5").select(
+        "doc_id", "score"
+    )
 
 
 # Deterministic multi-line synthesis shared by the two line-level
@@ -4272,10 +4267,7 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # NULL ids hash as '' — sketch._sample_key coalesces before the concat
-_MD5B = (
-    "CAST(('0x' || substr(md5(coalesce(CAST(doc_id AS VARCHAR), '')), 1, 15))"
-    " AS BIGINT) % 1000000"
-)
+_MD5B = MD5_SQL.format(x="coalesce(CAST(doc_id AS VARCHAR), '')") + " % 1000000"
 
 ORACLES["split_assign"] = f"""
     SELECT doc_id,
@@ -4289,8 +4281,8 @@ ORACLES["split_assign"] = f"""
 # split_assign's '' axis so composed sampling draws independent
 # hashes; sketch._sample_key)
 _MD5B_SCORE = (
-    "CAST(('0x' || substr(md5(coalesce(CAST(doc_id AS VARCHAR), '')"
-    " || 'score'), 1, 15)) AS BIGINT) % 1000000"
+    MD5_SQL.format(x="coalesce(CAST(doc_id AS VARCHAR), '') || 'score'")
+    + " % 1000000"
 )
 
 ORACLES["score_sample"] = f"""
@@ -4626,14 +4618,15 @@ ORACLES["tool_transitions"] = f"""
 def q_self_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation assistant self-repetition (loop detection):
     turns whose normalized text already occurred for the same role in
-    the same conversation, via the md5 oracle fingerprint kernel —
-    group sizes, distinct counts and ratios value-matched against a
-    DuckDB two-level aggregate twin."""
+    the same conversation, grouped by an xxhash64 fingerprint — group
+    sizes, distinct counts and ratios value-matched against a DuckDB
+    two-level aggregate twin that groups by md5 (either kernel is only
+    a grouping key)."""
     from .operators.aggregate import self_repetition
     from .sources.transcripts import load_transcripts
 
     tx = load_transcripts(spark, sf_dir)
-    return self_repetition(tx, hash_mode="md5")
+    return self_repetition(tx)
 
 
 _NORM_TXT = (
@@ -4645,7 +4638,7 @@ ORACLES["self_repetition"] = f"""
     WITH transcripts AS ({_TX}),
     fp AS (
       SELECT conv_id,
-             {_MD5L.format(x=_NORM_TXT)} AS f
+             {MD5_SQL.format(x=_NORM_TXT)} AS f
       FROM transcripts WHERE role = 'assistant'
     ),
     g AS (
@@ -4670,13 +4663,15 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketch import split_assign
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assigned = split_assign(docs, {"train": 0.8, "val": 0.1, "test": 0.1})
-    return split_leakage(assigned, hash_mode="md5")
+    assigned = split_assign(
+        docs, {"train": 0.8, "val": 0.1, "test": 0.1}, hash_mode="md5"
+    )
+    return split_leakage(assigned)
 
 
 ORACLES["split_leakage"] = f"""
     WITH a AS (
-      SELECT {_MD5L.format(x=_NORM_TXT)} AS f,
+      SELECT {MD5_SQL.format(x=_NORM_TXT)} AS f,
              CASE WHEN {_MD5B} < 100000 THEN 'test'
                   WHEN {_MD5B} < 900000 THEN 'train'
                   ELSE 'val' END AS split
@@ -4899,10 +4894,10 @@ def q_fim_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FIM_B1 = "({h} % 1000)".format(
-    h=_MD5L.format(x="CAST(doc_id AS VARCHAR) || '#fimp'")
+    h=MD5_SQL.format(x="CAST(doc_id AS VARCHAR) || '#fimp'")
 )
 _FIM_B2 = "({h} % 1000)".format(
-    h=_MD5L.format(x="CAST(doc_id AS VARCHAR) || '#fimm'")
+    h=MD5_SQL.format(x="CAST(doc_id AS VARCHAR) || '#fimm'")
 )
 
 ORACLES["fim_split"] = f"""
@@ -5271,7 +5266,7 @@ ORACLES["prefix_groups"] = f"""
     WITH transcripts AS ({_TX}),
     h AS (
       SELECT conv_id, CAST(turn_idx AS BIGINT) AS i,
-             {_MD5L.format(x=_PFX_UNIT)} AS f
+             {MD5_SQL.format(x=_PFX_UNIT)} AS f
       FROM transcripts WHERE turn_idx < 3
     ),
     s AS (
@@ -5279,7 +5274,7 @@ ORACLES["prefix_groups"] = f"""
              string_agg(i || ':' || f, '|' ORDER BY i, f) AS sig
       FROM h GROUP BY conv_id
     )
-    SELECT {_MD5L.format(x='sig')} AS prefix_fp,
+    SELECT {MD5_SQL.format(x='sig')} AS prefix_fp,
            CAST(count(*) AS BIGINT) AS n_convs,
            min(conv_id) AS rep_conv
     FROM s GROUP BY sig HAVING count(*) >= 2
@@ -5500,7 +5495,10 @@ def q_conv_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tx = load_transcripts(spark, sf_dir)
     assigned = split_assign(
-        tx, {"train": 0.9, "val": 0.05, "test": 0.05}, id_col="conv_id"
+        tx,
+        {"train": 0.9, "val": 0.05, "test": 0.05},
+        id_col="conv_id",
+        hash_mode="md5",
     )
     return assigned.groupBy("split").agg(
         F.countDistinct("conv_id").cast("long").alias("n_convs"),
@@ -5515,9 +5513,9 @@ ORACLES["conv_split"] = f"""
     WITH transcripts AS ({_TX}),
     a AS (
       SELECT conv_id, text,
-             CASE WHEN mod({_MD5L.format(x='conv_id')}, 1000000) < 50000
+             CASE WHEN mod({MD5_SQL.format(x='conv_id')}, 1000000) < 50000
                     THEN 'test'
-                  WHEN mod({_MD5L.format(x='conv_id')}, 1000000) < 950000
+                  WHEN mod({MD5_SQL.format(x='conv_id')}, 1000000) < 950000
                     THEN 'train'
                   ELSE 'val' END AS split
       FROM transcripts
@@ -5545,7 +5543,6 @@ def q_conv_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     template-masked grams saturate at ratio 1.0 on machine-generated
     logs, while raw 8-grams span event-specific fields and measure
     real per-conversation overlap (0.2-0.4 on the fixture)."""
-    from .operators.dedup import _md5_long
     from .operators.text import benchmark_contamination
     from .sources.transcripts import load_transcripts
 
@@ -5558,7 +5555,7 @@ def q_conv_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("conv_id"), F.lit("\x01"), F.col("turn_idx").cast("string")
         ).alias("tid"),
         F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        (_md5_long(F.col("conv_id")) % 10).alias("__b"),
+        (md5_long(F.col("conv_id")) % 10).alias("__b"),
     )
     bench = keyed.filter(F.col("__b") == 0)
     scan = keyed.filter(F.col("__b") != 0)
@@ -5588,7 +5585,7 @@ ORACLES["conv_contamination"] = f"""
     norm AS (
       SELECT conv_id,
              conv_id || chr(1) || turn_idx AS tid,
-             mod({_MD5L.format(x='conv_id')}, 10) AS b,
+             mod({MD5_SQL.format(x='conv_id')}, 10) AS b,
              string_split({_NORM_C}, ' ') AS tk
       FROM transcripts
     ),
@@ -6022,7 +6019,7 @@ _CONV_DUP_TAIL = "appended audit line for the clone"
 def q_conv_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dialogue MinHash near-dup over merged conversations
     (operators/dedup.py:minhash_dedup_pairs at conv granularity)."""
-    from .operators.dedup import _md5_long, minhash_dedup_pairs
+    from .operators.dedup import minhash_dedup_pairs
 
     tx = load_transcripts(spark, sf_dir)
     merged = (
@@ -6037,7 +6034,7 @@ def q_conv_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("doc"),
         )
     )
-    clones = merged.filter(_md5_long(F.col("conv_id")) % 10 == 0).select(
+    clones = merged.filter(md5_long(F.col("conv_id")) % 10 == 0).select(
         F.concat(F.col("conv_id"), F.lit("~dup")).alias("conv_id"),
         F.concat(F.col("doc"), F.lit("\n" + _CONV_DUP_TAIL)).alias("doc"),
     )
@@ -6058,7 +6055,7 @@ _CONV_NEARDUP_SOURCE = f"""
     UNION ALL
     SELECT doc_id || '~dup' AS doc_id,
            text || chr(10) || '{_CONV_DUP_TAIL}' AS text
-    FROM __m WHERE {_MD5L.format(x="doc_id")} % 10 = 0
+    FROM __m WHERE {MD5_SQL.format(x="doc_id")} % 10 = 0
 """
 
 ORACLES["conv_neardup"] = _minhash_oracle_sql(
@@ -6078,11 +6075,10 @@ QUERIES["conv_neardup"] = q_conv_neardup
 
 
 def _wire_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import _md5_long
 
     return (
         load_transcripts(spark, sf_dir)
-        .filter(_md5_long(F.col("conv_id")) % 8 == 0)
+        .filter(md5_long(F.col("conv_id")) % 8 == 0)
         .repartition(spark.sparkContext.defaultParallelism, "conv_id")
     )
 
@@ -6145,7 +6141,7 @@ ORACLES["prom_wire_roundtrip"] = f"""
            CAST(sum(length(coalesce(text, ''))) AS DOUBLE) AS sum_chars,
            CAST(sum(epoch_ms(ts)) AS BIGINT) AS sum_ts_ms
     FROM transcripts
-    WHERE {_MD5L.format(x="conv_id")} % 8 = 0
+    WHERE {MD5_SQL.format(x="conv_id")} % 8 = 0
     GROUP BY role, tool
 """
 
@@ -6156,12 +6152,11 @@ def q_loki_push_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     push payloads with labelsets {job, sink, role} and ns-precision
     values; payloads decode back (sources/loki_push.py) and aggregate
     per (sink, role)."""
-    from .operators.dedup import _md5_long
     from .sources.loki_push import decode_loki_push, serialize_loki_push
 
     routed = (
         _routed(spark, sf_dir)
-        .filter(_md5_long(F.col("conv_id")) % 8 == 0)
+        .filter(md5_long(F.col("conv_id")) % 8 == 0)
         .select(
             "sink",
             "role",
@@ -6212,7 +6207,7 @@ ORACLES["loki_push_roundtrip"] = f"""
            CAST(min(epoch_ns(ts)) AS BIGINT) AS min_ts_ns,
            CAST(max(epoch_ns(ts)) AS BIGINT) AS max_ts_ns
     FROM transcripts
-    WHERE {_MD5L.format(x="conv_id")} % 8 = 0
+    WHERE {MD5_SQL.format(x="conv_id")} % 8 = 0
     GROUP BY 1, 2
 """
 
@@ -6270,7 +6265,7 @@ ORACLES["es_bulk_roundtrip"] = f"""
            count(DISTINCT conv_id) AS n_convs,
            CAST(sum(turn_idx) AS BIGINT) AS sum_turn_idx
     FROM transcripts
-    WHERE {_MD5L.format(x="conv_id")} % 8 = 0
+    WHERE {MD5_SQL.format(x="conv_id")} % 8 = 0
     GROUP BY 1
 """
 
@@ -6313,7 +6308,7 @@ ORACLES["winnowing_dedup"] = f"""
       FROM gpos
     ),
     h AS (
-      SELECT doc_id, pos, {_MD5L.format(x="gram")} AS hv FROM g
+      SELECT doc_id, pos, {MD5_SQL.format(x="gram")} AS hv FROM g
     ),
     s AS (
       SELECT doc_id, pos,

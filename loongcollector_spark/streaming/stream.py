@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import hashing
 from ..pipeline import Pipeline
 
 __all__ = [
@@ -357,6 +358,10 @@ def stream_sketch_rollup(
     """
     from ..operators.sketch import cms_build
 
+    # the sketch is built per micro-batch, after start(): reject an
+    # unknown kernel now
+    hashing.check(hash_mode)
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         sk = cms_build(
             batch_df, col, width=width, depth=depth, hash_mode=hash_mode
@@ -437,7 +442,6 @@ def stream_loop_alert(
     fp = _state_fp(
         _tool_label("tool", "<none>"),
         mask_log_line(F.coalesce(F.col("text"), F.lit(""))),
-        "xxhash64",
     )
     skinny = stream_df.select(
         F.col("conv_id"),

@@ -42,6 +42,26 @@ def test_no_engine_selector_parameters(module_name):
     assert {n: p for n, p in forks.items() if p} == {}
 
 
+def test_equality_key_fingerprints_take_no_hash_mode():
+    """A fingerprint used only to group, join or compare cannot change
+    the output, so these operators hash with xxhash64 and take no
+    kernel option."""
+    from loongcollector_spark.operators import aggregate, dedup, delta, trajectory
+
+    funcs = [
+        aggregate.self_repetition,
+        dedup.duplicate_spans,
+        dedup.remove_duplicate_spans,
+        dedup.split_leakage,
+        delta.corpus_delta,
+        delta.delta_summary,
+        trajectory.agent_loops,
+    ]
+    assert [
+        fn.__name__ for fn in funcs if "hash_mode" in inspect.signature(fn).parameters
+    ] == []
+
+
 def test_trailing_zscore_takes_no_block_count():
     from loongcollector_spark.operators.timeseries import trailing_zscore
 

@@ -33,14 +33,6 @@ def test_corpus_delta_null_to_text_is_changed(spark):
     assert corpus_delta(old, new).collect()[0].status == "changed"
 
 
-def test_corpus_delta_hash_modes_agree(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    new = docs.filter("doc_id % 3 != 0")
-    a = sorted(map(tuple, corpus_delta(docs, new, hash_mode="xxhash64").collect()))
-    b = sorted(map(tuple, corpus_delta(docs, new, hash_mode="md5").collect()))
-    assert a == b
-
-
 def test_topn_exact_counts_and_invariance(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = stratified_topn_sample(docs, "lang", 7)

@@ -64,13 +64,6 @@ def test_short_docs_untouched_and_full_removal(spark):
     assert len(out) == 3  # fully-removed docs still come back
 
 
-def test_hash_modes_agree(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
-    a = sorted(map(tuple, remove_duplicate_spans(docs, k=12, hash_mode="xxhash64").collect()))
-    b = sorted(map(tuple, remove_duplicate_spans(docs, k=12, hash_mode="md5").collect()))
-    assert a == b
-
-
 def test_k_guard(spark):
     df = _docs(spark, [(1, "a b")])
     with pytest.raises(ValueError, match="k must be"):

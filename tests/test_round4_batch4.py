@@ -81,11 +81,6 @@ def test_self_repetition_role_filter(spark, tx):
     assert out["c1"]["n_repeat"] == 0 and out["c1"]["n_turns"] == 2
 
 
-def test_self_repetition_bad_hash_mode(spark, tx):
-    with pytest.raises(ValueError):
-        self_repetition(tx, hash_mode="sha1")
-
-
 # ---------------------------------------------------------- split_leakage
 
 

@@ -83,14 +83,6 @@ def test_agent_loops_null_text_and_tool(spark):
     assert r["loop_tool"] == "<none>"
 
 
-def test_agent_loops_hash_modes_agree(spark, loop_tx):
-    a = sorted(map(tuple, agent_loops(loop_tx, hash_mode="md5").collect()))
-    b = sorted(map(tuple, agent_loops(loop_tx, hash_mode="xxhash64").collect()))
-    assert a == b
-    with pytest.raises(ValueError):
-        agent_loops(loop_tx, hash_mode="sha1")
-
-
 # ------------------------------------------------------------ tool_errors
 
 
