@@ -6,7 +6,7 @@ Capability parity with the reference's enrich plugins (new code):
 * tag stage       — pluginmanager/processor_tag.go:34-127,
                     core/plugin/processor/inner/ProcessorTagNative.h:25-45
 * dict_map        — plugins/processor/dictmap/processor_dict_map.go:30-187
-                    (the north star's broadcast-join lookup enrich)
+                    (the north star's lookup enrich)
 * rename          — plugins/processor/rename/processor_rename.go:26-34
 * string_replace  — plugins/processor/stringreplace/processor_string_replace.go:30-47
 * desensitize     — plugins/processor/desensitize/processor_desensitize.go:29-40
@@ -17,13 +17,17 @@ Capability parity with the reference's enrich plugins (new code):
 
 Everything here is pure ``pyspark.sql.functions`` — JVM-side,
 whole-stage codegen, zero Python in the data path. Dictionary lookups
-are broadcast hash joins (no shuffle of the fact table).
+read their small dimension once, at plan build, into a literal map in
+the plan (no join, no shuffle or broadcast exchange).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import sqltext
 
@@ -71,6 +75,15 @@ def add_tags(
     return df.withColumns(cols) if cols else df
 
 
+_DICT_MAP_MODES = ("fill", "overwrite")
+# lookup types that survive the JSON literal exactly; a map key is a JSON
+# object key, read back as a string and cast to the key type
+_KEY_TYPES = (T.StringType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_VALUE_TYPES = _KEY_TYPES + (T.FloatType, T.DoubleType)
+# entries per hash bucket: a literal map is scanned linearly per row
+_BUCKET = 8
+
+
 def dict_map(
     df: DataFrame,
     dim: DataFrame,
@@ -84,39 +97,50 @@ def dict_map(
     missing: str = "Unknown",
     max_dict_size: int | None = None,
 ) -> DataFrame:
-    """Dictionary lookup as a **broadcast hash join**
-    (processor_dict_map.go:148-187 semantics).
+    """Dictionary lookup against a literal map in the plan
+    (processor_dict_map.go:96-135 load, :148-187 lookup).
 
     * ``mode='overwrite'`` — mapped value replaces any existing
       *dest_key*; ``mode='fill'`` — existing non-null *dest_key* wins.
+      Any other mode raises ``ValueError``.
     * ``handle_missing`` — unmatched source values get *missing*
       (processor_dict_map.go:175-186); otherwise left NULL.
 
-    The dim side is explicitly ``F.broadcast``-ed: at 100 TB fact
-    scale the lookup table (≤MaxDictSize≈1000 in the reference) must
-    never induce a shuffle of the fact table.
+    Like the reference's Init load, the dictionary is read once, when
+    the plan is built: one narrow job collects ``(key, value,
+    hash(key))`` of *dim*'s non-NULL keys (with *max_dict_size*, the
+    rows of the smallest keys, by ``ORDER BY key LIMIT``). Identical
+    rows collapse; a key with two different values raises
+    ``ValueError``. The entries travel as one JSON ``F.lit`` read by
+    ``from_json`` with the dimension's types, which Catalyst folds to
+    a literal map: no join, no exchange, no value spliced into SQL
+    text. A literal map is a linear scan per row, so above 8 entries
+    the dictionary is split into ``ceil(n/8)`` maps, picked per row by
+    ``pmod(hash(source), n_maps)`` (Spark's hash on both sides). Keys
+    must be string, boolean or integral, values one of those or
+    float/double; other types raise ``ValueError`` at plan build. A
+    NULL source or dimension key never matches.
+
+    The dictionary is a snapshot: a streaming query over the result
+    keeps the one taken when its plan was built, at query start, and a
+    ``foreachBatch`` pipeline, which builds its plan per micro-batch,
+    reads it per micro-batch.
     """
-    dim_key = dim_key or source_key
-    dim_value = dim_value or dest_key
-    # the lookup's own columns; prefixed so neither collides with (and
-    # is dropped along with) a column of the fact table
-    dk, dv = "__lc_dk", "__lc_dv"
+    if mode not in _DICT_MAP_MODES:
+        raise ValueError(f"dict_map mode must be one of {_DICT_MAP_MODES}, got {mode!r}")
+    ck = sqltext.col_ref(dim_key or source_key)
     sel = dim.selectExpr(
-        f"{sqltext.col_ref(dim_key)} AS {dk}",
-        f"{sqltext.col_ref(dim_value)} AS {dv}",
-    ).dropDuplicates([dk])
-    if max_dict_size:
-        # deterministic truncation: which entries survive the cap must
-        # not depend on partitioning/plan choice (the reference
-        # truncates in stable config-file order; a DataFrame dim has
-        # no config order, so key order is the stable analog)
-        sel = (
-            sel.withColumn("__lc_rn", F.expr(f"row_number() OVER (ORDER BY {dk})"))
-            .filter(f"__lc_rn <= {int(max_dict_size)}")
-            .drop("__lc_rn")
+        f"{ck} AS k", f"{sqltext.col_ref(dim_value or dest_key)} AS v", f"hash({ck}) AS h"
+    ).where("k IS NOT NULL")
+    key_t, val_t, _ = (f.dataType for f in sel.schema.fields)
+    if not isinstance(key_t, _KEY_TYPES) or not isinstance(val_t, _VALUE_TYPES):
+        raise ValueError(
+            f"dict_map cannot hold a {key_t.simpleString()} -> "
+            f"{val_t.simpleString()} dictionary in a literal"
         )
-    joined = df.join(F.broadcast(sel), df[source_key] == sel[dk], "left")
-    mapped = F.expr(dv)
+    rows = _smallest_keys(sel, int(max_dict_size)) if max_dict_size else sel.collect()
+    key = f"CAST({sqltext.col_ref(source_key)} AS {key_t.simpleString()})"
+    mapped = _lookup(_entries(rows), key_t, val_t, key)
     if handle_missing:
         mapped = F.coalesce(mapped, F.lit(missing))
     if dest_key in df.columns:
@@ -128,7 +152,58 @@ def dict_map(
             # event unchanged (processor_dict_map.go:175-186), it does
             # not null out the existing value
             mapped = F.coalesce(mapped, F.col(dest_key))
-    return joined.withColumn(dest_key, mapped).drop(dk, dv)
+    return df.withColumn(dest_key, mapped)
+
+
+def _entries(rows: list) -> dict:
+    """``{key: (value, hash)}`` of the collected ``(k, v, h)`` rows:
+    identical rows collapse, a key with two values raises."""
+    entries: dict = {}
+    for k, v, h in rows:
+        seen = entries.setdefault(k, (v, h))[0]
+        if json.dumps(seen) != json.dumps(v):  # NaN equals NaN here
+            raise ValueError(
+                f"dict_map dimension maps key {k!r} to both {seen!r} and {v!r}"
+            )
+    return entries
+
+
+def _lookup(entries: dict, key_t: T.DataType, val_t: T.DataType, key: str) -> Column:
+    """The value of SQL expression *key* in *entries*, held as literal
+    maps of at most ``_BUCKET`` entries, picked by ``pmod(hash(key),
+    n_maps)``: the bucket of each entry is its collected Spark hash."""
+    n_maps = max(1, -(-len(entries) // _BUCKET))
+    maps: list[dict] = [{} for _ in range(n_maps)]
+    for k, (v, h) in entries.items():
+        # JSON object keys are strings; pmod's bucket is Python's %
+        maps[h % n_maps][k if isinstance(k, str) else json.dumps(k)] = v
+    text_t, typed_t = T.MapType(T.StringType(), val_t), T.MapType(key_t, val_t)
+    text = json.dumps(maps[0])
+    if n_maps > 1:
+        text_t, typed_t, text = T.ArrayType(text_t), T.ArrayType(typed_t), json.dumps(maps)
+    lookup = F.from_json(F.lit(text), text_t)
+    if typed_t != text_t:
+        lookup = lookup.cast(typed_t)
+    if n_maps > 1:
+        lookup = F.element_at(lookup, F.expr(f"pmod(hash({key}), {n_maps}) + 1"))
+    return F.element_at(lookup, F.expr(key))
+
+
+def _smallest_keys(sel: DataFrame, n: int) -> list:
+    """Rows of the *n* smallest distinct keys of *sel*, as the reference
+    keeps the first MaxDictSize entries of its config (a DataFrame has
+    no config order; key order is the stable analog). The limit widens
+    while duplicate rows fill it, so it covers every row of each kept
+    key."""
+    limit = n + 1
+    while True:
+        rows = sel.orderBy("k").limit(limit).collect()
+        keys = list(dict.fromkeys(r.k for r in rows))
+        if len(rows) < limit or len(keys) > n:
+            break
+        limit *= 2
+    kept = set(keys[:n])
+    return [r for r in rows if r.k in kept]
 
 
 def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
@@ -232,7 +307,6 @@ def _desensitize_md5_resub(df: DataFrame, source_key: str, regex: str) -> DataFr
     import re as _re
 
     import pandas as pd  # noqa: F401
-    from pyspark.sql import types as T
 
     pat = _re.compile(regex)
 

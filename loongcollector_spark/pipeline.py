@@ -141,16 +141,25 @@ class Pipeline:
             p = dict(p)
             typ = p.pop("type")
             if typ == "dict_map":
-                dim = self.dims[p.pop("dim")]
-                df = enrich.dict_map(df, dim, **p)
+                df = enrich.dict_map(df, self._dim(typ, p), **p)
             elif typ == "geoip":
                 # dim-requiring like dict_map: the geo range table is a
                 # named dim (processor_geoip's mmdb analog, geo.py)
-                dim = self.dims[p.pop("dim")]
+                dim = self._dim(typ, p)
                 df = geo.geoip_enrich(df, p.pop("source_key"), dim, **p)
             else:
                 df = PROCESSORS[typ](df, **p)
         return df
+
+    def _dim(self, typ: str, step: dict[str, Any]) -> DataFrame:
+        """Pop the dimension *step* names from the loaded ``dims``."""
+        name = step.pop("dim", None)
+        if name not in self.dims:
+            raise ValueError(
+                f"{typ} step names dimension {name!r}, but the loaded "
+                f"dimensions are {sorted(self.dims)}"
+            )
+        return self.dims[name]
 
     def route(self, df: DataFrame) -> DataFrame:
         r = self.spec.get("router")

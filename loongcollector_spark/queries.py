@@ -209,7 +209,7 @@ def q_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_enrich_dictmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast dict lookup w/ missing handling (processor_dict_map)."""
+    """In-plan dict lookup w/ missing handling (processor_dict_map)."""
     out = _enriched(spark, sf_dir)
     return out.groupBy("role", "role_class", "tool_family").agg(
         F.count("*").alias("cnt")

@@ -2,6 +2,8 @@
 reference's table-driven plugin tests, e.g.
 plugins/processor/dictmap/processor_dict_map.go tests)."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,8 +52,8 @@ def test_dict_map_modes(spark, df):
 
 
 def test_dict_map_keeps_columns_named_like_its_lookup_columns(spark, df):
-    """The lookup side's key/value columns carry the __lc_ prefix, so fact
-    columns named __dk/__dv survive the lookup."""
+    """The lookup adds only its destination column: fact columns named
+    like lookup temporaries survive it."""
     facts = df.select("id", "role", F.lit("k").alias("__dk"), F.lit("v").alias("__dv"))
     dim = spark.createDataFrame(
         [("user", "human"), ("assistant", "model")], ["role", "role_class"]
@@ -60,6 +62,139 @@ def test_dict_map_keeps_columns_named_like_its_lookup_columns(spark, df):
     assert out.columns == ["id", "role", "__dk", "__dv", "role_class"]
     got = {r.id: (r["__dk"], r["__dv"], r.role_class) for r in out.collect()}
     assert got == {1: ("k", "v", "human"), 2: ("k", "v", "model"), 3: ("k", "v", None)}
+
+
+def _lookup(out, key="role", dest="role_class"):
+    return {r[key]: r[dest] for r in out.collect()}
+
+
+@pytest.fixture(scope="module")
+def roles(spark):
+    return spark.createDataFrame(
+        [("user",), ("assistant",), ("alien",), (None,)], "role string"
+    )
+
+
+def test_dict_map_null_keys_never_match(spark, roles):
+    """A NULL dimension key does not match a NULL source, as no NULL
+    equals another in the join it replaced."""
+    dim = spark.createDataFrame(
+        [(None, "nobody"), ("user", "human")], "role string, role_class string"
+    )
+    out = enrich.dict_map(roles, dim, "role", "role_class", handle_missing=True, missing="UNK")
+    assert _lookup(out) == {"user": "human", "assistant": "UNK", "alien": "UNK", None: "UNK"}
+
+
+def test_dict_map_empty_dimension_misses_every_row(spark, roles):
+    dim = spark.createDataFrame([], "role string, role_class string")
+    out = enrich.dict_map(roles, dim, "role", "role_class")
+    assert _lookup(out) == {"user": None, "assistant": None, "alien": None, None: None}
+    out = enrich.dict_map(roles, dim, "role", "role_class", handle_missing=True, missing="UNK")
+    assert set(_lookup(out).values()) == {"UNK"}
+
+
+def test_dict_map_exact_duplicates_collapse(spark, roles):
+    """Identical dimension rows are one entry, also under the size cap:
+    the three copies of "assistant" take one of its two places."""
+    dim = spark.createDataFrame(
+        [("assistant", "model"), ("user", "human"), ("assistant", "model"), ("zed", "z"),
+         ("assistant", "model")],
+        "role string, role_class string",
+    )
+    want = {"user": "human", "assistant": "model", "alien": None, None: None}
+    assert _lookup(enrich.dict_map(roles, dim, "role", "role_class")) == want
+    capped = enrich.dict_map(roles, dim, "role", "role_class", max_dict_size=2)
+    assert _lookup(capped) == want
+
+
+def test_dict_map_conflicting_duplicate_raises(spark, roles):
+    dim = spark.createDataFrame(
+        [("user", "human"), ("user", "person"), ("assistant", "model")],
+        "role string, role_class string",
+    )
+    with pytest.raises(ValueError, match="'user'"):
+        enrich.dict_map(roles, dim, "role", "role_class")
+    # a conflict among the keys the cap drops does not matter
+    out = enrich.dict_map(roles, dim, "role", "role_class", max_dict_size=1)
+    assert _lookup(out) == {"user": None, "assistant": "model", "alien": None, None: None}
+
+
+def test_dict_map_int_value_keeps_its_type(spark, roles):
+    dim = spark.createDataFrame(
+        [("user", 1), ("assistant", 2)], "role string, priority int"
+    )
+    out = enrich.dict_map(roles, dim, "role", "priority")
+    assert out.dtypes == [("role", "string"), ("priority", "int")]
+    assert _lookup(out, dest="priority") == {"user": 1, "assistant": 2, "alien": None, None: None}
+    # and an int key, looked up from a long source column
+    dim = spark.createDataFrame([(1, "one"), (2, "two")], "code int, name string")
+    facts = spark.createDataFrame([(1,), (3,), (None,)], "code long")
+    out = enrich.dict_map(facts, dim, "code", "name")
+    assert _lookup(out, "code", "name") == {1: "one", 3: None, None: None}
+
+
+def test_dict_map_unsupported_type_raises_at_plan_build(spark, roles):
+    dim = spark.createDataFrame(
+        [("user", datetime.date(2024, 1, 1))], "role string, since date"
+    )
+    with pytest.raises(ValueError, match="string -> date"):
+        enrich.dict_map(roles, dim, "role", "since")
+
+
+@pytest.mark.parametrize("key_type", ["string", "bigint"])
+def test_dict_map_bucketed_dimension(spark, key_type):
+    """Above 8 entries the dictionary is split into hash buckets; a
+    20-entry one (3 buckets) gives the same hits and misses."""
+    cast = str if key_type == "string" else int
+    dim = spark.createDataFrame(
+        [(cast(i), f"v{i}") for i in range(20)], f"k {key_type}, v string"
+    )
+    facts = spark.createDataFrame([(cast(i),) for i in range(25)] + [(None,)], f"k {key_type}")
+    out = enrich.dict_map(facts, dim, "k", "v", handle_missing=True, missing="-")
+    want = {cast(i): f"v{i}" if i < 20 else "-" for i in range(25)} | {None: "-"}
+    assert _lookup(out, "k", "v") == want
+    assert "pmod(hash(" in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dict_map_max_dict_size_keeps_smallest_keys(spark):
+    dim = spark.createDataFrame(
+        [("d", "4"), ("b", "2"), ("a", "1"), ("c", "3")], "k string, v string"
+    )
+    facts = spark.createDataFrame([(k,) for k in "abcde"], "k string")
+    out = enrich.dict_map(facts, dim, "k", "v", max_dict_size=2)
+    assert _lookup(out, "k", "v") == {"a": "1", "b": "2", "c": None, "d": None, "e": None}
+
+
+@pytest.mark.parametrize("preset", [False, True])
+def test_dict_map_unknown_mode_rejected_before_any_job(spark, df, preset):
+    """An unknown mode used to act as overwrite when the destination
+    existed and was ignored otherwise."""
+    facts = df.withColumn("role_class", F.lit("x")) if preset else df
+    dim = spark.createDataFrame([("user", "human")], ["role", "role_class"])
+    sc = spark.sparkContext
+    group = f"dict-map-mode-{preset}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="'Overwrite'"):
+            enrich.dict_map(facts, dim, "role", "role_class", mode="Overwrite")
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("typ, step", [
+    ("dict_map", {"dim": "role_dimm", "source_key": "role", "dest_key": "c"}),
+    ("dict_map", {"source_key": "role", "dest_key": "c"}),
+    ("geoip", {"dim": "geo", "source_key": "ip"}),
+])
+def test_pipeline_names_a_missing_dimension(spark, df, typ, step):
+    from loongcollector_spark.pipeline import Pipeline
+
+    dim = spark.createDataFrame([("user", "human")], ["role", "c"])
+    pipe = Pipeline({"processors": [{"type": typ, **step}]}, {"role_dim": dim})
+    requested = repr(step.get("dim"))
+    with pytest.raises(ValueError, match=rf"{typ} step names dimension {requested}.*\['role_dim'\]"):
+        pipe.run(df)
 
 
 def test_rename_and_pick_drop(spark, df):

@@ -2,7 +2,7 @@
 
 These tests pin the properties that make the pipeline scale:
 * filters/column pruning reach the parquet scan (PushedFilters/ReadSchema)
-* dictionary enrich is a BroadcastHashJoin (fact table never shuffles)
+* dictionary enrich is a literal-map lookup (no join, no exchange)
 * routing + parsing is shuffle-free (narrow, whole-stage codegen)
 * shard_repartition produces exactly one exchange, hash-partitioned
 """
@@ -57,13 +57,16 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     }
 
 
-def test_dict_map_is_broadcast_join(spark, raw):
+def test_dict_map_is_an_in_plan_lookup(spark, raw):
+    """The dictionary is a literal map in the fact side's projection:
+    no join, and no exchange of either side."""
     df = raw.withColumnRenamed("event_type", "role")
     dim = spark.createDataFrame(ROLE_DIM, ["role", "role_class", "priority"])
     out = enrich.dict_map(df, dim, "role", "role_class")
-    plan = plan_of(out)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    out.write.format("noop").mode("overwrite").save()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    assert "element_at(map(keys: [user,assistant,system,tool]" in plan, plan
 
 
 def test_parse_route_is_narrow(spark, sf_dir):
@@ -441,12 +444,15 @@ def _count(pattern: str, plan: str) -> int:
 
 def test_spine_plans_unchanged(build):
     """The one-projection build leaves the executed plan as the
-    withColumn chain built it: the spine keeps 4 Projects and 2
-    regexp_replace calls (parts + match flag), the JSON spec 3 Projects
-    around one flatten UDF in one ArrowEvalPython."""
+    withColumn chain built it: the spine keeps 2 Projects (the
+    dictionary lookup folds into the parse's outer projection; with the
+    broadcast join there were 4) and 2 regexp_replace calls (parts +
+    match flag),
+    the JSON spec 3 Projects around one flatten UDF in one
+    ArrowEvalPython."""
     spine = build("spine")
     opt = spine._jdf.queryExecution().optimizedPlan().toString()
-    assert _count(r"^[\s:|+-]*Project \[", opt) == 4, opt
+    assert _count(r"^[\s:|+-]*Project \[", opt) == 2, opt
     assert opt.count("regexp_replace(") == 2, opt
     assert spine.dtypes == [
         ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
