@@ -99,6 +99,10 @@ _M = "__lc_m"  # match flag
 _E = "__lc_e"  # parse_delimiter: index of the key holding the end field
 _CORRUPT = "__lc_corrupt"  # parse_delimiter: from_csv's corrupt-record field
 
+_RE = "__lc_re"  # _match_groups: the replace's pattern
+_S = "__lc_s"  # _match_groups: the match test's pattern
+_T = "__lc_t"  # _match_groups: the replace's template
+
 
 def _apply_unmatch_policy(
     df: DataFrame,
@@ -152,6 +156,61 @@ def _casts(types: dict[str, str]) -> dict[str, str]:
     return {k: ct for k, t in types.items() if (ct := cast_for_hint(t))}
 
 
+def _match_groups(
+    df: DataFrame, source: str, regex: str, groups: list[int], *,
+    full_match: bool,
+) -> DataFrame:
+    """*df* plus the temporaries ``_P``, the parts array, and ``_M``, the
+    match flag, of *regex* over column *source*, from one
+    ``regexp_replace`` per row (shared by ``parse_regex`` and SPL
+    ``parse-regexp``).
+
+    The replace consumes the whole line and rewrites it into ``\\x02``
+    followed by the capture groups *groups* (ordinals) joined by
+    ``\\x01``; ``split`` breaks that apart. A line the replace rewrote
+    starts with the ``\\x02`` sentinel. A line that already started
+    with it is ambiguous, and only such lines run the pattern a second
+    time, as the ``RLIKE`` behind the short-circuiting ``OR``.
+    ``full_match`` anchors *regex* (``^(?:regex)$``); otherwise the
+    first match anywhere counts (Go ``FindStringSubmatch``, Java
+    ``find``). The parts and the flag equal ``regexp_extract`` and
+    ``rlike`` with that pattern; a group that took no part gives ``''``.
+
+    Wrapping *regex* in a non-capturing group keeps its group numbering
+    and is safe for patterns already carrying ``^``/``$`` (including an
+    escaped ``\\$``: never strip characters off user regexes). The
+    wrapper's own ``.*`` runs are DOTALL inside ``(?s:...)``, so the
+    flag does not leak into *regex*, and they take up what a ``$`` that
+    matched before a final line terminator leaves.
+
+    The expressions are ``F.expr`` text; the patterns reach it as
+    literal columns, which the optimizer folds back into the calls.
+    """
+    if full_match:
+        search = f"^(?:{regex})$"
+        anchored = f"{search}(?s:.*)"
+    else:
+        search = regex
+        anchored = f"^(?s:.*?)(?:{regex})(?s:.*)$"
+    template = "\x02" + "\x01".join(f"${g}" for g in groups)
+    src = sqltext.col_ref(source)
+    rep = f"regexp_replace({src}, {_RE}, {_T})"
+    parts = f"split(substring({rep}, 2), chr(1))"
+    # the size check guards against captured values holding the
+    # delimiter byte: misalignment becomes a parse FAILURE, never
+    # silently shifted fields
+    matched = (
+        f"startswith({rep}, chr(2)) AND (NOT startswith({src}, chr(2)) "
+        f"OR {src} RLIKE {_S}) AND size({parts}) = {len(groups)}"
+    )
+    pats = {_RE: F.lit(anchored), _S: F.lit(search), _T: F.lit(template)}
+    return (
+        df.withColumns(pats)
+        .withColumns({_P: F.expr(parts), _M: F.expr(matched)})
+        .drop(*pats)
+    )
+
+
 def parse_regex(
     df: DataFrame,
     source_key: str,
@@ -166,12 +225,12 @@ def parse_regex(
 ) -> DataFrame:
     """Extract capture groups of *regex* into columns *keys*.
 
-    One JVM pass in whole-stage codegen: ``regexp_replace`` rewrites a
-    matched line into a delimiter-joined group list and ``split``
-    breaks it apart, with one ``rlike`` as the match test (the
-    reference's single-match-then-emit loop, regex.go:105-129). The
-    whole-line ``(.*)`` pattern skips regex entirely, as the reference's
-    fast path does (ProcessorParseRegexNative.cpp:142-146).
+    One regex evaluation per row, in whole-stage codegen: the
+    ``regexp_replace`` of ``_match_groups`` both rewrites a matched line
+    into its groups and marks it matched (the reference's
+    single-match-then-emit loop, regex.go:105-129). The whole-line
+    ``(.*)`` pattern skips regex entirely, as the reference's fast path
+    does (ProcessorParseRegexNative.cpp:142-146).
 
     ``full_match`` anchors the pattern (Go regexp full-find vs match
     semantics); unmatched rows get NULL keys and follow the unmatch
@@ -188,32 +247,10 @@ def parse_regex(
             discard_unmatched, keep_source_if_parse_error, casts=casts,
         )
 
-    # Wrapping in a non-capturing group keeps group numbering and is
-    # safe for patterns already carrying ^/$ (including escaped \$ —
-    # never strip characters off user regexes).
-    if full_match:
-        anchored = f"^(?:{regex})$"
-        search = anchored
-    else:
-        # search-anywhere semantics (Go FindStringSubmatch): the
-        # replace pattern consumes the WHOLE line around the first
-        # match so the rewrite below yields only the groups
-        anchored = f"(?s)^.*?(?:{regex}).*$"
-        search = regex
-    # Single-pass JVM extraction: one regexp_replace rewrites the
-    # matched line into a \x01-joined group list, one split breaks
-    # it apart — 2 regex evaluations per row instead of 1 rlike +
-    # N regexp_extract (the naive per-key plan). At 100 TB this is
-    # the difference between reading the hot column N+1 times and
-    # twice per row, all inside whole-stage codegen.
-    delim = "\x01"
-    template = delim.join(f"${i}" for i in range(1, len(keys) + 1))
-    parts = F.split(F.regexp_replace(src, anchored, template), delim)
-    # size check guards against captured values containing the
-    # delimiter byte: misalignment becomes a parse FAILURE, never
-    # silently shifted fields
-    matched = F.rlike(src, F.lit(search)) & (F.size(parts) == len(keys))
-    out = df.withColumns({_P: parts, _M: matched})
+    out = _match_groups(
+        df, source_key, regex, list(range(1, len(keys) + 1)),
+        full_match=full_match,
+    )
     keyed = {
         k: F.expr(f"CASE WHEN {_M} THEN {_P}[{i}] END") for i, k in enumerate(keys)
     }

@@ -33,7 +33,8 @@ codegen, predicate pushdown, and column pruning all apply across command
 boundaries for free (a ``where`` after a ``parse-regexp`` is pushed below
 the parse when the predicate doesn't touch parsed columns). No Python runs
 per row anywhere: parse-json uses ``get_json_object``/``json_object_keys``,
-parse-kv uses ``str_to_map``, parse-regexp uses ``regexp_extract``.
+parse-kv uses ``str_to_map``, parse-regexp uses ``parse_regex``'s
+one-``regexp_replace`` kernel (``operators/parse._match_groups``).
 
 Dialect notes (documented deviations, all driver-testable):
 
@@ -65,6 +66,8 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .operators.parse import _M, _P, _match_groups
 
 __all__ = [
     "SPLError",
@@ -1083,12 +1086,11 @@ def _cmd_parse_regexp(df: DataFrame, rest: str, ctx: _Ctx) -> DataFrame:
             raise SPLError(
                 f"parse-regexp: cannot number named groups in {pattern!r}"
             )
-    matched = F.col(src).rlike(java_pat)
-    targets = [
-        (k, F.regexp_extract(F.col(src), java_pat, g), matched)
-        for k, g in zip(keys, ordinals)
-    ]
-    return _assign_parsed(df, targets, "overwrite")
+    # one regexp_replace per row for every key and the match flag
+    out = _match_groups(df, src, java_pat, ordinals, full_match=False)
+    matched = F.expr(_M)
+    targets = [(k, F.expr(f"{_P}[{i}]"), matched) for i, k in enumerate(keys)]
+    return _assign_parsed(out, targets, "overwrite").drop(_P, _M)
 
 
 def _cmd_parse_json(df: DataFrame, rest: str, ctx: _Ctx) -> DataFrame:

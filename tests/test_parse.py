@@ -86,6 +86,15 @@ def test_regex_whole_line_fast_path(tx):
     assert row.text == row.content
 
 
+def test_regex_unanchored_dot_stays_on_one_line(spark):
+    """Unanchored, ``.`` keeps its meaning: it does not cross a newline,
+    so the first match is the one Go's FindStringSubmatch and Python's
+    re.search find, and a line with no such match is unmatched."""
+    df = spark.createDataFrame([("a\nb a-b",), ("a\nb",)], ["text"])
+    out = parse_regex(df, "text", r"(a.b)", ["v"], full_match=False)
+    assert {r.text: r.v for r in out.collect()} == {"a\nb a-b": "a-b", "a\nb": None}
+
+
 def test_grok_kv_dialect(tx):
     out = parse_grok(
         tx.filter(F.col("text").startswith("level=")),

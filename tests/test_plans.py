@@ -446,14 +446,14 @@ def test_spine_plans_unchanged(build):
     """The one-projection build leaves the executed plan as the
     withColumn chain built it: the spine keeps 2 Projects (the
     dictionary lookup folds into the parse's outer projection; with the
-    broadcast join there were 4) and 2 regexp_replace calls (parts +
-    match flag),
-    the JSON spec 3 Projects around one flatten UDF in one
-    ArrowEvalPython."""
+    broadcast join there were 4) and 3 copies of the one regexp_replace
+    (parts, the flag's sentinel test, the flag's size guard; codegen
+    evaluates it once per row), the JSON spec 3 Projects around one
+    flatten UDF in one ArrowEvalPython."""
     spine = build("spine")
     opt = spine._jdf.queryExecution().optimizedPlan().toString()
     assert _count(r"^[\s:|+-]*Project \[", opt) == 2, opt
-    assert opt.count("regexp_replace(") == 2, opt
+    assert opt.count("regexp_replace(") == 3, opt
     assert spine.dtypes == [
         ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
         ("text", "string"), *[(k, "string") for k in NGINX_KEYS],
@@ -473,3 +473,14 @@ def test_spine_plans_unchanged(build):
     rows = {(r.conv_id, r.turn_idx): (r.level, r.seq, r.sink) for r in js.collect()}
     assert rows == {("c1", 1): ("ERROR", 0, "sink_assistant"),
                     ("c2", 1): ("WARN", 0, "sink_default")}
+
+
+def test_spine_parse_rlike_is_guarded(build):
+    """The parse's match flag comes from its regexp_replace: the only
+    RLIKE over the parsed text sits behind the short-circuiting test for
+    a text that already starts with the \\x02 sentinel, so ordinary rows
+    run the pattern once."""
+    opt = build("spine")._jdf.queryExecution().optimizedPlan().toString()
+    rlikes = _count(r"RLIKE\(text#", opt)
+    guarded = _count(r"NOT StartsWith\((text#\d+), \x02\) OR RLIKE\(\1, ", opt)
+    assert rlikes == guarded == 1, opt

@@ -1,6 +1,8 @@
 """Property-based tests (hypothesis) for the pure-Python kernels:
 grok compiler and JSON flattener. No Spark session needed — these run
-in milliseconds and pin the dialect semantics the Arrow UDFs rely on."""
+in milliseconds and pin the dialect semantics the Arrow UDFs rely on.
+The last test drives Spark: ``parse_regex`` against per-key
+``regexp_extract``."""
 
 import json
 import re
@@ -266,3 +268,65 @@ def test_otlp_decode_never_crashes_on_fuzz(buf):
     for fn in (decode_traces, decode_metrics):
         out = fn(buf)
         assert out is None or isinstance(out, str)
+
+
+# ---- parse_regex against per-key regexp_extract (Spark session) ----
+
+_NGINX_LINE = (
+    '1.2.3.4 - - [01/Jan/2024:00:00:00 +0000] "GET /a HTTP/1.1" 200 5 "-" '
+    '"ag" logNo=7'
+)
+# nginx, an optional group (a group that takes no part extracts ''),
+# and a pattern that matches ''
+_REGEXES = [
+    (
+        r'(\S+) - - \[([^\]]+)\] "(\S+) (\S+) (\S+)" (\d+) (\d+) '
+        r'"([^"]*)" "([^"]*)" logNo=(\d+)'
+    ),
+    r"(a.b)(-x)?",
+    r"(a*)(b*)",
+]
+_EDGE_TEXTS = [
+    None, "", "\n", "a-b\n", "a-b\r\n", "a\nb a-b", "\x02a-b", "a\x02b", "a\x01b",
+    "\x02" + _NGINX_LINE, _NGINX_LINE + "\n", _NGINX_LINE.replace("GET", "G\x01T"),
+]
+_texts = st.lists(
+    st.sampled_from(
+        [_NGINX_LINE, "a", "b", "-", "x", " ", "\n", "\x01", "\x02", "=1"]
+    ),
+    max_size=6,
+).map("".join)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_texts, max_size=8))
+def test_parse_regex_matches_per_key_extract(spark, texts):
+    """For both ``full_match`` settings, ``parse_regex`` gives what one
+    ``rlike`` plus one ``regexp_extract`` per key gives with the same
+    pattern (``^(?:r)$`` anchored, ``r`` not), except that a captured
+    ``\\x01`` byte fails the row."""
+    from pyspark.sql import functions as F
+
+    from loongcollector_spark.operators.parse import parse_regex
+
+    rows = list(enumerate(_EDGE_TEXTS + texts))
+    df = spark.createDataFrame(rows, "id int, text string")
+    got = want = df
+    names = []
+    for r, regex in enumerate(_REGEXES):
+        n = re.compile(regex).groups
+        for full_match in (True, False):
+            keys = [f"r{r}{full_match:d}g{i}" for i in range(1, n + 1)]
+            names += keys
+            got = parse_regex(got, "text", regex, keys, full_match=full_match)
+            search = f"^(?:{regex})$" if full_match else regex
+            groups = [F.regexp_extract("text", search, i) for i in range(1, n + 1)]
+            ok = F.rlike("text", F.lit(search)) & ~F.exists(
+                F.array(*groups), lambda g: F.contains(g, F.lit("\x01"))
+            )
+            want = want.withColumns({k: F.when(ok, g) for k, g in zip(keys, groups)})
+    got_rows = sorted(got.select("id", *names).collect())
+    want_rows = sorted(want.select("id", *names).collect())
+    assert got_rows == want_rows, [
+        (rows[g.id][1], g, w) for g, w in zip(got_rows, want_rows) if g != w
+    ]

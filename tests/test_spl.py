@@ -7,6 +7,7 @@ SplUnittest.cpp, plus the docs example
 """
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -339,6 +340,24 @@ def test_parse_regexp_mixed_named_unnamed_groups(spark):
         df, r"* | parse-regexp content, '(?<=x )(?P<word>[a-z]+)'"
     ).collect()
     assert out2[0].word == "abc"
+
+
+def test_parse_regexp_matches_first_search_hit(spark):
+    """Every key comes from the first match anywhere in the text, as
+    Python's re.search finds it: a group that took no part reads '',
+    ``.`` does not cross a newline, and a text led by the \\x02
+    sentinel byte of the one-replace kernel parses by the pattern
+    alone."""
+    pat = r"k=(\d)?(.)?"
+    texts = ["k=1", "k=", "a\nk=2 k=3", "k=\nx", "\x02k=4", "\x02zz", "none", None]
+    df = spark.createDataFrame([(t,) for t in texts], "content string")
+    out = compile_spl(df, f"* | parse-regexp content, '{pat}' as d, c")
+    got = {r.content: (r.d, r.c) for r in out.collect()}
+    want = {}
+    for t in texts:
+        m = re.search(pat, t) if t is not None else None
+        want[t] = (m.group(1) or "", m.group(2) or "") if m else (None, None)
+    assert got == want
 
 
 def test_parse_regexp_too_many_as_keys_is_compile_error(spark):
