@@ -3,7 +3,7 @@
 ``entry(spark)`` runs the flagship parse→enrich→route→aggregate
 pipeline on sf0.001; ``queries()`` / ``oracle_sql()`` expose each
 implemented operator from SURVEY.md §2 with its DuckDB oracle (see
-loongcollector_spark/queries.py).
+the loongcollector_spark/queries package).
 """
 
 from __future__ import annotations
@@ -71,5 +71,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL per query (omitted ⇒ rows-only check)."""
+    """DuckDB-runnable oracle SQL per query."""
     return dict(ORACLES)

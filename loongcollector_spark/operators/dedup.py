@@ -520,11 +520,6 @@ def simhash(
     ``bits`` conditional-sum aggregates codegen with map-side partial
     aggregation, one shuffle on *id_col* carrying ~8·bits B/doc.
 
-    (An earlier per-row expression built on ``aggregate``/``zip_with``
-    /``transform`` ran INTERPRETED — the measured 20-60× HOF penalty
-    documented in NOTES.md — kept as ``_simhash_hof`` for the
-    agreement test only.)
-
     Returns one row per *id_col*: (id_col, dest). Near-dup detection =
     hamming distance on the fingerprint (:func:`hamming64`).
 
@@ -554,30 +549,6 @@ def simhash(
     return wide.select(
         F.col(id_col), _sim_fingerprint(counts, F.col("__n"), bits).alias(dest)
     )
-
-
-def _simhash_hof(
-    df: DataFrame, text_col: str = "text", dest: str = "simhash", bits: int = 64
-) -> DataFrame:
-    """Historical per-row HOF implementation (interpreted
-    ``aggregate``/``zip_with`` — slow; see :func:`simhash`). Retained
-    only as the independent semantics twin for the agreement test."""
-    toks = F.array_distinct(F.split(_norm_text(F.col(text_col)), " "))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    zero = F.array_repeat(F.lit(0), bits)
-    bit_idx = F.sequence(F.lit(0), F.lit(bits - 1))
-    counts = F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(bit_idx, lambda b: F.getbit(h, b).cast("int")),
-            lambda a, v: a + v,
-        ),
-    )
-    n = F.size(hashes)
-    counts_idx = [counts.getItem(b) for b in range(bits)]
-    return df.withColumn(dest, _sim_fingerprint(counts_idx, n, bits))
 
 
 def hamming64(a, b):

@@ -38,7 +38,7 @@ that). The trade-off: a filter that
 follows the parse no longer moves beneath it even when it reads only
 source columns, so such a filter runs after the Python parse rather
 than before it. Filter on source columns before parsing
-(``q_parse_json`` and ``q_grok`` in ``queries.py`` do).
+(``q_parse_json`` and ``q_grok`` in ``queries/processors.py`` do).
 
 Build rule: a processor adds or replaces its columns with ONE
 ``withColumns`` (plus at most one ``drop`` of its temporaries and the
@@ -171,24 +171,24 @@ def _match_groups(
     starts with the ``\\x02`` sentinel. A line that already started
     with it is ambiguous, and only such lines run the pattern a second
     time, as the ``RLIKE`` behind the short-circuiting ``OR``.
-    ``full_match`` anchors *regex* (``^(?:regex)$``); otherwise the
-    first match anywhere counts (Go ``FindStringSubmatch``, Java
-    ``find``). The parts and the flag equal ``regexp_extract`` and
-    ``rlike`` with that pattern; a group that took no part gives ``''``.
+    ``full_match`` anchors *regex* (``^(?:regex)\\z``: ``\\z`` is the
+    end of the text, as Go's ``$`` is, where Java's ``$`` also matches
+    before a final line terminator); otherwise the first match anywhere
+    counts (Go ``FindStringSubmatch``, Java ``find``). The parts and
+    the flag equal ``regexp_extract`` and ``rlike`` with that pattern;
+    a group that took no part gives ``''``.
 
     Wrapping *regex* in a non-capturing group keeps its group numbering
     and is safe for patterns already carrying ``^``/``$`` (including an
     escaped ``\\$``: never strip characters off user regexes). The
     wrapper's own ``.*`` runs are DOTALL inside ``(?s:...)``, so the
-    flag does not leak into *regex*, and they take up what a ``$`` that
-    matched before a final line terminator leaves.
+    flag does not leak into *regex*.
 
     The expressions are ``F.expr`` text; the patterns reach it as
     literal columns, which the optimizer folds back into the calls.
     """
     if full_match:
-        search = f"^(?:{regex})$"
-        anchored = f"{search}(?s:.*)"
+        search = anchored = f"^(?:{regex})\\z"
     else:
         search = regex
         anchored = f"^(?s:.*?)(?:{regex})(?s:.*)$"
@@ -707,35 +707,6 @@ def split_log_regex(
     # sort here would cost a full exchange at scale; impose order
     # downstream (stable_order) where a consumer needs it
     return merged.select(*carry, dest)
-
-
-def _split_log_regex_hof(
-    df: DataFrame,
-    source_key: str,
-    start_pattern: str,
-    dest_key: str | None = None,
-) -> DataFrame:
-    """Interpreted ``F.aggregate``-fold twin of :func:`split_log_regex`
-    — kept ONLY as the semantic reference for the agreement test
-    (tests/test_parse2_sinks.py); do not use in data paths."""
-    dest = dest_key or source_key
-    lines = F.split(F.col(source_key), "\n")
-    blocks = F.aggregate(
-        lines,
-        F.array().cast("array<string>"),
-        lambda acc, line: F.when(
-            (F.size(acc) == 0) | line.rlike(start_pattern),
-            F.concat(acc, F.array(line)),
-        ).otherwise(
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(
-                    F.concat(F.element_at(acc, -1), F.lit("\n"), line)
-                ),
-            )
-        ),
-    )
-    return df.withColumn(dest, F.explode(blocks))
 
 
 def parse_apsara(

@@ -39,8 +39,9 @@ __all__ = [
 
 def _anchor(pattern: str) -> str:
     """Full-match anchoring (aggregator_router.go:99 uses anchored
-    regex semantics: the whole value must match)."""
-    return f"^(?:{pattern})$"
+    regex semantics: the whole value must match). ``\\z``, not ``$``:
+    Java's ``$`` also matches before a final line terminator."""
+    return f"^(?:{pattern})\\z"
 
 
 @dataclass

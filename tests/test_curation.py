@@ -294,6 +294,8 @@ def test_simhash_codegen_agrees_with_hof(spark):
     """The explode→conditional-sum rewrite must reproduce the original
     per-row HOF expression bit-for-bit (same tokens, same xxhash64,
     same majority rule, same sign-bit handling)."""
+    from hof_reference import simhash_hof
+
     rows = [
         (1, "spark makes distributed data processing simple and fast today"),
         (2, "Mixed CASE, punctuation!! and   whitespace\tnoise 123"),
@@ -305,7 +307,7 @@ def test_simhash_codegen_agrees_with_hof(spark):
     new = {r.doc_id: r.simhash for r in dedup.simhash(df).collect()}
     old = {
         r.doc_id: r.simhash
-        for r in dedup._simhash_hof(df).select("doc_id", "simhash").collect()
+        for r in simhash_hof(df).select("doc_id", "simhash").collect()
     }
     assert new == old
 

@@ -517,9 +517,10 @@ def test_cloud_meta_tags(spark):
 
 
 def test_encrypt_golden_matches_independent_aes():
-    """The pinned ENCRYPT_GOLDEN ciphertexts (queries.py — the driver
-    oracle literals) regenerate from an INDEPENDENT AES implementation
-    (pyca/cryptography), so the golden is not Spark-self-referential."""
+    """The pinned ENCRYPT_GOLDEN ciphertexts (queries/processors.py —
+    the driver oracle literals) regenerate from an INDEPENDENT AES
+    implementation (pyca/cryptography), so the golden is not
+    Spark-self-referential."""
     pytest.importorskip("cryptography")
     from cryptography.hazmat.primitives import padding
     from cryptography.hazmat.primitives.ciphers import (

@@ -107,7 +107,7 @@ def _encode_kv(field, key, value_field, value):
 
 
 def _encode_golden_traces_payload():
-    """Wire-encode the exact content of queries._OTEL_GOLDEN_PAYLOAD
+    """Wire-encode the exact content of queries.wire._OTEL_GOLDEN_PAYLOAD
     (TracesData: trace.proto field numbers)."""
     import struct
 
@@ -159,7 +159,7 @@ def test_otel_protobuf_matches_json_golden(spark):
     rows byte-identical to the JSON golden (VERDICT r2 item 5). The
     OTLP 'int' attribute in the protobuf payload exercises the
     intValue branch; 'kind'/'status' arrive as numeric enums."""
-    from loongcollector_spark.queries import _OTEL_GOLDEN_PAYLOAD
+    from loongcollector_spark.queries.wire import _OTEL_GOLDEN_PAYLOAD
 
     wire = _encode_golden_traces_payload()
     cols = [

@@ -95,6 +95,20 @@ def test_regex_unanchored_dot_stays_on_one_line(spark):
     assert {r.text: r.v for r in out.collect()} == {"a\nb a-b": "a-b", "a\nb": None}
 
 
+def test_regex_full_match_rejects_a_final_line_terminator(spark):
+    """``full_match`` ends at the end of the text, as Go's ``$`` and the
+    C++ whole-string match do (Java's ``$`` also matches before a final
+    ``\\n`` or ``\\r\\n``); unanchored, the terminator is just more text."""
+    texts = ["a-b", "a-b\n", "a-b\r\n"]
+    df = spark.createDataFrame([(t,) for t in texts], ["text"])
+    full = parse_regex(df, "text", r"(a.b)", ["v"], full_match=True)
+    part = parse_regex(df, "text", r"(a.b)", ["v"], full_match=False)
+    assert {r.text: r.v for r in full.collect()} == {
+        "a-b": "a-b", "a-b\n": None, "a-b\r\n": None
+    }
+    assert {r.text: r.v for r in part.collect()} == dict.fromkeys(texts, "a-b")
+
+
 def test_grok_kv_dialect(tx):
     out = parse_grok(
         tx.filter(F.col("text").startswith("level=")),

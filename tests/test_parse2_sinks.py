@@ -51,7 +51,7 @@ def test_split_log_regex_leading_continuation(spark):
 
 
 def test_split_log_regex_agrees_with_hof_twin(spark):
-    from loongcollector_spark.operators.parse import _split_log_regex_hof
+    from hof_reference import split_log_regex_hof
 
     blobs = [
         ("b0", "ERR a\n x\nERR b"),
@@ -67,7 +67,7 @@ def test_split_log_regex_agrees_with_hof_twin(spark):
     )
     slow = sorted(
         (r.bid, r.text)
-        for r in _split_log_regex_hof(df, "text", r"^ERR ").collect()
+        for r in split_log_regex_hof(df, "text", r"^ERR ").collect()
     )
     assert fast == slow
 

@@ -303,7 +303,7 @@ _texts = st.lists(
 def test_parse_regex_matches_per_key_extract(spark, texts):
     """For both ``full_match`` settings, ``parse_regex`` gives what one
     ``rlike`` plus one ``regexp_extract`` per key gives with the same
-    pattern (``^(?:r)$`` anchored, ``r`` not), except that a captured
+    pattern (``^(?:r)\\z`` anchored, ``r`` not), except that a captured
     ``\\x01`` byte fails the row."""
     from pyspark.sql import functions as F
 
@@ -319,7 +319,7 @@ def test_parse_regex_matches_per_key_extract(spark, texts):
             keys = [f"r{r}{full_match:d}g{i}" for i in range(1, n + 1)]
             names += keys
             got = parse_regex(got, "text", regex, keys, full_match=full_match)
-            search = f"^(?:{regex})$" if full_match else regex
+            search = f"^(?:{regex})\\z" if full_match else regex
             groups = [F.regexp_extract("text", search, i) for i in range(1, n + 1)]
             ok = F.rlike("text", F.lit(search)) & ~F.exists(
                 F.array(*groups), lambda g: F.contains(g, F.lit("\x01"))

@@ -1,51 +1,32 @@
-"""Run every QUERIES entry against its DuckDB ORACLE — mimics the
-driver's CORRECTNESS gate (row count + sorted-column value multiset)."""
+"""Run every registry query against its DuckDB oracle — mimics the
+driver's CORRECTNESS gate (row count + sorted-column value multiset) —
+and pin the registry's own contract."""
 
-import duckdb
 import pytest
+from oracle_check import assert_matches_oracle
 
-from loongcollector_spark.queries import ORACLES, QUERIES
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return round(v, 9)
-    return v
-
-
-def _rows_to_multiset(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    # repr-keyed sort is total even with NULLs / mixed columns
-    return sorted(
-        (tuple(_norm(r[i]) for i in idx) for r in rows), key=repr
-    )
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
+from loongcollector_spark.queries import ORACLES, QUERIES, REGISTRY
+from loongcollector_spark.queries.registry import query
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, sf_dir, duck, name):
-    if name not in ORACLES:
-        df = QUERIES[name](spark, sf_dir)
-        assert df.count() >= 0  # rows-only check (non-SQL-expressible)
-        return
-    sdf = QUERIES[name](spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(ORACLES[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    assert sorted(scols) == sorted(dcols), f"{name}: column sets differ"
-    assert len(srows) == len(drows), f"{name}: row count {len(srows)} != {len(drows)}"
-    assert _rows_to_multiset(scols, srows) == _rows_to_multiset(dcols, drows), (
-        f"{name}: value mismatch"
-    )
+def test_query_matches_oracle(spark, sf_dir, name):
+    assert_matches_oracle(spark, sf_dir, name)
+
+
+def test_second_registration_of_a_name_raises():
+    def q_parse_nginx(spark, sf_dir):
+        raise AssertionError("never registered")
+
+    with pytest.raises(ValueError, match="'parse_nginx' registered twice"):
+        query("events", oracle="SELECT 1")(q_parse_nginx)
+    assert REGISTRY["parse_nginx"].fn is not q_parse_nginx
+
+
+def test_table_outside_the_fixture_raises():
+    with pytest.raises(ValueError, match="lineitem"):
+        query("events", "lineitem", oracle="SELECT 1")
+
+
+def test_oracles_follow_the_query_order():
+    assert list(ORACLES) == list(QUERIES) == list(REGISTRY)

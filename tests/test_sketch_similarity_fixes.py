@@ -96,32 +96,21 @@ def test_sampler_oracles_hash_null_ids_as_empty(spark, sf_dir, tmp_path, name):
     must coalesce too — a bare md5(NULL) put the row in 'val' and
     dropped it from the score sample."""
     import duckdb
-
-    from loongcollector_spark.queries import ORACLES, QUERIES
+    from oracle_check import assert_matches_oracle
 
     src = f"{sf_dir}/documents.parquet"
-    con = duckdb.connect()
     # 20 fixture rows + one NULL-id row with n_chars = 6 (score 6/7)
-    con.execute(
-        f"""COPY (
-              (SELECT * FROM '{src}' ORDER BY doc_id LIMIT 20)
-              UNION ALL
-              (SELECT NULL::BIGINT, text, lang, source, 6::BIGINT
-               FROM '{src}' ORDER BY doc_id LIMIT 1)
-            ) TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
-    )
-    res = con.execute(ORACLES[name])
-    cols = [d[0] for d in res.description]
-    want = sorted(res.fetchall(), key=repr)
-    got = sorted(
-        map(tuple, QUERIES[name](spark, str(tmp_path)).select(cols).collect()),
-        key=repr,
-    )
-    assert any(r[0] is None for r in got)  # the NULL-id row is sampled
-    assert got == want
+    with duckdb.connect() as con:
+        con.execute(
+            f"""COPY (
+                  (SELECT * FROM '{src}' ORDER BY doc_id LIMIT 20)
+                  UNION ALL
+                  (SELECT NULL::BIGINT, text, lang, source, 6::BIGINT
+                   FROM '{src}' ORDER BY doc_id LIMIT 1)
+                ) TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)"""
+        )
+    got = assert_matches_oracle(spark, str(tmp_path), name)
+    assert any(r.doc_id is None for r in got)  # the NULL-id row is sampled
 
 
 def test_score_sample_split_assign_defaults_decorrelated(spark):
