@@ -240,7 +240,6 @@ def main(argv: list[str] | None = None) -> None:
             df,
             args.output,
             metrics=metrics,
-            spark=spark,
             metrics_path=args.metrics,
             mode="overwrite",
         )

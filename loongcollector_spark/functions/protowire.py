@@ -25,11 +25,8 @@ __all__ = [
     "read_varint",
     "iter_fields",
     "zigzag32",
-    "zigzag64",
     "u64_to_i64",
     "read_double",
-    "read_fixed64",
-    "read_fixed32",
     "write_varint",
     "write_tag",
     "write_len_delimited",
@@ -97,10 +94,6 @@ def zigzag32(raw: int) -> int:
     return (raw >> 1) ^ -(raw & 1)
 
 
-def zigzag64(raw: int) -> int:
-    return (raw >> 1) ^ -(raw & 1)
-
-
 def u64_to_i64(raw: int) -> int:
     """Reinterpret an unsigned 64-bit value as two's-complement."""
     return raw - (1 << 64) if raw >= (1 << 63) else raw
@@ -108,14 +101,6 @@ def u64_to_i64(raw: int) -> int:
 
 def read_double(raw_fixed64: int) -> float:
     return struct.unpack("<d", raw_fixed64.to_bytes(8, "little"))[0]
-
-
-def read_fixed64(raw: int) -> int:
-    return raw
-
-
-def read_fixed32(raw: int) -> int:
-    return raw
 
 
 # ------------------------------------------------------------------ writing

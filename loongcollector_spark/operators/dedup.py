@@ -41,7 +41,6 @@ __all__ = [
     "segment_dedup",
     "shingles",
     "minhash_signatures",
-    "lsh_candidate_pairs",
     "minhash_dedup_pairs",
     "simhash",
     "ngram_jaccard_pairs",
@@ -360,55 +359,6 @@ def _minhash_wide_from_text(
     """
     rows = _shingle_rows(df, text_col, k, id_col)
     return _min_aggs(rows, num_perm, id_col, hash_mode)
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "minhash",
-    bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """LSH banding: two docs are candidates iff some band of their
-    signatures is identical.
-
-    Plan shape: posexplode bands → bucket = hash(band slice) →
-    self-join on (band, bucket). The shuffle key is the bucket, so
-    near-duplicate clusters co-locate; all-pairs never materializes.
-    Returns distinct (a, b) with a < b.
-    """
-    if bands < 1 or rows_per_band < 1:
-        raise ValueError("lsh_candidate_pairs: bands and rows_per_band must be >= 1")
-    band_idx = F.posexplode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                )
-            ),
-        )
-    )
-    buckets = df.select(F.col(id_col), band_idx.alias("band", "bucket"))
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("a"),
-            F.col(f"b.{id_col}").alias("b"),
-        )
-        .distinct()
-    )
 
 
 def minhash_dedup_pairs(

@@ -16,14 +16,16 @@ Capability parity with the reference's enrich plugins (new code):
 * drop / pick     — plugins/processor/drop, plugins/processor/pickkey
 
 Everything here is pure ``pyspark.sql.functions`` — JVM-side,
-whole-stage codegen, zero Python in the data path. Dictionary lookups
-read their small dimension once, at plan build, into a literal map in
-the plan (no join, no shuffle or broadcast exchange).
+whole-stage codegen, zero Python in the data path. A dictionary lookup
+reads its small dimension once, when :func:`dictionary` builds it (a
+``Pipeline`` does that at construction), into a literal map in the plan
+(no join, no shuffle or broadcast exchange).
 """
 
 from __future__ import annotations
 
 import json
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,6 +37,7 @@ __all__ = [
     "add_fields",
     "add_tags",
     "dict_map",
+    "dictionary",
     "rename",
     "string_replace",
     "desensitize",
@@ -85,7 +88,14 @@ _BUCKET = 8
 
 
 def dict_map(
-    df: DataFrame,
+    df: DataFrame, dim: DataFrame, source_key: str, dest_key: str, **opts
+) -> DataFrame:
+    """Dictionary lookup of *source_key* into *dest_key*:
+    ``dictionary(dim, source_key, dest_key, **opts)(df)``."""
+    return dictionary(dim, source_key, dest_key, **opts)(df)
+
+
+def dictionary(
     dim: DataFrame,
     source_key: str,
     dest_key: str,
@@ -96,8 +106,9 @@ def dict_map(
     handle_missing: bool = False,
     missing: str = "Unknown",
     max_dict_size: int | None = None,
-) -> DataFrame:
-    """Dictionary lookup against a literal map in the plan
+) -> Callable[[DataFrame], DataFrame]:
+    """Read *dim* into a dictionary and return the transform that looks
+    *source_key* up in it as a literal map in the plan
     (processor_dict_map.go:96-135 load, :148-187 lookup).
 
     * ``mode='overwrite'`` — mapped value replaces any existing
@@ -106,25 +117,26 @@ def dict_map(
     * ``handle_missing`` — unmatched source values get *missing*
       (processor_dict_map.go:175-186); otherwise left NULL.
 
-    Like the reference's Init load, the dictionary is read once, when
-    the plan is built: one narrow job collects ``(key, value,
-    hash(key))`` of *dim*'s non-NULL keys (with *max_dict_size*, the
-    rows of the smallest keys, by ``ORDER BY key LIMIT``). Identical
-    rows collapse; a key with two different values raises
-    ``ValueError``. The entries travel as one JSON ``F.lit`` read by
+    Like the reference's Init load, the dictionary is read once, here:
+    one narrow job collects ``(key, value, hash(key))`` of *dim*'s
+    non-NULL keys (with *max_dict_size*, the rows of the smallest keys,
+    by ``ORDER BY key LIMIT``). Identical rows collapse; a key with two
+    different values raises ``ValueError``. The returned transform
+    starts no job: the entries travel as one JSON ``F.lit`` read by
     ``from_json`` with the dimension's types, which Catalyst folds to
     a literal map: no join, no exchange, no value spliced into SQL
     text. A literal map is a linear scan per row, so above 8 entries
     the dictionary is split into ``ceil(n/8)`` maps, picked per row by
     ``pmod(hash(source), n_maps)`` (Spark's hash on both sides). Keys
     must be string, boolean or integral, values one of those or
-    float/double; other types raise ``ValueError`` at plan build. A
-    NULL source or dimension key never matches.
+    float/double; other types raise ``ValueError`` here. A NULL source
+    or dimension key never matches.
 
-    The dictionary is a snapshot: a streaming query over the result
-    keeps the one taken when its plan was built, at query start, and a
-    ``foreachBatch`` pipeline, which builds its plan per micro-batch,
-    reads it per micro-batch.
+    The dictionary is a snapshot taken when this is called: a
+    ``Pipeline`` takes it when it is built, and every run, batch or
+    ``foreachBatch`` micro-batch, keeps it; reloading a dimension means
+    building a new ``Pipeline``. A streaming query over the result
+    likewise keeps the one taken before the query started.
     """
     if mode not in _DICT_MAP_MODES:
         raise ValueError(f"dict_map mode must be one of {_DICT_MAP_MODES}, got {mode!r}")
@@ -139,20 +151,25 @@ def dict_map(
             f"{val_t.simpleString()} dictionary in a literal"
         )
     rows = _smallest_keys(sel, int(max_dict_size)) if max_dict_size else sel.collect()
+    entries = _entries(rows)
     key = f"CAST({sqltext.col_ref(source_key)} AS {key_t.simpleString()})"
-    mapped = _lookup(_entries(rows), key_t, val_t, key)
-    if handle_missing:
-        mapped = F.coalesce(mapped, F.lit(missing))
-    if dest_key in df.columns:
-        if mode == "fill":
-            # existing non-null dest wins
-            mapped = F.coalesce(F.col(dest_key), mapped)
-        elif not handle_missing:
-            # overwrite-on-HIT only: a dictionary miss leaves the
-            # event unchanged (processor_dict_map.go:175-186), it does
-            # not null out the existing value
-            mapped = F.coalesce(mapped, F.col(dest_key))
-    return df.withColumn(dest_key, mapped)
+
+    def lookup(df: DataFrame) -> DataFrame:
+        mapped = _lookup(entries, key_t, val_t, key)
+        if handle_missing:
+            mapped = F.coalesce(mapped, F.lit(missing))
+        if dest_key in df.columns:
+            if mode == "fill":
+                # existing non-null dest wins
+                mapped = F.coalesce(F.col(dest_key), mapped)
+            elif not handle_missing:
+                # overwrite-on-HIT only: a dictionary miss leaves the
+                # event unchanged (processor_dict_map.go:175-186), it
+                # does not null out the existing value
+                mapped = F.coalesce(mapped, F.col(dest_key))
+        return df.withColumn(dest_key, mapped)
+
+    return lookup
 
 
 def _entries(rows: list) -> dict:

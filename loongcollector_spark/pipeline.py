@@ -19,7 +19,8 @@ which is its logical plan::
 
 A registry maps processor type names to DataFrame transforms —
 mirroring the reference's global plugin factory maps
-(plugins/processor/regex/regex.go:131-139, C++ PluginRegistry). The
+(plugins/processor/regex/regex.go:131-139, C++ PluginRegistry); a
+custom processor is registered by adding it to ``PROCESSORS``. The
 assembled object is ONE Catalyst logical plan: Spark fuses the whole
 processor chain into as few stages as the shuffles require, which is
 the performance story the reference builds by hand with thread pools
@@ -28,16 +29,20 @@ and queues (SURVEY.md §3).
 
 from __future__ import annotations
 
-from typing import Any, Callable
+import time
+from functools import partial
+from typing import Any, Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .operators import aggregate as agg_ops
 from .operators import enrich, filter as flt, geo, otel, parse, route as rt
+from .plans.metrics import MetricsCollector
 from .spl import compile_spl as _spl_compile
 
 ProcessorFn = Callable[..., DataFrame]
+Step = Callable[[DataFrame], DataFrame]
 
 # name → callable(df, **params). Mirrors pipeline.Processors registry.
 PROCESSORS: dict[str, ProcessorFn] = {
@@ -120,105 +125,98 @@ def _register_curation() -> None:
 _register_curation()
 
 
-def register_processor(name: str, fn: ProcessorFn) -> None:
-    """Extension point (the reference's plugin registration)."""
-    PROCESSORS[name] = fn
+def _sessionize_counts(
+    df: DataFrame, key_cols: Sequence[str] = ("conv_id",), **params
+) -> DataFrame:
+    keys = list(key_cols)
+    s = agg_ops.sessionize(df, keys, **params)
+    return s.groupBy(*keys, "session_id").agg(F.count("*").alias("n_events"))
+
+
+# name → callable(routed, **params): the spec's ``aggregates`` types
+_AGGREGATES: dict[str, ProcessorFn] = {
+    "group_count": agg_ops.group_count,
+    "per_conversation_stats": agg_ops.per_conversation_stats,
+    "sessionize_counts": _sessionize_counts,
+}
 
 
 class Pipeline:
-    """Assembled pipeline: config → one DataFrame DAG."""
+    """A spec bound once into DataFrame → DataFrame steps, the way the
+    reference builds its processor chain in ``CollectionPipeline::Init``
+    and only runs it in ``Process``.
+
+    Construction checks the whole spec and raises before any run: an
+    unknown processor or aggregate type (``KeyError``), a ``dict_map``
+    or ``geoip`` step whose ``dim`` is not among *dims*, a duplicate
+    aggregate name, and ``dict_map``'s mode, type and conflicting-key
+    checks (``ValueError``). It also reads each ``dict_map`` dimension,
+    once (:func:`enrich.dictionary`): the dictionary is a snapshot taken
+    when the ``Pipeline`` is built, so reloading a dimension means
+    building a new ``Pipeline``. The spec is read only here, and not
+    modified.
+
+    :meth:`run` only applies the bound steps, processors then router,
+    and starts no Spark job of its own; each step still builds its
+    expressions against the input's columns.
+    """
 
     def __init__(
         self,
         spec: dict[str, Any],
         dims: dict[str, DataFrame] | None = None,
     ):
-        self.spec = spec
-        self.dims = dims or {}
-
-    def apply_processors(self, df: DataFrame) -> DataFrame:
-        for p in self.spec.get("processors", []):
-            p = dict(p)
-            typ = p.pop("type")
-            if typ == "dict_map":
-                df = enrich.dict_map(df, self._dim(typ, p), **p)
-            elif typ == "geoip":
-                # dim-requiring like dict_map: the geo range table is a
-                # named dim (processor_geoip's mmdb analog, geo.py)
-                dim = self._dim(typ, p)
-                df = geo.geoip_enrich(df, p.pop("source_key"), dim, **p)
-            else:
-                df = PROCESSORS[typ](df, **p)
-        return df
-
-    def _dim(self, typ: str, step: dict[str, Any]) -> DataFrame:
-        """Pop the dimension *step* names from the loaded ``dims``."""
-        name = step.pop("dim", None)
-        if name not in self.dims:
-            raise ValueError(
-                f"{typ} step names dimension {name!r}, but the loaded "
-                f"dimensions are {sorted(self.dims)}"
+        dims = dims or {}
+        self._steps: list[Step] = [
+            _bind(dict(p), dims) for p in spec.get("processors", [])
+        ]
+        r = spec.get("router")
+        self._routed = bool(r)
+        if r:
+            cfg = rt.RouterConfig(
+                source_key=r["source_key"],
+                rules=[rt.RouterRule(x["regex"], x["sink"]) for x in r.get("rules", [])],
+                default_sink=r.get("default_sink", "sink_default"),
+                drop_dismatch=r.get("drop_dismatch", False),
+                unconditional_sinks=r.get("unconditional_sinks", []),
+                tag_copy_sinks=[tuple(t) for t in r.get("tag_copy_sinks", [])],
             )
-        return self.dims[name]
-
-    def route(self, df: DataFrame) -> DataFrame:
-        r = self.spec.get("router")
-        if not r:
-            return df
-        cfg = rt.RouterConfig(
-            source_key=r["source_key"],
-            rules=[rt.RouterRule(x["regex"], x["sink"]) for x in r.get("rules", [])],
-            default_sink=r.get("default_sink", "sink_default"),
-            drop_dismatch=r.get("drop_dismatch", False),
-            unconditional_sinks=r.get("unconditional_sinks", []),
-            tag_copy_sinks=[tuple(t) for t in r.get("tag_copy_sinks", [])],
-        )
-        return rt.route(df, cfg)
-
-    def run(self, df: DataFrame) -> DataFrame:
-        """processors → router; returns the routed DataFrame (one
-        logical plan, no actions)."""
-        return self.route(self.apply_processors(df))
-
-    def aggregates(self, routed: DataFrame) -> dict[str, DataFrame]:
-        """Build the spec's ``aggregates`` section over the routed
-        output: ``[{"name": ..., "type": "group_count"|"per_conversation_stats"|
-        "sessionize_counts", ...params}]`` → named aggregate DataFrames
-        (the derived verification aggregates of SURVEY.md §2.6)."""
-        out: dict[str, DataFrame] = {}
-        for spec in self.spec.get("aggregates", []):
-            spec = dict(spec)
-            typ = spec.pop("type")
-            name = spec.pop("name", typ)
-            if name in out:
+            self._steps.append(partial(rt.route, cfg=cfg))
+        self._aggregates: dict[str, Step] = {}
+        for a in spec.get("aggregates", []):
+            a = dict(a)
+            typ = a.pop("type")
+            name = a.pop("name", typ)
+            if name in self._aggregates:
                 # two unnamed entries of one type would silently
                 # overwrite each other (name defaults to the type)
                 raise ValueError(
                     f"duplicate aggregate name {name!r}; give each "
                     "same-type entry an explicit 'name'"
                 )
-            if typ == "group_count":
-                out[name] = agg_ops.group_count(routed, **spec)
-            elif typ == "per_conversation_stats":
-                out[name] = agg_ops.per_conversation_stats(routed, **spec)
-            elif typ == "sessionize_counts":
-                from pyspark.sql import functions as _F
-
-                keys = spec.pop("key_cols", ["conv_id"])
-                s = agg_ops.sessionize(routed, keys, **spec)
-                out[name] = s.groupBy(*keys, "session_id").agg(
-                    _F.count("*").alias("n_events")
-                )
-            else:
+            if typ not in _AGGREGATES:
                 raise KeyError(f"unknown aggregate type {typ!r}")
-        return out
+            self._aggregates[name] = partial(_AGGREGATES[typ], **a)
+
+    def run(self, df: DataFrame) -> DataFrame:
+        """processors → router; returns the routed DataFrame (one
+        logical plan, no actions)."""
+        for step in self._steps:
+            df = step(df)
+        return df
+
+    def aggregates(self, routed: DataFrame) -> dict[str, DataFrame]:
+        """Build the spec's ``aggregates`` section over the routed
+        output: ``[{"name": ..., "type": "group_count"|"per_conversation_stats"|
+        "sessionize_counts", ...params}]`` → named aggregate DataFrames
+        (the derived verification aggregates of SURVEY.md §2.6)."""
+        return {name: build(routed) for name, build in self._aggregates.items()}
 
     def run_and_write(
         self,
         df: DataFrame,
         base_path: str,
-        metrics=None,
-        spark: SparkSession | None = None,
+        metrics: MetricsCollector,
         metrics_path: str | None = None,
         mode: str = "append",
     ) -> DataFrame:
@@ -227,34 +225,50 @@ class Pipeline:
         single write job (observe() piggybacks aggregates on the
         action), not by extra count() jobs that would re-execute the
         whole pipeline (3× total compute at scale)."""
-        import time as _time
-
-        from pyspark.sql import Observation
-
-        routed_probe = self.spec.get("router")
-        if routed_probe is None:
+        if not self._routed:
             raise ValueError(
                 "run_and_write needs a 'router' section in the spec "
                 "(fanout_write partitions by the 'sink' column the "
                 "router adds); use run() + your own writer for "
                 "unrouted pipelines"
             )
-        if metrics is not None:
-            obs_in = Observation()
-            obs_out = Observation()
-            df = df.observe(obs_in, F.count(F.lit(1)).alias("n"))
-            routed = self.run(df).observe(obs_out, F.count(F.lit(1)).alias("n"))
-            t0 = _time.monotonic()
-            rt.fanout_write(routed, base_path, mode=mode)
-            metrics.add(
-                "pipeline",
-                obs_in.get["n"],
-                obs_out.get["n"],
-                round(_time.monotonic() - t0, 3),
-            )
-            if metrics_path and spark is not None:
-                metrics.write(spark, metrics_path)
-            return routed
-        routed = self.run(df)
+        obs_in = Observation()
+        obs_out = Observation()
+        df = df.observe(obs_in, F.count(F.lit(1)).alias("n"))
+        routed = self.run(df).observe(obs_out, F.count(F.lit(1)).alias("n"))
+        t0 = time.monotonic()
         rt.fanout_write(routed, base_path, mode=mode)
+        metrics.add(
+            "pipeline",
+            obs_in.get["n"],
+            obs_out.get["n"],
+            round(time.monotonic() - t0, 3),
+        )
+        if metrics_path:
+            metrics.write(df.sparkSession, metrics_path)
         return routed
+
+
+def _bind(step: dict[str, Any], dims: dict[str, DataFrame]) -> Step:
+    """The transform of one processor *step* (a copy; consumed)."""
+    typ = step.pop("type")
+    if typ == "dict_map":
+        return enrich.dictionary(_dim(typ, step, dims), **step)
+    if typ == "geoip":
+        # dim-requiring like dict_map: the geo range table is a named
+        # dim (processor_geoip's mmdb analog, geo.py)
+        return partial(geo.geoip_enrich, geo_dim=_dim(typ, step, dims), **step)
+    if typ not in PROCESSORS:
+        raise KeyError(f"unknown processor type {typ!r}")
+    return partial(PROCESSORS[typ], **step)
+
+
+def _dim(typ: str, step: dict[str, Any], dims: dict[str, DataFrame]) -> DataFrame:
+    """Pop the dimension *step* names from the loaded *dims*."""
+    name = step.pop("dim", None)
+    if name not in dims:
+        raise ValueError(
+            f"{typ} step names dimension {name!r}, but the loaded "
+            f"dimensions are {sorted(dims)}"
+        )
+    return dims[name]

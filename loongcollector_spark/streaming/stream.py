@@ -16,7 +16,12 @@ runs the IDENTICAL pipeline spec over ``readStream``:
 Because ``Pipeline.run`` is a pure DataFrame→DataFrame function, the
 exact same spec object drives batch and streaming — the property the
 reference gets from its shared processor interface
-(pkg/pipeline/processor.go:31-39).
+(pkg/pipeline/processor.go:31-39). The ``Pipeline`` is built once,
+before the query starts: its steps are bound and each ``dict_map``
+dictionary is read then, so a micro-batch only applies the steps and
+starts no dimension job. Every batch sees the dictionary snapshot taken
+at construction; reloading a dimension means building a new
+``Pipeline`` and restarting the query.
 """
 
 from __future__ import annotations

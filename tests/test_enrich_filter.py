@@ -191,10 +191,9 @@ def test_pipeline_names_a_missing_dimension(spark, df, typ, step):
     from loongcollector_spark.pipeline import Pipeline
 
     dim = spark.createDataFrame([("user", "human")], ["role", "c"])
-    pipe = Pipeline({"processors": [{"type": typ, **step}]}, {"role_dim": dim})
     requested = repr(step.get("dim"))
     with pytest.raises(ValueError, match=rf"{typ} step names dimension {requested}.*\['role_dim'\]"):
-        pipe.run(df)
+        Pipeline({"processors": [{"type": typ, **step}]}, {"role_dim": dim})
 
 
 def test_rename_and_pick_drop(spark, df):
@@ -389,7 +388,7 @@ def test_registry_reaches_all_survey_operators():
 
 def test_spec_driven_curation_stage(spark):
     """A config-driven spec can score + redact documents inline: the
-    curation processors compose through Pipeline.apply_processors the
+    curation processors compose through Pipeline.run the
     same way the log processors do."""
     from loongcollector_spark.pipeline import Pipeline
 
@@ -412,7 +411,7 @@ def test_spec_driven_curation_stage(spark):
             {"type": "fingerprint", "text_col": "text"},
         ]
     }
-    out = {r.doc_id: r for r in Pipeline(spec).apply_processors(df).collect()}
+    out = {r.doc_id: r for r in Pipeline(spec).run(df).collect()}
     assert "<EMAIL>" in out[2].text and "<CC>" in out[2].text
     assert out[1].quality_keep is True and out[2].quality_keep is False
     assert len(out[1].fingerprint) == 32
@@ -593,8 +592,7 @@ def test_example_curation_stage_spec_runs(spark):
         ],
         "doc_id long, text string",
     )
-    pipe = Pipeline(spec)
-    routed = pipe.route(pipe.apply_processors(df))
+    routed = Pipeline(spec).run(df)
     out = {r.doc_id: r for r in routed.collect()}
     assert out[1].sink == "sink_kept"
     assert out[2].sink == "sink_dropped"

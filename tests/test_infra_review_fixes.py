@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from loongcollector_spark.pipeline import Pipeline
+from loongcollector_spark.plans.metrics import MetricsCollector
 
 
 def test_format_string_col_null_field_renders_empty(spark, tmp_path):
@@ -98,4 +99,6 @@ def test_duplicate_aggregate_names_raise(spark):
 def test_run_and_write_without_router_raises_clearly(spark, tmp_path):
     df = spark.createDataFrame([("x",)], "text string")
     with pytest.raises(ValueError, match="router"):
-        Pipeline({"processors": []}).run_and_write(df, str(tmp_path / "o"))
+        Pipeline({"processors": []}).run_and_write(
+            df, str(tmp_path / "o"), MetricsCollector("no-router")
+        )

@@ -333,5 +333,5 @@ def test_spl_processor_in_pipeline_spec(spark):
         ]
     }
     df = spark.createDataFrame([("user",), ("alien",)], ["role"])
-    out = Pipeline(spec).apply_processors(df).collect()
+    out = Pipeline(spec).run(df).collect()
     assert [(r.role_uc, r.env) for r in out] == [("USER", "prod")]

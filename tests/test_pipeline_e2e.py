@@ -2,10 +2,13 @@
 metrics, and checkpoint/resume idempotency (mirrors the reference's
 e2e oracle families count/field/order, test/engine/verify/)."""
 
+import contextlib
+import copy
+
 import pytest
 from pyspark.sql import functions as F
 
-from loongcollector_spark.pipeline import Pipeline
+from loongcollector_spark.pipeline import PROCESSORS, Pipeline
 from loongcollector_spark.plans.checkpoint import run_with_checkpoint
 from loongcollector_spark.plans.metrics import MetricsCollector
 from loongcollector_spark.operators.route import read_sink
@@ -60,7 +63,7 @@ def test_config_pipeline_counts_and_fields(spark, sf_dir, tmp_path, pipe):
     out_dir = str(tmp_path / "sinks")
     met_dir = str(tmp_path / "metrics")
     routed = pipe.run_and_write(
-        tx, out_dir, metrics=metrics, spark=spark, metrics_path=met_dir
+        tx, out_dir, metrics=metrics, metrics_path=met_dir
     )
     # count oracle (verify/count.go analog)
     counts = {r.sink: r["cnt"] for r in
@@ -145,6 +148,65 @@ def test_tag_copy_and_unconditional_sinks(spark, sf_dir):
     assert counts["sink_audit"] == n
     assert counts["sink_code_copy"] == tx.filter(F.col("tool") == "code").count()
     assert counts["sink_a"] + counts["sink_other"] == n
+
+
+@contextlib.contextmanager
+def _jobs_started(spark, group):
+    """Collects the ids of the Spark jobs the block starts."""
+    sc = spark.sparkContext
+    jobs: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setJobGroup(None, None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dict_map_spec_runs_start_no_job(spark, sf_dir, pipe):
+    """The dictionary is read when the Pipeline is built: neither the
+    first run nor a second one starts a Spark job before its action."""
+    tx = load_transcripts(spark, sf_dir)
+    with _jobs_started(spark, "dict-map-runs") as jobs:
+        first, second = pipe.run(tx), pipe.run(tx)
+    assert jobs == []
+    assert first.columns == second.columns
+    assert {r.role_class for r in second.where("role = 'assistant'").collect()} == {"model"}
+
+
+def test_unknown_processor_type_raises_at_construction(spark):
+    with _jobs_started(spark, "unknown-processor-type") as jobs:
+        with pytest.raises(KeyError, match="unknown processor type 'parse_regexx'"):
+            Pipeline({"processors": [{"type": "parse_regexx", "source_key": "text"}]})
+    assert jobs == []
+
+
+def test_pipeline_reads_its_spec_once(spark):
+    """Construction leaves the caller's spec as it was (perfbench builds
+    a Pipeline from the same spec dicts on every run), and the built
+    steps do not read the spec again."""
+    spec = copy.deepcopy(SPEC)
+    dims = {"role_dim": spark.createDataFrame(ROLE_DIM, ["role", "role_class", "priority"])}
+    pipe = Pipeline(spec, dims)
+    assert spec == SPEC
+    spec["processors"].clear()
+    spec["router"]["rules"].clear()
+    df = spark.createDataFrame([("assistant", "x")], "role string, text string")
+    out = pipe.run(df).collect()
+    assert [(r.role_class, r.pipeline, r.sink) for r in out] == [
+        ("model", "e2e-test", "sink_assistant")
+    ]
+
+
+def test_custom_processor_via_registry(spark, monkeypatch):
+    """The plugin-registry extension point: a function put into
+    ``PROCESSORS`` is a processor type a spec can name."""
+    monkeypatch.setitem(
+        PROCESSORS, "shout", lambda df, source_key: df.withColumn(source_key, F.upper(source_key))
+    )
+    df = spark.createDataFrame([("user",), ("tool",)], "role string")
+    spec = {"processors": [{"type": "shout", "source_key": "role"}]}
+    assert [r.role for r in Pipeline(spec).run(df).collect()] == ["USER", "TOOL"]
 
 
 def test_run_pipeline_wire_flushers_roundtrip(spark, sf_dir, tmp_path):

@@ -97,7 +97,7 @@ def test_run_and_write_metrics_single_execution(spark, tmp_path):
         "default_sink": "s2"}}
     m = MetricsCollector("obs-test")
     Pipeline(spec).run_and_write(
-        df, str(tmp_path / "out"), metrics=m, spark=spark,
+        df, str(tmp_path / "out"), metrics=m,
         metrics_path=str(tmp_path / "met"),
     )
     rec = m.records[0]
