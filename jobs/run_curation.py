@@ -55,6 +55,7 @@ def main(argv: list[str] | None = None) -> None:
         stratified_sample,
         token_stats,
     )
+    from loongcollector_spark.plans.metrics import observe_rows
     from loongcollector_spark.session import apply_runtime_confs
     from loongcollector_spark.sources.sinks import read_table
 
@@ -78,10 +79,14 @@ def main(argv: list[str] | None = None) -> None:
             salt=args.salt,
         )
 
+    gated, kept = observe_rows(gated)
     gated.write.mode("overwrite").parquet(args.output)
     if args.stats:
+        # aggregate the written corpus: re-running `gated` would redo
+        # the MinHash + connected-components dedup
         (
-            gated.groupBy("lang")
+            spark.read.parquet(args.output)
+            .groupBy("lang")
             .agg(
                 F.count("*").alias("n_docs"),
                 F.sum("n_ws_tokens").alias("total_tokens"),
@@ -89,9 +94,8 @@ def main(argv: list[str] | None = None) -> None:
             .write.mode("overwrite")
             .parquet(args.stats)
         )
-    n = spark.read.parquet(args.output).count()
     print(json.dumps({
-        "kept_docs": n,
+        "kept_docs": kept.get["n"],
         "wall_sec": round(time.monotonic() - t0, 3),
     }))
 

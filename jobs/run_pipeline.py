@@ -18,8 +18,11 @@ Local smoke (this sandbox)::
         jobs/run_pipeline.py --input ... --output ...
 
 With ``--lineage`` the run is checkpointed per work unit (hash buckets
-of conv_id) and reruns resume idempotently; without it, one fan-out
-write. Per-stage row counts land in the metrics table either way.
+of conv_id) and reruns resume idempotently; without it, every flusher
+writes through ``Pipeline.run_and_write``, which counts rows in and
+rows out during the write. Each run appends ``rows_in``/``rows_out``
+to the metrics table; a lineage rerun with every unit already
+committed reads no input and records ``rows_in = 0``.
 """
 
 from __future__ import annotations
@@ -59,12 +62,12 @@ def main(argv: list[str] | None = None) -> None:
     )
     ap.add_argument(
         "--warm", type=int, default=0,
-        help="blackhole only: unmeasured warm-up executions before "
+        help="not with --lineage: unmeasured warm-up executions before "
         "timing (JIT/codegen steady state)",
     )
     ap.add_argument(
         "--rounds", type=int, default=1,
-        help="blackhole only: measured executions; wall_sec is the "
+        help="not with --lineage: measured executions; wall_sec is the "
         "best (least co-tenant interference on this host)",
     )
     args = ap.parse_args(argv)
@@ -89,10 +92,12 @@ def main(argv: list[str] | None = None) -> None:
 
     from loongcollector_spark.config import load_dims, load_spec
     from loongcollector_spark.operators.aggregate import shard_repartition
-    from loongcollector_spark.operators.route import fanout_write
     from loongcollector_spark.pipeline import Pipeline
-    from loongcollector_spark.plans.checkpoint import run_with_checkpoint
-    from loongcollector_spark.plans.metrics import MetricsCollector
+    from loongcollector_spark.plans.checkpoint import (
+        CheckpointedRun,
+        run_with_checkpoint,
+    )
+    from loongcollector_spark.plans.metrics import MetricsCollector, observe_rows
     from loongcollector_spark.sources.sinks import read_table
     from loongcollector_spark.session import apply_runtime_confs
 
@@ -104,114 +109,12 @@ def main(argv: list[str] | None = None) -> None:
     if args.shards:
         df = shard_repartition(df, ["conv_id"], args.shards)
 
-    t0 = time.monotonic()
     metrics = MetricsCollector(args.job_id)
-    if args.flusher == "blackhole":
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from loongcollector_spark.sources.sinks import write_blackhole
-
-        for _ in range(args.warm):
-            write_blackhole(pipe.run(df))
-        best = None
-        n = 0
-        for _ in range(max(args.rounds, 1)):
-            obs = Observation()
-            out = pipe.run(df).observe(obs, F.count(F.lit(1)).alias("n"))
-            r0 = time.monotonic()
-            write_blackhole(out)
-            dt = time.monotonic() - r0
-            n = obs.get["n"]
-            best = dt if best is None else min(best, dt)
-        wall = best  # the best measured round (steady-state throughput)
-        metrics.add("pipeline", -1, n, round(best, 3))
-        if args.metrics:
-            metrics.write(spark, args.metrics)
-    elif args.flusher in ("sls", "loki", "es", "clickhouse"):
-        # wire-payload flushers: route, then serialize each flusher's
-        # exact sink format (the encode half of the round-trip queries)
-        # and land the payload table under --output. The sink column
-        # rides as SLS topic / Loki label / ES index / ClickHouse doc
-        # field, so a transport layer can fan payloads out per sink.
-        from pyspark.sql import functions as F
-
-        out = pipe.run(df)
-        if "sink" not in out.columns:
-            ap.error(f"--flusher {args.flusher} needs a router stage "
-                     "(no 'sink' column in the pipeline output)")
-        par = spark.sparkContext.defaultParallelism
-        routed = out.repartition(par, "sink")
-        ts_key = "ts" if "ts" in routed.columns else None
-        if args.flusher == "sls":
-            from loongcollector_spark.sources.sls_pb import (
-                serialize_sls_loggroups,
-            )
-
-            payloads = serialize_sls_loggroups(
-                routed, time_key=ts_key, topic_key="sink"
-            )
-        elif args.flusher == "loki":
-            from loongcollector_spark.sources.loki_push import (
-                serialize_loki_push,
-            )
-
-            doc_cols = [c for c in routed.columns if c not in ("sink", "ts")]
-            ns = (
-                (F.unix_micros(F.col(ts_key).cast("timestamp")) * 1000)
-                if ts_key
-                else F.lit(0)
-            )
-            # NB: pandas itertuples renames leading-underscore columns
-            # positionally, so the staging column names must be plain
-            lined = routed.select(
-                F.col("sink"),
-                ns.cast("long").alias("lc_ns"),
-                F.to_json(F.struct(*[F.col(c) for c in doc_cols])).alias(
-                    "lc_line"
-                ),
-            )
-            payloads = serialize_loki_push(
-                lined,
-                line_key="lc_line",
-                time_ns_key="lc_ns",
-                label_keys=["sink"],
-                static_labels={"job": args.job_id},
-            )
-        elif args.flusher == "es":
-            from loongcollector_spark.sources.es_bulk import serialize_es_bulk
-
-            payloads = serialize_es_bulk(routed, index_format="lc-%{sink}")
-        else:  # clickhouse
-            from loongcollector_spark.sources.clickhouse_rb import (
-                serialize_clickhouse_rowbinary,
-            )
-
-            if ts_key:
-                payloads = serialize_clickhouse_rowbinary(routed, ts_col=ts_key)
-            else:
-                # no ts column: synthesize epoch-0 (the loki branch's
-                # lit(0) convention) instead of sacrificing a real
-                # column to the _timestamp slot
-                payloads = serialize_clickhouse_rowbinary(
-                    routed.withColumn(
-                        "lc_zero_ts", F.lit(0).cast("timestamp")
-                    ),
-                    ts_col="lc_zero_ts",
-                )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        observed = payloads.observe(obs, F.count(F.lit(1)).alias("n"))
-        observed.write.mode("overwrite").parquet(args.output)
-        n = obs.get["n"]
-        wall = time.monotonic() - t0
-        metrics.add(f"flusher_{args.flusher}", -1, n, round(wall, 3))
-        if args.metrics:
-            metrics.write(spark, args.metrics)
-    elif args.lineage:
-        from loongcollector_spark.plans.checkpoint import CheckpointedRun
-
+    if args.lineage:
+        t0 = time.monotonic()
+        ck = CheckpointedRun(spark, args.lineage, args.job_id)
+        attempted = len(ck.committed_units()) < args.units
+        df, obs_in = observe_rows(df)
         run_with_checkpoint(
             spark,
             df,
@@ -221,32 +124,100 @@ def main(argv: list[str] | None = None) -> None:
             job_id=args.job_id,
             n_units=args.units,
         )
-        # rows_out from the lineage commits (counted during the write
-        # job via Observation) — no output re-read; rows_in would cost
-        # a full extra input scan, so it is recorded as -1 (unknown)
-        # unless a caller needs it badly enough to count explicitly
-        n = CheckpointedRun(spark, args.lineage, args.job_id).total_rows_committed()
-        wall = time.monotonic() - t0
-        metrics.add("pipeline", -1, n, round(wall, 3))
-        if args.metrics:
-            metrics.write(spark, args.metrics)
+        # with every unit committed no action read the input, and
+        # obs_in.get would wait for one forever; rows_out comes from
+        # the lineage commits (counted during the write job)
+        rows_in = obs_in.get["n"] if attempted else 0
+        wall = round(time.monotonic() - t0, 3)
+        metrics.add("pipeline", rows_in, ck.total_rows_committed(), wall)
     else:
+        write = _writer(spark, args)
+        for _ in range(args.warm):
+            pipe.run_and_write(df, write, MetricsCollector(args.job_id))
+        for _ in range(max(args.rounds, 1)):
+            pipe.run_and_write(df, write, metrics)
+    if args.metrics:
+        metrics.write(spark, args.metrics)
+    # wall_sec: the best measured round (steady-state throughput)
+    print(json.dumps({"job_id": args.job_id,
+                      "rows_out": metrics.records[-1].rows_out,
+                      "wall_sec": min(r.wall_sec for r in metrics.records)}))
+
+
+def _writer(spark, args):
+    """The ``--flusher``'s write: routed frame → one action."""
+    from loongcollector_spark.operators.route import fanout_write, require_sink
+    from loongcollector_spark.sources.sinks import write_blackhole
+
+    if args.flusher == "blackhole":
+        return write_blackhole
+    if args.flusher == "parquet":
         # overwrite: a rerun of the same job replaces its output
         # (append-without-lineage would silently duplicate data);
-        # incremental appends go through --lineage.
-        # run_and_write piggybacks rows_in/rows_out on the write job
-        # via Observation — no extra count() scans of input or output.
-        pipe.run_and_write(
-            df,
-            args.output,
-            metrics=metrics,
-            metrics_path=args.metrics,
-            mode="overwrite",
+        # incremental appends go through --lineage
+        return lambda routed: fanout_write(routed, args.output, mode="overwrite")
+
+    def write_payloads(routed):
+        require_sink(routed)
+        par = spark.sparkContext.defaultParallelism
+        payloads = _payloads(args, routed.repartition(par, "sink"))
+        payloads.write.mode("overwrite").parquet(args.output)
+
+    return write_payloads
+
+
+def _payloads(args, routed):
+    """Serialize *routed* into the wire flusher's exact sink format
+    (the encode half of the round-trip queries). The sink column rides
+    as SLS topic / Loki label / ES index / ClickHouse doc field, so a
+    transport layer can fan payloads out per sink."""
+    from pyspark.sql import functions as F
+
+    ts_key = "ts" if "ts" in routed.columns else None
+    if args.flusher == "sls":
+        from loongcollector_spark.sources.sls_pb import serialize_sls_loggroups
+
+        return serialize_sls_loggroups(routed, time_key=ts_key, topic_key="sink")
+    if args.flusher == "loki":
+        from loongcollector_spark.sources.loki_push import serialize_loki_push
+
+        doc_cols = [c for c in routed.columns if c not in ("sink", "ts")]
+        ns = (
+            (F.unix_micros(F.col(ts_key).cast("timestamp")) * 1000)
+            if ts_key
+            else F.lit(0)
         )
-        n = metrics.records[-1].rows_out
-        wall = time.monotonic() - t0
-    print(json.dumps({"job_id": args.job_id, "rows_out": n,
-                      "wall_sec": round(wall, 3)}))
+        # NB: pandas itertuples renames leading-underscore columns
+        # positionally, so the staging column names must be plain
+        lined = routed.select(
+            F.col("sink"),
+            ns.cast("long").alias("lc_ns"),
+            F.to_json(F.struct(*[F.col(c) for c in doc_cols])).alias("lc_line"),
+        )
+        return serialize_loki_push(
+            lined,
+            line_key="lc_line",
+            time_ns_key="lc_ns",
+            label_keys=["sink"],
+            static_labels={"job": args.job_id},
+        )
+    if args.flusher == "es":
+        from loongcollector_spark.sources.es_bulk import serialize_es_bulk
+
+        return serialize_es_bulk(routed, index_format="lc-%{sink}")
+    from loongcollector_spark.sources.clickhouse_rb import (
+        serialize_clickhouse_rowbinary,
+    )
+
+    if ts_key:
+        return serialize_clickhouse_rowbinary(routed, ts_col=ts_key)
+    # no ts column: synthesize epoch-0 (the loki branch's lit(0)
+    # convention) instead of sacrificing a real column to the
+    # _timestamp slot
+    return serialize_clickhouse_rowbinary(
+        routed.withColumn("lc_zero_ts", F.lit(0).cast("timestamp")),
+        ts_col="lc_zero_ts",
+    )
 
 
 if __name__ == "__main__":

@@ -61,6 +61,7 @@ def main(argv: list[str] | None = None) -> None:
 
     from loongcollector_spark.operators.assemble import conversation_examples
     from loongcollector_spark.operators.packing import pack_sequences
+    from loongcollector_spark.plans.metrics import observe_rows
     from loongcollector_spark.session import apply_runtime_confs
 
     # spark-submit owns the master/resources; only layer the runtime
@@ -112,23 +113,26 @@ def main(argv: list[str] | None = None) -> None:
         "example_id",
         F.format_string("%s#%012d", F.col("conv_id"), F.col("example_idx")),
     )
+    ex, n_examples = observe_rows(ex)
     ex.repartition(args.shards).write.mode("overwrite").parquet(args.output)
 
     report = {
-        "n_examples": spark.read.parquet(args.output).count(),
+        "n_examples": n_examples.get["n"],
         "examples_path": args.output,
     }
     if gate_report is not None:
         report["gate"] = gate_report
     if args.pack_output:
-        packed = pack_sequences(
-            spark.read.parquet(args.output),
-            text_col="example_text",
-            id_col="example_id",
-            seq_len=args.seq_len,
+        packed, n_sequences = observe_rows(
+            pack_sequences(
+                spark.read.parquet(args.output),
+                text_col="example_text",
+                id_col="example_id",
+                seq_len=args.seq_len,
+            )
         )
         packed.write.mode("overwrite").parquet(args.pack_output)
-        report["n_sequences"] = spark.read.parquet(args.pack_output).count()
+        report["n_sequences"] = n_sequences.get["n"]
         report["seq_len"] = args.seq_len
         report["pack_path"] = args.pack_output
     report["wall_sec"] = round(time.time() - t0, 3)

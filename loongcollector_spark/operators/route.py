@@ -31,6 +31,7 @@ __all__ = [
     "RouterRule",
     "RouterConfig",
     "route",
+    "require_sink",
     "fanout_write",
     "fanout_write_sls",
     "read_sink",
@@ -111,43 +112,34 @@ def route(df: DataFrame, cfg: RouterConfig, sink_col: str = "sink") -> DataFrame
     return df.withColumn(sink_col, F.explode(F.array_compact(arr)))
 
 
-def fanout_write(
-    routed: DataFrame,
-    base_path: str,
-    sink_col: str = "sink",
-    fmt: str = "parquet",
-    mode: str = "append",
-    bucket_cols: list[str] | None = None,
-    n_buckets: int | None = None,
-) -> None:
-    """Write all sinks in ONE pass: ``partitionBy(sink)``.
+def require_sink(routed: DataFrame) -> None:
+    """Raise unless *routed* carries the router's ``sink`` column."""
+    if "sink" not in routed.columns:
+        raise ValueError(
+            "no 'sink' column: the spec needs a 'router' section to "
+            "write per-sink output"
+        )
+
+
+def fanout_write(routed: DataFrame, base_path: str, mode: str = "append") -> None:
+    """Write all sinks in ONE pass: ``partitionBy("sink")``.
 
     Each sink becomes ``{base}/sink=<name>/`` — the per-sink table
     (production: per-logstore Iceberg table; parquet directory layout
-    here carries identical semantics). Optionally pre-shuffles on
-    *bucket_cols* (shard-hash affinity, FlusherSLS.cpp:1157-1170) so
-    each sink's files are clustered by the shard key.
+    here carries identical semantics). Shard-hash clustering
+    (FlusherSLS.cpp:1157-1170) is ``aggregate.shard_repartition``,
+    applied upstream.
     """
-    if bucket_cols:
-        nb = n_buckets or 32
-        routed = routed.repartition(nb, F.col(sink_col), F.xxhash64(*bucket_cols))
-    (
-        routed.write.partitionBy(sink_col)
-        .format(fmt)
-        .mode(mode)
-        .save(base_path)
-    )
+    require_sink(routed)
+    routed.write.partitionBy("sink").mode(mode).parquet(base_path)
 
 
-def read_sink(spark, base_path: str, sink: str, fmt: str = "parquet") -> DataFrame:
+def read_sink(spark, base_path: str, sink: str) -> DataFrame:
     """Read one sink table back (partition-pruned scan)."""
     return (
-        spark.read.format(fmt)
-        .load(base_path)
-        .filter(F.col("sink") == sink)
-        .drop("sink")
+        spark.read.parquet(base_path).filter(F.col("sink") == sink).drop("sink")
         if not os.path.isdir(os.path.join(base_path, f"sink={sink}"))
-        else spark.read.format(fmt).load(os.path.join(base_path, f"sink={sink}"))
+        else spark.read.parquet(os.path.join(base_path, f"sink={sink}"))
     )
 
 

@@ -33,12 +33,12 @@ import time
 from functools import partial
 from typing import Any, Callable, Sequence
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators import aggregate as agg_ops
 from .operators import enrich, filter as flt, geo, otel, parse, route as rt
-from .plans.metrics import MetricsCollector
+from .plans.metrics import MetricsCollector, observe_rows
 from .spl import compile_spl as _spl_compile
 
 ProcessorFn = Callable[..., DataFrame]
@@ -52,14 +52,9 @@ PROCESSORS: dict[str, ProcessorFn] = {
     "default": lambda df, **_: df,
     # processor_spl (core/plugin/processor/ProcessorSPL.h:26-48): run an
     # SPL script against the in-flight event group. `script` (the
-    # reference's `Script` param) goes through the real SPL compiler
-    # (spl.py: pipe commands + Presto-dialect expressions → one Catalyst
-    # plan); `query` keeps the original raw-Spark-SQL escape hatch.
-    "spl": lambda df, script=None, query=None, view_name="spl_input", **kw: (
-        _spl_compile(df, script, **kw)
-        if script is not None
-        else (df.createOrReplaceTempView(view_name) or df.sparkSession.sql(query))
-    ),
+    # reference's `Script` param) goes through the SPL compiler (spl.py:
+    # pipe commands + Presto-dialect expressions → one Catalyst plan)
+    "spl": _spl_compile,
     "parse_regex": parse.parse_regex,
     "parse_grok": parse.parse_grok,
     "parse_json": parse.parse_json,
@@ -171,7 +166,6 @@ class Pipeline:
             _bind(dict(p), dims) for p in spec.get("processors", [])
         ]
         r = spec.get("router")
-        self._routed = bool(r)
         if r:
             cfg = rt.RouterConfig(
                 source_key=r["source_key"],
@@ -215,29 +209,30 @@ class Pipeline:
     def run_and_write(
         self,
         df: DataFrame,
-        base_path: str,
+        write: Callable[[DataFrame], None],
         metrics: MetricsCollector,
         metrics_path: str | None = None,
-        mode: str = "append",
     ) -> DataFrame:
-        """Run + fan-out write with metrics collected via the
-        ``Observation`` API — rows-in/rows-out are computed DURING the
-        single write job (observe() piggybacks aggregates on the
-        action), not by extra count() jobs that would re-execute the
-        whole pipeline (3× total compute at scale)."""
-        if not self._routed:
-            raise ValueError(
-                "run_and_write needs a 'router' section in the spec "
-                "(fanout_write partitions by the 'sink' column the "
-                "router adds); use run() + your own writer for "
-                "unrouted pipelines"
-            )
-        obs_in = Observation()
-        obs_out = Observation()
-        df = df.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        routed = self.run(df).observe(obs_out, F.count(F.lit(1)).alias("n"))
+        """Run the pipeline into *write* — the one metered write path.
+
+        ``write(routed)`` runs one action (``rt.fanout_write``,
+        ``write_blackhole``, a wire-payload writer, ...). Rows in and
+        rows out are counted during that action (``observe_rows``), not
+        by extra ``count()`` jobs that would re-execute the whole
+        pipeline; one ``metrics.add("pipeline", rows_in, rows_out,
+        write_sec)`` records them, appended to *metrics_path* if given.
+        Returns the routed frame (with the counters attached).
+
+        A checkpointed run (``plans.checkpoint.run_with_checkpoint``)
+        does not come through here: ``run_pipeline.py --lineage``
+        observes its input itself, so its ``rows_in`` is the input rows
+        scanned, or 0 on a rerun with every unit already committed
+        (no action runs; see ``plans.metrics.observe_rows``).
+        """
+        df, obs_in = observe_rows(df)
+        routed, obs_out = observe_rows(self.run(df))
         t0 = time.monotonic()
-        rt.fanout_write(routed, base_path, mode=mode)
+        write(routed)
         metrics.add(
             "pipeline",
             obs_in.get["n"],

@@ -7,19 +7,36 @@ core/runner/ProcessorRunner.cpp:94-103): each pipeline stage records
 rows-in/rows-out; the collected records append to a metrics table.
 
 Spark design: the counts are never taken by extra ``count()`` jobs,
-which would re-execute the pipeline. ``Pipeline.run_and_write`` wraps
-its input and routed output in ``Observation``s, so both counts are
-computed during the one fan-out write job and land here through
-``MetricsCollector.add``.
+which would re-execute the pipeline: :func:`observe_rows` counts
+during the action already being run. ``Pipeline.run_and_write`` is
+the one metered write path (rows in and out of its one write, one
+``MetricsCollector.add``). A checkpointed run (``run_pipeline.py
+--lineage``) observes its input the same way, takes ``rows_out`` from
+the lineage commits, and records ``rows_in = 0`` when every unit was
+already committed, since no action then runs.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
-__all__ = ["StageMetrics", "MetricsCollector"]
+__all__ = ["StageMetrics", "MetricsCollector", "observe_rows"]
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """*df* with a row counter attached, and the ``Observation`` that
+    holds it: ``obs.get["n"]`` is the number of rows the first action
+    over the returned frame passed through.
+
+    ``obs.get`` waits for that action, so read it only after one has
+    run: on a plan no action executes it blocks forever.
+    """
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
 
 METRICS_SCHEMA = (
     "job_id string, stage string, rows_in long, rows_out long, wall_sec double"

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from loongcollector_spark.operators.route import fanout_write
 from loongcollector_spark.pipeline import Pipeline
 from loongcollector_spark.plans.metrics import MetricsCollector
 
@@ -100,5 +101,7 @@ def test_run_and_write_without_router_raises_clearly(spark, tmp_path):
     df = spark.createDataFrame([("x",)], "text string")
     with pytest.raises(ValueError, match="router"):
         Pipeline({"processors": []}).run_and_write(
-            df, str(tmp_path / "o"), MetricsCollector("no-router")
+            df,
+            lambda r: fanout_write(r, str(tmp_path / "o")),
+            MetricsCollector("no-router"),
         )

@@ -318,8 +318,8 @@ def test_fanout_write_sls_wire_layout(spark, tmp_path):
 
 
 def test_spl_processor_in_pipeline_spec(spark):
-    """processor_spl analog: a config-driven SQL step over the
-    in-flight frame (ProcessorSPL.h:26-48 — Spark SQL is the engine)."""
+    """processor_spl analog: a config-driven SPL script over the
+    in-flight frame (ProcessorSPL.h:26-48), compiled by spl.py."""
     from loongcollector_spark.pipeline import Pipeline
 
     spec = {
@@ -327,8 +327,9 @@ def test_spl_processor_in_pipeline_spec(spark):
             {"type": "add_fields", "fields": {"env": "prod"}},
             {
                 "type": "spl",
-                "query": "SELECT upper(role) AS role_uc, env "
-                         "FROM spl_input WHERE role <> 'alien'",
+                "script": "* | where role <> 'alien' "
+                          "| extend role_uc = upper(role) "
+                          "| project role_uc, env",
             },
         ]
     }

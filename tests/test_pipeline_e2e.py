@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from loongcollector_spark.pipeline import PROCESSORS, Pipeline
 from loongcollector_spark.plans.checkpoint import run_with_checkpoint
 from loongcollector_spark.plans.metrics import MetricsCollector
-from loongcollector_spark.operators.route import read_sink
+from loongcollector_spark.operators.route import fanout_write, read_sink
 from loongcollector_spark.queries import (
     NGINX_KEYS,
     NGINX_REGEX,
@@ -63,7 +63,7 @@ def test_config_pipeline_counts_and_fields(spark, sf_dir, tmp_path, pipe):
     out_dir = str(tmp_path / "sinks")
     met_dir = str(tmp_path / "metrics")
     routed = pipe.run_and_write(
-        tx, out_dir, metrics=metrics, metrics_path=met_dir
+        tx, lambda r: fanout_write(r, out_dir), metrics, metrics_path=met_dir
     )
     # count oracle (verify/count.go analog)
     counts = {r.sink: r["cnt"] for r in
@@ -402,3 +402,52 @@ def test_payload_replay_sources_close_the_loop(spark, sf_dir, tmp_path):
     assert ch.count() == 1000
     docs = ch.limit(1).collect()[0]
     assert _json.loads(docs.log)["sink"] in {"sink_assistant", "sink_default"}
+
+
+def _run_pipeline_job(spark, sf_dir, tmp_path, *flags):
+    """Run jobs/run_pipeline.py in-process over the sf_dir transcripts
+    with a role router; returns the metrics rows it appended."""
+    import json as _json
+
+    from jobs.run_pipeline import main as run_pipeline_main
+
+    spec = tmp_path / "spec.json"
+    src = str(tmp_path / "tx")
+    if not spec.exists():
+        spec.write_text(_json.dumps({"processors": [], "router": SPEC["router"]}))
+        load_transcripts(spark, sf_dir).write.parquet(src)
+    met = str(tmp_path / f"metrics{len(list(tmp_path.glob('metrics*')))}")
+    run_pipeline_main(
+        ["--input", src, "--spec", str(spec), "--metrics", met,
+         "--job-id", "m", *flags]
+    )
+    return spark.read.parquet(met).collect()
+
+
+def test_run_pipeline_records_rows_in_on_every_flusher(spark, sf_dir, tmp_path):
+    """Every write path of run_pipeline.py --metrics records the input
+    rows (none records -1): parquet, blackhole (warm-up + two measured
+    rounds), a wire flusher and the checkpointed lineage path."""
+    runs = {
+        "parquet": ["--output", str(tmp_path / "o_parquet")],
+        "blackhole": ["--flusher", "blackhole", "--warm", "1", "--rounds", "2"],
+        "sls": ["--flusher", "sls", "--output", str(tmp_path / "o_sls")],
+        "lineage": ["--output", str(tmp_path / "o_lin"),
+                    "--lineage", str(tmp_path / "lin"), "--units", "4"],
+    }
+    for name, flags in runs.items():
+        rows = _run_pipeline_job(spark, sf_dir, tmp_path, *flags)
+        assert len(rows) == (2 if name == "blackhole" else 1), name
+        assert [(r.rows_in, r.rows_out) for r in rows] == [(1000, 1000)] * len(rows), name
+
+
+def test_run_pipeline_lineage_rerun_all_committed_returns(spark, sf_dir, tmp_path):
+    """A lineage rerun whose units are all committed starts no write
+    job, so nothing fills the input counter: the job must still return
+    (not wait on it) and record rows_in = 0."""
+    flags = ["--output", str(tmp_path / "o"), "--lineage", str(tmp_path / "lin"),
+             "--units", "4"]
+    first = _run_pipeline_job(spark, sf_dir, tmp_path, *flags)
+    rerun = _run_pipeline_job(spark, sf_dir, tmp_path, *flags)
+    assert [(r.rows_in, r.rows_out) for r in first] == [(1000, 1000)]
+    assert [(r.rows_in, r.rows_out) for r in rerun] == [(0, 1000)]

@@ -9,6 +9,7 @@ from loongcollector_spark.operators.aggregate import pack_groups
 from loongcollector_spark.operators.dedup import dedup_exact
 from loongcollector_spark.operators.enrich import desensitize
 from loongcollector_spark.operators.parse import parse_regex
+from loongcollector_spark.operators.route import fanout_write
 from loongcollector_spark.operators.text import language_id
 from loongcollector_spark.pipeline import Pipeline
 from loongcollector_spark.plans.metrics import MetricsCollector
@@ -97,7 +98,7 @@ def test_run_and_write_metrics_single_execution(spark, tmp_path):
         "default_sink": "s2"}}
     m = MetricsCollector("obs-test")
     Pipeline(spec).run_and_write(
-        df, str(tmp_path / "out"), metrics=m,
+        df, lambda r: fanout_write(r, str(tmp_path / "out")), m,
         metrics_path=str(tmp_path / "met"),
     )
     rec = m.records[0]
