@@ -45,8 +45,8 @@ def main(argv: list[str] | None = None) -> None:
         "--loop-alert",
         help="also run the stateful agent-loop monitor "
         "(streaming.stream_loop_alert) over the same input stream and "
-        "append its per-batch emissions as parquet under this path; "
-        "state checkpoints beside the sink checkpoint, so a stopped "
+        "write its emissions as parquet under this path, one "
+        "__batch_id partition per micro-batch; state checkpoints beside the sink checkpoint, so a stopped "
         "job resumes open runs across restarts",
     )
     ap.add_argument("--loop-threshold", type=int, default=3)
@@ -54,8 +54,9 @@ def main(argv: list[str] | None = None) -> None:
         "--dialogue-monitor",
         help="also run the stateful dialogue-structure monitor "
         "(streaming.stream_dialogue_monitor) over the same input "
-        "stream and append its per-batch emissions as parquet under "
-        "this path; state checkpoints beside the sink checkpoint",
+        "stream and write its emissions as parquet under this path, "
+        "one __batch_id partition per micro-batch; state checkpoints "
+        "beside the sink checkpoint",
     )
     args = ap.parse_args(argv)
     if args.available_now and args.continuous:
@@ -71,6 +72,7 @@ def main(argv: list[str] | None = None) -> None:
     from loongcollector_spark.pipeline import Pipeline
     from loongcollector_spark.session import apply_runtime_confs
     from loongcollector_spark.streaming.stream import (
+        _write_batches,
         read_transcript_stream,
         stream_dialogue_monitor,
         stream_loop_alert,
@@ -89,34 +91,26 @@ def main(argv: list[str] | None = None) -> None:
         args.checkpoint,
         available_now=available_now,
     )
+
     def _start_monitor(monitor_fn, out_path: str, ckpt_name: str):
         # a SECOND query over the same file source with its own
         # checkpoint: the sink pipeline and each monitor progress
         # independently (one slow sink never stalls alerting). Update-
-        # mode emissions append as parquet with the batch id — the
-        # monitor's view is the max-per-conv rollup of the emissions.
-        def _append(batch_df, batch_id: int) -> None:
-            from pyspark.sql import functions as F
-
-            batch_df.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(out_path)
-
+        # mode emissions land per batch id — the monitor's view is the
+        # max-per-conv rollup of the emissions.
         mon = monitor_fn(
             read_transcript_stream(
                 spark, args.input, max_files_per_trigger=args.max_files_per_trigger
             )
         )
-        writer = (
-            mon.writeStream.outputMode("update")
-            .foreachBatch(_append)
-            .option(
-                "checkpointLocation", os.path.join(args.checkpoint, ckpt_name)
-            )
+        return _write_batches(
+            mon,
+            lambda batch_df: batch_df,
+            out_path,
+            os.path.join(args.checkpoint, ckpt_name),
+            output_mode="update",
+            available_now=available_now,
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     monitors = []
     if args.loop_alert:

@@ -25,15 +25,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import sqltext
-
 __all__ = [
     "RouterRule",
     "RouterConfig",
     "route",
     "require_sink",
     "fanout_write",
-    "fanout_write_sls",
     "read_sink",
 ]
 
@@ -65,7 +62,7 @@ class RouterConfig:
     tag_copy_sinks: list[tuple[str, str, str]] = field(default_factory=list)
 
 
-def route(df: DataFrame, cfg: RouterConfig, sink_col: str = "sink") -> DataFrame:
+def route(df: DataFrame, cfg: RouterConfig) -> DataFrame:
     """Assign each row its sink (first matching ordered rule wins).
 
     Rows matching no rule go to ``default_sink`` or are dropped
@@ -93,10 +90,10 @@ def route(df: DataFrame, cfg: RouterConfig, sink_col: str = "sink") -> DataFrame
     elif cfg.default_sink is not None and not cfg.drop_dismatch:
         chain = chain.otherwise(cfg.default_sink)
     if not cfg.unconditional_sinks and not cfg.tag_copy_sinks:
-        out = df.withColumn(sink_col, chain)
+        out = df.withColumn("sink", chain)
         # null chain = dismatch under drop_dismatch (no otherwise)
         if cfg.drop_dismatch:
-            return out.filter(f"{sqltext.quote(sink_col)} IS NOT NULL")
+            return out.filter("sink IS NOT NULL")
         return out
     empty = F.array().cast("array<string>")
     arr = F.array(chain)
@@ -109,7 +106,7 @@ def route(df: DataFrame, cfg: RouterConfig, sink_col: str = "sink") -> DataFrame
         )
     # nulls in slot 0 = dropped-dismatch rows; array_compact removes
     # them and explode drops rows whose array became empty
-    return df.withColumn(sink_col, F.explode(F.array_compact(arr)))
+    return df.withColumn("sink", F.explode(F.array_compact(arr)))
 
 
 def require_sink(routed: DataFrame) -> None:
@@ -142,26 +139,3 @@ def read_sink(spark, base_path: str, sink: str) -> DataFrame:
         else spark.read.parquet(os.path.join(base_path, f"sink={sink}"))
     )
 
-
-def fanout_write_sls(
-    routed: DataFrame,
-    base_path: str,
-    sink_col: str = "sink",
-    *,
-    time_key: str | None = None,
-    mode: str = "append",
-    **serializer_kwargs,
-) -> None:
-    """Fan-out in the reference's WIRE format: rows → per-sink SLS
-    ``LogGroup`` protobuf blobs (sources/sls_pb.py;
-    pkg/protocol/proto/sls_logs.proto:8-33, serializer
-    SLSSerializer.h:37) written in ONE pass as
-    ``{base}/topic=<sink>/`` parquet of ``(topic, n_logs, value)``
-    rows — the flusher_sls per-logstore batch layout with Spark's
-    atomic job commit instead of HTTP send."""
-    from ..sources.sls_pb import serialize_sls_loggroups
-
-    blobs = serialize_sls_loggroups(
-        routed, topic_key=sink_col, time_key=time_key, **serializer_kwargs
-    )
-    blobs.write.partitionBy("topic").mode(mode).parquet(base_path)

@@ -55,19 +55,22 @@ class StageMetrics:
 class MetricsCollector:
     job_id: str
     records: list[StageMetrics] = field(default_factory=list)
+    # records[:_written] are already in the metrics table
+    _written: int = field(default=0, repr=False)
 
     def add(self, stage: str, rows_in: int, rows_out: int, wall_sec: float) -> None:
         self.records.append(StageMetrics(stage, rows_in, rows_out, wall_sec))
 
-    def to_df(self, spark: SparkSession) -> DataFrame:
+    def write(self, spark: SparkSession, path: str) -> None:
+        """Append the records added since the last ``write`` to the
+        metrics table, so writing after every run never repeats a row
+        (production: Iceberg append in the same commit cadence as data,
+        so reruns can't double-count — SURVEY.md §7.2 hard part (d))."""
         rows = [
             (self.job_id, r.stage, r.rows_in, r.rows_out, r.wall_sec)
-            for r in self.records
+            for r in self.records[self._written :]
         ]
-        return spark.createDataFrame(rows, METRICS_SCHEMA)
-
-    def write(self, spark: SparkSession, path: str) -> None:
-        """Append to the metrics table (production: Iceberg append in
-        the same commit cadence as data, so reruns can't double-count
-        — SURVEY.md §7.2 hard part (d))."""
-        self.to_df(spark).write.mode("append").parquet(path)
+        if rows:
+            df = spark.createDataFrame(rows, METRICS_SCHEMA)
+            df.write.mode("append").parquet(path)
+        self._written = len(self.records)

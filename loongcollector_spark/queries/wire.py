@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, MD5_SQL
+from ..sources.sinks import FLUSHERS
 from ..sources.transcripts import load_transcripts
 from .common import _ROUTE_CASE, _TX, _routed
 from .registry import query
@@ -99,7 +100,7 @@ def q_sls_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~50 µs/row, and losslessness is volume-independent — full-volume
     serializer cost belongs to the flusher bench, not the oracle
     gate."""
-    from ..sources.sls_pb import decode_loggroup, serialize_sls_loggroups
+    from ..sources.sls_pb import serialize_sls_loggroups
 
     routed = (
         _routed(spark, sf_dir)
@@ -116,39 +117,13 @@ def q_sls_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         category="transcripts",
         max_log_count=256,
     )
-
-    def decode(batches):
-        import pandas as pd
-
-        cols = ["sink", "time_sec", "conv_id", "turn_idx", "role", "text"]
-        for pdf in batches:
-            rows = []
-            for blob in pdf["value"]:
-                lg = decode_loggroup(bytes(blob))
-                topic = lg.get("topic", "")
-                for log in lg["logs"]:
-                    c = dict(log["contents"])
-                    rows.append(
-                        (
-                            topic,
-                            log["time"],
-                            c.get("conv_id", ""),
-                            int(c["turn_idx"]),
-                            c.get("role", ""),
-                            c.get("text", ""),
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    decoded = groups.mapInPandas(
-        decode,
-        schema=(
-            "sink string, time_sec long, conv_id string, turn_idx long, "
-            "role string, text string"
-        ),
+    logs = FLUSHERS["sls"].decode(groups).select(
+        F.col("topic").alias("sink"),
+        F.col("time").alias("time_sec"),
+        F.coalesce(F.col("contents")["conv_id"], F.lit("")).alias("conv_id"),
+        F.coalesce(F.col("contents")["text"], F.lit("")).alias("text"),
     )
-    return decoded.groupBy("sink").agg(
+    return logs.groupBy("sink").agg(
         F.count("*").alias("n_rows"),
         F.sum(F.length("text")).alias("sum_text_chars"),
         F.sum("time_sec").alias("sum_time_sec"),
@@ -337,7 +312,7 @@ def q_loki_push_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     push payloads with labelsets {job, sink, role} and ns-precision
     values; payloads decode back (sources/loki_push.py) and aggregate
     per (sink, role)."""
-    from ..sources.loki_push import decode_loki_push, serialize_loki_push
+    from ..sources.loki_push import serialize_loki_push
 
     routed = (
         _routed(spark, sf_dir)
@@ -359,25 +334,13 @@ def q_loki_push_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_entries=512,
     )
 
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            recs = []
-            for payload in pdf["value"]:
-                for labels, ts_ns, line in decode_loki_push(payload):
-                    recs.append(
-                        (labels["sink"], labels["role"], ts_ns, len(line))
-                    )
-            if recs:
-                yield pd.DataFrame(
-                    recs, columns=["sink", "role", "ts_ns", "chars"]
-                )
-
-    decoded = payloads.mapInPandas(
-        decode, schema="sink string, role string, ts_ns long, chars long"
+    entries = FLUSHERS["loki"].decode(payloads).select(
+        F.col("labels")["sink"].alias("sink"),
+        F.col("labels")["role"].alias("role"),
+        "ts_ns",
+        F.length("line").alias("chars"),
     )
-    return decoded.groupBy("sink", "role").agg(
+    return entries.groupBy("sink", "role").agg(
         F.count("*").alias("n_lines"),
         F.sum("chars").alias("sum_text_chars"),
         F.min("ts_ns").alias("min_ts_ns"),
@@ -401,7 +364,7 @@ def q_es_bulk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dynamic ``lc-%{role}`` index names (fmtstr.FormatIndex convention),
     JVM-rendered docs, NDJSON bodies decoded back and aggregated per
     index."""
-    from ..sources.es_bulk import decode_es_bulk, serialize_es_bulk
+    from ..sources.es_bulk import serialize_es_bulk
 
     rows = _wire_bucket(spark, sf_dir).select("role", "conv_id", "turn_idx", "text")
     bodies = serialize_es_bulk(
@@ -409,31 +372,21 @@ def q_es_bulk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_docs=512,
     )
 
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            recs = []
-            for body in pdf["value"]:
-                for idx, doc in decode_es_bulk(body):
-                    recs.append(
-                        (
-                            idx,
-                            doc["conv_id"],
-                            int(doc["turn_idx"]),
-                            len(doc.get("text") or ""),
-                        )
-                    )
-            if recs:
-                yield pd.DataFrame(
-                    recs, columns=["es_index", "conv_id", "turn_idx", "chars"]
-                )
-
-    decoded = bodies.mapInPandas(
-        decode,
-        schema="es_index string, conv_id string, turn_idx long, chars long",
+    docs = (
+        FLUSHERS["es"]
+        .decode(bodies)
+        .select(
+            F.col("index").alias("es_index"),
+            F.from_json("doc", "conv_id string, turn_idx long, text string").alias("d"),
+        )
+        .select(
+            "es_index",
+            "d.conv_id",
+            "d.turn_idx",
+            F.length(F.coalesce("d.text", F.lit(""))).alias("chars"),
+        )
     )
-    return decoded.groupBy("es_index").agg(
+    return docs.groupBy("es_index").agg(
         F.count("*").alias("n_docs"),
         F.sum("chars").alias("sum_text_chars"),
         F.countDistinct("conv_id").alias("n_convs"),

@@ -25,16 +25,28 @@ Capability parity (new code) with the reference flusher layer:
                          parquet directory fallback carrying the same
                          layout semantics (this sandbox has no Iceberg
                          runtime jar).
+* flusher table        — :data:`FLUSHERS`: each ``run_pipeline.py
+                         --flusher`` name → its write and, for a wire
+                         format (sls, loki, es, clickhouse), the decode
+                         that reads its payload table back to one row
+                         per wire log (each reference flusher owns its
+                         serializer, SLSSerializer.h:37)
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sls_pb import serialize_sls_loggroups  # noqa: F401  (serializer option)
+from ..operators.route import fanout_write, require_sink
+from .sls_pb import decode_loggroup, serialize_sls_loggroups
 
 __all__ = [
+    "FLUSHERS",
+    "Flusher",
     "write_json_lines",
     "write_blackhole",
     "write_dynamic_topics",
@@ -94,7 +106,6 @@ def write_dynamic_topics(
     *,
     hash_keys: list[str] | None = None,
     n_partitions: int = 32,
-    fmt: str = "parquet",
     mode: str = "append",
 ) -> None:
     """Kafka-v2-style dynamic topic fan-out: ``topic_format`` may
@@ -105,7 +116,7 @@ def write_dynamic_topics(
     out = df.withColumn("__topic", format_string_col(topic_format))
     if hash_keys:
         out = out.repartition(n_partitions, *[F.col(k) for k in hash_keys])
-    out.write.partitionBy("__topic").format(fmt).mode(mode).save(base_path)
+    out.write.partitionBy("__topic").mode(mode).parquet(base_path)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -218,7 +229,6 @@ def write_bucketed_table(
     n_buckets: int = 32,
     *,
     sort_cols: list[str] | None = None,
-    fmt: str = "parquet",
     mode: str = "overwrite",
 ) -> None:
     """Persist a table bucketed (and optionally sorted) on *bucket_cols*
@@ -234,7 +244,167 @@ def write_bucketed_table(
     requires ``saveAsTable``; the warehouse dir is local parquet here,
     an Iceberg catalog with a bucket partition transform in
     production)."""
-    w = df.write.format(fmt).mode(mode).bucketBy(n_buckets, *bucket_cols)
+    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(name)
+
+
+# ---------------------------------------------------------------------------
+# The flusher table: one write per ``run_pipeline.py --flusher``, and one
+# decode per wire format. The wire serializers are imported when a write
+# runs (es_bulk imports this module's format_string_col).
+
+
+@dataclass(frozen=True)
+class Flusher:
+    """One flusher: ``write(routed, path, job_id)`` runs one action over
+    the routed frame; a wire format's ``decode(payloads)`` maps its
+    payload table (a frame with a ``value`` column) to one row per wire
+    log."""
+
+    write: Callable[[DataFrame, str, str], None]
+    decode: Callable[[DataFrame], DataFrame] | None = None
+
+
+def _wire(stage, decode) -> Flusher:
+    """A wire flusher: ``stage(routed, job_id)`` serializes the routed
+    rows into payload rows, written as ONE unpartitioned parquet table
+    (overwrite: wire jobs rerun whole). The sink rides inside each
+    payload as SLS topic / Loki label / ES index / ClickHouse doc
+    field, so a transport layer can fan payloads out per sink."""
+
+    def write(routed: DataFrame, path: str, job_id: str) -> None:
+        require_sink(routed)
+        par = routed.sparkSession.sparkContext.defaultParallelism
+        payloads = stage(routed.repartition(par, "sink"), job_id)
+        payloads.write.mode("overwrite").parquet(path)
+
+    return Flusher(write, decode)
+
+
+def _decoder(rows_of, schema: str):
+    """Payload frame → one row per wire log, in one ``mapInPandas``
+    pass: ``rows_of(value)`` lists the rows one payload holds, as
+    tuples in *schema*'s column order. Strings stay strings (the
+    reference's all-contents-are-strings event model, SURVEY §1.1)."""
+    names = [f.split(" ")[0] for f in schema.split(", ")]
+
+    def decode(payloads: DataFrame) -> DataFrame:
+        def explode(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                rows = [r for v in pdf["value"] for r in rows_of(v)]
+                if rows:
+                    yield pd.DataFrame(rows, columns=names)
+
+        return payloads.select("value").mapInPandas(explode, schema)
+
+    return decode
+
+
+def _ts_key(routed: DataFrame) -> str | None:
+    return "ts" if "ts" in routed.columns else None
+
+
+def _sls_payloads(routed: DataFrame, job_id: str) -> DataFrame:
+    return serialize_sls_loggroups(
+        routed, time_key=_ts_key(routed), topic_key="sink"
+    )
+
+
+def _sls_logs(value) -> list[tuple]:
+    g = decode_loggroup(bytes(value))
+    topic = g.get("topic", "")
+    return [(topic, int(log["time"]), dict(log["contents"])) for log in g["logs"]]
+
+
+def _loki_payloads(routed: DataFrame, job_id: str) -> DataFrame:
+    from .loki_push import serialize_loki_push
+
+    ts_key = _ts_key(routed)
+    doc_cols = [c for c in routed.columns if c not in ("sink", "ts")]
+    ns = (
+        (F.unix_micros(F.col(ts_key).cast("timestamp")) * 1000)
+        if ts_key
+        else F.lit(0)
+    )
+    # NB: pandas itertuples renames leading-underscore columns
+    # positionally, so the staging column names must be plain
+    lined = routed.select(
+        F.col("sink"),
+        ns.cast("long").alias("lc_ns"),
+        F.to_json(F.struct(*[F.col(c) for c in doc_cols])).alias("lc_line"),
+    )
+    return serialize_loki_push(
+        lined,
+        line_key="lc_line",
+        time_ns_key="lc_ns",
+        label_keys=["sink"],
+        static_labels={"job": job_id},
+    )
+
+
+def _loki_entries(value) -> list[tuple]:
+    from .loki_push import decode_loki_push
+
+    return [(dict(lbl), int(t), line) for lbl, t, line in decode_loki_push(str(value))]
+
+
+def _es_payloads(routed: DataFrame, job_id: str) -> DataFrame:
+    from .es_bulk import serialize_es_bulk
+
+    return serialize_es_bulk(routed, index_format="lc-%{sink}")
+
+
+def _es_docs(value) -> list[tuple]:
+    import json
+
+    from .es_bulk import decode_es_bulk
+
+    return [
+        (index, json.dumps(doc, sort_keys=True))
+        for index, doc in decode_es_bulk(str(value))
+    ]
+
+
+def _clickhouse_payloads(routed: DataFrame, job_id: str) -> DataFrame:
+    from .clickhouse_rb import serialize_clickhouse_rowbinary
+
+    ts_key = _ts_key(routed)
+    if ts_key is None:
+        # synthesize epoch-0 (the loki entry's lit(0) convention)
+        # instead of sacrificing a real column to the _timestamp slot
+        routed = routed.withColumn("lc_zero_ts", F.lit(0).cast("timestamp"))
+        ts_key = "lc_zero_ts"
+    return serialize_clickhouse_rowbinary(routed, ts_col=ts_key)
+
+
+def _clickhouse_rows(value) -> list[tuple]:
+    from .clickhouse_rb import decode_clickhouse_rowbinary
+
+    return [(int(t), log) for t, log in decode_clickhouse_rowbinary(bytes(value))]
+
+
+FLUSHERS: dict[str, Flusher] = {
+    # overwrite: a rerun of the same job replaces its output
+    # (append-without-lineage would silently duplicate data);
+    # incremental appends go through run_pipeline.py --lineage
+    "parquet": Flusher(
+        lambda routed, path, job_id: fanout_write(routed, path, mode="overwrite")
+    ),
+    "blackhole": Flusher(lambda routed, path, job_id: write_blackhole(routed)),
+    "sls": _wire(
+        _sls_payloads,
+        _decoder(_sls_logs, "topic string, time long, contents map<string,string>"),
+    ),
+    "loki": _wire(
+        _loki_payloads,
+        _decoder(_loki_entries, "labels map<string,string>, ts_ns long, line string"),
+    ),
+    "es": _wire(_es_payloads, _decoder(_es_docs, "index string, doc string")),
+    "clickhouse": _wire(
+        _clickhouse_payloads, _decoder(_clickhouse_rows, "ts long, log string")
+    ),
+}

@@ -83,19 +83,46 @@ def stream_pipeline_to_sinks(
     checkpointed source offsets this is the reference's
     at-least-once-retry + idempotent-commit contract
     (core/checkpoint/RangeCheckpoint.h:27-31)."""
+    return _write_batches(
+        stream_df,
+        pipe.run,
+        base_path,
+        checkpoint_dir,
+        partition_by=("sink",),
+        available_now=available_now,
+    )
+
+
+def _write_batches(
+    stream_df: DataFrame,
+    transform,
+    base_path: str,
+    checkpoint_dir: str,
+    *,
+    partition_by: tuple[str, ...] = (),
+    output_mode: str = "append",
+    available_now: bool = True,
+):
+    """Start the one ``foreachBatch`` writer of the streaming plane:
+    each micro-batch's ``transform(batch_df)`` lands as parquet under
+    ``{base_path}/__batch_id=<id>/`` (then *partition_by*) with DYNAMIC
+    partition overwrite, so a replayed batch id replaces its earlier
+    output instead of appending a second copy. ``available_now`` drains
+    the backlog and stops; otherwise the query runs until stopped."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = pipe.run(batch_df)
         (
-            routed.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id", "sink")
+            transform(batch_df)
+            .withColumn("__batch_id", F.lit(batch_id))
+            .write.partitionBy("__batch_id", *partition_by)
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .parquet(base_path)
         )
 
     writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
+        stream_df.writeStream.outputMode(output_mode)
+        .foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
@@ -367,24 +394,15 @@ def stream_sketch_rollup(
     # unknown kernel now
     hashing.check(hash_mode)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sk = cms_build(
+    return _write_batches(
+        stream_df,
+        lambda batch_df: cms_build(
             batch_df, col, width=width, depth=depth, hash_mode=hash_mode
-        )
-        (
-            sk.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(base_path)
-        )
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        base_path,
+        checkpoint_dir,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_sketch_rollup(spark: SparkSession, base_path: str) -> DataFrame:

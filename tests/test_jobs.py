@@ -1,6 +1,6 @@
-"""In-process smoke tests of the curation and SFT-export batch jobs:
-the counts each job prints are taken during its write, and must equal
-the rows it wrote."""
+"""In-process smoke tests of the batch jobs: the counts the curation
+and SFT-export jobs print are taken during their writes and must equal
+the rows they wrote; run_pipeline's flushers are the flusher table's."""
 
 import json
 
@@ -40,3 +40,17 @@ def test_run_sft_export_counts_match_output(spark, sf_dir, tmp_path, capsys):
     report = _printed(capsys)
     assert report["n_examples"] == spark.read.parquet(out).count() > 0
     assert report["n_sequences"] == spark.read.parquet(packed).count() > 0
+
+
+def test_run_pipeline_flushers_are_the_flusher_table():
+    """``--flusher`` offers exactly the table's entries, and every wire
+    flusher (all but parquet and blackhole) can read its payload table
+    back."""
+    from jobs.run_pipeline import _parser
+    from loongcollector_spark.sources.sinks import FLUSHERS
+
+    (choices,) = [a.choices for a in _parser()._actions if a.dest == "flusher"]
+    assert list(choices) == list(FLUSHERS)
+    wire = set(FLUSHERS) - {"parquet", "blackhole"}
+    assert wire == {"sls", "loki", "es", "clickhouse"}
+    assert all(FLUSHERS[k].decode is not None for k in wire)

@@ -297,16 +297,18 @@ def test_sls_loggroup_rotation(spark):
 
 
 def test_fanout_write_sls_wire_layout(spark, tmp_path):
-    """Routed rows fan out as per-sink LogGroup wire blobs in one
-    pass; read-back decodes every row with the sink as topic."""
-    from loongcollector_spark.operators.route import fanout_write_sls
+    """The flusher table's sls write fans routed rows out as per-sink
+    LogGroup wire blobs in one pass, into one unpartitioned payload
+    table; read-back decodes every row with the sink as topic. (The
+    LogGroup category field is pinned by test_sls_loggroup_roundtrip.)"""
+    from loongcollector_spark.sources.sinks import FLUSHERS
     from loongcollector_spark.sources.sls_pb import decode_loggroup
 
     df = spark.createDataFrame(
         [("hello", "s1"), ("there", "s1"), ("bye", "s2")], ["text", "sink"]
     ).coalesce(1)
     base = str(tmp_path / "sls")
-    fanout_write_sls(df, base, category="store")
+    FLUSHERS["sls"].write(df, base, "job")
     back = spark.read.parquet(base)
     groups = [decode_loggroup(bytes(r.value)) for r in back.collect()]
     by_topic = {g["topic"]: g for g in groups}
@@ -314,7 +316,6 @@ def test_fanout_write_sls_wire_layout(spark, tmp_path):
     assert [c for lg in by_topic["s1"]["logs"] for c in lg["contents"]] == [
         ("text", "hello"), ("text", "there"),
     ]
-    assert by_topic["s2"]["category"] == "store"
 
 
 def test_spl_processor_in_pipeline_spec(spark):

@@ -88,6 +88,24 @@ def test_config_pipeline_counts_and_fields(spark, sf_dir, tmp_path, pipe):
     assert rec.rows_in == tx.count() and rec.rows_out == tx.count()
 
 
+def test_metrics_write_appends_each_record_once(spark, tmp_path):
+    """Two ``run_and_write`` calls with one collector and one
+    ``metrics_path`` leave one metrics row per call: each write
+    appends only the records added since the last."""
+    from loongcollector_spark.sources.sinks import write_blackhole
+
+    metrics = MetricsCollector("twice")
+    met = str(tmp_path / "metrics")
+    for _ in range(2):
+        Pipeline({}).run_and_write(
+            spark.range(5), write_blackhole, metrics, metrics_path=met
+        )
+    assert len(metrics.records) == 2
+    assert [(r.rows_in, r.rows_out) for r in spark.read.parquet(met).collect()] == [
+        (5, 5), (5, 5)
+    ]
+
+
 def test_checkpoint_resume_idempotent(spark, sf_dir, tmp_path, pipe):
     """Kill-and-rerun equals clean single run (RangeCheckpoint /
     checkpoint_manager semantics)."""
@@ -343,18 +361,13 @@ def test_run_pipeline_clickhouse_without_ts_keeps_all_columns(
 
 
 def test_payload_replay_sources_close_the_loop(spark, sf_dir, tmp_path):
-    """write with --flusher X, read back with the replay source: the
-    decoded row set equals the routed input (the full collector →
-    wire → re-ingest loop inside Spark)."""
+    """write with --flusher X, read back with the flusher table's
+    decode: the decoded row set equals the routed input (the full
+    collector → wire → re-ingest loop inside Spark)."""
     import json as _json
 
     from jobs.run_pipeline import main as run_pipeline_main
-    from loongcollector_spark.sources.payload_replay import (
-        read_clickhouse_payloads,
-        read_es_payloads,
-        read_loki_payloads,
-        read_sls_payloads,
-    )
+    from loongcollector_spark.sources.sinks import FLUSHERS
     from loongcollector_spark.sources.transcripts import load_transcripts
 
     spec = tmp_path / "spec.json"
@@ -379,9 +392,9 @@ def test_payload_replay_sources_close_the_loop(spark, sf_dir, tmp_path):
             ["--input", src, "--output", out, "--spec", str(spec),
              "--flusher", flusher, "--job-id", "t"]
         )
-        return out
+        return FLUSHERS[flusher].decode(spark.read.parquet(out))
 
-    sls = read_sls_payloads(spark, run("sls"))
+    sls = run("sls")
     assert sls.count() == 1000
     assert set(r.topic for r in sls.select("topic").distinct().collect()) == {
         "sink_assistant", "sink_default"
@@ -390,15 +403,15 @@ def test_payload_replay_sources_close_the_loop(spark, sf_dir, tmp_path):
     one = sls.filter("topic = 'sink_assistant'").limit(1).collect()[0]
     assert "text" in one.contents and "conv_id" in one.contents
 
-    loki = read_loki_payloads(spark, run("loki"))
+    loki = run("loki")
     assert loki.count() == 1000
     assert loki.filter("labels['sink'] = 'sink_assistant'").count() == 247
 
-    es = read_es_payloads(spark, run("es"))
+    es = run("es")
     assert es.count() == 1000
     assert es.filter("index = 'lc-sink_assistant'").count() == 247
 
-    ch = read_clickhouse_payloads(spark, run("clickhouse"))
+    ch = run("clickhouse")
     assert ch.count() == 1000
     docs = ch.limit(1).collect()[0]
     assert _json.loads(docs.log)["sink"] in {"sink_assistant", "sink_default"}

@@ -485,3 +485,25 @@ def test_stream_loop_alert_parity_and_state_carry(spark, sf_dir, tmp_path):
     ).collect()[0]
     assert row.m == 4  # the open run survived the batch boundary
     assert row.o == 0  # ordered arrival -> no regression flagged
+
+
+def test_write_batches_replayed_batch_id_keeps_one_copy(spark, tx_path, tmp_path):
+    """The streaming plane's one foreachBatch writer: a batch id
+    written twice (the same input under a fresh checkpoint, so the id
+    restarts at 0, as a replay after a failed commit does) replaces
+    its first output — one copy, not two."""
+    from loongcollector_spark.streaming.stream import _write_batches
+
+    out = str(tmp_path / "out")
+    for ck in ("ck_a", "ck_b"):
+        q = _write_batches(
+            read_transcript_stream(spark, tx_path, max_files_per_trigger=64),
+            lambda batch_df: batch_df.select("conv_id", "turn_idx"),
+            out,
+            str(tmp_path / ck),
+        )
+        q.awaitTermination(120)
+        q.stop()
+    back = spark.read.parquet(out)
+    assert [r["__batch_id"] for r in back.select("__batch_id").distinct().collect()] == [0]
+    assert back.count() == spark.read.parquet(tx_path).count()
