@@ -323,7 +323,7 @@ def q_loki_push_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
             (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).alias("ts_ns"),
         )
-        .repartition(spark.sparkContext.defaultParallelism, "sink")
+        .repartition(spark.sparkContext.defaultParallelism)
     )
     payloads = serialize_loki_push(
         routed,

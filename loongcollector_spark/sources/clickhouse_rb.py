@@ -16,8 +16,9 @@ reference's exact staging DDL pair.
 
 Plan shape: the JSON document and timestamp are built JVM-side
 (``to_json`` + codegen); only the byte packing runs in Python, over
-Arrow batches (the es_bulk/loki_push convention). One payload row per
-``max_rows`` input rows — no driver collect, no shuffle.
+Arrow batches (``batcher.batch_payloads``, shared by every wire
+serializer). One payload row per ``max_rows`` input rows — no driver
+collect, no shuffle.
 """
 
 from __future__ import annotations
@@ -28,25 +29,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import protowire as _w
+from .batcher import batch_payloads, epoch_seconds
 
 __all__ = [
     "buffer_table_ddl",
     "decode_clickhouse_rowbinary",
+    "encode_clickhouse_rowbinary",
     "serialize_clickhouse_rowbinary",
 ]
 
 
-def _write_varint(n: int, out: bytearray) -> None:
-    """ULEB128 (the RowBinary / protobuf varint) — delegates to the
-    shared protowire codec. RowBinary lengths are sizes, never
-    negative, so the two's-complement path is a hard error here."""
-    if n < 0:
-        raise ValueError("varint must be non-negative")
-    out += _w.write_varint(n)
+def _pack_row(ts: int, log: str) -> bytes:
+    raw = log.encode("utf-8")
+    return struct.pack("<q", ts) + _w.write_varint(len(raw)) + raw
 
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    return _w.read_varint(buf, pos)
+def encode_clickhouse_rowbinary(rows: list[tuple[int, str]]) -> bytes:
+    """``(Int64, String)`` rows → one RowBinary payload."""
+    return b"".join(_pack_row(ts, log) for ts, log in rows)
 
 
 def serialize_clickhouse_rowbinary(
@@ -59,43 +59,22 @@ def serialize_clickhouse_rowbinary(
     """Rows → RowBinary payloads (``value binary``, one per INSERT).
 
     Each input row becomes the reference's ``(_timestamp Int64,
-    _log String)`` pair: the epoch-seconds of *ts_col* and the JSON
-    document of *doc_keys* (default: every column except *ts_col*),
-    serialized JVM-side. Payloads rotate every *max_rows* rows.
+    _log String)`` pair: the epoch-seconds of *ts_col* (NULL → 0) and
+    the JSON document of *doc_keys* (default: every column except
+    *ts_col*), both rendered JVM-side. Payloads rotate every
+    *max_rows* rows (``batcher.batch_payloads``).
     """
     cols = doc_keys or [c for c in df.columns if c != ts_col]
-    prepared = df.select(
-        # null ts → 0, JVM-side (the loki_push/prom_wire convention);
-        # a NaN reaching int() would otherwise kill the executor task.
-        F.coalesce(
-            F.unix_timestamp(F.col(ts_col).cast("timestamp")).cast("long"),
-            F.lit(0).cast("long"),
-        ).alias("__ts"),
-        F.to_json(F.struct(*[F.col(c) for c in cols])).alias("__log"),
+    staged = df.select(
+        epoch_seconds(df, ts_col), F.to_json(F.struct(*[F.col(c) for c in cols]))
     )
-
-    def to_payloads(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads: list[bytes] = []
-            buf = bytearray()
-            n = 0
-            for ts, log in zip(pdf["__ts"], pdf["__log"]):
-                buf += struct.pack("<q", int(ts))
-                raw = str(log).encode("utf-8")
-                _write_varint(len(raw), buf)
-                buf += raw
-                n += 1
-                if n >= max_rows:
-                    payloads.append(bytes(buf))
-                    buf, n = bytearray(), 0
-            if buf:
-                payloads.append(bytes(buf))
-            if payloads:
-                yield pd.DataFrame({"value": payloads})
-
-    return prepared.mapInPandas(to_payloads, schema="value binary")
+    return batch_payloads(
+        staged,
+        _pack_row,
+        lambda _key, packed: (b"".join(packed),),
+        "value binary",
+        max_items=max_rows,
+    )
 
 
 def decode_clickhouse_rowbinary(payload: bytes) -> list[tuple[int, str]]:
@@ -109,7 +88,7 @@ def decode_clickhouse_rowbinary(payload: bytes) -> list[tuple[int, str]]:
             raise ValueError("truncated Int64")
         (ts,) = struct.unpack_from("<q", payload, pos)
         pos += 8
-        ln, pos = _read_varint(payload, pos)
+        ln, pos = _w.read_varint(payload, pos)
         if pos + ln > len(payload):
             raise ValueError("truncated String")
         rows.append((ts, payload[pos : pos + ln].decode("utf-8")))

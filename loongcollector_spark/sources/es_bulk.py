@@ -7,9 +7,9 @@ pkg/fmtstr.FormatIndex — the same convention as kafka-v2 topics).
 
 :func:`serialize_es_bulk` renders the index expression JVM-side
 (concat of literals and columns — codegen, no Python) and builds the
-NDJSON bodies in an Arrow-batched pass, rotating every ``max_docs``
-documents. :func:`decode_es_bulk` parses a body back to
-``(index, doc)`` pairs for round-trip verification.
+NDJSON bodies in an Arrow-batched pass (``batcher.batch_payloads``),
+rotating every ``max_docs`` documents. :func:`decode_es_bulk` parses
+a body back to ``(index, doc)`` pairs for round-trip verification.
 """
 
 from __future__ import annotations
@@ -18,6 +18,8 @@ import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .batcher import batch_payloads
 
 __all__ = ["decode_es_bulk", "serialize_es_bulk"]
 
@@ -41,37 +43,22 @@ def serialize_es_bulk(
 
     The document is the row's *doc_keys* (default: every column) as a
     JSON object, serialized JVM-side via ``to_json``; only the body
-    assembly (action-line interleave + rotation) runs in Python, over
-    Arrow batches.
+    assembly (action-line interleave) runs in Python, rotating every
+    *max_docs* documents (``batcher.batch_payloads``).
     """
-    cols = doc_keys or [c for c in df.columns]
-    prepared = df.select(
-        _index_col(index_format).alias("__idx"),
-        F.to_json(F.struct(*[F.col(c) for c in cols])).alias("__doc"),
+    cols = doc_keys or list(df.columns)
+    staged = df.select(
+        _index_col(index_format), F.to_json(F.struct(*[F.col(c) for c in cols]))
     )
 
-    def to_bodies(batches):
-        import pandas as pd
+    def item(idx, doc):
+        action = json.dumps({"index": {"_index": idx}}, separators=(",", ":"))
+        return action + "\n" + doc
 
-        for pdf in batches:
-            bodies: list[str] = []
-            lines: list[str] = []
-            n = 0
-            for idx, doc in zip(pdf["__idx"], pdf["__doc"]):
-                lines.append(
-                    json.dumps({"index": {"_index": idx}}, separators=(",", ":"))
-                )
-                lines.append(doc)
-                n += 1
-                if n >= max_docs:
-                    bodies.append("\n".join(lines) + "\n")
-                    lines, n = [], 0
-            if lines:
-                bodies.append("\n".join(lines) + "\n")
-            if bodies:
-                yield pd.DataFrame({"value": bodies})
+    def encode(_key, docs):
+        return ("\n".join(docs) + "\n",)
 
-    return prepared.mapInPandas(to_bodies, schema="value string")
+    return batch_payloads(staged, item, encode, "value string", max_items=max_docs)
 
 
 def decode_es_bulk(body: str) -> list[tuple[str, dict]]:

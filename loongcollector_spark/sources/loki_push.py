@@ -10,11 +10,12 @@ The public Loki push payload (`POST /loki/api/v1/push`) is::
         ...
     ]}
 
-:func:`serialize_loki_push` groups the rows of each Arrow batch by
-labelset (the flusher's buildLokiLabels path, :219-226) and emits one
-JSON payload per ≤``max_entries`` entries; :func:`decode_loki_push`
-parses a payload back to (labels, ts_ns, line) rows for round-trip
-verification. Values are ns-precision strings per the API contract.
+:func:`serialize_loki_push` emits one JSON payload per ≤``max_entries``
+entries of an Arrow batch (``batcher.batch_payloads``), grouping each
+payload's entries by labelset (the flusher's buildLokiLabels path,
+:219-226); :func:`decode_loki_push` parses a payload back to
+(labels, ts_ns, line) rows for round-trip verification. Values are
+ns-precision strings per the API contract.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
+
+from .batcher import batch_payloads, long0, text
 
 __all__ = ["encode_loki_push", "decode_loki_push", "serialize_loki_push"]
 
@@ -65,54 +68,29 @@ def serialize_loki_push(
     """Rows → Loki push JSON payloads (``value string``, one per request).
 
     Labels = *static_labels* ∪ ``{k: row[k]}`` for *label_keys*
-    (StaticLabels + DynamicLabels, flusher_loki.go:53-55). Entries
-    group by labelset within the Arrow batch; payloads rotate at
-    *max_entries* total entries. Pure-Python codec — repartition
-    upstream to spread across cores.
+    (StaticLabels + DynamicLabels, flusher_loki.go:53-55). Payloads
+    rotate at *max_entries* entries in arrival order within the Arrow
+    batch; a payload's entries group by labelset into streams. Label
+    values and the line are Spark's ``cast(… AS string)`` (so doubles,
+    booleans and timestamps render as Spark renders them), NULL → '';
+    a NULL time is 0.
     """
     static = dict(static_labels or {})
+    staged = df.select(
+        text(line_key), long0(time_ns_key), *[text(k) for k in label_keys]
+    )
 
-    def to_payloads(batches):
-        import pandas as pd
+    def item(line, ts, *label_vals):
+        labels = {**static, **dict(zip(label_keys, label_vals))}
+        return tuple(sorted(labels.items())), (ts, line)
 
-        for pdf in batches:
-            payloads: list[str] = []
-            acc: dict[tuple, list[tuple[int, str]]] = {}
-            count = 0
+    def encode(_key, entries):
+        streams: dict[tuple, list[tuple[int, str]]] = {}
+        for labels, entry in entries:
+            streams.setdefault(labels, []).append(entry)
+        payload = encode_loki_push(
+            [(dict(k), v) for k, v in sorted(streams.items())]
+        )
+        return (payload,)
 
-            def flush():
-                nonlocal acc, count
-                if acc:
-                    payloads.append(
-                        encode_loki_push(
-                            [(dict(k), v) for k, v in sorted(acc.items())]
-                        )
-                    )
-                acc = {}
-                count = 0
-
-            # column-wise iteration (the prom_wire convention):
-            # itertuples()._asdict() positionally renames any column
-            # that is not a valid Python identifier (dotted Loki label
-            # keys like "host.name"), breaking the name lookup
-            for vals in zip(
-                pdf[line_key],
-                pdf[time_ns_key],
-                *(pdf[k] for k in label_keys),
-            ):
-                line_v, ts_v, *label_vals = vals
-                labels = dict(static)
-                for k, v in zip(label_keys, label_vals):
-                    labels[k] = "" if v is None or pd.isna(v) else str(v)
-                key = tuple(sorted(labels.items()))
-                ts = 0 if ts_v is None or pd.isna(ts_v) else int(ts_v)
-                line = "" if line_v is None or pd.isna(line_v) else str(line_v)
-                acc.setdefault(key, []).append((ts, line))
-                count += 1
-                if count >= max_entries:
-                    flush()
-            flush()
-            if payloads:
-                yield pd.DataFrame({"value": payloads})
-
-    return df.mapInPandas(to_payloads, schema="value string")
+    return batch_payloads(staged, item, encode, "value string", max_items=max_entries)

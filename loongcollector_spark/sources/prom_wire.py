@@ -27,7 +27,8 @@ encoders.
 
 DataFrame surface: :func:`serialize_remote_write` (rows → one
 snappy(WriteRequest) blob per ≤``max_series`` single-sample series per
-Arrow batch) and :func:`decode_write_request` for verification.
+Arrow batch, ``batcher.batch_payloads``) and
+:func:`decode_write_request` for verification.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ import struct
 from pyspark.sql import DataFrame
 
 from ..functions import protowire as w
+from .batcher import batch_payloads, double0, long0, text
 
 __all__ = [
     "snappy_compress",
@@ -194,54 +196,22 @@ def serialize_remote_write(
     ``__name__=metric_name`` plus ``{k: row[k]}`` for *label_keys*
     (the reference's converter emits one prompb.Sample per log, no
     same-labelset aggregation — flusher_prometheus_test.go:107).
-    Requests rotate every *max_series* series within an Arrow batch.
+    Label values are Spark's ``cast(… AS string)`` (so doubles,
+    booleans and timestamps render as Spark renders them), NULL → '';
+    the value is a double (NULL → 0.0) and *time_ms_key* epoch
+    milliseconds (NULL → 0). Requests rotate every *max_series*
+    series within an Arrow batch (``batcher.batch_payloads``).
     Output schema: ``value binary`` (one blob per request).
-
-    PERF: pure-Python codec — repartition upstream so the encode
-    spreads across cores; scale cost is the flusher's, not the query
-    plan's (same contract as serialize_sls_loggroups).
     """
-    # hot-loop precomputation: label NAMES are fixed per call, so their
-    # wire prefixes and the spec's sorted order compute once, not per row
-    names = ["__name__"] + list(label_keys)
-    order = sorted(range(len(names)), key=lambda i: names[i])
-    name_pfx = [w.write_string_field(1, n) for n in names]
-    metric_lbl = w.write_len_delimited(
-        1, name_pfx[0] + w.write_string_field(2, metric_name)
+    staged = df.select(
+        double0(value_key), long0(time_ms_key), *[text(k) for k in label_keys]
     )
 
-    def to_requests(batches):
-        import pandas as pd
+    def item(val, ts_ms, *label_vals):
+        labels = [("__name__", metric_name), *zip(label_keys, label_vals)]
+        return encode_timeseries(labels, [(val, ts_ms)])
 
-        for pdf in batches:
-            blobs: list[bytes] = []
-            series: list[bytes] = []
-            label_cols = [pdf[k] for k in label_keys]
-            for val, ts_ms, *lvals in zip(
-                pdf[value_key], pdf[time_ms_key], *label_cols
-            ):
-                vals = [metric_name] + [
-                    "" if v is None else str(v) for v in lvals
-                ]
-                body = b"".join(
-                    metric_lbl
-                    if i == 0
-                    else w.write_len_delimited(
-                        1, name_pfx[i] + w.write_string_field(2, vals[i])
-                    )
-                    for i in order
-                )
-                sample = encode_sample(
-                    float(val) if val is not None else 0.0,
-                    int(ts_ms) if ts_ms is not None else 0,
-                )
-                series.append(body + w.write_len_delimited(2, sample))
-                if len(series) >= max_series:
-                    blobs.append(snappy_compress(encode_write_request(series)))
-                    series = []
-            if series:
-                blobs.append(snappy_compress(encode_write_request(series)))
-            if blobs:
-                yield pd.DataFrame({"value": blobs})
+    def encode(_key, series):
+        return (snappy_compress(encode_write_request(series)),)
 
-    return df.mapInPandas(to_requests, schema="value binary")
+    return batch_payloads(staged, item, encode, "value binary", max_items=max_series)

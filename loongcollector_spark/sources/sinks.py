@@ -272,12 +272,14 @@ def _wire(stage, decode) -> Flusher:
     rows into payload rows, written as ONE unpartitioned parquet table
     (overwrite: wire jobs rerun whole). The sink rides inside each
     payload as SLS topic / Loki label / ES index / ClickHouse doc
-    field, so a transport layer can fan payloads out per sink."""
+    field, so a transport layer can fan payloads out per sink. The
+    serializers group by sink inside each task, so the rows spread
+    evenly over every core, not one task per sink."""
 
     def write(routed: DataFrame, path: str, job_id: str) -> None:
         require_sink(routed)
         par = routed.sparkSession.sparkContext.defaultParallelism
-        payloads = stage(routed.repartition(par, "sink"), job_id)
+        payloads = stage(routed.repartition(par), job_id)
         payloads.write.mode("overwrite").parquet(path)
 
     return Flusher(write, decode)
@@ -330,8 +332,6 @@ def _loki_payloads(routed: DataFrame, job_id: str) -> DataFrame:
         if ts_key
         else F.lit(0)
     )
-    # NB: pandas itertuples renames leading-underscore columns
-    # positionally, so the staging column names must be plain
     lined = routed.select(
         F.col("sink"),
         ns.cast("long").alias("lc_ns"),

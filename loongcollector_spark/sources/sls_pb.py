@@ -17,18 +17,21 @@ wire format, pkg/protocol/proto/sls_logs.proto:8-33):
 Encoding uses the pure-Python wire writer (functions/protowire.py) —
 no protobuf bindings needed. The DataFrame surface is
 :func:`serialize_sls_loggroups`: rows → ``LogGroup`` binary blobs,
-one blob per ≤``max_log_count`` rows within each Arrow batch
-(aggregator_base.go:40-54 MaxLogCount=1024 rotation analog; the
+one blob per ≤``max_log_count`` rows of one topic within each Arrow
+batch (aggregator_base.go:40-54 MaxLogCount=1024 rotation analog; the
 flusher_sls serializer is core/collection_pipeline/serializer/
-SLSSerializer.h:37). A wire *decoder* for round-trip verification
-lives beside it (:func:`decode_loggroup`).
+SLSSerializer.h:37), grouped and rotated by ``batcher.batch_payloads``.
+A wire *decoder* for round-trip verification lives beside it
+(:func:`decode_loggroup`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..functions import protowire as w
+from .batcher import batch_payloads, epoch_seconds, text
 
 __all__ = [
     "encode_log",
@@ -131,68 +134,43 @@ def serialize_sls_loggroups(
 ) -> DataFrame:
     """Rows → ``LogGroup`` wire blobs: one output row per group of
     ≤``max_log_count`` input rows (per Arrow batch, per topic value
-    when *topic_key* is set — flusher groups are per-logstore/topic).
+    when *topic_key* is set — flusher groups are per-logstore/topic;
+    a NULL topic is the empty topic).
 
     Every non-time column becomes a ``Content`` pair in column order
     (content ORDER is the reference's preserved insertion order,
-    core/models/LogEvent.h:120-124); values stringify, NULL → ''.
-    ``time_key`` must hold epoch seconds (int) or a timestamp.
+    core/models/LogEvent.h:120-124); each value is Spark's
+    ``cast(… AS string)`` (so doubles, booleans and timestamps render
+    as Spark renders them), NULL → ''. ``time_key`` holds epoch
+    seconds (a number) or a timestamp; NULL → 0.
 
     Output schema: ``topic string, n_logs int, value binary``.
     """
-    import pandas as pd
-
     tags = sorted((log_tags or {}).items())
-    cols = list(df.columns)
-    content_cols = [c for c in cols if c != time_key and c != topic_key]
+    content_cols = [c for c in df.columns if c != time_key and c != topic_key]
+    time_col = (
+        epoch_seconds(df, time_key) if time_key else F.lit(0).cast("long")
+    )
+    staged = df.select(
+        (text(topic_key) if topic_key else F.lit("")).alias("topic"),
+        time_col,
+        *[text(c) for c in content_cols],
+    )
 
-    def to_groups(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if topic_key:
-                # dropna=False: a NULL topic must not silently drop its
-                # logs (fanout_write's analog lands them in the default
-                # partition); NULL renders as the empty topic
-                grouped = pdf.groupby(topic_key, sort=False, dropna=False)
-            else:
-                grouped = [("", pdf)]
-            for topic_val, g in grouped:
-                if pd.isna(topic_val):
-                    topic_val = ""
-                for lo in range(0, len(g), max_log_count):
-                    chunk = g.iloc[lo : lo + max_log_count]
-                    logs = []
-                    for _, row in chunk.iterrows():
-                        if time_key is None:
-                            t = 0
-                        else:
-                            tv = row[time_key]
-                            if pd.isna(tv):
-                                t = 0  # NULL time → epoch 0, like NULL
-                                # contents → '' below
-                            elif hasattr(tv, "timestamp"):
-                                t = int(tv.timestamp())
-                            else:
-                                t = int(tv)
-                        contents = [
-                            (c, "" if pd.isna(row[c]) else str(row[c]))
-                            for c in content_cols
-                        ]
-                        logs.append(encode_log(t, contents))
-                    blob = encode_loggroup(
-                        logs,
-                        category=category,
-                        topic=str(topic_val) if topic_val else "",
-                        source=source,
-                        log_tags=tags,
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "topic": [str(topic_val) if topic_val else ""],
-                            "n_logs": [len(logs)],
-                            "value": [blob],
-                        }
-                    )
+    def item(t, *values):
+        return encode_log(t, list(zip(content_cols, values)))
 
-    return df.mapInPandas(to_groups, schema="topic string, n_logs int, value binary")
+    def encode(topic, logs):
+        blob = encode_loggroup(
+            logs, category=category, topic=topic, source=source, log_tags=tags
+        )
+        return topic, len(logs), blob
+
+    return batch_payloads(
+        staged,
+        item,
+        encode,
+        "topic string, n_logs int, value binary",
+        max_items=max_log_count,
+        key="topic",
+    )

@@ -299,8 +299,10 @@ def test_sls_loggroup_rotation(spark):
 def test_fanout_write_sls_wire_layout(spark, tmp_path):
     """The flusher table's sls write fans routed rows out as per-sink
     LogGroup wire blobs in one pass, into one unpartitioned payload
-    table; read-back decodes every row with the sink as topic. (The
-    LogGroup category field is pinned by test_sls_loggroup_roundtrip.)"""
+    table; read-back decodes every row with the sink as topic. The
+    write spreads rows over every task, so one sink may span several
+    LogGroups. (The LogGroup category field is pinned by
+    test_sls_loggroup_roundtrip.)"""
     from loongcollector_spark.sources.sinks import FLUSHERS
     from loongcollector_spark.sources.sls_pb import decode_loggroup
 
@@ -311,11 +313,14 @@ def test_fanout_write_sls_wire_layout(spark, tmp_path):
     FLUSHERS["sls"].write(df, base, "job")
     back = spark.read.parquet(base)
     groups = [decode_loggroup(bytes(r.value)) for r in back.collect()]
-    by_topic = {g["topic"]: g for g in groups}
+    by_topic: dict = {}
+    for g in groups:
+        by_topic.setdefault(g["topic"], []).extend(
+            c for lg in g["logs"] for c in lg["contents"]
+        )
     assert set(by_topic) == {"s1", "s2"}
-    assert [c for lg in by_topic["s1"]["logs"] for c in lg["contents"]] == [
-        ("text", "hello"), ("text", "there"),
-    ]
+    assert sorted(by_topic["s1"]) == [("text", "hello"), ("text", "there")]
+    assert by_topic["s2"] == [("text", "bye")]
 
 
 def test_spl_processor_in_pipeline_spec(spark):

@@ -270,6 +270,47 @@ def test_otlp_decode_never_crashes_on_fuzz(buf):
         assert out is None or isinstance(out, str)
 
 
+
+@settings(max_examples=120, deadline=None)
+@given(st.binary(max_size=4096))
+def test_snappy_roundtrip_property(data):
+    """Any bytes survive the literal-only snappy compressor and the
+    full block decoder."""
+    from loongcollector_spark.sources.prom_wire import (
+        snappy_compress,
+        snappy_decompress,
+    )
+
+    assert snappy_decompress(snappy_compress(data)) == data
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=-(2**63), max_value=2**63 - 1),
+            st.one_of(
+                st.just(""),
+                st.text(alphabet=st.characters(codec="utf-8"), max_size=40),
+                st.text(
+                    alphabet=st.characters(codec="utf-8"), min_size=128, max_size=300
+                ),
+            ),
+        ),
+        max_size=8,
+    )
+)
+def test_clickhouse_rowbinary_roundtrip_property(rows):
+    """Any (Int64, String) rows — '' and multibyte text, and strings
+    past the one-byte length varint — survive RowBinary encode →
+    decode exactly."""
+    from loongcollector_spark.sources.clickhouse_rb import (
+        decode_clickhouse_rowbinary,
+        encode_clickhouse_rowbinary,
+    )
+
+    assert decode_clickhouse_rowbinary(encode_clickhouse_rowbinary(rows)) == rows
+
 # ---- parse_regex against per-key regexp_extract (Spark session) ----
 
 _NGINX_LINE = (

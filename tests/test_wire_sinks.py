@@ -311,3 +311,126 @@ def test_clickhouse_buffer_ddl_matches_reference_shape():
         "cluster 'c1' AS `default`.`ilogtail_logs` ENGINE = Buffer(default, "
         "ilogtail_logs, 4, 10, 100, 10000, 1000000, 10000000, 100000000)"
     )
+
+
+# ------------------------------------- staging: Spark renders each value
+
+
+def test_serializers_render_integers_and_nulls_like_spark(spark):
+    """A long column with a NULL in the same Arrow batch reaches pandas
+    as float64; the serializers read Spark's rendering instead, so an
+    integer is '3' (not '3.0') and a NULL is '' (not 'nan')."""
+    from loongcollector_spark.sources.sls_pb import (
+        decode_loggroup,
+        serialize_sls_loggroups,
+    )
+
+    mixed = spark.createDataFrame([("x", 3), ("y", None)], "s string, n long")
+    groups = serialize_sls_loggroups(mixed.coalesce(1)).collect()
+    contents = [
+        dict(lg["contents"])
+        for g in groups
+        for lg in decode_loggroup(bytes(g.value))["logs"]
+    ]
+    assert contents == [{"s": "x", "n": "3"}, {"s": "y", "n": ""}]
+
+    numeric = spark.createDataFrame([(1, 0.5)], "a long, b double")
+    (group,) = serialize_sls_loggroups(numeric.coalesce(1)).collect()
+    (log,) = decode_loggroup(bytes(group.value))["logs"]
+    assert dict(log["contents"]) == {"a": "1", "b": "0.5"}
+
+    with_ts = mixed.withColumn("ts", F.lit(5).cast("long"))
+    blobs = serialize_remote_write(
+        with_ts.coalesce(1),
+        metric_name="m",
+        value_key="ts",
+        time_ms_key="ts",
+        label_keys=["n"],
+    ).collect()
+    labels = [
+        s["labels"]["n"] for b in blobs for s in decode_write_request(bytes(b.value))
+    ]
+    assert labels == ["3", ""]
+
+    payloads = serialize_loki_push(
+        with_ts.coalesce(1), line_key="s", time_ns_key="ts", label_keys=["n"]
+    ).collect()
+    entries = [e for p in payloads for e in decode_loki_push(p.value)]
+    assert sorted((lbl["n"], line) for lbl, _, line in entries) == [
+        ("", "y"), ("3", "x"),
+    ]
+
+
+def test_serialize_remote_write_null_time_and_value_fold_to_zero(spark):
+    """A NULL time is 0 and a NULL value 0.0, rendered JVM-side; an
+    int(NaN) in the Python worker would abort the job."""
+    df = spark.createDataFrame(
+        [("a", 2.5, 1700000000000), ("b", None, None)],
+        "role string, v double, ts_ms long",
+    )
+    blobs = serialize_remote_write(
+        df.coalesce(1),
+        metric_name="m",
+        value_key="v",
+        time_ms_key="ts_ms",
+        label_keys=["role"],
+    ).collect()
+    got = sorted(
+        (s["labels"]["role"], s["samples"][0])
+        for b in blobs
+        for s in decode_write_request(bytes(b.value))
+    )
+    assert got == [("a", (2.5, 1700000000000)), ("b", (0.0, 0))]
+
+
+_EDGE_ROWS = [
+    ("s1", None, 3, "2024-01-01 00:00:01"),
+    ("s1", "", None, None),
+    ("s2", "héllo 世界", 7, "2024-01-01 00:00:02"),
+    ("s2", "line\n", None, "2024-01-01 00:00:03"),
+]
+
+
+def _json_text_n(doc: str) -> tuple[str, str]:
+    # to_json leaves NULL fields out
+    d = json.loads(doc)
+    return d.get("text", ""), str(d["n"]) if "n" in d else ""
+
+
+_TEXT_N = {
+    "sls": lambda r: (r.contents["text"], r.contents["n"]),
+    "loki": lambda r: _json_text_n(r.line),
+    "es": lambda r: _json_text_n(r.doc),
+    "clickhouse": lambda r: _json_text_n(r.log),
+}
+
+
+@pytest.mark.parametrize("fmt", ["sls", "loki", "es", "clickhouse", "prom"])
+def test_wire_formats_decode_edge_rows(spark, tmp_path, fmt):
+    """Every wire format (the flusher table's four wire entries, and
+    Prometheus) decodes NULL, '', multibyte text and a trailing '\\n'
+    back to the staged values: text NULL → '', integer n → '3'."""
+    from loongcollector_spark.sources.sinks import FLUSHERS
+
+    routed = spark.createDataFrame(
+        _EDGE_ROWS, "sink string, text string, n long, t string"
+    ).select("sink", "text", "n", F.to_timestamp("t").alias("ts"))
+    if fmt == "prom":
+        blobs = serialize_remote_write(
+            routed.withColumn("ms", F.unix_millis("ts")),
+            metric_name="m",
+            value_key="n",
+            time_ms_key="ms",
+            label_keys=["text", "n"],
+        ).collect()
+        got = [
+            (s["labels"]["text"], s["labels"]["n"])
+            for b in blobs
+            for s in decode_write_request(bytes(b.value))
+        ]
+    else:
+        path = str(tmp_path / fmt)
+        FLUSHERS[fmt].write(routed, path, "job")
+        decoded = FLUSHERS[fmt].decode(spark.read.parquet(path)).collect()
+        got = [_TEXT_N[fmt](r) for r in decoded]
+    assert sorted(got) == [("", ""), ("", "3"), ("héllo 世界", "7"), ("line\n", "")]
