@@ -53,17 +53,15 @@ def stable_order(
     (test/engine/verify/log_order.go:58-77)."""
     # one F.expr: the Window/Column-method build costs ~45 py4j
     # round-trips (operators/parse.py's build rule)
-    over = (
-        f"PARTITION BY {sqltext.col_ref(conv_col)} "
-        f"ORDER BY {sqltext.col_ref(order_col)}"
-    )
+    q = sqltext.quote
+    over = f"PARTITION BY {q(conv_col)} ORDER BY {q(order_col)}"
     return df.withColumn("seq", F.expr(f"row_number() OVER ({over}) - 1"))
 
 
 def group_count(df: DataFrame, keys: list[str]) -> DataFrame:
     """The canonical value-group aggregate
     (aggregator_content_value_group.go:66-76 → groupBy(keys).count)."""
-    return df.groupBy(*keys).agg(F.count("*").alias("cnt"))
+    return df.groupBy(*map(sqltext.col, keys)).agg(F.count("*").alias("cnt"))
 
 
 def per_conversation_stats(
@@ -79,14 +77,12 @@ def per_conversation_stats(
     pass ``ts_col=None`` to skip the first/last bounds."""
     aggs = [
         F.count("*").alias("n_turns"),
-        F.max(order_col).alias("max_turn_idx"),
+        F.max(sqltext.col(order_col)).alias("max_turn_idx"),
     ]
     if ts_col is not None:
-        aggs += [
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
-        ]
-    return df.groupBy(conv_col).agg(*aggs)
+        ts = sqltext.col(ts_col)
+        aggs += [F.min(ts).alias("first_ts"), F.max(ts).alias("last_ts")]
+    return df.groupBy(sqltext.col(conv_col)).agg(*aggs)
 
 
 def pack_groups(
@@ -114,25 +110,22 @@ def pack_groups(
     that would overflow (aggregator_base.go:107), so a pack only
     exceeds the byte cap when a single row alone does.
     """
+    keys = [sqltext.col(c) for c in group_cols]
     if max_bytes is None:
-        w = W.partitionBy(*group_cols).orderBy(order_col)
+        w = W.partitionBy(*keys).orderBy(sqltext.col(order_col))
         seq = F.floor((F.row_number().over(w) - 1) / max_log_count).cast("long")
         return df.withColumn(
             pack_col,
-            F.concat_ws(
-                "-",
-                F.lit(pack_prefix),
-                *[F.col(c) for c in group_cols],
-                seq.cast("string"),
-            ),
+            F.concat_ws("-", F.lit(pack_prefix), *keys, seq.cast("string")),
         )
 
     import pandas as pd
 
     out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+        f"{sqltext.quote(f.name)} {f.dataType.simpleString()}"
+        for f in df.schema.fields
     )
-    out_schema = f"{out_fields}, `{pack_col}` string"
+    out_schema = f"{out_fields}, {sqltext.quote(pack_col)} string"
     gcols = list(group_cols)
 
     def assign(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -155,7 +148,7 @@ def pack_groups(
         pdf[pack_col] = [f"{pack_prefix}-{key}-{s}" for s in seqs]
         return pdf
 
-    return df.groupBy(*gcols).applyInPandas(assign, schema=out_schema)
+    return df.groupBy(*keys).applyInPandas(assign, schema=out_schema)
 
 
 def shard_repartition(
@@ -169,7 +162,7 @@ def shard_repartition(
     values → bucket): ``repartition(n, xxhash64(concat_ws(...)))``.
     Co-locates all rows of a conversation on one partition so per-conv
     windows/collects never shuffle twice."""
-    h = F.xxhash64(F.concat_ws(connector, *[F.col(k) for k in keys]))
+    h = F.xxhash64(F.concat_ws(connector, *map(sqltext.col, keys)))
     return df.repartition(shard_count, h)
 
 
@@ -231,12 +224,15 @@ def sessionize(
     (Log-pipeline staple; not in the reference — SURVEY §2.11 addition
     for transcript/agent-session analytics.)
     """
-    w = W.partitionBy(*key_cols).orderBy(ts_col, *(tie_break_cols or []))
-    prev = F.lag(F.col(ts_col)).over(w)
+    ts = sqltext.col(ts_col)
+    w = W.partitionBy(*map(sqltext.col, key_cols)).orderBy(
+        ts, *map(sqltext.col, tie_break_cols or [])
+    )
+    prev = F.lag(ts).over(w)
     # NTZ → timestamp → long (epoch seconds); 1:1 under the UTC session
     secs = lambda c: c.cast("timestamp").cast("long")  # noqa: E731
     is_break = (
-        prev.isNull() | (secs(F.col(ts_col)) - secs(prev) > gap_seconds)
+        prev.isNull() | (secs(ts) - secs(prev) > gap_seconds)
     ).cast("long")
     return df.withColumn(session_col, F.sum(is_break).over(w) - 1)
 

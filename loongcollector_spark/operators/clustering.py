@@ -41,6 +41,8 @@ from typing import Iterator, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import quote
+
 __all__ = [
     "kmeans_fit",
     "kmeans_assign",
@@ -75,7 +77,7 @@ def _assign_numpy(
             return "double"
         return df.schema[c].dataType.simpleString()
 
-    schema = ", ".join(f"`{c}` {_typ(c)}" for c in out_cols)
+    schema = ", ".join(f"{quote(c)} {_typ(c)}" for c in out_cols)
     C = np.asarray(centroids, dtype=np.float64)  # noqa: N806 (k × dim)
 
     def assign(batches: Iterator) -> Iterator:

@@ -140,9 +140,9 @@ def dictionary(
     """
     if mode not in _DICT_MAP_MODES:
         raise ValueError(f"dict_map mode must be one of {_DICT_MAP_MODES}, got {mode!r}")
-    ck = sqltext.col_ref(dim_key or source_key)
+    ck = sqltext.quote(dim_key or source_key)
     sel = dim.selectExpr(
-        f"{ck} AS k", f"{sqltext.col_ref(dim_value or dest_key)} AS v", f"hash({ck}) AS h"
+        f"{ck} AS k", f"{sqltext.quote(dim_value or dest_key)} AS v", f"hash({ck}) AS h"
     ).where("k IS NOT NULL")
     key_t, val_t, _ = (f.dataType for f in sel.schema.fields)
     if not isinstance(key_t, _KEY_TYPES) or not isinstance(val_t, _VALUE_TYPES):
@@ -152,7 +152,7 @@ def dictionary(
         )
     rows = _smallest_keys(sel, int(max_dict_size)) if max_dict_size else sel.collect()
     entries = _entries(rows)
-    key = f"CAST({sqltext.col_ref(source_key)} AS {key_t.simpleString()})"
+    key = f"CAST({sqltext.quote(source_key)} AS {key_t.simpleString()})"
 
     def lookup(df: DataFrame) -> DataFrame:
         mapped = _lookup(entries, key_t, val_t, key)
@@ -161,12 +161,12 @@ def dictionary(
         if dest_key in df.columns:
             if mode == "fill":
                 # existing non-null dest wins
-                mapped = F.coalesce(F.col(dest_key), mapped)
+                mapped = F.coalesce(sqltext.col(dest_key), mapped)
             elif not handle_missing:
                 # overwrite-on-HIT only: a dictionary miss leaves the
                 # event unchanged (processor_dict_map.go:175-186), it
                 # does not null out the existing value
-                mapped = F.coalesce(mapped, F.col(dest_key))
+                mapped = F.coalesce(mapped, sqltext.col(dest_key))
         return df.withColumn(dest_key, mapped)
 
     return lookup
@@ -238,13 +238,13 @@ def string_replace(
     dest_key: str | None = None,
 ) -> DataFrame:
     """Regex/const replacement (processor_string_replace.go:30-47)."""
-    dest = dest_key or source_key
+    dest, src = dest_key or source_key, sqltext.col(source_key)
     if method == "const":
-        col = F.replace(F.col(source_key), F.lit(match), F.lit(replace_string))
+        col = F.replace(src, F.lit(match), F.lit(replace_string))
     elif method == "unquote":
-        col = F.regexp_replace(F.col(source_key), r'^"(.*)"$', r"$1")
+        col = F.regexp_replace(src, r'^"(.*)"$', r"$1")
     else:
-        col = F.regexp_replace(F.col(source_key), match, replace_string)
+        col = F.regexp_replace(src, match, replace_string)
     return df.withColumn(dest, col)
 
 
@@ -268,7 +268,7 @@ def desensitize(
     package's one per-row-Python path (VERDICT r1/r2 note). Patterns
     that can match the empty string go to the ``re.sub``-callback
     twin :func:`_desensitize_md5_resub` instead."""
-    col = F.col(source_key)
+    col = sqltext.col(source_key)
     if method == "md5":
         import re as _re
 
@@ -340,21 +340,22 @@ def _desensitize_md5_resub(df: DataFrame, source_key: str, regex: str) -> DataFr
         )
 
     # evaluate-once rule: see the operators/parse.py module docstring
-    return df.withColumn(source_key, mask.asNondeterministic()(F.col(source_key)))
+    return df.withColumn(source_key, mask.asNondeterministic()(sqltext.col(source_key)))
 
 
 def md5_field(df: DataFrame, source_key: str, md5_key: str) -> DataFrame:
     """processor_md5.go:26-32."""
-    return df.withColumn(md5_key, F.md5(F.col(source_key)))
+    return df.withColumn(md5_key, F.md5(sqltext.col(source_key)))
 
 
 def base64_encode(df: DataFrame, source_key: str, dest_key: str | None = None) -> DataFrame:
-    return df.withColumn(dest_key or source_key, F.base64(F.col(source_key).cast("binary")))
+    raw = sqltext.col(source_key).cast("binary")
+    return df.withColumn(dest_key or source_key, F.base64(raw))
 
 
 def base64_decode(df: DataFrame, source_key: str, dest_key: str | None = None) -> DataFrame:
     return df.withColumn(
-        dest_key or source_key, F.unbase64(F.col(source_key)).cast("string")
+        dest_key or source_key, F.unbase64(sqltext.col(source_key)).cast("string")
     )
 
 
@@ -362,7 +363,7 @@ def pack_json(
     df: DataFrame, source_keys: list[str], dest_key: str, *, keep: bool = True
 ) -> DataFrame:
     """Pack keys into one JSON object (processor_packjson.go:26-33)."""
-    out = df.withColumn(dest_key, F.to_json(F.struct(*[F.col(k) for k in source_keys])))
+    out = df.withColumn(dest_key, F.to_json(F.struct(*map(sqltext.col, source_keys))))
     if not keep:
         out = out.drop(*source_keys)
     return out
@@ -389,7 +390,7 @@ def appender(
     v = value_template
     for name, const in (constants or {}).items():
         v = v.replace("{{" + name + "}}", const)
-    appended = F.concat(F.coalesce(F.col(key), F.lit("")), F.lit(v))
+    appended = F.concat(F.coalesce(sqltext.col(key), F.lit("")), F.lit(v))
     if not sort_labels:
         return df.withColumn(key, appended)
     parts = F.split(appended, r"\|")
@@ -420,13 +421,13 @@ def drop_last_key(
     keeping it only on rows that failed to parse)."""
     if drop_key not in df.columns:
         return df
-    present = [F.col(k).isNotNull() for k in include if k in df.columns]
+    present = [sqltext.col(k).isNotNull() for k in include if k in df.columns]
     if not present:
         return df
     cond = present[0]
     for c in present[1:]:
         cond = cond | c
-    return df.withColumn(drop_key, F.when(~cond, F.col(drop_key)))
+    return df.withColumn(drop_key, F.when(~cond, sqltext.col(drop_key)))
 
 
 _IV_AUTO = "auto"
@@ -466,7 +467,7 @@ def encrypt_fields(
     iv_hex = _resolve_iv(iv_hex, mode)
     for k in source_keys:
         args = [
-            F.col(k).cast("binary"),
+            sqltext.col(k).cast("binary"),
             F.unhex(F.lit(key_hex)),
             F.lit(mode),
             F.lit("DEFAULT"),
@@ -492,7 +493,7 @@ def decrypt_fields(
     IV the reference layout stripped, then JVM ``aes_decrypt``."""
     iv_hex = _resolve_iv(iv_hex, mode)
     for k in source_keys:
-        data = F.unhex(F.col(k))
+        data = F.unhex(sqltext.col(k))
         if iv_hex is not None and mode == "CBC":
             data = F.concat(F.unhex(F.lit(iv_hex)), data)
         df = df.withColumn(
@@ -517,16 +518,16 @@ def log_to_metric(
     labels = F.concat_ws(
         "|",
         *[
-            F.concat_ws("#$#", F.lit(k), F.col(k).cast("string"))
+            F.concat_ws("#$#", F.lit(k), sqltext.col(k).cast("string"))
             for k in sorted(label_keys)
         ],
     )
     kv = F.create_map(
-        *[c for k in value_keys for c in (F.lit(k), F.col(k).cast("double"))]
+        *[c for k in value_keys for c in (F.lit(k), sqltext.col(k).cast("double"))]
     )
     name_val = F.explode(kv).alias("metric_name", "metric_value")
     return df.select(
-        F.col(time_key).alias("__time__"),
+        sqltext.col(time_key).alias("__time__"),
         labels.alias("__labels__"),
         name_val,
     )
@@ -547,4 +548,4 @@ def pick_keys(
         cols = [c for c in cols if c in include]
     if exclude:
         cols = [c for c in cols if c not in exclude]
-    return df.select(*cols)
+    return df.selectExpr(*map(sqltext.quote, cols))

@@ -24,6 +24,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import sqltext
+
 __all__ = [
     "filter_regex",
     "filter_key_regex",
@@ -41,10 +43,10 @@ def filter_regex(
 ) -> DataFrame:
     """Keep row iff every Include (key,regex) matches and no Exclude
     does (processor_filter_regex.go:113). NULL fields fail Include."""
-    conds = [F.rlike(df[k], F.lit(pat)) for k, pat in (include or {}).items()]
+    conds = [F.rlike(sqltext.col(k), F.lit(p)) for k, p in (include or {}).items()]
     conds += [
-        ~F.coalesce(F.rlike(df[k], F.lit(pat)), F.lit(False))
-        for k, pat in (exclude or {}).items()
+        ~F.coalesce(F.rlike(sqltext.col(k), F.lit(p)), F.lit(False))
+        for k, p in (exclude or {}).items()
     ]
     return df.filter(reduce(operator.and_, conds)) if conds else df
 
@@ -62,7 +64,7 @@ def filter_key_regex(
     if exclude:
         exc = re.compile(exclude)
         cols = [c for c in cols if not exc.fullmatch(c)]
-    return df.select(*cols)
+    return df.selectExpr(*map(sqltext.quote, cols))
 
 
 def compile_condition_tree(node: dict[str, Any]) -> Column:
@@ -80,20 +82,12 @@ def compile_condition_tree(node: dict[str, Any]) -> Column:
     if "operator" in node:
         op = node["operator"].lower()
         kids = [compile_condition_tree(c) for c in node["operands"]]
-        if op == "and":
-            out = kids[0]
-            for k in kids[1:]:
-                out = out & k
-            return out
-        if op == "or":
-            out = kids[0]
-            for k in kids[1:]:
-                out = out | k
-            return out
+        if op in ("and", "or"):
+            return reduce(operator.and_ if op == "and" else operator.or_, kids)
         if op == "not":
             return ~kids[0]
         raise ValueError(f"unknown operator {op!r}")
-    return F.coalesce(F.col(node["key"]).rlike(node["exp"]), F.lit(False))
+    return F.coalesce(sqltext.col(node["key"]).rlike(node["exp"]), F.lit(False))
 
 
 def filter_expression(df: DataFrame, tree: dict[str, Any]) -> DataFrame:
@@ -111,12 +105,12 @@ _RELATIONS = {
 def _case_condition(case: dict[str, Any]) -> Column:
     logic = case.get("logical_operator", "and").lower()
     conds = [
-        _RELATIONS[f.get("relation", "equals").lower()](F.col(f["key"]), f["value"])
+        _RELATIONS[f.get("relation", "equals").lower()](
+            sqltext.col(f["key"]), f["value"]
+        )
         for f in case["fields"]
     ]
-    out = conds[0]
-    for c in conds[1:]:
-        out = (out & c) if logic == "and" else (out | c)
+    out = reduce(operator.and_ if logic == "and" else operator.or_, conds)
     return F.coalesce(out, F.lit(False))
 
 
@@ -150,13 +144,10 @@ def fields_with_condition(
             branch = F.lit(v) if v is not None else F.lit(None).cast("string")
             chain = F.when(cond, branch) if chain is None else chain.when(cond, branch)
         if k in df.columns:
-            chain = chain.otherwise(F.col(k))
+            chain = chain.otherwise(sqltext.col(k))
         out = out.withColumn(k, chain)
     if drop_if_not_match and conds:
-        any_match = conds[0]
-        for c in conds[1:]:
-            any_match = any_match | c
-        out = out.filter(any_match)
+        out = out.filter(reduce(operator.or_, conds))
     return out
 
 
@@ -176,7 +167,8 @@ def rate_limit(
     "first N by arrival")."""
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(*fields, F.window(F.col(ts_col), window)).orderBy(ts_col)
+    ts = sqltext.col(ts_col)
+    w = W.partitionBy(*map(sqltext.col, fields), F.window(ts, window)).orderBy(ts)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= limit)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import sqltext
+
 __all__ = ["ip_to_long", "geoip_enrich", "cloud_meta_tags", "CLOUD_META_KEYS"]
 
 # pkg/helper/platformmeta/interface.go:18-25 key set
@@ -72,18 +74,18 @@ def geoip_enrich(
     unmatched or malformed IPs keep NULLs (the reference appends
     nothing; a fixed schema's analog of an absent key)."""
     sel = geo_dim.select(
-        F.col(start_col).alias("__gs"),
-        F.col(end_col).alias("__ge"),
-        *[F.col(f).alias(f"__g_{f}") for f in fields],
+        sqltext.col(start_col).alias("__gs"),
+        sqltext.col(end_col).alias("__ge"),
+        *[sqltext.col(f).alias(f"__g_{f}") for f in fields],
     )
-    ipl = ip_to_long(F.col(source_key))
+    ipl = ip_to_long(sqltext.col(source_key))
     joined = df.withColumn("__ipl", ipl).join(
         F.broadcast(sel),
         (F.col("__ipl") >= F.col("__gs")) & (F.col("__ipl") <= F.col("__ge")),
         "left",
     )
     joined = joined.withColumns(
-        {f"{source_key}_{f}_": F.col(f"__g_{f}") for f in fields}
+        {f"{source_key}_{f}_": sqltext.col(f"__g_{f}") for f in fields}
     )
     return joined.drop("__ipl", "__gs", "__ge", *[f"__g_{f}" for f in fields])
 

@@ -143,10 +143,10 @@ def _apply_unmatch_policy(
             drop.append(source_key)
         else:
             # the source as the parsed columns leave it (a key may name it)
-            src = cols[source_key] if source_key in cols else F.col(source_key)
+            src = cols[source_key] if source_key in cols else sqltext.col(source_key)
             cols[source_key] = F.when(~matched, src)
     for k, t in (casts or {}).items():
-        cols[k] = (cols[k] if k in cols else F.col(k)).cast(t)
+        cols[k] = (cols[k] if k in cols else sqltext.col(k)).cast(t)
     out = df.withColumns(cols) if cols else df
     return out.drop(*drop) if drop else out
 
@@ -193,7 +193,7 @@ def _match_groups(
         search = regex
         anchored = f"^(?s:.*?)(?:{regex})(?s:.*)$"
     template = "\x02" + "\x01".join(f"${g}" for g in groups)
-    src = sqltext.col_ref(source)
+    src = sqltext.quote(source)
     rep = f"regexp_replace({src}, {_RE}, {_T})"
     parts = f"split(substring({rep}, 2), chr(1))"
     # the size check guards against captured values holding the
@@ -236,7 +236,7 @@ def parse_regex(
     semantics); unmatched rows get NULL keys and follow the unmatch
     policy flags.
     """
-    src = df[source_key]
+    src = sqltext.col(source_key)
     casts = _casts(types or {})
     # whole-line fast path (reference: Regex == '(.*)') — must honor
     # the same policy flags and type casts as the regex paths: a NULL
@@ -329,7 +329,7 @@ def parse_grok(
 
     # evaluate-once rule: see the module docstring
     grok_extract = grok_extract.asNondeterministic()
-    out = df.withColumn(_P, grok_extract(F.col(source_key)))
+    out = df.withColumn(_P, grok_extract(sqltext.col(source_key)))
     return _apply_unmatch_policy(
         out,
         {k: F.expr(f"{_P}.{sqltext.quote(k)}") for k in all_keys},
@@ -381,7 +381,7 @@ def parse_json(
 
     # evaluate-once rule: see the module docstring
     flatten = flatten.asNondeterministic()
-    out = df.withColumn(dest_key, flatten(F.col(source_key)))
+    out = df.withColumn(dest_key, flatten(sqltext.col(source_key)))
     parsed = F.expr(sqltext.quote(dest_key))
     out = _apply_unmatch_policy(
         out, {}, parsed.isNotNull(), source_key, keep_source, discard_unmatched
@@ -399,7 +399,7 @@ def parse_json_typed(
     Preferred at scale when the JSON shape is declared in the pipeline
     config — Catalyst prunes unread subfields from the parse.
     """
-    return df.withColumn(dest_key, F.from_json(F.col(source_key), schema))
+    return df.withColumn(dest_key, F.from_json(sqltext.col(source_key), schema))
 
 
 def parse_delimiter(
@@ -450,7 +450,7 @@ def parse_delimiter(
         fields = [f"{sqltext.quote(k)} string" for k in keys]
         schema = ", ".join([*fields, f"{_CORRUPT} string"])
         parsed = F.from_csv(
-            F.concat(F.col(source_key), F.lit(separator + end)),
+            F.concat(sqltext.col(source_key), F.lit(separator + end)),
             F.lit(schema),
             {
                 "sep": separator,
@@ -487,7 +487,8 @@ def parse_delimiter(
     # SplitN semantics: keep the tail unsplit past the last column we
     # can land it in (limit = keys + expands, +1 for the remainder)
     limit = n + n_extra + (0 if n_extra else 1)
-    out = df.withColumn(_P, F.split(F.col(source_key), re.escape(separator), limit))
+    parts = F.split(sqltext.col(source_key), re.escape(separator), limit)
+    out = df.withColumn(_P, parts)
     # get (not [i]): out-of-range reads are NULL, not an ANSI
     # ArrayIndexOutOfBounds error, giving the partial-assign semantics
     cols = {k: f"get({_P}, {i})" for i, k in enumerate(keys)}
@@ -518,12 +519,8 @@ def parse_keyvalue(
 ) -> DataFrame:
     """``a=1 b=2`` → map (processor_split_key_value analog) via JVM
     ``str_to_map`` — fully codegen'd, no Python."""
-    out = df.withColumn(
-        dest_key,
-        F.str_to_map(
-            F.col(source_key), F.lit(re.escape(pair_separator)), F.lit(re.escape(kv_separator))
-        ),
-    )
+    seps = [F.lit(re.escape(pair_separator)), F.lit(re.escape(kv_separator))]
+    out = df.withColumn(dest_key, F.str_to_map(sqltext.col(source_key), *seps))
     if keys:
         kv = F.expr(sqltext.quote(dest_key))
         out = out.withColumns({k: kv[k] for k in keys})
@@ -542,7 +539,7 @@ def split_log_string(
     dest = dest_key or source_key
     out = df.withColumn(
         dest,
-        F.explode_outer(F.split(F.col(source_key), re.escape(separator))),
+        F.explode_outer(F.split(sqltext.col(source_key), re.escape(separator))),
     )
     return out
 
@@ -573,51 +570,45 @@ def merge_multiline(
     running-count window (block id = cumulative boundary count) +
     ordered ``collect_list`` — distributed, no Python.
     """
-    from pyspark.sql import Window as W
-
     modes = [p is not None for p in (start_pattern, continue_pattern, end_pattern)]
     if sum(modes) != 1:
         raise ValueError("exactly one of start/continue/end pattern required")
     dest = dest_key or source_key
-    gcols = list(group_cols)
-    w = W.partitionBy(*gcols).orderBy(order_col)
+    keys = list(group_cols)
+    gcols = [sqltext.col(c) for c in keys]
+    src, order = sqltext.col(source_key), sqltext.col(order_col)
+    w = W.partitionBy(*gcols).orderBy(order)
     if start_pattern is not None:
-        boundary = F.col(source_key).rlike(start_pattern)
-        blk = F.sum(boundary.cast("long")).over(w)
+        boundary = src.rlike(start_pattern)
     elif continue_pattern is not None:
-        boundary = ~F.col(source_key).rlike(continue_pattern)
-        blk = F.sum(boundary.cast("long")).over(w)
+        boundary = ~src.rlike(continue_pattern)
     else:
         # end mode: the block id increments AFTER an end line — count
         # end-matches over strictly-preceding rows
-        prev_end = F.lag(
-            F.col(source_key).rlike(end_pattern).cast("long"), 1, 0
-        ).over(w)
-        blk = F.sum(prev_end).over(w)
-    blocks = df.withColumn("__blk", blk)
+        boundary = F.lag(src.rlike(end_pattern), 1, False).over(w)
+    blocks = df.withColumn("__blk", F.sum(boundary.cast("long")).over(w))
     # order within a block is restored by sorting (order_col, line)
     # structs — struct ordering is by first field, so the concat is
     # deterministic regardless of collect_list arrival order
+    first_key = F.struct(order, src)
     sorted_lines = F.transform(
-        F.array_sort(F.collect_list(F.struct(F.col(order_col), F.col(source_key)))),
-        lambda s: s[source_key],
+        F.array_sort(F.collect_list(first_key)), lambda s: s[source_key]
     )
     # the merged event inherits every other column from its FIRST line
     # (deterministic min_by over (order, line) — the reference merges
     # later lines' CONTENT into the first event, keeping its fields);
     # without this the groupBy would silently drop enrichment columns
-    first_key = F.struct(F.col(order_col), F.col(source_key))
     carried = [
         c
         for c in df.columns
-        if c not in set(gcols) | {source_key, order_col, dest}
+        if c not in set(keys) | {source_key, order_col, dest}
     ]
     merged = (
         blocks.groupBy(*gcols, "__blk")
         .agg(
             F.concat_ws(joiner, sorted_lines).alias(dest),
-            F.min(order_col).alias(order_col),
-            *[F.min_by(F.col(c), first_key).alias(c) for c in carried],
+            F.min(order).alias(order_col),
+            *[F.min_by(sqltext.col(c), first_key).alias(c) for c in carried],
         )
         .drop("__blk")
     )
@@ -635,7 +626,7 @@ def parse_anchor(
     between the first occurrence of ``s`` and the next ``e`` (empty
     start ⇒ line begin; empty stop ⇒ line end). JVM regex, one
     extraction per anchor, all in one projection."""
-    src = F.col(source_key)
+    src = sqltext.col(source_key)
     fields = {}
     for a in anchors:
         start = re.escape(a.get("start", ""))
@@ -673,12 +664,13 @@ def split_log_regex(
     accumulator array per line (O(lines²) per blob, no codegen;
     NOTES.md HOF lesson)."""
     dest = dest_key or source_key
-    carry = [c for c in df.columns if c != source_key]
+    names = [c for c in df.columns if c != source_key]
+    carry = [sqltext.col(c) for c in names]
     base = df.withColumn("__rid", F.monotonically_increasing_id())
     lines = base.select(
         "__rid",
         *carry,
-        F.posexplode(F.split(F.col(source_key), "\n")).alias("__pos", "__line"),
+        F.posexplode(F.split(sqltext.col(source_key), "\n")).alias("__pos", "__line"),
     )
     w = W.partitionBy("__rid").orderBy("__pos")
     blk = F.sum(F.col("__line").rlike(start_pattern).cast("long")).over(w)
@@ -699,14 +691,14 @@ def split_log_regex(
                     lambda s: s["__line"],
                 ),
             ).alias(dest),
-            *[F.first(c).alias(c) for c in carry],
+            *[F.first(c).alias(n) for c, n in zip(carry, names)],
         )
         .drop("__blk")
     )
     # no orderBy: a DataFrame is an unordered multiset and a global
     # sort here would cost a full exchange at scale; impose order
     # downstream (stable_order) where a consumer needs it
-    return merged.select(*carry, dest)
+    return merged.select(*carry, sqltext.col(dest))
 
 
 def parse_apsara(
@@ -724,7 +716,7 @@ def parse_apsara(
     keep the LAST value (map semantics; deviation from the reference's
     duplicate-key list noted in SURVEY §2.2). All JVM expressions.
     """
-    parts = F.split(F.col(source_key), "\t")
+    parts = F.split(sqltext.col(source_key), "\t")
     strip = lambda c: F.regexp_replace(c, r"^\[|\]$", "")  # noqa: E731
     matched = (F.size(parts) >= 4) & F.element_at(parts, 1).startswith("[")
     kvs = F.slice(parts, 5, F.greatest(F.size(parts) - 4, F.lit(0)))
@@ -777,10 +769,10 @@ def parse_timestamp(
     milliseconds / microseconds; optional source-timezone shift."""
     if epoch_unit:
         col = F.timestamp_seconds(
-            F.col(source_key).cast("double") / _EPOCH_FACTORS[epoch_unit]
+            sqltext.col(source_key).cast("double") / _EPOCH_FACTORS[epoch_unit]
         )
     else:
-        col = F.to_timestamp(F.col(source_key), fmt)
+        col = F.to_timestamp(sqltext.col(source_key), fmt)
     if source_timezone:
         col = F.to_utc_timestamp(col, source_timezone)
     return df.withColumn(dest_key, col)

@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import sqltext
+
 __all__ = [
     "RouterRule",
     "RouterConfig",
@@ -79,7 +81,7 @@ def route(df: DataFrame, cfg: RouterConfig) -> DataFrame:
     allocation per row in the generated code.
     """
     chain: Column | None = None
-    src = df[cfg.source_key]
+    src = sqltext.col(cfg.source_key)
     for r in cfg.rules:
         # F.rlike and plain-value when branches: a Column method costs
         # ~11 py4j round-trips (operators/parse.py's build rule)
@@ -100,10 +102,8 @@ def route(df: DataFrame, cfg: RouterConfig) -> DataFrame:
     for s in cfg.unconditional_sinks:
         arr = F.concat(arr, F.array(F.lit(s)))
     for key, value, s in cfg.tag_copy_sinks:
-        arr = F.concat(
-            arr,
-            F.when(F.col(key) == F.lit(value), F.array(F.lit(s))).otherwise(empty),
-        )
+        copy = F.when(sqltext.col(key) == F.lit(value), F.array(F.lit(s)))
+        arr = F.concat(arr, copy.otherwise(empty))
     # nulls in slot 0 = dropped-dismatch rows; array_compact removes
     # them and explode drops rows whose array became empty
     return df.withColumn("sink", F.explode(F.array_compact(arr)))

@@ -36,6 +36,7 @@ from typing import Any, Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions import sqltext
 from .operators import aggregate as agg_ops
 from .operators import enrich, filter as flt, geo, otel, parse, route as rt
 from .plans.metrics import MetricsCollector, observe_rows
@@ -125,7 +126,8 @@ def _sessionize_counts(
 ) -> DataFrame:
     keys = list(key_cols)
     s = agg_ops.sessionize(df, keys, **params)
-    return s.groupBy(*keys, "session_id").agg(F.count("*").alias("n_events"))
+    by = [*map(sqltext.col, keys), "session_id"]
+    return s.groupBy(*by).agg(F.count("*").alias("n_events"))
 
 
 # name → callable(routed, **params): the spec's ``aggregates`` types
@@ -149,7 +151,9 @@ class Pipeline:
     once (:func:`enrich.dictionary`): the dictionary is a snapshot taken
     when the ``Pipeline`` is built, so reloading a dimension means
     building a new ``Pipeline``. The spec is read only here, and not
-    modified.
+    modified. Every key it names is a flat, literal column name
+    (``functions/sqltext.py``): ``host.name`` is one column, not a
+    struct field, in every processor, the router and the aggregates.
 
     :meth:`run` only applies the bound steps, processors then router,
     and starts no Spark job of its own; each step still builds its
@@ -220,7 +224,7 @@ class Pipeline:
         rows out are counted during that action (``observe_rows``), not
         by extra ``count()`` jobs that would re-execute the whole
         pipeline; one ``metrics.add("pipeline", rows_in, rows_out,
-        write_sec)`` records them, appended to *metrics_path* if given.
+        write_sec)`` records them, written to *metrics_path* if given.
         Returns the routed frame (with the counters attached).
 
         A checkpointed run (``plans.checkpoint.run_with_checkpoint``)

@@ -4,7 +4,8 @@ Mirrors the in/out event counters every reference component keeps
 (core/collection_pipeline/CollectionPipeline.h:108-117,
 core/collection_pipeline/route/Router.cpp:38-46, runner counters
 core/runner/ProcessorRunner.cpp:94-103): each pipeline stage records
-rows-in/rows-out; the collected records append to a metrics table.
+rows-in/rows-out; each job's records replace that job's rows in a
+metrics table.
 
 Spark design: the counts are never taken by extra ``count()`` jobs,
 which would re-execute the pipeline: :func:`observe_rows` counts
@@ -18,12 +19,12 @@ already committed, since no action then runs.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import astuple, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["StageMetrics", "MetricsCollector", "observe_rows"]
+__all__ = ["StageMetrics", "MetricsCollector", "observe_rows", "read_metrics"]
 
 
 def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -39,8 +40,14 @@ def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
 
 
 METRICS_SCHEMA = (
-    "job_id string, stage string, rows_in long, rows_out long, wall_sec double"
+    "stage string, rows_in long, rows_out long, wall_sec double, job_id string"
 )
+
+
+def read_metrics(spark: SparkSession, path: str) -> DataFrame:
+    """The metrics table, with ``job_id`` a string even where the
+    ``job_id=`` directories hold only digits (``"007"`` stays)."""
+    return spark.read.schema(METRICS_SCHEMA).parquet(path)
 
 
 @dataclass
@@ -55,22 +62,22 @@ class StageMetrics:
 class MetricsCollector:
     job_id: str
     records: list[StageMetrics] = field(default_factory=list)
-    # records[:_written] are already in the metrics table
-    _written: int = field(default=0, repr=False)
 
     def add(self, stage: str, rows_in: int, rows_out: int, wall_sec: float) -> None:
         self.records.append(StageMetrics(stage, rows_in, rows_out, wall_sec))
 
     def write(self, spark: SparkSession, path: str) -> None:
-        """Append the records added since the last ``write`` to the
-        metrics table, so writing after every run never repeats a row
-        (production: Iceberg append in the same commit cadence as data,
-        so reruns can't double-count — SURVEY.md §7.2 hard part (d))."""
-        rows = [
-            (self.job_id, r.stage, r.rows_in, r.rows_out, r.wall_sec)
-            for r in self.records[self._written :]
-        ]
-        if rows:
-            df = spark.createDataFrame(rows, METRICS_SCHEMA)
-            df.write.mode("append").parquet(path)
-        self._written = len(self.records)
+        """Write this job's records to the metrics table, replacing any
+        rows its job id already has there (a ``job_id=`` partition,
+        dynamic overwrite, as ``streaming.stream._write_batches``
+        replaces a replayed batch id): writing after every run, or
+        rerunning the job, never counts a run twice (SURVEY.md §7.2
+        hard part (d))."""
+        rows = [(*astuple(r), self.job_id) for r in self.records]
+        (
+            spark.createDataFrame(rows, METRICS_SCHEMA)
+            .write.partitionBy("job_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(path)
+        )

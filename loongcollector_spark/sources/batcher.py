@@ -17,27 +17,24 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from ..functions.sqltext import col
+
 __all__ = ["batch_payloads", "text", "long0", "double0", "epoch_seconds"]
-
-
-def _col(name: str) -> Column:
-    # backticks: a dotted name ("host.name") is one column, not a field
-    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def text(name: str) -> Column:
     """``cast(c AS string)``, NULL → ''."""
-    return F.coalesce(_col(name).cast("string"), F.lit(""))
+    return F.coalesce(col(name).cast("string"), F.lit(""))
 
 
 def long0(name: str) -> Column:
     """``cast(c AS long)``, NULL → 0."""
-    return F.coalesce(_col(name).cast("long"), F.lit(0).cast("long"))
+    return F.coalesce(col(name).cast("long"), F.lit(0).cast("long"))
 
 
 def double0(name: str) -> Column:
     """``cast(c AS double)``, NULL → 0.0."""
-    return F.coalesce(_col(name).cast("double"), F.lit(0.0))
+    return F.coalesce(col(name).cast("double"), F.lit(0.0))
 
 
 def epoch_seconds(df: DataFrame, name: str) -> Column:
@@ -47,7 +44,7 @@ def epoch_seconds(df: DataFrame, name: str) -> Column:
     if isinstance(df.schema[name].dataType, NumericType):
         return long0(name)
     return F.coalesce(
-        F.unix_timestamp(_col(name).cast("timestamp")).cast("long"),
+        F.unix_timestamp(col(name).cast("timestamp")).cast("long"),
         F.lit(0).cast("long"),
     )
 

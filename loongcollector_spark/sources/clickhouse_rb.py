@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import protowire as _w
+from ..functions.sqltext import col
 from .batcher import batch_payloads, epoch_seconds
 
 __all__ = [
@@ -66,7 +67,7 @@ def serialize_clickhouse_rowbinary(
     """
     cols = doc_keys or [c for c in df.columns if c != ts_col]
     staged = df.select(
-        epoch_seconds(df, ts_col), F.to_json(F.struct(*[F.col(c) for c in cols]))
+        epoch_seconds(df, ts_col), F.to_json(F.struct(*map(col, cols)))
     )
     return batch_payloads(
         staged,

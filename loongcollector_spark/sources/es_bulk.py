@@ -19,17 +19,11 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import col
 from .batcher import batch_payloads
+from .sinks import format_string_col
 
 __all__ = ["decode_es_bulk", "serialize_es_bulk"]
-
-
-def _index_col(index_format: str):
-    """``%{col}`` format string → codegen concat Column (shared
-    renderer: sinks.format_string_col)."""
-    from .sinks import format_string_col
-
-    return format_string_col(index_format)
 
 
 def serialize_es_bulk(
@@ -48,7 +42,7 @@ def serialize_es_bulk(
     """
     cols = doc_keys or list(df.columns)
     staged = df.select(
-        _index_col(index_format), F.to_json(F.struct(*[F.col(c) for c in cols]))
+        format_string_col(index_format), F.to_json(F.struct(*map(col, cols)))
     )
 
     def item(idx, doc):

@@ -41,6 +41,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import col
 from ..operators.route import fanout_write, require_sink
 from .sls_pb import decode_loggroup, serialize_sls_loggroups
 
@@ -62,7 +63,7 @@ __all__ = [
 def serialize_json(df: DataFrame, dest: str = "value") -> DataFrame:
     """Row → JSON string of all columns (the stdout-flusher golden
     serializer; also the Kafka value serializer shape)."""
-    return df.select(F.to_json(F.struct(*df.columns)).alias(dest))
+    return df.select(F.to_json(F.struct(*map(col, df.columns))).alias(dest))
 
 
 def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -73,8 +74,9 @@ def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def format_string_col(fmt: str):
     """``%{col}`` format string → codegen concat Column (the
-    reference's fmtstr.FormatTopic semantics) — shared by the dynamic
-    kafka topic renderer and the ES ``_index`` renderer. NULL field
+    reference's fmtstr.FormatTopic semantics; *col* is a flat column
+    name, any text up to ``}``) — shared by the dynamic kafka topic
+    renderer and the ES ``_index`` renderer. NULL field
     values render as '' (concat NULL-propagates: one NULL field would
     otherwise null the WHOLE rendered topic and partitionBy would
     divert the row to __HIVE_DEFAULT_PARTITION__, invisible to every
@@ -83,10 +85,10 @@ def format_string_col(fmt: str):
 
     parts: list = []
     pos = 0
-    for m in _re.finditer(r"%\{(\w+)\}", fmt):
+    for m in _re.finditer(r"%\{([^}]+)\}", fmt):
         if m.start() > pos:
             parts.append(F.lit(fmt[pos : m.start()]))
-        parts.append(F.coalesce(F.col(m.group(1)).cast("string"), F.lit("")))
+        parts.append(F.coalesce(col(m.group(1)).cast("string"), F.lit("")))
         pos = m.end()
     if pos < len(fmt):
         parts.append(F.lit(fmt[pos:]))
@@ -115,7 +117,7 @@ def write_dynamic_topics(
     land in one task's files (the hash partitioner analog)."""
     out = df.withColumn("__topic", format_string_col(topic_format))
     if hash_keys:
-        out = out.repartition(n_partitions, *[F.col(k) for k in hash_keys])
+        out = out.repartition(n_partitions, *map(col, hash_keys))
     out.write.partitionBy("__topic").mode(mode).parquet(base_path)
 
 
@@ -335,7 +337,7 @@ def _loki_payloads(routed: DataFrame, job_id: str) -> DataFrame:
     lined = routed.select(
         F.col("sink"),
         ns.cast("long").alias("lc_ns"),
-        F.to_json(F.struct(*[F.col(c) for c in doc_cols])).alias("lc_line"),
+        F.to_json(F.struct(*map(col, doc_cols))).alias("lc_line"),
     )
     return serialize_loki_push(
         lined,

@@ -67,6 +67,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .functions import sqltext
 from .operators.parse import _M, _P, _match_groups
 
 __all__ = [
@@ -545,7 +546,7 @@ def _translate_tokens(toks: list[tuple[str, str]]) -> str:
             i += 1
             continue
         if kind == "qident":
-            out.append("`" + val.replace("`", "") + "`")
+            out.append(sqltext.quote(val))
             prev_kind = "value"
             i += 1
             continue
@@ -849,7 +850,7 @@ def _assign_parsed(
     """
     for name, value, present in targets:
         if name in df.columns:
-            old = F.col(name)
+            old = sqltext.col(name)
             if mode == "preserve":
                 col = F.when(old.isNotNull(), old).otherwise(value)
             else:
@@ -923,7 +924,7 @@ def _cmd_project(df: DataFrame, rest: str, ctx: _Ctx) -> DataFrame:
             name, expr = _split_assign(item)
             cols.append(_expr_col(expr).alias(name))
         else:
-            cols.append(F.col(_ident_of(item)))
+            cols.append(sqltext.col(_ident_of(item)))
     return df.select(*cols)
 
 
@@ -965,7 +966,7 @@ def _cmd_pack_fields(df: DataFrame, rest: str, ctx: _Ctx) -> DataFrame:
     if not cols:
         raise SPLError("pack-fields selected no columns")
     out = df.withColumn(
-        dest, F.to_json(F.struct(*[F.col(c) for c in cols]))
+        dest, F.to_json(F.struct(*map(sqltext.col, cols)))
     )
     if not flags.get("keep"):
         out = out.drop(*cols)
@@ -989,7 +990,7 @@ def _cmd_stats(df: DataFrame, rest: str, ctx: _Ctx) -> DataFrame:
     if not aggs:
         raise SPLError("stats needs at least one aggregate expression")
     if by_part:
-        keys = [F.col(_ident_of(c)) for c in _split_top_text(by_part)]
+        keys = [sqltext.col(_ident_of(c)) for c in _split_top_text(by_part)]
         return df.groupBy(*keys).agg(*aggs)
     return df.agg(*aggs)
 
@@ -1098,7 +1099,8 @@ def _cmd_parse_json(df: DataFrame, rest: str, ctx: _Ctx) -> DataFrame:
     src = _ident_of(rest)
     prefix = str(flags.get("prefix", ""))
     path = flags.get("path")
-    base = F.get_json_object(F.col(src), str(path)) if path else F.col(src)
+    base = sqltext.col(src)
+    base = F.get_json_object(base, str(path)) if path else base
     keys = ctx.known_keys.get(src) or _discover_keys(
         df, F.json_object_keys(base), ctx, f"parse-json {src}"
     )
@@ -1134,7 +1136,7 @@ def _cmd_parse_kv(df: DataFrame, rest: str, ctx: _Ctx) -> DataFrame:
     mode = str(flags.get("mode", "overwrite"))
     pair_rx = "[" + "".join(_java_rx_escape(c) for c in delims) + "]"
     kv_rx = _java_rx_escape(kv_sep)
-    parsed = F.str_to_map(F.col(src), F.lit(pair_rx), F.lit(kv_rx))
+    parsed = F.str_to_map(sqltext.col(src), F.lit(pair_rx), F.lit(kv_rx))
     keys = ctx.known_keys.get(src) or _discover_keys(
         df.select(parsed.alias("__m")), F.map_keys(F.col("__m")), ctx,
         f"parse-kv {src}",
@@ -1157,15 +1159,15 @@ def _cmd_parse_csv(df: DataFrame, rest: str, ctx: _Ctx) -> DataFrame:
     strict = bool(flags.get("strict", False))
     quote = flags.get("quote")
     if quote:
-        schema = ", ".join(f"`{k}` string" for k in keys)
+        schema = ", ".join(f"{sqltext.quote(k)} string" for k in keys)
         parsed = F.from_csv(
-            F.col(src), F.lit(schema), {"sep": delim, "quote": str(quote)}
+            sqltext.col(src), F.lit(schema), {"sep": delim, "quote": str(quote)}
         )
         targets = [
             (k, parsed.getField(k), parsed.isNotNull()) for k in keys
         ]
         return _assign_parsed(df, targets, "overwrite")
-    parts = F.split(F.col(src), _java_rx_escape(delim))
+    parts = F.split(sqltext.col(src), _java_rx_escape(delim))
     n = len(keys)
     if strict:
         ok = F.size(parts) == n

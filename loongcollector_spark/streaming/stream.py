@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import hashing
+from ..functions import hashing, sqltext
 from ..pipeline import Pipeline
 
 __all__ = [
@@ -215,7 +215,8 @@ def stateful_rate_limit(
     in_cols = stream_df.columns
     if out_schema is None:
         out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in stream_df.schema.fields
+            f"{sqltext.quote(f.name)} {f.dataType.simpleString()}"
+            for f in stream_df.schema.fields
         )
     state_schema = "tokens double, last_ts double"
 

@@ -66,3 +66,20 @@ def test_trailing_zscore_takes_no_block_count():
     from loongcollector_spark.operators.timeseries import trailing_zscore
 
     assert "blocks" not in inspect.signature(trailing_zscore).parameters
+
+
+def test_one_backtick_quoting_rule():
+    """Only ``functions/sqltext.py`` builds a backtick identifier: every
+    other source quotes a name through it, so the package has one rule
+    for how a key names a column."""
+    import pathlib
+
+    import loongcollector_spark
+
+    root = pathlib.Path(loongcollector_spark.__file__).parent
+    quoting = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if 'replace("`"' in p.read_text() or "replace('`'" in p.read_text()
+    )
+    assert quoting == ["functions/sqltext.py"]

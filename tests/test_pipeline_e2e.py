@@ -91,7 +91,7 @@ def test_config_pipeline_counts_and_fields(spark, sf_dir, tmp_path, pipe):
 def test_metrics_write_appends_each_record_once(spark, tmp_path):
     """Two ``run_and_write`` calls with one collector and one
     ``metrics_path`` leave one metrics row per call: each write
-    appends only the records added since the last."""
+    replaces the job's rows with all of its records."""
     from loongcollector_spark.sources.sinks import write_blackhole
 
     metrics = MetricsCollector("twice")
@@ -103,6 +103,38 @@ def test_metrics_write_appends_each_record_once(spark, tmp_path):
     assert len(metrics.records) == 2
     assert [(r.rows_in, r.rows_out) for r in spark.read.parquet(met).collect()] == [
         (5, 5), (5, 5)
+    ]
+
+
+def test_metrics_rerun_of_one_job_id_keeps_one_set(spark, tmp_path):
+    """A rerun of a job (a new collector with the same job id) replaces
+    that job's rows in the metrics table instead of adding a second
+    set; another job's rows stay."""
+    from loongcollector_spark.sources.sinks import write_blackhole
+
+    met = str(tmp_path / "metrics")
+    for job, n in [("job-a", 5), ("job-b", 3), ("job-a", 7)]:
+        Pipeline({}).run_and_write(
+            spark.range(n), write_blackhole, MetricsCollector(job), metrics_path=met
+        )
+    rows = spark.read.parquet(met).collect()
+    assert sorted((r.job_id, r.rows_in, r.rows_out) for r in rows) == [
+        ("job-a", 7, 7), ("job-b", 3, 3)
+    ]
+
+
+def test_read_metrics_keeps_a_job_id_of_digits(spark, tmp_path):
+    """The job id is a ``job_id=`` directory, which a schema-less read
+    would take for a number (``007`` → 7); ``read_metrics`` reads it
+    back as written."""
+    from loongcollector_spark.plans.metrics import read_metrics
+
+    met = str(tmp_path / "metrics")
+    metrics = MetricsCollector("007")
+    metrics.add("pipeline", 4, 3, 0.5)
+    metrics.write(spark, met)
+    assert [tuple(r) for r in read_metrics(spark, met).collect()] == [
+        ("pipeline", 4, 3, 0.5, "007")
     ]
 
 

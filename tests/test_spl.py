@@ -555,6 +555,34 @@ def test_pack_fields(spark):
         compile_spl(df, "* | pack-fields -include='nomatch_xyz' packed")
 
 
+def test_quoted_identifier_reads_its_column_literally(spark):
+    """A ``"quoted identifier"`` keeps every character: ``"a`b"`` reads
+    column a`b (not ab), and ``"host.name"`` the top-level column."""
+    df = spark.createDataFrame([("tick", "plain", "h1")], ["a`b", "ab", "host.name"])
+    r = compile_spl(
+        df, '* | extend x = "a`b", y = upper("host.name") | project x, y'
+    ).collect()
+    assert [tuple(t) for t in r] == [("tick", "H1")]
+
+
+def test_dotted_identifiers_name_flat_columns(spark):
+    """Names that ``project``, ``stats ... by``, a parse's assignment
+    target and ``pack-fields`` take are flat column names."""
+    df = spark.createDataFrame(
+        [("h1", "a=1", 7), ("h1", "a=2", 8)], ["host.name", "kv", "n.v"]
+    )
+    assert compile_spl(df, '* | project "host.name"').columns == ["host.name"]
+    stats = compile_spl(df, '* | stats sum("n.v") as s by "host.name"').collect()
+    assert [tuple(r) for r in stats] == [("h1", 15)]
+    parsed = compile_spl(
+        df, "* | parse-regexp kv, 'a=(\\d)' as \"n.v\" | project \"n.v\""
+    )
+    # the parsed values replace the existing n.v column (7, 8)
+    assert sorted(r[0] for r in parsed.collect()) == [1, 2]
+    packed = compile_spl(df, "* | pack-fields -include='^host' p").collect()
+    assert [json.loads(r.p) for r in packed] == [{"host.name": "h1"}] * 2
+
+
 def test_filter_pushdown_through_compiled_script(spark, tmp_path):
     # a compiled where must reach the parquet scan as a pushed filter —
     # the query-language layer costs nothing at the plan level
