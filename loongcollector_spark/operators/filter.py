@@ -170,7 +170,7 @@ def rate_limit(
     ts = sqltext.col(ts_col)
     w = W.partitionBy(*map(sqltext.col, fields), F.window(ts, window)).orderBy(ts)
     return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= limit)
-        .drop("__rn")
+        df.withColumn("__lc_rn", F.row_number().over(w))
+        .filter(F.col("__lc_rn") <= limit)
+        .drop("__lc_rn")
     )

@@ -586,7 +586,7 @@ def merge_multiline(
         # end mode: the block id increments AFTER an end line — count
         # end-matches over strictly-preceding rows
         boundary = F.lag(src.rlike(end_pattern), 1, False).over(w)
-    blocks = df.withColumn("__blk", F.sum(boundary.cast("long")).over(w))
+    blocks = df.withColumn("__lc_blk", F.sum(boundary.cast("long")).over(w))
     # order within a block is restored by sorting (order_col, line)
     # structs — struct ordering is by first field, so the concat is
     # deterministic regardless of collect_list arrival order
@@ -604,13 +604,13 @@ def merge_multiline(
         if c not in set(keys) | {source_key, order_col, dest}
     ]
     merged = (
-        blocks.groupBy(*gcols, "__blk")
+        blocks.groupBy(*gcols, "__lc_blk")
         .agg(
             F.concat_ws(joiner, sorted_lines).alias(dest),
             F.min(order).alias(order_col),
             *[F.min_by(sqltext.col(c), first_key).alias(c) for c in carried],
         )
-        .drop("__blk")
+        .drop("__lc_blk")
     )
     return merged
 
@@ -666,34 +666,36 @@ def split_log_regex(
     dest = dest_key or source_key
     names = [c for c in df.columns if c != source_key]
     carry = [sqltext.col(c) for c in names]
-    base = df.withColumn("__rid", F.monotonically_increasing_id())
+    base = df.withColumn("__lc_rid", F.monotonically_increasing_id())
     lines = base.select(
-        "__rid",
+        "__lc_rid",
         *carry,
-        F.posexplode(F.split(sqltext.col(source_key), "\n")).alias("__pos", "__line"),
+        F.posexplode(F.split(sqltext.col(source_key), "\n")).alias(
+            "__lc_pos", "__lc_line"
+        ),
     )
-    w = W.partitionBy("__rid").orderBy("__pos")
-    blk = F.sum(F.col("__line").rlike(start_pattern).cast("long")).over(w)
-    blocks = lines.withColumn("__blk", blk)
-    # group ONLY on (__rid, __blk): carry columns are constant per
-    # __rid and ride through first() — grouping on them directly would
+    w = W.partitionBy("__lc_rid").orderBy("__lc_pos")
+    blk = F.sum(F.col("__lc_line").rlike(start_pattern).cast("long")).over(w)
+    blocks = lines.withColumn("__lc_blk", blk)
+    # group ONLY on (__lc_rid, __lc_blk): carry columns are constant per
+    # __lc_rid and ride through first() — grouping on them directly would
     # reject unorderable carry types (e.g. the map column parse_json
     # produces). Line order within a block is restored via (pos, line)
     # struct sort — deterministic regardless of collect_list arrival
     # order
     merged = (
-        blocks.groupBy("__rid", "__blk")
+        blocks.groupBy("__lc_rid", "__lc_blk")
         .agg(
             F.concat_ws(
                 "\n",
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__line"))),
-                    lambda s: s["__line"],
+                    F.array_sort(F.collect_list(F.struct("__lc_pos", "__lc_line"))),
+                    lambda s: s["__lc_line"],
                 ),
             ).alias(dest),
             *[F.first(c).alias(n) for c, n in zip(carry, names)],
         )
-        .drop("__blk")
+        .drop("__lc_blk")
     )
     # no orderBy: a DataFrame is an unordered multiset and a global
     # sort here would cost a full exchange at scale; impose order
@@ -807,17 +809,17 @@ def parse_gotime(
     dst_tz = location_to_tz(dest_location)
     if source_format in GO_FIXED_PATTERNS:
         parsed = parse_timestamp(
-            df, source_key, "", dest_key="__gt", epoch_unit=source_format
+            df, source_key, "", dest_key="__lc_gt", epoch_unit=source_format
         )
     else:
         parsed = parse_timestamp(
             df,
             source_key,
             go_layout_to_spark(source_format),
-            dest_key="__gt",
+            dest_key="__lc_gt",
             source_timezone=src_tz,
         )
-    ts = F.col("__gt")
+    ts = F.col("__lc_gt")
     if dest_format in GO_FIXED_PATTERNS:
         # epoch output is location-independent (Go t.In(loc).Unix()
         # ignores loc) — do NOT apply the dest wall-clock shift here.
@@ -840,7 +842,7 @@ def parse_gotime(
         if dst_tz:
             ts = F.from_utc_timestamp(ts, dst_tz)
         out_col = F.date_format(ts, go_layout_to_spark(dest_format))
-    out = parsed.withColumn(dest_key, out_col).drop("__gt")
+    out = parsed.withColumn(dest_key, out_col).drop("__lc_gt")
     if not keep_source and source_key != dest_key:
         out = out.drop(source_key)
     return out

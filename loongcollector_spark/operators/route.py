@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import sqltext
+from ..plans.checkpoint import UNIT_COL
 
 __all__ = [
     "RouterRule",
@@ -132,10 +133,14 @@ def fanout_write(routed: DataFrame, base_path: str, mode: str = "append") -> Non
 
 
 def read_sink(spark, base_path: str, sink: str) -> DataFrame:
-    """Read one sink table back (partition-pruned scan)."""
-    return (
-        spark.read.parquet(base_path).filter(F.col("sink") == sink).drop("sink")
-        if not os.path.isdir(os.path.join(base_path, f"sink={sink}"))
-        else spark.read.parquet(os.path.join(base_path, f"sink={sink}"))
-    )
+    """Read one sink table back: the ``sink=<name>`` directory of a
+    :func:`fanout_write` table (partition-pruned scan), else the sink's
+    rows of a table that holds ``sink`` as a column, such as a
+    checkpointed run's output. Both return the same columns: neither
+    ``sink`` nor the checkpoint's ``__lc_unit`` partition column."""
+    path = os.path.join(base_path, f"sink={sink}")
+    if os.path.isdir(path):
+        return spark.read.parquet(path)
+    rows = spark.read.parquet(base_path).filter(F.col("sink") == sink)
+    return rows.drop("sink", UNIT_COL)
 

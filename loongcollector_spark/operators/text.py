@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..cache import persisted
-from ..functions import hashing
+from ..functions import hashing, sqltext
 
 __all__ = [
     "token_stats",
@@ -95,10 +95,11 @@ def _re_token_count(txt):
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting: whitespace tokens + regex (BPE-ish) tokens +
     char length. Integer outputs (stable across engines)."""
+    txt = sqltext.col(text_col)
     return (
-        df.withColumn("n_chars_calc", F.length(text_col))
-        .withColumn("n_ws_tokens", _ws_token_count(F.col(text_col)))
-        .withColumn("n_re_tokens", _re_token_count(F.col(text_col)))
+        df.withColumn("n_chars_calc", F.length(txt))
+        .withColumn("n_ws_tokens", _ws_token_count(txt))
+        .withColumn("n_re_tokens", _re_token_count(txt))
     )
 
 
@@ -112,7 +113,7 @@ def quality_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     * ``mean_word_len``— avg whitespace-token length (double)
     * ``uniq_token_ratio`` — distinct/total whitespace tokens (double)
     """
-    txt = F.col(text_col)
+    txt = sqltext.col(text_col)
     toks = F.split(F.trim(F.lower(txt)), r"\s+")
     n_toks = F.when(F.length(F.trim(txt)) == 0, 0).otherwise(F.size(toks))
     stop_arr = F.array(*[F.lit(s) for s in _EN_STOPWORDS])
@@ -183,7 +184,7 @@ def pii_redact(
     before email before ipv4), so overlapping detectors resolve
     deterministically. In-place when *dest* is None. NULL text stays
     NULL (scan-side counts already treat it as empty)."""
-    c = F.col(text_col)
+    c = sqltext.col(text_col)
     for kind, pat in PII_PATTERNS.items():
         c = F.regexp_replace(c, pat, f"<{kind.upper()}>")
     return df.withColumn(dest or text_col, c)
@@ -642,7 +643,7 @@ def language_id(
     argmax (ties → lexicographically first language, deterministic).
     One pass, JVM-side. A real deployment would swap in a proper model
     via mapInPandas; the plumbing (column contract) is identical."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(sqltext.col(text_col))), r"\s+")
     scores = []
     for lang in sorted(_LANG_MARKERS):
         arr = F.array(*[F.lit(s) for s in _LANG_MARKERS[lang]])
@@ -774,7 +775,7 @@ def fingerprint(
     text — the exact-dedup key that survives formatting differences.
     (Rolling/content-defined chunking variants build on the same
     normalization; md5 is engine-portable for oracle checks.)"""
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
+    norm = F.regexp_replace(F.trim(F.lower(sqltext.col(text_col))), r"\s+", " ")
     return df.withColumn(dest, F.md5(norm))
 
 
@@ -895,7 +896,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     # caller's text column comes back untouched.
     tmp = "__q_text"
     sig = quality_signals(
-        df.withColumn(tmp, F.coalesce(F.col(text_col), F.lit(""))), tmp
+        df.withColumn(tmp, F.coalesce(sqltext.col(text_col), F.lit(""))), tmp
     )
     txt = F.col(tmp)
     toks = F.split(F.trim(F.lower(txt)), r"\s+")

@@ -18,6 +18,12 @@ byte-identical final state to a clean single run (the reference's
 at-least-once + idempotent-commit contract; Iceberg snapshot commits
 play this role on a real deployment, parquet directories play it here).
 
+One layout: the unit directory is the only partition level. A routed
+transform's ``sink`` is an ordinary column of the unit's part files,
+as any other output column is. The meta record holds the transform's
+output columns and types; a resume whose output differs is refused, so
+every committed unit of a job holds the same schema.
+
 Scale shape: ALL uncommitted units are processed by ONE job — a single
 input scan writing ``partitionBy(__lc_unit)`` with dynamic partition
 overwrite, per-unit row counts piggybacked on the write via the
@@ -39,8 +45,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = ["CheckpointedRun", "unit_of", "run_with_checkpoint", "UNIT_COL"]
-
-LINEAGE_SCHEMA = "job_id string, unit_id int, status string, rows_out long"
 
 # partition/bookkeeping column; double-underscore + prefix so it cannot
 # collide with a user output column (a previous revision used 'unit'
@@ -75,14 +79,15 @@ class CheckpointedRun:
     def _meta_path(self) -> str:
         return os.path.join(self.dir, f"{self.job_id}__meta.json")
 
-    def ensure_meta(self, n_units: int, conv_col: str, layout: str) -> None:
-        """Record the unit topology and output layout on first run;
-        refuse a resume whose topology differs — re-bucketing
-        conversations across a different ``n_units`` (or key column)
-        would silently duplicate or drop rows against already-committed
-        units — or whose layout differs (see :func:`_output_layout`).
-        Meta records written before the layout field existed carry
-        none; :func:`_check_layout` inspects their directories instead."""
+    def ensure_meta(self, n_units: int, conv_col: str, output: list) -> None:
+        """Record the unit topology and the transform's *output* (column
+        names and types) on first run; refuse a resume whose topology
+        differs — re-bucketing conversations across a different
+        ``n_units`` (or key column) would silently duplicate or drop
+        rows against already-committed units — or whose output differs,
+        which would read back as NULLs in the units written with the
+        other schema. A meta record without the output record predates
+        this layout and is refused too."""
         p = self._meta_path()
         if os.path.exists(p):
             with open(p) as fh:
@@ -94,17 +99,18 @@ class CheckpointedRun:
                     f"conv_col={meta['conv_col']!r}, resume requested "
                     f"n_units={n_units} conv_col={conv_col!r}"
                 )
-            if meta.get("layout", layout) != layout:
+            if meta.get("output") != output:
                 raise ValueError(
                     f"checkpoint layout mismatch for job {self.job_id!r}: "
-                    f"committed units use {meta['layout']!r}, the transform "
-                    f"now writes {layout!r}"
+                    f"committed units hold output {meta.get('output')}, "
+                    f"the transform now writes {output}"
                 )
             return
         tmp = p + ".tmp"
         with open(tmp, "w") as fh:
             json.dump({"job_id": self.job_id, "n_units": n_units,
-                       "conv_col": conv_col, "layout": layout}, fh)
+                       "conv_col": conv_col, "layout": UNIT_COL,
+                       "output": output}, fh)
         os.replace(tmp, p)
 
     def _records(self):
@@ -146,42 +152,6 @@ class CheckpointedRun:
             if r.get("status") == "committed"
         )
 
-    def lineage(self) -> DataFrame:
-        rows = list(self._records())
-        return self.spark.createDataFrame(rows, LINEAGE_SCHEMA) if rows else (
-            self.spark.createDataFrame([], LINEAGE_SCHEMA)
-        )
-
-
-def _output_layout(columns: list[str]) -> str:
-    """Partition layout of a transform's output: routed outputs (a
-    ``sink`` column) nest ``sink=<name>`` under each unit directory,
-    others write part files directly into it."""
-    return f"{UNIT_COL}/sink" if "sink" in columns else UNIT_COL
-
-
-def _check_layout(out_dir: str, units, layout: str, job_id: str) -> None:
-    """Refuse to mix partition depths in one *out_dir*: a committed
-    unit directory holding part files directly while the transform
-    routes to ``sink``, or holding ``sink=`` directories while it does
-    not. The read-back could not list such a table (checkpoints written
-    before routed outputs nested ``sink`` have the flat layout)."""
-    routed = layout != UNIT_COL
-    for u in units:
-        d = os.path.join(out_dir, f"{UNIT_COL}={u}")
-        if not os.path.isdir(d):
-            continue  # a committed unit with no rows writes no directory
-        for name in os.listdir(d):
-            if name.startswith(("_", ".")):
-                continue  # _SUCCESS, .crc and other bookkeeping files
-            nested = name.startswith("sink=")
-            if nested != routed:
-                found = "sink directories" if nested else "part files"
-                raise ValueError(
-                    f"checkpoint layout mismatch for job {job_id!r}: "
-                    f"{d} holds {found}, the transform writes {layout!r}"
-                )
-
 
 def run_with_checkpoint(
     spark: SparkSession,
@@ -219,7 +189,7 @@ def run_with_checkpoint(
     attempt = todo if fail_after_units is None else todo[: fail_after_units]
     if attempt and UNIT_COL in df.columns:
         raise ValueError(f"input already has a {UNIT_COL!r} column")
-    # the output schema decides the layout and the read-back schema;
+    # the output schema is recorded in the meta and read back with;
     # with nothing to attempt it comes plan-only from a zero-row slice
     out = transform(
         df.filter(unit_of(F.col(conv_col), n_units).isin(attempt))
@@ -231,10 +201,9 @@ def run_with_checkpoint(
             f"transform output lost {conv_col!r}; checkpointed "
             "transforms must retain the unit key column"
         )
-    layout = _output_layout(out.columns)
-    part_cols = layout.split("/")
-    ck.ensure_meta(n_units, conv_col, layout)
-    _check_layout(out_dir, done, layout, job_id)
+    ck.ensure_meta(
+        n_units, conv_col, [[f.name, f.dataType.simpleString()] for f in out.schema]
+    )
 
     if attempt:
         # clear crash leftovers for attempted units up front: dynamic
@@ -259,14 +228,10 @@ def run_with_checkpoint(
                 for u in attempt
             ],
         )
-        # routed outputs nest sink under the unit partition so a
-        # lineage-mode table keeps sink partition PRUNING for
-        # read_sink consumers (unit-dir cleanup above removes nested
-        # sink dirs with the unit, so retry semantics are unchanged)
         (
             counted.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
+            .partitionBy(UNIT_COL)
             .parquet(out_dir)
         )
         counts = obs.get
@@ -276,12 +241,12 @@ def run_with_checkpoint(
             raise RuntimeError(f"injected failure after {len(attempt)} units")
 
     # read back with the schema the write used: the data columns, then
-    # the partition columns in directory order. Inferring it instead
-    # would run a footer-reading job per call and type partition values
-    # by their look (a sink named "007" would come back as int 7)
-    typed = {f.name: f.dataType for f in out.schema} | {UNIT_COL: T.IntegerType()}
-    names = [c for c in out.columns if c not in part_cols] + part_cols
-    read_schema = T.StructType([T.StructField(c, typed[c]) for c in names])
+    # the unit partition column. Inferring it instead would run a
+    # footer-reading job per call
+    read_schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in out.schema]
+        + [T.StructField(UNIT_COL, T.IntegerType())]
+    )
     try:
         result = spark.read.schema(read_schema).parquet(out_dir)
     except Exception:

@@ -83,3 +83,37 @@ def test_one_backtick_quoting_rule():
         if 'replace("`"' in p.read_text() or "replace('`'" in p.read_text()
     )
     assert quoting == ["functions/sqltext.py"]
+
+
+def test_benchmark_imports_resolve_with_its_keywords():
+    """Every package name ``perfbench/`` imports still resolves and
+    accepts the arguments the benchmark passes it, so a refactor of
+    these modules cannot turn a benchmark run into a failed one."""
+    from loongcollector_spark.config import load_dims
+    from loongcollector_spark.pipeline import Pipeline
+    from loongcollector_spark.plans.checkpoint import (
+        CheckpointedRun,
+        run_with_checkpoint,
+    )
+    from loongcollector_spark.session import get_spark
+    from loongcollector_spark.sources.sinks import write_blackhole
+    from loongcollector_spark.sources.transcripts import generate_transcripts
+
+    x = object()
+    calls = [
+        (load_dims, (x, x), {}),
+        (Pipeline, (x,), {}),
+        (Pipeline, (x, x), {}),
+        (CheckpointedRun, (x, x, x), {}),
+        (CheckpointedRun.committed_units, (x,), {}),
+        (
+            run_with_checkpoint,
+            (x, x, x),
+            dict(out_dir=x, lineage_dir=x, job_id=x, n_units=x),
+        ),
+        (write_blackhole, (x,), {}),
+        (generate_transcripts, (x, x), dict(n_convs=x, partitions=x)),
+        (get_spark, ("perfbench",), dict(cores=x, extra_conf=x)),
+    ]
+    for fn, args, kwargs in calls:
+        inspect.signature(fn).bind(*args, **kwargs)  # TypeError if not

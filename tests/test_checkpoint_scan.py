@@ -1,6 +1,7 @@
 """Single-scan checkpoint resume properties: one job regardless of how
-many units remain, topology-mismatch refusal, and no collision with
-user columns named 'unit'."""
+many units remain, topology- and output-mismatch refusal, one partition
+level (``sink`` is a column), and no collision with user columns named
+'unit'."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,7 +157,8 @@ def test_numeric_looking_sink_reads_back_as_string(spark, tmp_path):
 def _legacy_checkpoint(tmp_path, job_id, unit_entry):
     """A committed unit 0 written by hand the way an earlier layout
     left it: a meta record without the layout field, and *unit_entry*
-    (a part file or a sink= directory) directly under __lc_unit=0."""
+    (a part file or a sink= directory) directly under __lc_unit=0. The
+    meta has no output record, so every resume of it is refused."""
     import json
     import os
 
@@ -210,3 +212,81 @@ def test_layout_recorded_and_checked_on_resume(spark, tmp_path):
         run_with_checkpoint(
             spark, df, lambda d: d.withColumn("sink", F.lit("s")), **kw
         )
+
+
+def _route3(d):
+    """Routes each row to one of three sinks by turn."""
+    turn = (F.col("turn_idx") % 3).cast("string")
+    return d.withColumn("sink", F.concat(F.lit("s"), turn))
+
+
+def test_routed_checkpoint_is_one_partition_level(spark, tmp_path):
+    """A routed transform writes ``__lc_unit=<u>`` directories holding
+    part files only: ``sink`` is a column of those files, and the
+    read-back equals the direct transform as a multiset."""
+    import os
+    from collections import Counter
+
+    df = _mk_df(spark, n=120)
+    out_dir = tmp_path / "out"
+    back = run_with_checkpoint(
+        spark, df, _route3, out_dir=str(out_dir),
+        lineage_dir=str(tmp_path / "lin"), job_id="flat", n_units=4,
+    )
+    units = [d for d in os.listdir(out_dir) if d.startswith("__lc_unit=")]
+    assert len(units) == 4
+    for u in units:
+        entries = os.listdir(out_dir / u)
+        assert not [e for e in entries if os.path.isdir(out_dir / u / e)], u
+        assert [e for e in entries if e.startswith("part-")], u
+    direct = _route3(df)
+    assert back.columns == direct.columns
+    assert Counter(map(tuple, back.collect())) == Counter(map(tuple, direct.collect()))
+    assert {r.sink for r in back.collect()} == {"s0", "s1", "s2"}
+
+
+def test_resume_refuses_changed_output_schema(spark, tmp_path):
+    """A resume whose transform writes other columns or types than the
+    committed units hold is refused: the read-back would mix schemas
+    (NULLs in the units written without a column)."""
+    df = _mk_df(spark)
+    kw = dict(
+        out_dir=str(tmp_path / "o"),
+        lineage_dir=str(tmp_path / "lin"),
+        job_id="schema",
+        n_units=4,
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_checkpoint(
+            spark, df, lambda d: d.withColumn("x", F.lit(1)),
+            fail_after_units=2, **kw,
+        )
+    with pytest.raises(ValueError, match="layout mismatch for job 'schema'"):
+        run_with_checkpoint(
+            spark, df, lambda d: d.withColumn("x", F.lit("1")), **kw
+        )
+    out = run_with_checkpoint(spark, df, lambda d: d.withColumn("x", F.lit(1)), **kw)
+    assert out.count() == 200
+    assert out.filter(F.col("x").isNull()).count() == 0
+
+
+def test_read_sink_over_checkpoint_matches_fanout(spark, tmp_path):
+    """``read_sink`` returns the same columns and rows over a routed
+    checkpoint output (``sink`` a column, ``__lc_unit`` directories) as
+    over a ``fanout_write`` table (``sink=`` directories)."""
+    from collections import Counter
+
+    from loongcollector_spark.operators.route import fanout_write, read_sink
+
+    df = _mk_df(spark, n=60)
+    ck_dir, fan_dir = str(tmp_path / "ck"), str(tmp_path / "fan")
+    run_with_checkpoint(
+        spark, df, _route3, out_dir=ck_dir,
+        lineage_dir=str(tmp_path / "lin"), job_id="rs", n_units=2,
+    )
+    fanout_write(_route3(df), fan_dir)
+    for sink in ["s0", "s1", "s2"]:
+        a, b = read_sink(spark, ck_dir, sink), read_sink(spark, fan_dir, sink)
+        assert a.columns == b.columns == ["conv_id", "turn_idx"]
+        assert Counter(map(tuple, a.collect())) == Counter(map(tuple, b.collect()))
+        assert a.count() == 20

@@ -1,13 +1,17 @@
 """The name rule: a spec key is a flat, literal column name.
 
 A key with a dot, a space, a backtick or a reserved word names one
-top-level column in every spine processor, the router, the aggregates
-and the five wire serializers (``functions/sqltext.py``), as the
-reference's flat ``LogEvent`` keys do."""
+top-level column in every spine processor, the router, the aggregates,
+the five wire serializers and the curation processors' ``text_col``
+(``functions/sqltext.py``), as the reference's flat ``LogEvent`` keys
+do."""
 
+import hashlib
 import json
+from datetime import datetime
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from loongcollector_spark.pipeline import Pipeline
@@ -146,12 +150,50 @@ def _prom(spark, k):
     return [s["labels"] for s in series], {k: "v", "__name__": "m"}
 
 
+def _token_stats(spark, k):
+    step = {"type": "token_stats", "text_col": k}
+    return _run(spark, k, step), {
+        k: "v", "n_chars_calc": 1, "n_ws_tokens": 1, "n_re_tokens": 1
+    }
+
+
+def _quality_signals(spark, k):
+    step = {"type": "quality_signals", "text_col": k}
+    return _run(spark, k, step), {
+        k: "v", "n_punct": 0, "n_digits": 0, "mean_word_len": 1.0,
+        "uniq_token_ratio": 1.0,
+    }
+
+
+def _quality_score(spark, k):
+    step = {"type": "quality_score", "text_col": k, "weights": [0.0] * 6, "bias": 0.0}
+    return _run(spark, k, step), {k: "v", "quality_score": 0.5, "quality_keep": True}
+
+
+def _language_id(spark, k):
+    step = {"type": "language_id", "text_col": k}
+    return _run(spark, k, step), {k: "v", "lang_pred": "unknown"}
+
+
+def _fingerprint(spark, k):
+    step = {"type": "fingerprint", "text_col": k}
+    return _run(spark, k, step), {k: "v", "fingerprint": hashlib.md5(b"v").hexdigest()}
+
+
+def _pii_redact(spark, k):
+    frame = _frame(spark, k).withColumn(k, F.lit("mail a@b.io"))
+    out = Pipeline({"processors": [{"type": "pii_redact", "text_col": k}]}).run(frame)
+    return [r.asDict() for r in out.collect()], {k: "mail <EMAIL>"}
+
+
 CASES = {
     f.__name__[1:]: f
     for f in [
         _parse_regex, _parse_json, _dict_map, _filter_regex, _pick, _drop,
         _rename, _desensitize, _stable_order, _group_count, _router,
         _sls, _loki, _es, _clickhouse, _prom,
+        _token_stats, _quality_signals, _quality_score, _language_id,
+        _fingerprint, _pii_redact,
     ]
 }
 
@@ -163,6 +205,52 @@ def test_spec_key_names_one_flat_column(spark, case, key):
     assert rows, case
     for row in rows:
         assert {n: row.get(n) for n in want} == want
+
+
+# processors that add temporary columns, each over an input holding a
+# user column named like a temporary: the temporaries carry the
+# ``__lc_`` prefix, so the user column keeps its values
+TEMPORARIES = {
+    "merge_multiline": (
+        "conv_id string, turn_idx int, text string, __blk string",
+        [("c1", 0, "S1", "u0"), ("c1", 1, "x", "u1")],
+        {"source_key": "text", "start_pattern": "^S", "group_cols": ["conv_id"]},
+        [{"text": "S1\nx", "__blk": "u0"}],
+    ),
+    "split_log_regex": (
+        "text string, __rid string, __pos string, __line string, __blk string",
+        [("S1\nx\nS2", "r", "p", "l", "b")],
+        {"source_key": "text", "start_pattern": "^S"},
+        [
+            {"text": t, "__rid": "r", "__pos": "p", "__line": "l", "__blk": "b"}
+            for t in ["S1\nx", "S2"]
+        ],
+    ),
+    "parse_gotime": (
+        "t string, __gt string",
+        [("2024-05-06 07:08:09", "keep")],
+        {
+            "source_key": "t", "source_format": "2006-01-02 15:04:05",
+            "dest_key": "o", "dest_format": "2006-01-02",
+        },
+        [{"o": "2024-05-06", "__gt": "keep"}],
+    ),
+    "rate_limit": (
+        "key string, ts timestamp, __rn string",
+        [("a", datetime(2024, 1, 1), "r1"), ("b", datetime(2024, 1, 1), "r2")],
+        {"fields": ["key"], "limit": 1},
+        [{"key": "a", "__rn": "r1"}, {"key": "b", "__rn": "r2"}],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(TEMPORARIES))
+def test_user_column_named_like_a_temporary_survives(spark, case):
+    schema, rows, params, want = TEMPORARIES[case]
+    df = spark.createDataFrame(rows, schema)
+    out = Pipeline({"processors": [{"type": case, **params}]}).run(df)
+    got = [{n: r[n] for n in want[0]} for r in out.collect()]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
 def test_otel_dotted_output_filters_and_routes(spark):
