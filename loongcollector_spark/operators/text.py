@@ -894,7 +894,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     # keep flag) must never go NULL, or keep-filters drop the doc from
     # BOTH sides of the split. Computed on a temp column so the
     # caller's text column comes back untouched.
-    tmp = "__q_text"
+    tmp = "__lc_q_text"
     sig = quality_signals(
         df.withColumn(tmp, F.coalesce(sqltext.col(text_col), F.lit(""))), tmp
     )

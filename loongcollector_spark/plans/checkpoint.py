@@ -189,7 +189,7 @@ def run_with_checkpoint(
     attempt = todo if fail_after_units is None else todo[: fail_after_units]
     if attempt and UNIT_COL in df.columns:
         raise ValueError(f"input already has a {UNIT_COL!r} column")
-    # the output schema is recorded in the meta and read back with;
+    # the meta records the output schema and the read-back uses it;
     # with nothing to attempt it comes plan-only from a zero-row slice
     out = transform(
         df.filter(unit_of(F.col(conv_col), n_units).isin(attempt))
