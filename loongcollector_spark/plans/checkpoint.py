@@ -20,9 +20,12 @@ play this role on a real deployment, parquet directories play it here).
 
 One layout: the unit directory is the only partition level. A routed
 transform's ``sink`` is an ordinary column of the unit's part files,
-as any other output column is. The meta record holds the transform's
-output columns and types; a resume whose output differs is refused, so
-every committed unit of a job holds the same schema.
+as any other output column is. The meta record holds the output
+columns and types, and the output is read back with it. A resume is
+refused if the transform's columns over zero rows, or the types of the
+columns it shares with the record, differ from it; columns a step takes
+from the data (SPL key discovery) may differ between units, and the
+record then holds their union.
 
 Scale shape: ALL uncommitted units are processed by ONE job — a single
 input scan writing ``partitionBy(__lc_unit)`` with dynamic partition
@@ -59,6 +62,18 @@ def unit_of(conv_col, n_units: int):
     return F.pmod(F.xxhash64(conv_col), F.lit(n_units)).cast("int")
 
 
+def _columns(schema: T.StructType) -> dict[str, str]:
+    """Name → type of each column; nullability is not compared."""
+    return {f.name: f.dataType.simpleString() for f in schema}
+
+
+def _write_json(path: str, record: dict) -> None:
+    """Write *record* to *path* atomically (the commit point)."""
+    with open(path + ".tmp", "w") as fh:
+        json.dump(record, fh)
+    os.replace(path + ".tmp", path)
+
+
 class CheckpointedRun:
     """Lineage bookkeeping over a directory-backed table.
 
@@ -79,39 +94,56 @@ class CheckpointedRun:
     def _meta_path(self) -> str:
         return os.path.join(self.dir, f"{self.job_id}__meta.json")
 
-    def ensure_meta(self, n_units: int, conv_col: str, output: list) -> None:
-        """Record the unit topology and the transform's *output* (column
-        names and types) on first run; refuse a resume whose topology
-        differs — re-bucketing conversations across a different
-        ``n_units`` (or key column) would silently duplicate or drop
-        rows against already-committed units — or whose output differs,
-        which would read back as NULLs in the units written with the
-        other schema. A meta record without the output record predates
-        this layout and is refused too."""
+    def ensure_meta(
+        self, n_units: int, conv_col: str, written: T.StructType, static
+    ) -> T.StructType:
+        """Record the unit topology and the output schema on first run,
+        and return the schema to read the output back with.
+
+        A resume is refused if its topology differs (re-bucketing would
+        duplicate or drop rows against committed units) or the meta has
+        no output record (an earlier layout). *written* is the schema
+        this run writes and ``static()`` the one the transform has over
+        zero rows; they differ where a step takes its columns from the
+        data (SPL ``parse-json``/``parse-kv`` without ``known_keys``),
+        so units may hold different key sets. A resume is refused if a
+        column of ``static()``, or one *written* shares with the record,
+        has another type there (or is missing); other columns grow the
+        record to the union, as one run's discovery over all units."""
         p = self._meta_path()
-        if os.path.exists(p):
-            with open(p) as fh:
-                meta = json.load(fh)
-            if meta["n_units"] != n_units or meta["conv_col"] != conv_col:
-                raise ValueError(
-                    f"checkpoint topology mismatch for job {self.job_id!r}: "
-                    f"lineage was written with n_units={meta['n_units']} "
-                    f"conv_col={meta['conv_col']!r}, resume requested "
-                    f"n_units={n_units} conv_col={conv_col!r}"
-                )
-            if meta.get("output") != output:
-                raise ValueError(
-                    f"checkpoint layout mismatch for job {self.job_id!r}: "
-                    f"committed units hold output {meta.get('output')}, "
-                    f"the transform now writes {output}"
-                )
-            return
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"job_id": self.job_id, "n_units": n_units,
-                       "conv_col": conv_col, "layout": UNIT_COL,
-                       "output": output}, fh)
-        os.replace(tmp, p)
+        if not os.path.exists(p):
+            _write_json(p, {"job_id": self.job_id, "n_units": n_units,
+                            "conv_col": conv_col, "layout": UNIT_COL,
+                            "output": written.jsonValue()})
+            return written
+        with open(p) as fh:
+            meta = json.load(fh)
+        if meta["n_units"] != n_units or meta["conv_col"] != conv_col:
+            raise ValueError(
+                f"checkpoint topology mismatch for job {self.job_id!r}: "
+                f"lineage was written with n_units={meta['n_units']} "
+                f"conv_col={meta['conv_col']!r}, resume requested "
+                f"n_units={n_units} conv_col={conv_col!r}"
+            )
+        # a meta without the output record holds no columns: refused
+        held = T.StructType.fromJson(meta.get("output", {"fields": []}))
+        have, now = _columns(held), _columns(written)
+        if have == now:
+            return held
+        fixed = _columns(static())
+        wrote = {**fixed, **now}
+        clash = {c: t for c, t in wrote.items() if (c in fixed or c in have)
+                 and have.get(c) != t}
+        if clash:
+            raise ValueError(
+                f"checkpoint layout mismatch for job {self.job_id!r}: the "
+                f"committed units hold {have or 'no output record'}, the "
+                f"transform now writes {clash}"
+            )
+        grown = T.StructType([*held, *(f for f in written if f.name not in have)])
+        if len(grown) > len(held):
+            _write_json(p, {**meta, "output": grown.jsonValue()})
+        return grown
 
     def _records(self):
         """All of THIS job's lineage records (matched on the stored
@@ -130,18 +162,8 @@ class CheckpointedRun:
         }
 
     def commit(self, unit_id: int, rows_out: int) -> None:
-        tmp = self._path(unit_id) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "job_id": self.job_id,
-                    "unit_id": unit_id,
-                    "status": "committed",
-                    "rows_out": rows_out,
-                },
-                fh,
-            )
-        os.replace(tmp, self._path(unit_id))  # atomic commit point
+        _write_json(self._path(unit_id), {"job_id": self.job_id, "unit_id": unit_id,
+                                          "status": "committed", "rows_out": rows_out})
 
     def total_rows_committed(self) -> int:
         """Sum of committed per-unit output rows — lets callers report
@@ -189,21 +211,23 @@ def run_with_checkpoint(
     attempt = todo if fail_after_units is None else todo[: fail_after_units]
     if attempt and UNIT_COL in df.columns:
         raise ValueError(f"input already has a {UNIT_COL!r} column")
-    # the meta records the output schema and the read-back uses it;
-    # with nothing to attempt it comes plan-only from a zero-row slice
-    out = transform(
-        df.filter(unit_of(F.col(conv_col), n_units).isin(attempt))
-        if attempt
-        else df.limit(0)
-    )
-    if conv_col not in out.columns:
+    # over zero rows the transform shows the columns that do not come
+    # from the data; with nothing to attempt that is all a rerun sees
+    def over_zero_rows() -> T.StructType:
+        return transform(df.limit(0)).schema
+
+    if attempt:
+        out = transform(df.filter(unit_of(F.col(conv_col), n_units).isin(attempt)))
+        written, static = out.schema, over_zero_rows
+    else:
+        written = over_zero_rows()
+        static = lambda: written  # noqa: E731
+    if conv_col not in written.names:
         raise ValueError(
             f"transform output lost {conv_col!r}; checkpointed "
             "transforms must retain the unit key column"
         )
-    ck.ensure_meta(
-        n_units, conv_col, [[f.name, f.dataType.simpleString()] for f in out.schema]
-    )
+    schema = ck.ensure_meta(n_units, conv_col, written, static)
 
     if attempt:
         # clear crash leftovers for attempted units up front: dynamic
@@ -240,11 +264,11 @@ def run_with_checkpoint(
         if fail_after_units is not None and len(attempt) >= fail_after_units:
             raise RuntimeError(f"injected failure after {len(attempt)} units")
 
-    # read back with the schema the write used: the data columns, then
-    # the unit partition column. Inferring it instead would run a
-    # footer-reading job per call
+    # read back with the recorded schema (every committed unit's
+    # columns), then the unit partition column. Inferring it instead
+    # would run a footer-reading job per call
     read_schema = T.StructType(
-        [T.StructField(f.name, f.dataType) for f in out.schema]
+        [T.StructField(f.name, f.dataType) for f in schema]
         + [T.StructField(UNIT_COL, T.IntegerType())]
     )
     try:
@@ -261,7 +285,7 @@ def run_with_checkpoint(
         )
         if has_units:
             raise
-        return spark.createDataFrame([], out.schema)
+        return spark.createDataFrame([], schema)
     # the __lc_unit=<id> directory layout surfaces as a partition
     # column; drop it so checkpointed and direct runs share one schema
     return result.drop(UNIT_COL)

@@ -290,3 +290,72 @@ def test_read_sink_over_checkpoint_matches_fanout(spark, tmp_path):
         assert a.columns == b.columns == ["conv_id", "turn_idx"]
         assert Counter(map(tuple, a.collect())) == Counter(map(tuple, b.collect()))
         assert a.count() == 20
+
+
+def _keyed_json(spark):
+    """Rows whose JSON payload has one key per conversation, so units
+    hold different key sets, and an SPL ``parse-json`` step without
+    ``known_keys`` that discovers its columns from the rows it sees."""
+    from loongcollector_spark.pipeline import Pipeline
+
+    num = F.substring_index(F.col("conv_id"), "-", -1)
+    df = _mk_df(spark).withColumn(
+        "payload", F.concat(F.lit('{"k'), num, F.lit('":"'), num, F.lit('"}'))
+    )
+    spec = {"processors": [{"type": "spl", "script": "* | parse-json payload"}]}
+    return df, Pipeline(spec).run
+
+
+def _by_name(frame):
+    from collections import Counter
+
+    cols = sorted(frame.columns)
+    return cols, Counter(tuple(r[c] for c in cols) for r in frame.collect())
+
+
+def test_spl_discovered_keys_rerun_with_every_unit_committed(spark, tmp_path):
+    """A rerun with every unit committed plans the transform over zero
+    rows, where key discovery finds nothing: it is not refused, and it
+    reads back every discovered column."""
+    df, run = _keyed_json(spark)
+    kw = dict(
+        out_dir=str(tmp_path / "o"), lineage_dir=str(tmp_path / "lin"),
+        job_id="spl", n_units=4,
+    )
+    first = _by_name(run_with_checkpoint(spark, df, run, **kw))
+    assert first == _by_name(run(df))
+    assert len(first[0]) == 3 + 40
+    assert _by_name(run_with_checkpoint(spark, df, run, **kw)) == first
+
+
+def test_spl_discovered_keys_resume_after_crash(spark, tmp_path):
+    """A crashed job whose remaining units discover other keys resumes:
+    the record grows to the union, and the read-back equals one clean
+    run by column name and as a multiset."""
+    df, run = _keyed_json(spark)
+    kw = dict(
+        out_dir=str(tmp_path / "o"), lineage_dir=str(tmp_path / "lin"),
+        job_id="splc", n_units=4,
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_checkpoint(spark, df, run, fail_after_units=2, **kw)
+    back = _by_name(run_with_checkpoint(spark, df, run, **kw))
+    assert back == _by_name(run(df))
+    assert _by_name(run_with_checkpoint(spark, df, run, **kw)) == back
+
+
+def test_resume_refuses_column_added_after_crash(spark, tmp_path):
+    """A column the transform has over zero rows (here ``sink``) that
+    the committed units lack is refused on a resume that writes units,
+    as on one that writes none."""
+    df = _mk_df(spark)
+    kw = dict(
+        out_dir=str(tmp_path / "o"), lineage_dir=str(tmp_path / "lin"),
+        job_id="add", n_units=4,
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_checkpoint(spark, df, lambda d: d, fail_after_units=2, **kw)
+    with pytest.raises(ValueError, match="layout mismatch for job 'add'"):
+        run_with_checkpoint(
+            spark, df, lambda d: d.withColumn("sink", F.lit("s")), **kw
+        )
